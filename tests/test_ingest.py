@@ -5,6 +5,8 @@ from __future__ import annotations
 
 import os
 
+import pytest
+
 from pyspark.sql import functions as F
 
 from travel_data_ingestion_spark.catalog import Warehouse
@@ -217,3 +219,258 @@ def test_write_idempotent_rejects_unpartitioned_data(spark, tmp_path):
         )
     # original data untouched
     assert wh.read(spark, "silver", "probe").count() == 1
+
+
+# --------------------------------------------------------------------------
+# ledger: crash windows, tie-break, fixed job counts per run
+
+SLICE = ("transactions", "manual_logs")
+
+
+class Crash(BaseException):
+    """Process death: escapes the per-file and per-dataset isolation that
+    catches ``Exception``."""
+
+
+def _slice_wh(spark, tmp_path, name, landing):
+    from travel_data_ingestion_spark.config import default_config, save_config
+
+    wh = Warehouse(str(tmp_path / name))
+    wh.init()
+    cfg = {k: d for k, d in default_config(landing).items() if k in SLICE}
+    save_config(spark, wh, cfg)
+    return wh, cfg
+
+
+def _medallion(spark, wh, cfg):
+    from travel_data_ingestion_spark.gold import build_full_travel_cost
+    from travel_data_ingestion_spark.ingest import ingest_all
+    from travel_data_ingestion_spark.silver import run_silver
+
+    ingest_all(spark, wh, cfg)
+    run_silver(spark, wh, datasets=list(SLICE))
+    build_full_travel_cost(spark, wh)
+
+
+def _bronze_rows(spark, wh):
+    return {t: wh.read(spark, "bronze", t).count() for t in SLICE}
+
+
+def _state(spark, wh):
+    """Bronze row counts per table and the gold table's rows."""
+    gold = sorted(map(tuple, wh.read(spark, "gold", "full_travel_cost").collect()))
+    return _bronze_rows(spark, wh), gold
+
+
+@pytest.fixture(scope="module")
+def slice_landing(tmp_path_factory):
+    from tests.fixtures_gen import generate_landing
+
+    landing = str(tmp_path_factory.mktemp("slice") / "landing")
+    generate_landing(landing)
+    return landing
+
+
+@pytest.fixture(scope="module")
+def clean_state(spark, tmp_path_factory, slice_landing):
+    wh, cfg = _slice_wh(spark, tmp_path_factory.mktemp("clean"), "wh", slice_landing)
+    _medallion(spark, wh, cfg)
+    return _state(spark, wh)
+
+
+def _latest_ids(spark, wh, status):
+    """file name -> load_id of the ledger's latest rows with ``status``."""
+    return {
+        r.file_name: r.load_id
+        for r in ingestion_ledger(spark, wh).collect()
+        if r.status == status
+    }
+
+
+def _crash_on_terminal_append(monkeypatch, status_col):
+    """Crash at a run's terminal ledger append, after its RUNNING one;
+    returns the real append."""
+    from travel_data_ingestion_spark import ledger
+
+    real = ledger.append
+
+    def append(spark, wh, table, rows):
+        if any(r[status_col] != "RUNNING" for r in rows):
+            raise Crash
+        real(spark, wh, table, rows)
+
+    monkeypatch.setattr(ledger, "append", append)
+    return real
+
+
+def test_crash_after_bronze_commit_reuses_reserved_load_id(
+    spark, tmp_path, monkeypatch, slice_landing, clean_state
+):
+    """Crash after every bronze partition committed, before the terminal
+    ledger append: the re-run overwrites the committed partitions under
+    the reserved load_ids instead of landing the files a second time, so
+    bronze and gold match a clean run (no doubled totals)."""
+    from travel_data_ingestion_spark.ingest import ingest_all
+
+    wh, cfg = _slice_wh(spark, tmp_path, "wh", slice_landing)
+    _crash_on_terminal_append(monkeypatch, status_col=4)
+    with pytest.raises(Crash):
+        ingest_all(spark, wh, cfg)
+    monkeypatch.undo()
+    reserved = _latest_ids(spark, wh, "RUNNING")
+    assert sorted(reserved) == ["manual_logs_2026_02.csv", "transactions_2026_02.csv"]
+    assert _bronze_rows(spark, wh) == clean_state[0]  # the data did commit
+
+    _medallion(spark, wh, cfg)
+    assert _state(spark, wh) == clean_state
+    assert _latest_ids(spark, wh, "SUCCESS") == reserved
+    bronze_ids = {
+        int(r.load_id) for t in SLICE
+        for r in wh.read(spark, "bronze", t).select("load_id").distinct().collect()
+    }
+    assert bronze_ids == set(reserved.values())
+
+
+def test_crash_before_bronze_commit_retries_cleanly(
+    spark, tmp_path, monkeypatch, slice_landing, clean_state
+):
+    """Crash after the RUNNING reservation, before any data commit: the
+    re-run loads every file once, under the reserved ids."""
+    from travel_data_ingestion_spark.ingest import ingest_all
+
+    wh, cfg = _slice_wh(spark, tmp_path, "wh", slice_landing)
+
+    def crash(*args, **kwargs):
+        raise Crash
+
+    monkeypatch.setattr(Warehouse, "write_idempotent", crash)
+    with pytest.raises(Crash):
+        ingest_all(spark, wh, cfg)
+    monkeypatch.undo()
+    reserved = _latest_ids(spark, wh, "RUNNING")
+    assert len(reserved) == 2
+    assert not wh.exists("bronze", "transactions")
+
+    _medallion(spark, wh, cfg)
+    assert _state(spark, wh) == clean_state
+    assert {r.load_id for r in ingestion_ledger(spark, wh).collect()} == set(reserved.values())
+
+
+def test_allocations_stay_above_reserved_ids(spark, tmp_path, monkeypatch, slice_landing):
+    """Ids reserved by a crashed run are never handed out again: silver's
+    next transformation_id and a new stream epoch's load_id both land
+    above every reserved id."""
+    from travel_data_ingestion_spark.ingest import ingest_all
+    from travel_data_ingestion_spark.silver import run_silver
+    from travel_data_ingestion_spark.streaming.ingest_stream import _epoch_load_id
+
+    wh, cfg = _slice_wh(spark, tmp_path, "wh", slice_landing)
+    ingest_all(spark, wh, cfg)
+    real = _crash_on_terminal_append(monkeypatch, status_col=3)
+    with pytest.raises(Crash):
+        run_silver(spark, wh, datasets=list(SLICE))
+    monkeypatch.undo()
+    trans = wh.read(spark, "admin", "transformation_logs").collect()
+    assert {r.status for r in trans} == {"RUNNING"} and len(trans) == 2
+    crashed = max(r.transformation_id for r in trans)
+
+    # the crashed batches are still pending, and the retry allocates above
+    assert run_silver(spark, wh, datasets=list(SLICE))
+    retried = [r for r in wh.read(spark, "admin", "transformation_logs").collect()
+               if r.status == "SUCCESS"]
+    assert {r.transformation_name for r in retried} == set(SLICE)
+    assert min(r.transformation_id for r in retried) > crashed
+
+    # a batch reservation that never completed still bounds the stream
+    landed = max(r.load_id for r in ingestion_ledger(spark, wh).collect())
+    real(spark, wh, "ingestion_logs",
+         [(landed + 5, 1, "late.csv", "transactions", "RUNNING", None, None)])
+    ckpt = str(tmp_path / "ckpt")
+    assert _epoch_load_id(spark, wh, ckpt, 0, "transactions") == landed + 6
+
+
+def test_ledger_tie_prefers_terminal_status(spark, tmp_path):
+    """RUNNING and SUCCESS rows with equal event_time: the terminal row is
+    the latest, whichever was appended first, so the file is done."""
+    from datetime import datetime, timezone
+
+    from travel_data_ingestion_spark.catalog import ADMIN_SCHEMAS
+    from travel_data_ingestion_spark.ingest import ingest_dataset
+
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    (landing / "transactions_a.csv").write_text("country,date\nJP,2026-02-01\n")
+    (landing / "transactions_b.csv").write_text("country,date\nJP,2026-02-02\n")
+    wh = Warehouse(str(tmp_path / "wh"))
+    wh.init()
+    t = datetime(2026, 2, 1, tzinfo=timezone.utc)
+    rows = [
+        (1, 1, "transactions_a.csv", "transactions", "SUCCESS", 1, None, t),
+        (1, 1, "transactions_a.csv", "transactions", "RUNNING", None, None, t),
+        (2, 1, "transactions_b.csv", "transactions", "RUNNING", None, None, t),
+        (2, 1, "transactions_b.csv", "transactions", "SUCCESS", 1, None, t),
+    ]
+    # one file, so each tie's input order is fixed: SUCCESS first for
+    # load 1, RUNNING first for load 2
+    wh.append(spark, spark.createDataFrame(rows, ADMIN_SCHEMAS["ingestion_logs"]).coalesce(1),
+              "admin", "ingestion_logs")
+    assert {r.load_id: r.status for r in ingestion_ledger(spark, wh).collect()} == {
+        1: "SUCCESS", 2: "SUCCESS"}
+    detail = FileDetail(1, str(landing), "transactions*.csv", "bronze", "transactions", "csv")
+    assert ingest_dataset(spark, wh, detail) == []  # both files are done
+
+
+def _count_jobs(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _data_files(root):
+    out = {}
+    for d, dirs, files in os.walk(root):
+        dirs[:] = [x for x in dirs if not x.startswith((".", "_"))]
+        for f in files:
+            if not f.startswith((".", "_")):
+                out[os.path.join(d, f)] = os.path.getmtime(os.path.join(d, f))
+    return out
+
+
+def test_ledger_jobs_are_fixed_per_run(spark, tmp_path, slice_landing):
+    """A first ingest_all costs at most 4 Spark jobs per landing file, and
+    a no-op re-run of ingest_all + run_silver reads each ledger once
+    (2 jobs) and writes nothing. Silver's rows_written is the batch
+    total: every silver row of the dataset's output tables carrying the
+    batch's load_ids."""
+    from travel_data_ingestion_spark.ingest import ingest_all
+    from travel_data_ingestion_spark.silver import run_silver
+    from travel_data_ingestion_spark.silver.runner import SILVER_TRANSFORMS
+
+    wh, cfg = _slice_wh(spark, tmp_path, "wh", slice_landing)
+    n_files = sum(len(list_stage_files(d.source_path, d.file_pattern)) for d in cfg.values())
+    assert n_files == 2
+    jobs = _count_jobs(spark, "ledger_first_ingest", lambda: ingest_all(spark, wh, cfg))
+    assert jobs <= 4 * n_files, jobs
+    run_silver(spark, wh, datasets=list(SLICE))
+
+    before = _data_files(wh.root)
+    jobs = _count_jobs(spark, "ledger_noop_rerun", lambda: (
+        ingest_all(spark, wh, cfg), run_silver(spark, wh, datasets=list(SLICE))))
+    assert jobs <= 2, jobs
+    assert _data_files(wh.root) == before
+
+    for r in wh.read(spark, "admin", "transformation_logs").collect():
+        if r.status != "SUCCESS":
+            continue
+        bronze_table, fn = SILVER_TRANSFORMS[r.transformation_name]
+        outputs = fn(wh.read(spark, "bronze", bronze_table).limit(0))
+        total = sum(
+            wh.read(spark, "silver", t).filter(F.col("load_id") == r.load_id).count()
+            for t in outputs
+        )
+        assert r.rows_written == total > 0, r

@@ -176,6 +176,31 @@ def test_bronze_has_all_tables(spark, pipeline_wh):
         assert n > 0, f"bronze.{t} empty"
 
 
+def test_silver_rows_written_is_batch_total(spark, pipeline_wh):
+    """Each SUCCESS transformation row records its batch total: every
+    silver row of the dataset's output tables carrying the batch's
+    load_ids (the writes' observed counts, not a re-read)."""
+    from pyspark.sql import functions as F
+
+    from travel_data_ingestion_spark.silver.runner import SILVER_TRANSFORMS
+
+    batches: dict[int, tuple[str, set[int], int]] = {}
+    for r in pipeline_wh.read(spark, "admin", "transformation_logs").collect():
+        if r.status == "SUCCESS":
+            _, ids, _ = batches.setdefault(
+                r.transformation_id, (r.transformation_name, set(), r.rows_written))
+            ids.add(r.load_id)
+    assert {name for name, _, _ in batches.values()} == set(SILVER_TRANSFORMS)
+    for name, ids, rows_written in batches.values():
+        bronze_table, fn = SILVER_TRANSFORMS[name]
+        outputs = fn(pipeline_wh.read(spark, "bronze", bronze_table).limit(0))
+        total = sum(
+            pipeline_wh.read(spark, "silver", t).filter(F.col("load_id").isin(list(ids))).count()
+            for t in outputs
+        )
+        assert rows_written == total > 0, (name, ids)
+
+
 def test_ingestion_idempotent(spark, pipeline_wh, tmp_path):
     """Re-running ingestion must load nothing new (A-07 filename ledger)."""
     from travel_data_ingestion_spark.config import load_config

@@ -23,7 +23,7 @@ from __future__ import annotations
 import os
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -228,27 +228,20 @@ class Warehouse:
                 )
 
     def read(self, spark: SparkSession, schema: str, table: str) -> DataFrame:
-        """DESC TABLE + scan analog: empty typed frame when absent."""
+        """DESC TABLE + scan analog: empty typed frame when absent. A
+        registered table is read with its schema, which skips Spark's
+        schema-inference job."""
+        st = self.registered_schema(schema, table)
         if self.exists(schema, table):
             self._heal_parked_bootstrap(self.path(schema, table))
-            return spark.read.parquet(self.path(schema, table))
-        st = self.registered_schema(schema, table)
+            reader = spark.read if st is None else spark.read.schema(st)
+            return reader.parquet(self.path(schema, table))
         if st is None:
             raise FileNotFoundError(f"table {schema}.{table} does not exist")
         return spark.createDataFrame([], st)
 
-    def append(
-        self,
-        spark: SparkSession,
-        df: DataFrame,
-        schema: str,
-        table: str,
-        partition_by: tuple[str, ...] = (),
-    ) -> None:
-        writer = df.write.mode("append")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(self.path(schema, table))
+    def append(self, spark: SparkSession, df: DataFrame, schema: str, table: str) -> None:
+        df.write.mode("append").parquet(self.path(schema, table))
 
     def overwrite(self, spark: SparkSession, df: DataFrame, schema: str, table: str) -> None:
         """CTAS / truncate-insert sink (reference sp_full_travel_costs.sql:8
@@ -261,8 +254,9 @@ class Warehouse:
         df: DataFrame,
         schema: str,
         table: str,
-    ) -> None:
-        """DELETE-by-load_id + INSERT as dynamic partition overwrite.
+    ) -> int:
+        """DELETE-by-load_id + INSERT as dynamic partition overwrite;
+        returns the rows written, observed in the write itself.
 
         The reference deletes the batch's rows then appends
         (utils.py:12-46 save_idempotent). With the table partitioned by
@@ -272,34 +266,20 @@ class Warehouse:
         """
         if "load_id" not in df.columns:
             raise ValueError("idempotent write requires a load_id column")
-        # An all-filtered batch overwrites no partitions. If the table
-        # already exists that is a pure no-op; if this is the table's
-        # FIRST-EVER batch, bootstrap it as a schema-carrying zero-row
-        # parquet write (coalesce(1), unpartitioned: exactly one footer
-        # file) so downstream readers see an empty typed table instead
-        # of FileNotFoundError. A dir with only _SUCCESS would break
-        # schema inference — the single empty part file is what makes
-        # the bootstrap readable.
-        if df.isEmpty():
-            if not self.exists(schema, table):
-                df.coalesce(1).write.mode("overwrite").parquet(
-                    self.path(schema, table)
-                )
-            return
-        # clear a zero-row schema bootstrap before the first real write:
-        # root-level part files mixed with load_id= dirs trip
-        # "conflicting directory structures" in partition discovery.
-        # The bootstrap is PARKED under a dot-prefixed (reader-ignored)
-        # name rather than deleted, and removed only after the
-        # partitioned overwrite commits — a crash in between leaves a
-        # recoverable footer file (_heal_parked_bootstrap restores it on
-        # the next read) instead of a dir with only _SUCCESS.
+        # clear a zero-row schema bootstrap before the write: root-level
+        # part files mixed with load_id= dirs trip "conflicting directory
+        # structures" in partition discovery. The bootstrap is PARKED
+        # under a dot-prefixed (reader-ignored) name rather than deleted,
+        # and removed only after the partitioned overwrite commits rows —
+        # a crash in between leaves a recoverable footer file
+        # (_heal_parked_bootstrap restores it on the next read) instead
+        # of a dir with only _SUCCESS.
         # Guard: only the empty bootstrap is parked — root files
         # holding ROWS mean the table was written unpartitioned (e.g.
         # via overwrite()); silently hiding those would be data loss,
         # so that mix is a loud error instead.
         p = self.path(schema, table)
-        parked: list[str] = []
+        parked: list[tuple[str, str]] = []
         if os.path.isdir(p):
             self._heal_parked_bootstrap(p)  # resume from a prior crash
             root_parts = [
@@ -318,19 +298,37 @@ class Warehouse:
                 for f in root_parts:
                     dst = os.path.join(p, _BOOTSTRAP_PREFIX + f)
                     os.replace(os.path.join(p, f), dst)
-                    parked.append(dst)
+                    parked.append((os.path.join(p, f), dst))
         # writer-level option only — mutating the SESSION conf here would
         # silently flip every later partitioned overwrite in the session
         # to dynamic semantics (stale-partition hazard export.py has to
         # pin 'static' against)
+        seen = Observation()
         (
-            df.write.mode("overwrite")
+            df.observe(seen, F.count(F.lit(1)).alias("rows"))
+            .write.mode("overwrite")
             .partitionBy("load_id")
             .option("partitionOverwriteMode", "dynamic")
-            .parquet(self.path(schema, table))
+            .parquet(p)
         )
-        for dst in parked:
-            os.remove(dst)
+        rows = int(seen.get["rows"])
+        if rows:
+            for _, dst in parked:
+                os.remove(dst)
+            return rows
+        # An all-filtered batch overwrote no partitions: put a parked
+        # bootstrap back, and give a table's FIRST-EVER batch a
+        # schema-carrying zero-row file (unpartitioned, exactly one
+        # footer) so downstream readers see an empty typed table instead
+        # of FileNotFoundError. A dir with only _SUCCESS would break
+        # schema inference.
+        for src, dst in parked:
+            os.replace(dst, src)
+        if not self.exists(schema, table):
+            spark.createDataFrame([], df.schema).coalesce(1).write.mode(
+                "overwrite"
+            ).parquet(p)
+        return 0
 
     def init(self) -> None:
         """Reset/DDL bootstrap analog (reference reset_database_dag.py:13-41)."""

@@ -9,30 +9,28 @@ Reproduces the reference's ingestion semantics (SURVEY §2.A) Spark-first:
 - filename exactly-once ledger           (ingestion_logic.py:124-129, A-07)
 - RUNNING -> SUCCESS/FAILURE logging     (ingestion_logic.py:84-201, A-08)
 
-The ledger is an append-only parquet table; "UPDATE" is append +
-latest-row-wins on read (row_number over event_time) — the scalable
-analog of the reference's in-place UPDATE. load_id = MAX(load_id)+1,
-matching the reference's own MAX-based id retrieval
-(ingestion_logic.py:149); single-driver sequencing is documented in
-SURVEY §7.4-4.
+Allocation happens once per run, from one snapshot of the ledger
+(``ledger.snapshot``): it gives both the files already loaded and the
+next free ``load_id``. One RUNNING append then reserves an id for every
+new file before any data is written, each file's bronze write is a
+dynamic-partition overwrite of its reserved ``load_id``, and one append
+records every SUCCESS/FAILURE. A file whose latest ledger row is still
+RUNNING (a crashed run) is retried under its reserved id, so the retry
+overwrites whatever partition the crashed run committed: exactly-once
+holds across a crash between the data commit and the ledger write.
 """
 
 from __future__ import annotations
 
-import fnmatch
 import os
 import re
-from datetime import datetime, timezone
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from travel_data_ingestion_spark.catalog import (
-    ADMIN_SCHEMAS,
-    BRONZE_SCHEMAS,
-    LINEAGE_FIELDS,
-    Warehouse,
-)
+from travel_data_ingestion_spark import ledger
+from travel_data_ingestion_spark.catalog import BRONZE_SCHEMAS, LINEAGE_FIELDS, Warehouse
 from travel_data_ingestion_spark.config import FileDetail
 from travel_data_ingestion_spark.io import CSV_OPTIONS
 
@@ -48,9 +46,11 @@ def lineage_row_id(load_id: int) -> F.Column:
     collided across batches: monotonic ids pack the partition id at bit 33,
     so any multi-partition file overflowed into the next load's id space.
     Here each field is masked into its own range and overflow raises
-    instead of silently colliding. Limits (documented, enforced): 32k loads
-    per table, 1M tasks per load, 268M rows per task — far above any sane
-    partition sizing (a 128 MB parquet split holds ~1-10M rows).
+    instead of silently colliding. Limits (documented, enforced): 32,767
+    file loads per WAREHOUSE, failed loads included — load_ids come from
+    one global sequence across every table (ledger.snapshot) — then 1M
+    tasks per load and 268M rows per task, far above any sane partition
+    sizing (a 128 MB parquet split holds ~1-10M rows).
     """
     mono = F.monotonically_increasing_id()  # (partition_id << 33) | row_seq
     part = F.shiftright(mono, 33)
@@ -66,7 +66,10 @@ def lineage_row_id(load_id: int) -> F.Column:
         + seq
     )
     return F.when(ok, rid).otherwise(
-        F.raise_error(F.lit("row_id bit-field overflow: load/partition/row out of range"))
+        F.raise_error(F.lit(
+            "row_id bit-field overflow: load_id above 32767 (the warehouse's "
+            "file loads, failed ones included), or partition/row out of range"
+        ))
     )
 
 
@@ -87,67 +90,25 @@ def list_stage_files(source_path: str, file_pattern: str) -> list[str]:
 
 
 def ingestion_ledger(spark: SparkSession, wh: Warehouse) -> DataFrame:
-    """Latest status per (load_id, file_name): append-only log collapsed
-    with a recency window (the A-08 'UPDATE' analog)."""
-    log = wh.read(spark, "admin", "ingestion_logs")
-    w = Window.partitionBy("load_id").orderBy(F.col("event_time").desc())
-    return log.withColumn("__rn", F.row_number().over(w)).filter("__rn = 1").drop("__rn")
+    """Latest status per load_id: the append-only log collapsed by
+    ``ledger.latest`` (the A-08 'UPDATE' analog)."""
+    return ledger.latest(wh.read(spark, "admin", "ingestion_logs"), "load_id")
 
 
-def _successful_files(
-    spark: SparkSession, wh: Warehouse, target_table: str | None = None
-) -> set[str]:
-    """SUCCESS file names, scoped to one target table: exactly-once is
-    per (file, dataset) — two datasets with overlapping glob patterns
-    each ingest the file into their own bronze table (the ledger's
-    target_table column exists precisely for this)."""
-    ledger = ingestion_ledger(spark, wh).filter(F.col("status") == "SUCCESS")
-    if target_table is not None:
-        ledger = ledger.filter(F.col("target_table") == target_table)
-    rows = ledger.select("file_name").collect()
-    return {r.file_name for r in rows}
+def landing_schema(table: str) -> T.StructType:
+    """Bronze business columns as strings, in file order: the positional
+    $1..$N read schema (A-05). A short row pads missing trailing columns
+    with NULL, extra columns are dropped (column-count tolerance)."""
+    return T.StructType([f for f in BRONZE_SCHEMAS[table].fields if f.name not in _LINEAGE_COLS])
 
 
-def _next_load_id(spark: SparkSession, wh: Warehouse) -> int:
-    row = wh.read(spark, "admin", "ingestion_logs").agg(F.max("load_id")).first()
-    return int(row[0] or 0) + 1
-
-
-def _log(
-    spark: SparkSession,
-    wh: Warehouse,
-    load_id: int,
-    file_id: int,
-    file_name: str,
-    target_table: str,
-    status: str,
-    rows_loaded: int | None = None,
-    error: str | None = None,
-) -> None:
-    df = spark.createDataFrame(
-        [
-            (
-                load_id,
-                file_id,
-                file_name,
-                target_table,
-                status,
-                rows_loaded,
-                error,
-                datetime.now(timezone.utc),
-            )
-        ],
-        ADMIN_SCHEMAS["ingestion_logs"],
-    )
-    wh.append(spark, df, "admin", "ingestion_logs")
-
-
-def read_landing_file(spark: SparkSession, path: str, file_format: str) -> DataFrame:
-    """File-format scans (A-03/A-04).
+def read_landing_file(spark: SparkSession, path: str, file_format: str, table: str) -> DataFrame:
+    """File-format scans (A-03/A-04) into ``table``'s business columns.
 
     CSV: header skipped, '\"'-quoted, NULL/null/'' -> NULL, permissive
     column-count handling (file_format_csv.sql:1-6 +
-    error_on_column_count_mismatch=false).
+    error_on_column_count_mismatch=false), read by position with an
+    explicit schema — no header-inference job.
     JSON: whole document -> one raw string row (file_format_json.sql:1 —
     each top-level value becomes one VARIANT row).
     """
@@ -155,7 +116,8 @@ def read_landing_file(spark: SparkSession, path: str, file_format: str) -> DataF
         # single source of truth for CSV parsing options (io.CSV_OPTIONS):
         # the batch path, io.read_table, and the streaming ingest must all
         # parse a file into identical rows, or replays/re-ingests diverge
-        return spark.read.options(**CSV_OPTIONS).csv(path)
+        reader = spark.read.schema(landing_schema(table)).options(**CSV_OPTIONS)
+        return _csv_null_tokens(reader.csv(path))
     if file_format == "json":
         return spark.read.text(path, wholetext=True).toDF("raw_data")
     raise ValueError(f"unsupported file format: {file_format}")
@@ -180,80 +142,76 @@ def ingest_file(
     path: str,
     load_id: int,
 ) -> int:
-    """COPY INTO analog for one file (A-05): positional projection to the
-    bronze schema's business columns + lineage columns, append."""
-    table = detail.target_table
-    bronze_schema = BRONZE_SCHEMAS[table]
-    business_cols = [f.name for f in bronze_schema.fields if f.name not in _LINEAGE_COLS]
-
-    raw = read_landing_file(spark, path, detail.file_format)
-    if detail.file_format == "csv":
-        raw = _csv_null_tokens(raw)
-
-    # Positional $1..$N mapping: take the first N source columns in order,
-    # pad missing trailing columns with NULL (column-count tolerance).
-    n = len(business_cols)
-    src = raw.columns[:n]
-    projected = raw.select(*[F.col(c) for c in src]).toDF(*business_cols[: len(src)])
-    for missing in business_cols[len(src):]:
-        projected = projected.withColumn(missing, F.lit(None).cast("string"))
-    projected = projected.select(*business_cols)
-
+    """COPY INTO analog for one file (A-05): the business columns +
+    lineage columns, overwriting bronze partition ``load_id``; returns
+    the rows written."""
+    if not os.path.isfile(path):
+        # a directory (or anything else) matching the pattern would read
+        # as zero rows under an explicit schema and pass for a SUCCESS
+        raise ValueError(f"not a regular file: {path}")
+    raw = read_landing_file(spark, path, detail.file_format, detail.target_table)
     # Lineage columns (reset_schemas.sql:68-71, populated as in
     # ingestion_logic.py:166). row_id is unique + monotone per table via
     # disjoint (load_id | partition | row) bit fields — no global window,
     # no gaplessness requirement (the reference only ever takes
     # MAX(load_id)).
     with_lineage = (
-        projected.withColumn("_ingestion_time", F.current_timestamp())
+        raw.withColumn("_ingestion_time", F.current_timestamp())
         .withColumn("_source_file", F.lit(os.path.basename(path)))
         .withColumn("load_id", F.lit(load_id).cast("long"))
         .withColumn("row_id", lineage_row_id(load_id))
     )
-    # one parse per file: without the persist, count() and the append
-    # each re-read and re-parse the whole file (and could even disagree
-    # if the landing file changed between the two scans)
-    with_lineage = with_lineage.persist()
-    try:
-        count = with_lineage.count()
-        wh.append(spark, with_lineage, "bronze", table, partition_by=("load_id",))
-    finally:
-        with_lineage.unpersist()
-    return count
+    return wh.write_idempotent(spark, with_lineage, "bronze", detail.target_table)
 
 
 def ingest_dataset(spark: SparkSession, wh: Warehouse, detail: FileDetail) -> list[int]:
-    """Ingest every new file of one dataset; returns the load_ids created.
-
-    Per-file error isolation: a failing file logs FAILURE and is skipped
-    (ON_ERROR='SKIP_FILE', ingestion_logic.py:157-182); already-SUCCESS
-    filenames are skipped (A-07 exactly-once ledger).
-    """
-    done = _successful_files(spark, wh, detail.target_table)
-    load_ids: list[int] = []
-    for path in list_stage_files(detail.source_path, detail.file_pattern):
-        fname = os.path.basename(path)
-        if fname in done:
-            continue
-        load_id = _next_load_id(spark, wh)
-        _log(spark, wh, load_id, detail.file_id, fname, detail.target_table, "RUNNING")
-        try:
-            rows = ingest_file(spark, wh, detail, path, load_id)
-            _log(
-                spark, wh, load_id, detail.file_id, fname, detail.target_table,
-                "SUCCESS", rows_loaded=rows,
-            )
-            load_ids.append(load_id)
-        except Exception as exc:  # noqa: BLE001 - per-file isolation
-            _log(
-                spark, wh, load_id, detail.file_id, fname, detail.target_table,
-                "FAILURE", error=str(exc)[:2000],
-            )
-    return load_ids
+    """Ingest every new file of one dataset; returns the load_ids created."""
+    return ingest_all(spark, wh, {detail.target_table: detail})[detail.target_table]
 
 
 def ingest_all(spark: SparkSession, wh: Warehouse, config: dict[str, FileDetail]) -> dict[str, list[int]]:
-    """Dynamic task-per-dataset loop (K-01, dynamic_ingestion_dag.py:18-26)."""
-    return {
-        name: ingest_dataset(spark, wh, detail) for name, detail in sorted(config.items())
+    """Dynamic task-per-dataset loop (K-01, dynamic_ingestion_dag.py:18-26).
+
+    Exactly-once is per (file, dataset): two datasets with overlapping
+    glob patterns each ingest the file into their own bronze table.
+    Per-file error isolation: a failing file logs FAILURE and is skipped
+    (ON_ERROR='SKIP_FILE', ingestion_logic.py:157-182). Returns each
+    dataset's SUCCESS load_ids.
+    """
+    snap = ledger.snapshot(spark, wh, "ingestion_logs", latest_only=True)
+    done = {(r.target_table, r.file_name) for r in snap.rows if r.status == "SUCCESS"}
+    # a crashed run's reservation (the highest, if it crashed twice)
+    reserved = {
+        (r.target_table, r.file_name): r.load_id
+        for r in sorted(snap.rows, key=lambda r: r.load_id)
+        if r.status == "RUNNING"
     }
+    next_id = snap.next_id
+    work = []
+    for name, detail in sorted(config.items()):
+        for path in list_stage_files(detail.source_path, detail.file_pattern):
+            key = (detail.target_table, os.path.basename(path))
+            if key in done:
+                continue
+            load_id = reserved.get(key)
+            if load_id is None:
+                load_id, next_id = next_id, next_id + 1
+            work.append((name, detail, path, load_id))
+
+    def entry(detail, path, load_id, status, rows=None, error=None):
+        return (load_id, detail.file_id, os.path.basename(path), detail.target_table,
+                status, rows, error)
+
+    ledger.append(spark, wh, "ingestion_logs", [entry(d, p, i, "RUNNING") for _, d, p, i in work])
+    loaded: dict[str, list[int]] = {name: [] for name in sorted(config)}
+    terminal = []
+    for name, detail, path, load_id in work:
+        try:
+            rows = ingest_file(spark, wh, detail, path, load_id)
+        except Exception as exc:  # noqa: BLE001 - per-file isolation
+            terminal.append(entry(detail, path, load_id, "FAILURE", error=str(exc)[:2000]))
+            continue
+        terminal.append(entry(detail, path, load_id, "SUCCESS", rows))
+        loaded[name].append(load_id)
+    ledger.append(spark, wh, "ingestion_logs", terminal)
+    return loaded

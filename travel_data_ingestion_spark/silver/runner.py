@@ -5,13 +5,14 @@ and the per-dataset boilerplate in scripts/transformations/*.py).
 
 from __future__ import annotations
 
+import re
 from collections.abc import Callable
-from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from travel_data_ingestion_spark.catalog import ADMIN_SCHEMAS, Warehouse
+from travel_data_ingestion_spark import ledger
+from travel_data_ingestion_spark.catalog import Warehouse
 from travel_data_ingestion_spark.silver import transforms
 
 # dataset name -> (bronze table, transform fn)
@@ -26,46 +27,24 @@ SILVER_TRANSFORMS: dict[str, tuple[str, Callable[[DataFrame], dict[str, DataFram
 }
 
 
-def _next_transformation_id(spark: SparkSession, wh: Warehouse) -> int:
-    row = (
-        wh.read(spark, "admin", "transformation_logs")
-        .agg(F.max("transformation_id"))
-        .first()
-    )
-    return int(row[0] or 0) + 1
+def bronze_load_ids(spark: SparkSession, wh: Warehouse, bronze_table: str) -> list[int]:
+    """The table's load_ids, from its partition paths: a file listing, no
+    scan and no Spark job."""
+    paths = "\n".join(wh.read(spark, "bronze", bronze_table).inputFiles())
+    return sorted({int(m) for m in re.findall(r"/load_id=(\d+)/", paths)})
 
 
-def _log(
-    spark: SparkSession,
-    wh: Warehouse,
-    trans_id: int,
-    name: str,
-    load_id: int | None,
-    status: str,
-    rows: int | None = None,
-    error: str | None = None,
-) -> None:
-    df = spark.createDataFrame(
-        [(trans_id, name, load_id, status, rows, error, datetime.now(timezone.utc))],
-        ADMIN_SCHEMAS["transformation_logs"],
-    )
-    wh.append(spark, df, "admin", "transformation_logs")
+def _done(snap: ledger.Snapshot) -> set[tuple[str, int]]:
+    return {(r.transformation_name, r.load_id) for r in snap.rows if r.status == "SUCCESS"}
 
 
 def pending_load_ids(
     spark: SparkSession, wh: Warehouse, dataset: str, bronze_table: str
 ) -> list[int]:
-    """New-work detection: bronze DISTINCT load_id anti-joined against
-    SUCCESS ledger rows (reference transactions.py:14-23, C-05)."""
-    bronze_ids = wh.read(spark, "bronze", bronze_table).select("load_id").distinct()
-    done = (
-        wh.read(spark, "admin", "transformation_logs")
-        .filter((F.col("transformation_name") == dataset) & (F.col("status") == "SUCCESS"))
-        .select("load_id")
-        .distinct()
-    )
-    rows = bronze_ids.join(done, "load_id", "left_anti").collect()
-    return sorted(int(r.load_id) for r in rows)
+    """New-work detection: bronze load_ids without a SUCCESS ledger row
+    (reference transactions.py:14-23, C-05)."""
+    done = _done(ledger.snapshot(spark, wh, "transformation_logs"))
+    return [i for i in bronze_load_ids(spark, wh, bronze_table) if (dataset, i) not in done]
 
 
 def run_silver(
@@ -81,45 +60,40 @@ def run_silver(
     (reference transformation_logic.py:33-38, K-02). All pending batches
     of a dataset are processed in ONE DataFrame pass; the written rows
     keep their load_id so the idempotent sink overwrites exactly the
-    affected partitions.
+    affected partitions. The ledger is read once and written twice per
+    run: one RUNNING row per dataset, then every terminal row.
     """
+    snap = ledger.snapshot(spark, wh, "transformation_logs")
+    done = _done(snap)
+    work = []
+    for name in datasets or list(SILVER_TRANSFORMS):
+        ids = [load_id] if load_id is not None else [
+            i for i in bronze_load_ids(spark, wh, SILVER_TRANSFORMS[name][0])
+            if reprocess or (name, i) not in done
+        ]
+        if ids:
+            work.append((snap.next_id + len(work), name, ids))
+    ledger.append(spark, wh, "transformation_logs",
+                  [(tid, name, max(ids), "RUNNING", None, None) for tid, name, ids in work])
     results: dict[str, int] = {}
     failures: dict[str, str] = {}
-    for name in datasets or list(SILVER_TRANSFORMS):
+    terminal = []
+    for trans_id, name, ids in work:
         bronze_table, fn = SILVER_TRANSFORMS[name]
-        if load_id is not None:
-            ids = [load_id]
-        elif reprocess:
-            ids = [
-                int(r.load_id)
-                for r in wh.read(spark, "bronze", bronze_table)
-                .select("load_id")
-                .distinct()
-                .collect()
-            ]
-        else:
-            ids = pending_load_ids(spark, wh, name, bronze_table)
-        if not ids:
-            continue
         batch = wh.read(spark, "bronze", bronze_table).filter(F.col("load_id").isin(ids))
-        trans_id = _next_transformation_id(spark, wh)
-        _log(spark, wh, trans_id, name, max(ids), "RUNNING")
         try:
-            outputs = fn(batch)
-            total = 0
-            for table, df in outputs.items():
-                wh.write_idempotent(spark, df, "silver", table)
-                total += spark.read.parquet(wh.path("silver", table)).filter(
-                    F.col("load_id").isin(ids)
-                ).count()
-            # one SUCCESS row per processed batch: the ledger is the
-            # exactly-once contract consumed by pending_load_ids
-            for i in ids:
-                _log(spark, wh, trans_id, name, i, "SUCCESS", rows=total)
-            results[name] = total
+            total = sum(
+                wh.write_idempotent(spark, df, "silver", table) for table, df in fn(batch).items()
+            )
         except Exception as exc:  # noqa: BLE001 - per-dataset isolation
-            _log(spark, wh, trans_id, name, max(ids), "FAILURE", error=str(exc)[:2000])
+            terminal.append((trans_id, name, max(ids), "FAILURE", None, str(exc)[:2000]))
             failures[name] = str(exc)[:500]
+            continue
+        # one SUCCESS row per processed batch: the ledger is the
+        # exactly-once contract consumed by pending_load_ids
+        terminal += [(trans_id, name, i, "SUCCESS", total, None) for i in ids]
+        results[name] = total
+    ledger.append(spark, wh, "transformation_logs", terminal)
     if failures:
         # true per-dataset isolation (each reference transform is its own
         # Airflow task): every healthy dataset was processed and logged

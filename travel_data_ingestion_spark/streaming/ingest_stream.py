@@ -34,26 +34,19 @@ size for predictable executor memory.
 from __future__ import annotations
 
 import os
-from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from travel_data_ingestion_spark.catalog import (
-    ADMIN_SCHEMAS,
-    BRONZE_SCHEMAS,
-    LINEAGE_FIELDS,
-    Warehouse,
-)
+from travel_data_ingestion_spark import ledger
+from travel_data_ingestion_spark.catalog import Warehouse
 from travel_data_ingestion_spark.io import CSV_OPTIONS
 from travel_data_ingestion_spark.ingest import (
     _csv_null_tokens,
-    _next_load_id,
+    landing_schema,
     lineage_row_id,
 )
-
-_LINEAGE_COLS = [f.name for f in LINEAGE_FIELDS]
 
 
 def _read_int_marker(jvm, fs, marker) -> int | None:
@@ -172,25 +165,12 @@ def _epoch_load_id(
         if committed:
             _write_int_marker(jvm, fs, marker, candidate)
             return candidate
-    lid = _next_load_id(spark, wh)
+    lid = ledger.snapshot(spark, wh, "ingestion_logs").next_id
     if floor is not None:
         lid = max(lid, int(floor))
-    log = spark.createDataFrame(
-        [
-            (
-                lid,
-                None,
-                f"stream:{target_table}",
-                target_table,
-                "RUNNING",  # reservation; collapsed by the SUCCESS row's recency
-                None,
-                None,
-                datetime.now(timezone.utc),
-            )
-        ],
-        ADMIN_SCHEMAS["ingestion_logs"],
-    )
-    wh.append(spark, log, "admin", "ingestion_logs")
+    # reservation; collapsed by the SUCCESS row's recency
+    ledger.append(spark, wh, "ingestion_logs",
+                  [(lid, None, f"stream:{target_table}", target_table, "RUNNING", None, None)])
     _write_int_marker(jvm, fs, marker, lid)
     return lid
 
@@ -209,15 +189,11 @@ def stream_ingest_csv(
     optional allocation FLOOR for newly-allocated epochs; replayed
     epochs always reuse the id recorded in the checkpoint's per-epoch
     map so they rewrite their original bronze partitions."""
-    bronze_schema = BRONZE_SCHEMAS[target_table]
-    business = [f.name for f in bronze_schema.fields if f.name not in _LINEAGE_COLS]
-    read_schema = T.StructType([T.StructField(c, T.StringType()) for c in business])
-
     checkpoint = checkpoint_dir or os.path.join(wh.root, "_checkpoints", target_table)
     # CSV parsing options come from the single shared set (io.CSV_OPTIONS)
     # so a file produces identical bronze rows whichever path ingested it
     stream = (
-        spark.readStream.schema(read_schema)
+        spark.readStream.schema(landing_schema(target_table))
         .options(**CSV_OPTIONS)
         .option("pathGlobFilter", pattern)
         .option("maxFilesPerTrigger", 16)
@@ -244,22 +220,10 @@ def stream_ingest_csv(
         # ledger row so the batch path's MAX(load_id)+1 sees this load;
         # a replayed epoch appends a duplicate row, which the append+
         # latest-wins ledger semantics absorb (same load_id, same file)
-        log = s.createDataFrame(
-            [
-                (
-                    eid,
-                    None,  # file_id: streams have no config row
-                    f"stream:{target_table}",
-                    target_table,
-                    "SUCCESS",
-                    None,
-                    None,
-                    datetime.now(timezone.utc),
-                )
-            ],
-            ADMIN_SCHEMAS["ingestion_logs"],
-        )
-        wh.append(s, log, "admin", "ingestion_logs")
+        ledger.append(s, wh, "ingestion_logs", [
+            # file_id: streams have no config row
+            (eid, None, f"stream:{target_table}", target_table, "SUCCESS", None, None)
+        ])
 
     q = (
         stream.writeStream.foreachBatch(write_batch)
