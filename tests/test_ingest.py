@@ -9,14 +9,19 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from travel_data_ingestion_spark.catalog import Warehouse
+from travel_data_ingestion_spark import ledger
+from travel_data_ingestion_spark.catalog import BRONZE_SCHEMAS, Warehouse
 from travel_data_ingestion_spark.config import FileDetail
 from travel_data_ingestion_spark.ingest import (
     glob_to_regex,
     ingest_dataset,
-    ingestion_ledger,
     list_stage_files,
 )
+
+
+def _ingestion_rows(spark, wh):
+    """The ingestion ledger's latest row per load_id."""
+    return ledger.snapshot(spark, wh, "ingestion_logs", latest_only=True).rows
 
 
 def test_glob_to_regex_matches_reference_conversion():
@@ -51,12 +56,9 @@ def test_per_file_failure_isolation(spark, tmp_path):
     detail = FileDetail(1, str(landing), "transactions*.csv", "bronze", "transactions", "csv")
     loads = ingest_dataset(spark, wh, detail)
     assert len(loads) == 1  # only the good file loaded
-    ledger = {
-        r.file_name: r.status
-        for r in ingestion_ledger(spark, wh).collect()
-    }
-    assert ledger["transactions_good.csv"] == "SUCCESS"
-    assert ledger["transactions_bad.csv"] == "FAILURE"
+    status = {r.file_name: r.status for r in _ingestion_rows(spark, wh)}
+    assert status["transactions_good.csv"] == "SUCCESS"
+    assert status["transactions_bad.csv"] == "FAILURE"
     rows = wh.read(spark, "bronze", "transactions").collect()
     assert len(rows) == 1
     assert rows[0]._source_file == "transactions_good.csv"
@@ -111,15 +113,34 @@ def test_row_id_overflow_raises(spark):
         df.collect()
 
 
+def _root_parts(p):
+    """Visible part files at a table's root (there should never be any)."""
+    return [f for f in os.listdir(p) if f.endswith(".parquet") and not f.startswith((".", "_"))]
+
+
+def _stage_uncommitted_files(p):
+    """The state a crash mid-overwrite leaves: staged part files that were
+    never committed, under the staging trees readers ignore."""
+    for staging in (".spark-staging-abc123/load_id=7", "_temporary/0/task_1/load_id=7"):
+        d = os.path.join(p, staging)
+        os.makedirs(d)
+        with open(os.path.join(d, "part-00000.snappy.parquet"), "wb") as fh:
+            fh.write(b"staged-not-committed")
+
+
 def test_first_ever_empty_batch_bootstraps_readable_table(spark, tmp_path):
     """A silver table whose FIRST batch filters to zero rows must still be
     readable downstream (empty typed frame), and the next non-empty batch
-    must transition it to the normal load_id-partitioned layout."""
+    must land in the normal load_id-partitioned layout. No write ever
+    puts a part file at the table root, and load_id reads with one type
+    before and after the first real batch."""
     wh = Warehouse(str(tmp_path / "wh"))
     wh.init()
     schema = "a int, b string, load_id long"
     empty = spark.createDataFrame([], schema)
-    wh.write_idempotent(spark, empty, "silver", "probe")
+    assert wh.write_idempotent(spark, empty, "silver", "probe") == 0
+    p = wh.path("silver", "probe")
+    assert _root_parts(p) == []
 
     back = wh.read(spark, "silver", "probe")
     assert back.count() == 0
@@ -128,85 +149,87 @@ def test_first_ever_empty_batch_bootstraps_readable_table(spark, tmp_path):
     # replaying the empty batch stays a no-op
     wh.write_idempotent(spark, empty, "silver", "probe")
     assert wh.read(spark, "silver", "probe").count() == 0
+    assert _root_parts(p) == []
 
-    # first real batch: bootstrap cleared, partitioned layout works
+    # first real batch: lands in its own partition next to the footer
     rows = spark.createDataFrame([(1, "x", 7), (2, "y", 7)], schema)
-    wh.write_idempotent(spark, rows, "silver", "probe")
+    assert wh.write_idempotent(spark, rows, "silver", "probe") == 2
     got = wh.read(spark, "silver", "probe")
     assert got.count() == 2
     assert {int(r.load_id) for r in got.select("load_id").collect()} == {7}
+    assert got.schema["load_id"].dataType == back.schema["load_id"].dataType
     # idempotent rerun of the same load overwrites, not duplicates
     wh.write_idempotent(spark, rows, "silver", "probe")
     assert wh.read(spark, "silver", "probe").count() == 2
+    assert _root_parts(p) == []
 
 
-def test_bootstrap_crash_window_recovers(spark, tmp_path):
-    """Crash between parking the zero-row bootstrap and the partitioned
-    overwrite's commit: the dir holds only the dot-prefixed parked file,
-    which readers must restore (empty typed frame, not an inference
-    error); the next successful real write removes the parked copy."""
-    from travel_data_ingestion_spark.catalog import _BOOTSTRAP_PREFIX
-
+def test_crash_mid_write_next_to_footer_retries_once(spark, tmp_path):
+    """Crash during a table's first real write, after an empty first
+    batch: uncommitted part files sit under .spark-staging-*/load_id=7 and
+    _temporary/ next to the load_id=0 footer. The table still reads as
+    empty and typed, and the retried write lands exactly once. Without a
+    footer (the crash hit the table's very first write), the staged files
+    do not make the table exist, and an empty retry still writes one."""
     wh = Warehouse(str(tmp_path / "wh"))
     wh.init()
     schema = "a int, b string, load_id long"
-    wh.write_idempotent(spark, spark.createDataFrame([], schema), "silver", "probe")
+    empty = spark.createDataFrame([], schema)
+    wh.write_idempotent(spark, empty, "silver", "probe")
     p = wh.path("silver", "probe")
-    parts = [f for f in os.listdir(p) if f.endswith(".parquet") and not f.startswith(".")]
-    assert len(parts) == 1
-    # simulate the crash state: bootstrap parked, overwrite never committed
-    os.replace(os.path.join(p, parts[0]), os.path.join(p, _BOOTSTRAP_PREFIX + parts[0]))
-    back = wh.read(spark, "silver", "probe")  # heals: restores the footer
-    assert back.count() == 0 and set(back.columns) == {"a", "b", "load_id"}
-    assert os.path.exists(os.path.join(p, parts[0]))  # visible again
-    # a crashed write retried from the healed state completes normally
-    rows = spark.createDataFrame([(1, "x", 7)], schema)
-    wh.write_idempotent(spark, rows, "silver", "probe")
-    assert wh.read(spark, "silver", "probe").count() == 1
-    assert not any(f.startswith(_BOOTSTRAP_PREFIX) for f in os.listdir(p))
-    # stale parked leftover NEXT TO committed data (crash after commit,
-    # before cleanup) is swept, not restored into a layout conflict
-    fake = os.path.join(p, _BOOTSTRAP_PREFIX + "part-stale.parquet")
-    with open(fake, "wb") as fh:
-        fh.write(b"stale")
-    assert wh.read(spark, "silver", "probe").count() == 1
-    assert not os.path.exists(fake)
-
-
-def test_bootstrap_heal_ignores_staging_dirs(spark, tmp_path):
-    """Crash DURING the partitioned overwrite: the dir holds the parked
-    bootstrap plus staged part files under .spark-staging-*/_temporary.
-    Staged files are NOT committed data — the heal must restore the
-    parked footer, never count the staging tree as 'visible' and delete
-    the only recovery file."""
-    from travel_data_ingestion_spark.catalog import _BOOTSTRAP_PREFIX
-
-    wh = Warehouse(str(tmp_path / "wh"))
-    wh.init()
-    schema = "a int, b string, load_id long"
-    wh.write_idempotent(spark, spark.createDataFrame([], schema), "silver", "probe")
-    p = wh.path("silver", "probe")
-    parts = [f for f in os.listdir(p) if f.endswith(".parquet") and not f.startswith(".")]
-    parked = _BOOTSTRAP_PREFIX + parts[0]
-    os.replace(os.path.join(p, parts[0]), os.path.join(p, parked))
-    # in-flight overwrite state: staged (uncommitted) part files
-    for staging in (".spark-staging-abc123/load_id=7",
-                    "_temporary/0/task_1/load_id=7"):
-        d = os.path.join(p, staging)
-        os.makedirs(d)
-        with open(os.path.join(d, "part-00000.snappy.parquet"), "wb") as fh:
-            fh.write(b"staged-not-committed")
+    _stage_uncommitted_files(p)
     back = wh.read(spark, "silver", "probe")
     assert back.count() == 0 and set(back.columns) == {"a", "b", "load_id"}
-    # parked bootstrap was RESTORED (visible again), not deleted
-    assert os.path.exists(os.path.join(p, parts[0]))
-    assert not os.path.exists(os.path.join(p, parked))
+
+    rows = spark.createDataFrame([(1, "x", 7), (2, "y", 7)], schema)
+    assert wh.write_idempotent(spark, rows, "silver", "probe") == 2
+    got = wh.read(spark, "silver", "probe")
+    assert sorted((r.a, r.b, int(r.load_id)) for r in got.collect()) == [(1, "x", 7), (2, "y", 7)]
+    assert _root_parts(p) == []
+
+    _stage_uncommitted_files(wh.path("silver", "fresh"))
+    assert not wh.exists("silver", "fresh")
+    wh.write_idempotent(spark, empty, "silver", "fresh")
+    back = wh.read(spark, "silver", "fresh")
+    assert back.count() == 0 and set(back.columns) == {"a", "b", "load_id"}
+
+
+def test_header_only_first_landing_file(spark, tmp_path):
+    """A dataset's first landing file holds only a header: bronze gets no
+    files and reads back with its registered schema, run_silver finds no
+    batch to log, and the next real file lands normally."""
+    from travel_data_ingestion_spark.silver import run_silver
+    from travel_data_ingestion_spark.silver.runner import bronze_load_ids
+
+    header = "country,date,name,type,amount,comments\n"
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    (landing / "transactions_01.csv").write_text(header)
+    wh = Warehouse(str(tmp_path / "wh"))
+    wh.init()
+    detail = FileDetail(1, str(landing), "transactions*.csv", "bronze", "transactions", "csv")
+    assert ingest_dataset(spark, wh, detail) == [1]
+    assert not [f for _, _, fs in os.walk(wh.path("bronze", "transactions"))
+                for f in fs if f.endswith(".parquet")]
+    bronze = wh.read(spark, "bronze", "transactions")
+    assert bronze.schema == BRONZE_SCHEMAS["transactions"] and bronze.count() == 0
+    assert bronze_load_ids(spark, wh, "transactions") == []
+    assert run_silver(spark, wh, datasets=["transactions"]) == {}
+    assert wh.read(spark, "admin", "transformation_logs").count() == 0
+
+    (landing / "transactions_02.csv").write_text(header + "JP,2026-02-01,m1,Food,10.5,ok\n")
+    assert ingest_dataset(spark, wh, detail) == [2]
+    assert bronze_load_ids(spark, wh, "transactions") == [2]
+    # one all_spending row + one daily_spend row
+    assert run_silver(spark, wh, datasets=["transactions"]) == {"transactions": 2}
+    assert [(r.load_id, r.status) for r in wh.read(spark, "admin", "transformation_logs")
+            .filter("status = 'SUCCESS'").collect()] == [(2, "SUCCESS")]
 
 
 def test_write_idempotent_rejects_unpartitioned_data(spark, tmp_path):
     """Root-level files with ROWS mean the table was written via a
     different sink; write_idempotent must refuse loudly rather than
-    silently deleting them as if they were the empty bootstrap."""
+    burying them under a partitioned layout."""
     import pytest
 
     wh = Warehouse(str(tmp_path / "wh"))
@@ -282,7 +305,7 @@ def _latest_ids(spark, wh, status):
     """file name -> load_id of the ledger's latest rows with ``status``."""
     return {
         r.file_name: r.load_id
-        for r in ingestion_ledger(spark, wh).collect()
+        for r in _ingestion_rows(spark, wh)
         if r.status == status
     }
 
@@ -290,8 +313,6 @@ def _latest_ids(spark, wh, status):
 def _crash_on_terminal_append(monkeypatch, status_col):
     """Crash at a run's terminal ledger append, after its RUNNING one;
     returns the real append."""
-    from travel_data_ingestion_spark import ledger
-
     real = ledger.append
 
     def append(spark, wh, table, rows):
@@ -353,7 +374,7 @@ def test_crash_before_bronze_commit_retries_cleanly(
 
     _medallion(spark, wh, cfg)
     assert _state(spark, wh) == clean_state
-    assert {r.load_id for r in ingestion_ledger(spark, wh).collect()} == set(reserved.values())
+    assert {r.load_id for r in _ingestion_rows(spark, wh)} == set(reserved.values())
 
 
 def test_allocations_stay_above_reserved_ids(spark, tmp_path, monkeypatch, slice_landing):
@@ -382,7 +403,7 @@ def test_allocations_stay_above_reserved_ids(spark, tmp_path, monkeypatch, slice
     assert min(r.transformation_id for r in retried) > crashed
 
     # a batch reservation that never completed still bounds the stream
-    landed = max(r.load_id for r in ingestion_ledger(spark, wh).collect())
+    landed = max(r.load_id for r in _ingestion_rows(spark, wh))
     real(spark, wh, "ingestion_logs",
          [(landed + 5, 1, "late.csv", "transactions", "RUNNING", None, None)])
     ckpt = str(tmp_path / "ckpt")
@@ -414,7 +435,7 @@ def test_ledger_tie_prefers_terminal_status(spark, tmp_path):
     # load 1, RUNNING first for load 2
     wh.append(spark, spark.createDataFrame(rows, ADMIN_SCHEMAS["ingestion_logs"]).coalesce(1),
               "admin", "ingestion_logs")
-    assert {r.load_id: r.status for r in ingestion_ledger(spark, wh).collect()} == {
+    assert {r.load_id: r.status for r in _ingestion_rows(spark, wh)} == {
         1: "SUCCESS", 2: "SUCCESS"}
     detail = FileDetail(1, str(landing), "transactions*.csv", "bronze", "transactions", "csv")
     assert ingest_dataset(spark, wh, detail) == []  # both files are done

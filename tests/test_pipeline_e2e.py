@@ -288,7 +288,7 @@ def test_interleaved_disjoint_writers_keep_ledger_consistent(spark, pipeline_wh)
     design note worries about): each pinned run overwrites only its own
     load_id partition, so the table keeps every load exactly once, the
     append-only ledger stays consistent (replayed SUCCESS rows are
-    harmless — pending_load_ids reads DISTINCT load_id), and an
+    harmless — run_silver reads the ledger's SUCCESS pairs as a set), and an
     unpinned follow-up run sees no pending work. True same-instant
     concurrency remains out of scope (SURVEY §7.4-4: one driver per
     warehouse); this pins the sequential-interleave contract.
@@ -299,7 +299,8 @@ def test_interleaved_disjoint_writers_keep_ledger_consistent(spark, pipeline_wh)
     from pyspark.sql import functions as F
 
     from travel_data_ingestion_spark.silver import run_silver
-    from travel_data_ingestion_spark.silver.runner import pending_load_ids
+    from travel_data_ingestion_spark import ledger
+    from travel_data_ingestion_spark.silver.runner import bronze_load_ids
 
     from tests.fixtures_gen import _w
     from travel_data_ingestion_spark.config import load_config
@@ -349,5 +350,8 @@ def test_interleaved_disjoint_writers_keep_ledger_consistent(spark, pipeline_wh)
     assert rows_by_load() == after
 
     # ledger: no pending work afterwards, and an unpinned run is a no-op
-    assert pending_load_ids(spark, wh, "transactions", "transactions") == []
+    done = {(r.transformation_name, r.load_id)
+            for r in ledger.snapshot(spark, wh, "transformation_logs").rows
+            if r.status == "SUCCESS"}
+    assert all(("transactions", i) in done for i in bronze_load_ids(spark, wh, "transactions"))
     assert run_silver(spark, wh, datasets=["transactions"]) == {}

@@ -189,50 +189,6 @@ def test_stream_ingest_epoch_map_survives_batch_interleave(spark, tmp_path):
         assert markers2[e] == lid
 
 
-def test_epoch_load_id_legacy_base_migration(spark, tmp_path):
-    """Legacy single-base checkpoints migrate per epoch: base+epoch that
-    matches a committed stream ledger row is a replay (keeps its id);
-    an unseen epoch goes through fresh ledger allocation instead of
-    blindly continuing base+epoch into ids a batch may own."""
-    from datetime import datetime, timezone
-
-    from travel_data_ingestion_spark.catalog import ADMIN_SCHEMAS
-    from travel_data_ingestion_spark.streaming.ingest_stream import _epoch_load_id
-
-    wh = Warehouse(str(tmp_path / "wh"))
-    wh.init()
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(ckpt)
-    with open(os.path.join(ckpt, "_load_id_base"), "w") as fh:
-        fh.write("5")
-    # epochs 0..1 committed under the legacy scheme (ids 5, 6); then a
-    # batch load took 7
-    rows = [
-        (5, None, "stream:transactions", "transactions", "SUCCESS", None, None,
-         datetime.now(timezone.utc)),
-        (6, None, "stream:transactions", "transactions", "SUCCESS", None, None,
-         datetime.now(timezone.utc)),
-        (7, None, "some_batch.csv", "transactions", "SUCCESS", 10, None,
-         datetime.now(timezone.utc)),
-    ]
-    wh.append(
-        spark,
-        spark.createDataFrame(rows, ADMIN_SCHEMAS["ingestion_logs"]),
-        "admin",
-        "ingestion_logs",
-    )
-    # replayed committed epochs keep their legacy ids
-    assert _epoch_load_id(spark, wh, ckpt, 1, "transactions") == 6
-    # a NEW epoch (legacy candidate would be 5+2=7 — the batch's id!)
-    # allocates fresh above the ledger instead
-    lid = _epoch_load_id(spark, wh, ckpt, 2, "transactions")
-    assert lid == 8
-    # and the allocation is now pinned + ledger-reserved: a second call
-    # replays the marker, and the reservation advanced the ledger max
-    assert _epoch_load_id(spark, wh, ckpt, 2, "transactions") == 8
-    assert _epoch_load_id(spark, wh, ckpt, 3, "transactions") == 9
-
-
 def test_stateful_user_profile(spark, tmp_path):
     """applyInPandasWithState accumulates per-user state across batches."""
     from travel_data_ingestion_spark.streaming.stateful import user_profile_stream

@@ -12,6 +12,11 @@ Path-based tables (instead of a Hive metastore) keep the engine
 dependency-free and make the DELETE+INSERT idempotent sink a dynamic
 partition overwrite — the scalable equivalent of the reference's
 ``DELETE FROM t WHERE load_id IN (...)`` + append (utils.py:12-46).
+A table written by that sink has one layout: every part file sits in a
+``load_id=N/`` partition, and a silver table whose first batch was
+empty keeps a zero-row schema footer in ``load_id=0/`` (ledger ids
+start at 1). A crash mid-write leaves only staging files that readers
+ignore; the retry overwrites the same partitions (``write_idempotent``).
 
 Bronze business columns are all strings (schema-on-read, matching
 reset_schemas.sql:65-161 where even AMOUNT is VARCHAR); four lineage
@@ -156,11 +161,6 @@ ADMIN_SCHEMAS: dict[str, T.StructType] = {
 SCHEMAS = ("admin", "bronze", "silver", "gold")
 
 
-# parked zero-row bootstrap part files (dot-prefixed = ignored by Spark
-# readers and partition discovery) — see write_idempotent
-_BOOTSTRAP_PREFIX = ".bootstrap__"
-
-
 @dataclass
 class Warehouse:
     """Path-based medallion warehouse rooted at ``root``."""
@@ -171,11 +171,12 @@ class Warehouse:
         return os.path.join(self.root, schema, table)
 
     def exists(self, schema: str, table: str) -> bool:
-        p = self.path(schema, table)
-        if not os.path.isdir(p):
-            return False
-        for _, _, files in os.walk(p):
-            if any(f.endswith(".parquet") for f in files):
+        """True once the table holds a committed part file; the staging
+        trees of an uncommitted write ('.spark-staging-*', '_temporary')
+        do not count."""
+        for _, dirs, files in os.walk(self.path(schema, table)):
+            dirs[:] = [d for d in dirs if not d.startswith((".", "_"))]
+            if any(f.endswith(".parquet") and not f.startswith((".", "_")) for f in files):
                 return True
         return False
 
@@ -186,54 +187,12 @@ class Warehouse:
             return ADMIN_SCHEMAS.get(table)
         return None
 
-    def _heal_parked_bootstrap(self, p: str) -> None:
-        """Recover the zero-row bootstrap crash window: write_idempotent
-        parks the bootstrap part file under a dot-prefixed name before
-        its first partitioned overwrite, so a crash between the park and
-        the commit leaves the dir with ONLY hidden files — unreadable.
-        Restoring the parked file (atomic rename) puts a readable footer
-        back; conversely, a parked file next to committed visible data
-        (crash after commit, before cleanup) is stale and removed.
-        Single-driver contract: reads never race a live writer here,
-        same as the warehouse's ledgers."""
-        if not os.path.isdir(p):
-            return
-        parked = [
-            f
-            for f in os.listdir(p)
-            if f.startswith(_BOOTSTRAP_PREFIX) and f.endswith(".parquet")
-        ]
-        if not parked:
-            return
-        # visible == COMMITTED data only: prune descent into hidden and
-        # staging trees ('.spark-staging-*', '_temporary') — a crash
-        # DURING the partitioned overwrite leaves staged part files
-        # there, and counting them would delete the parked bootstrap
-        # (the recovery footer) instead of restoring it
-        visible = False
-        for sub, dirs, files in os.walk(p):
-            dirs[:] = [d for d in dirs if not d.startswith((".", "_"))]
-            if any(
-                f.endswith(".parquet") and not f.startswith((".", "_"))
-                for f in files
-            ):
-                visible = True
-                break
-        for f in parked:
-            if visible:
-                os.remove(os.path.join(p, f))  # stale post-commit leftover
-            else:
-                os.replace(
-                    os.path.join(p, f), os.path.join(p, f[len(_BOOTSTRAP_PREFIX):])
-                )
-
     def read(self, spark: SparkSession, schema: str, table: str) -> DataFrame:
         """DESC TABLE + scan analog: empty typed frame when absent. A
         registered table is read with its schema, which skips Spark's
         schema-inference job."""
         st = self.registered_schema(schema, table)
         if self.exists(schema, table):
-            self._heal_parked_bootstrap(self.path(schema, table))
             reader = spark.read if st is None else spark.read.schema(st)
             return reader.parquet(self.path(schema, table))
         if st is None:
@@ -263,42 +222,32 @@ class Warehouse:
         load_id, overwriting exactly the incoming partitions is the same
         contract with no row-level delete — and at 100 TB it touches only
         the affected partitions' files.
+
+        Every file lives under ``load_id=N/``, none at the table root. An
+        unregistered (silver) table whose first batch is empty gets a
+        zero-row footer in ``load_id=0/`` so it reads as an empty typed
+        table; ledger ids start at 1, so no batch ever overwrites that
+        partition. Registered (bronze/admin) tables get no footer: ``read``
+        returns their registered schema. Nothing is moved or deleted
+        outside the overwritten partitions, so a crash mid-write leaves
+        only uncommitted files under ``.spark-staging-*``/``_temporary``,
+        which readers ignore, and the retried write lands exactly once.
         """
         if "load_id" not in df.columns:
             raise ValueError("idempotent write requires a load_id column")
-        # clear a zero-row schema bootstrap before the write: root-level
-        # part files mixed with load_id= dirs trip "conflicting directory
-        # structures" in partition discovery. The bootstrap is PARKED
-        # under a dot-prefixed (reader-ignored) name rather than deleted,
-        # and removed only after the partitioned overwrite commits rows —
-        # a crash in between leaves a recoverable footer file
-        # (_heal_parked_bootstrap restores it on the next read) instead
-        # of a dir with only _SUCCESS.
-        # Guard: only the empty bootstrap is parked — root files
-        # holding ROWS mean the table was written unpartitioned (e.g.
-        # via overwrite()); silently hiding those would be data loss,
-        # so that mix is a loud error instead.
         p = self.path(schema, table)
-        parked: list[tuple[str, str]] = []
-        if os.path.isdir(p):
-            self._heal_parked_bootstrap(p)  # resume from a prior crash
-            root_parts = [
-                f
-                for f in os.listdir(p)
-                if f.endswith(".parquet") and not f.startswith((".", "_"))
-            ]
-            if root_parts:
-                if not spark.read.parquet(*[os.path.join(p, f) for f in root_parts]).isEmpty():
-                    raise ValueError(
-                        f"{schema}.{table} holds unpartitioned data rows; "
-                        "write_idempotent requires the load_id-partitioned "
-                        "layout — rewrite the table (overwrite) before "
-                        "switching sinks"
-                    )
-                for f in root_parts:
-                    dst = os.path.join(p, _BOOTSTRAP_PREFIX + f)
-                    os.replace(os.path.join(p, f), dst)
-                    parked.append((os.path.join(p, f), dst))
+        # root part files mean the table was written unpartitioned (e.g.
+        # via overwrite()): partition discovery cannot mix them with
+        # load_id= dirs, so refuse rather than bury them
+        if os.path.isdir(p) and any(
+            f.endswith(".parquet") and not f.startswith((".", "_")) for f in os.listdir(p)
+        ):
+            raise ValueError(
+                f"{schema}.{table} holds unpartitioned data files; "
+                "write_idempotent requires the load_id-partitioned "
+                "layout — rewrite the table (overwrite) before "
+                "switching sinks"
+            )
         # writer-level option only — mutating the SESSION conf here would
         # silently flip every later partitioned overwrite in the session
         # to dynamic semantics (stale-partition hazard export.py has to
@@ -312,23 +261,11 @@ class Warehouse:
             .parquet(p)
         )
         rows = int(seen.get["rows"])
-        if rows:
-            for _, dst in parked:
-                os.remove(dst)
-            return rows
-        # An all-filtered batch overwrote no partitions: put a parked
-        # bootstrap back, and give a table's FIRST-EVER batch a
-        # schema-carrying zero-row file (unpartitioned, exactly one
-        # footer) so downstream readers see an empty typed table instead
-        # of FileNotFoundError. A dir with only _SUCCESS would break
-        # schema inference.
-        for src, dst in parked:
-            os.replace(dst, src)
-        if not self.exists(schema, table):
-            spark.createDataFrame([], df.schema).coalesce(1).write.mode(
+        if not rows and self.registered_schema(schema, table) is None and not self.exists(schema, table):
+            spark.createDataFrame([], df.drop("load_id").schema).coalesce(1).write.mode(
                 "overwrite"
-            ).parquet(p)
-        return 0
+            ).parquet(os.path.join(p, "load_id=0"))
+        return rows
 
     def init(self) -> None:
         """Reset/DDL bootstrap analog (reference reset_database_dag.py:13-41)."""

@@ -25,9 +25,10 @@ from __future__ import annotations
 import os
 import re
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, DataFrameReader, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import DataStreamReader
 
 from travel_data_ingestion_spark import ledger
 from travel_data_ingestion_spark.catalog import BRONZE_SCHEMAS, LINEAGE_FIELDS, Warehouse
@@ -89,12 +90,6 @@ def list_stage_files(source_path: str, file_pattern: str) -> list[str]:
     return out
 
 
-def ingestion_ledger(spark: SparkSession, wh: Warehouse) -> DataFrame:
-    """Latest status per load_id: the append-only log collapsed by
-    ``ledger.latest`` (the A-08 'UPDATE' analog)."""
-    return ledger.latest(wh.read(spark, "admin", "ingestion_logs"), "load_id")
-
-
 def landing_schema(table: str) -> T.StructType:
     """Bronze business columns as strings, in file order: the positional
     $1..$N read schema (A-05). A short row pads missing trailing columns
@@ -113,14 +108,19 @@ def read_landing_file(spark: SparkSession, path: str, file_format: str, table: s
     each top-level value becomes one VARIANT row).
     """
     if file_format == "csv":
-        # single source of truth for CSV parsing options (io.CSV_OPTIONS):
-        # the batch path, io.read_table, and the streaming ingest must all
-        # parse a file into identical rows, or replays/re-ingests diverge
-        reader = spark.read.schema(landing_schema(table)).options(**CSV_OPTIONS)
-        return _csv_null_tokens(reader.csv(path))
+        return read_csv(spark.read, table, path)
     if file_format == "json":
         return spark.read.text(path, wholetext=True).toDF("raw_data")
     raise ValueError(f"unsupported file format: {file_format}")
+
+
+def read_csv(reader: DataFrameReader | DataStreamReader, table: str, path: str) -> DataFrame:
+    """The CSV landing scan of both the batch and the streaming ingest:
+    the positional schema, io.CSV_OPTIONS (the single source of truth
+    for parsing options, shared with io.read_table) and the NULL_IF
+    tokens, so a file produces identical bronze rows whichever path
+    ingested it — or replays and re-ingests diverge."""
+    return _csv_null_tokens(reader.schema(landing_schema(table)).options(**CSV_OPTIONS).csv(path))
 
 
 def _csv_null_tokens(df: DataFrame) -> DataFrame:
@@ -133,6 +133,20 @@ def _csv_null_tokens(df: DataFrame) -> DataFrame:
             c, F.when(F.col(c).isin("null", ""), None).otherwise(F.col(c))
         )
     return df
+
+
+def with_lineage(df: DataFrame, source_file: Column, load_id: int) -> DataFrame:
+    """Append the four LINEAGE_FIELDS columns (reset_schemas.sql:68-71,
+    populated as in ingestion_logic.py:166). row_id is unique + monotone
+    per table via disjoint (load_id | partition | row) bit fields — no
+    global window, no gaplessness requirement (the reference only ever
+    takes MAX(load_id))."""
+    return (
+        df.withColumn("_ingestion_time", F.current_timestamp())
+        .withColumn("_source_file", source_file)
+        .withColumn("load_id", F.lit(load_id).cast("long"))
+        .withColumn("row_id", lineage_row_id(load_id))
+    )
 
 
 def ingest_file(
@@ -150,18 +164,8 @@ def ingest_file(
         # as zero rows under an explicit schema and pass for a SUCCESS
         raise ValueError(f"not a regular file: {path}")
     raw = read_landing_file(spark, path, detail.file_format, detail.target_table)
-    # Lineage columns (reset_schemas.sql:68-71, populated as in
-    # ingestion_logic.py:166). row_id is unique + monotone per table via
-    # disjoint (load_id | partition | row) bit fields — no global window,
-    # no gaplessness requirement (the reference only ever takes
-    # MAX(load_id)).
-    with_lineage = (
-        raw.withColumn("_ingestion_time", F.current_timestamp())
-        .withColumn("_source_file", F.lit(os.path.basename(path)))
-        .withColumn("load_id", F.lit(load_id).cast("long"))
-        .withColumn("row_id", lineage_row_id(load_id))
-    )
-    return wh.write_idempotent(spark, with_lineage, "bronze", detail.target_table)
+    rows = with_lineage(raw, F.lit(os.path.basename(path)), load_id)
+    return wh.write_idempotent(spark, rows, "bronze", detail.target_table)
 
 
 def ingest_dataset(spark: SparkSession, wh: Warehouse, detail: FileDetail) -> list[int]:

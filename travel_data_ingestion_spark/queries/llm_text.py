@@ -412,7 +412,7 @@ def t09_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # multiplicity); bigrams are non-null by construction (concat_ws
     # over >= 3 tokens), and eligible docs have >= 2 bigrams, so the
     # accumulator's null start never leaks. Interleaved A/B + checksum
-    # in tools/exp_t09_topcount.py.
+    # in tools/exp_t09_topcount.py (commit bebdc26).
     top_count = F.aggregate(
         F.array_sort("bg"),
         F.struct(

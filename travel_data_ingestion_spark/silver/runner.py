@@ -34,19 +34,6 @@ def bronze_load_ids(spark: SparkSession, wh: Warehouse, bronze_table: str) -> li
     return sorted({int(m) for m in re.findall(r"/load_id=(\d+)/", paths)})
 
 
-def _done(snap: ledger.Snapshot) -> set[tuple[str, int]]:
-    return {(r.transformation_name, r.load_id) for r in snap.rows if r.status == "SUCCESS"}
-
-
-def pending_load_ids(
-    spark: SparkSession, wh: Warehouse, dataset: str, bronze_table: str
-) -> list[int]:
-    """New-work detection: bronze load_ids without a SUCCESS ledger row
-    (reference transactions.py:14-23, C-05)."""
-    done = _done(ledger.snapshot(spark, wh, "transformation_logs"))
-    return [i for i in bronze_load_ids(spark, wh, bronze_table) if (dataset, i) not in done]
-
-
 def run_silver(
     spark: SparkSession,
     wh: Warehouse,
@@ -57,14 +44,16 @@ def run_silver(
     """Run silver transforms for all (or selected) datasets.
 
     ``load_id`` pins one batch; ``reprocess`` bypasses the ledger filter
-    (reference transformation_logic.py:33-38, K-02). All pending batches
+    (reference transformation_logic.py:33-38, K-02). A batch is pending
+    while its bronze load_id has no SUCCESS ledger row (reference
+    transactions.py:14-23, C-05). All pending batches
     of a dataset are processed in ONE DataFrame pass; the written rows
     keep their load_id so the idempotent sink overwrites exactly the
     affected partitions. The ledger is read once and written twice per
     run: one RUNNING row per dataset, then every terminal row.
     """
     snap = ledger.snapshot(spark, wh, "transformation_logs")
-    done = _done(snap)
+    done = {(r.transformation_name, r.load_id) for r in snap.rows if r.status == "SUCCESS"}
     work = []
     for name in datasets or list(SILVER_TRANSFORMS):
         ids = [load_id] if load_id is not None else [
@@ -90,7 +79,7 @@ def run_silver(
             failures[name] = str(exc)[:500]
             continue
         # one SUCCESS row per processed batch: the ledger is the
-        # exactly-once contract consumed by pending_load_ids
+        # exactly-once contract the next run's selection reads
         terminal += [(trans_id, name, i, "SUCCESS", total, None) for i in ids]
         results[name] = total
     ledger.append(spark, wh, "transformation_logs", terminal)

@@ -41,12 +41,7 @@ from pyspark.sql import types as T
 
 from travel_data_ingestion_spark import ledger
 from travel_data_ingestion_spark.catalog import Warehouse
-from travel_data_ingestion_spark.io import CSV_OPTIONS
-from travel_data_ingestion_spark.ingest import (
-    _csv_null_tokens,
-    landing_schema,
-    lineage_row_id,
-)
+from travel_data_ingestion_spark.ingest import read_csv, with_lineage
 
 
 def _read_int_marker(jvm, fs, marker) -> int | None:
@@ -114,17 +109,6 @@ def _epoch_load_id(
     bronze partition). A crash between the reservation and the marker
     only leaks one id (the replay allocates afresh, above it).
 
-    Legacy checkpoints from the single-base scheme migrate in place: if
-    ``_load_id_base`` exists and ``base + epoch_id`` matches a streamed
-    ledger row for this table, the epoch is a replay of a committed
-    epoch and keeps its original id (recorded into the map); otherwise
-    the epoch is new and goes through fresh allocation. Caveat: the
-    legacy check matches ledger rows by ``stream:<table>``, so TWO
-    legacy checkpoints streaming into the SAME table could
-    cross-attribute a committed epoch during migration — if that
-    (rare) layout exists, drain each legacy stream to completion
-    before adding new files rather than migrating them concurrently.
-
     Goes through the Hadoop FileSystem API so markers live wherever the
     checkpoint lives (local disk in tests, HDFS/S3 on a cluster).
     """
@@ -137,34 +121,6 @@ def _epoch_load_id(
     recorded = _read_int_marker(jvm, fs, marker)
     if recorded is not None:
         return recorded
-    # legacy single-base checkpoint: a committed epoch left a
-    # stream:<table> ledger row at base+epoch — that epoch keeps its id
-    legacy = jvm.org.apache.hadoop.fs.Path(os.path.join(checkpoint, "_load_id_base"))
-    base = _read_int_marker(jvm, fs, legacy)
-    if base is not None:
-        candidate = base + int(epoch_id)
-        # an id already claimed by ANOTHER epoch's marker (a post-migration
-        # allocation also appends stream:<table> ledger rows) is not this
-        # epoch's legacy commit
-        map_dir = marker.getParent()
-        claimed = set()
-        if fs.exists(map_dir):
-            for st in fs.listStatus(map_dir):
-                v = _read_int_marker(jvm, fs, st.getPath())
-                if v is not None:
-                    claimed.add(v)
-        committed = candidate not in claimed and (
-            wh.read(spark, "admin", "ingestion_logs")
-            .filter(
-                (F.col("load_id") == candidate)
-                & (F.col("file_name") == f"stream:{target_table}")
-            )
-            .limit(1)
-            .count()
-        )
-        if committed:
-            _write_int_marker(jvm, fs, marker, candidate)
-            return candidate
     lid = ledger.snapshot(spark, wh, "ingestion_logs").next_id
     if floor is not None:
         lid = max(lid, int(floor))
@@ -190,14 +146,12 @@ def stream_ingest_csv(
     epochs always reuse the id recorded in the checkpoint's per-epoch
     map so they rewrite their original bronze partitions."""
     checkpoint = checkpoint_dir or os.path.join(wh.root, "_checkpoints", target_table)
-    # CSV parsing options come from the single shared set (io.CSV_OPTIONS)
-    # so a file produces identical bronze rows whichever path ingested it
-    stream = (
-        spark.readStream.schema(landing_schema(target_table))
-        .options(**CSV_OPTIONS)
-        .option("pathGlobFilter", pattern)
-        .option("maxFilesPerTrigger", 16)
-        .csv(landing_dir)
+    # the batch ingest's CSV scan, so a file produces identical bronze
+    # rows whichever path ingested it
+    stream = read_csv(
+        spark.readStream.option("pathGlobFilter", pattern).option("maxFilesPerTrigger", 16),
+        target_table,
+        landing_dir,
     )
 
     def write_batch(df: DataFrame, epoch_id: int) -> None:
@@ -207,13 +161,7 @@ def stream_ingest_csv(
             # reserved load_id + ledger rows per empty restart
             return
         eid = _epoch_load_id(s, wh, checkpoint, epoch_id, target_table, floor=load_id)
-        out = (
-            _csv_null_tokens(df)
-            .withColumn("_ingestion_time", F.current_timestamp())
-            .withColumn("_source_file", F.element_at(F.split(F.input_file_name(), "/"), -1))
-            .withColumn("load_id", F.lit(eid).cast("long"))
-            .withColumn("row_id", lineage_row_id(eid))
-        )
+        out = with_lineage(df, F.element_at(F.split(F.input_file_name(), "/"), -1), eid)
         # dynamic partition overwrite on load_id: an epoch replayed
         # after a crash rewrites exactly its own partition — no dupes
         wh.write_idempotent(s, out, "bronze", target_table)
