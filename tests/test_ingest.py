@@ -16,6 +16,7 @@ from travel_data_ingestion_spark.ingest import (
     glob_to_regex,
     ingest_dataset,
     list_stage_files,
+    read_csv,
 )
 
 
@@ -79,6 +80,22 @@ def test_column_count_tolerance(spark, tmp_path):
     ingest_dataset(spark, wh, detail)
     row = wh.read(spark, "bronze", "transactions").first()
     assert row.country == "JP" and row.type is None and row.amount is None
+
+
+def test_csv_parse_contract(spark, tmp_path):
+    """The landing CSV scan (file_format_csv.sql:1-6): a doubled quote
+    escapes a quote, a quoted delimiter stays in its field, and NULL,
+    null and an empty field all read as SQL NULL (NULL_IF)."""
+    path = tmp_path / "transactions_q.csv"
+    path.write_text(
+        'country,date,name,type,amount,comments\n'
+        'JP,,"a""b","Ho,tel",NULL,null\n'
+    )
+    rows = read_csv(spark.read, "transactions", str(path)).collect()
+    assert len(rows) == 1
+    r = rows[0]
+    assert (r.country, r.name, r.type) == ("JP", 'a"b', "Ho,tel")
+    assert r.date is None and r.amount is None and r.comments is None
 
 
 def test_row_id_bit_fields_disjoint_across_loads(spark):

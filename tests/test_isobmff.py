@@ -1,5 +1,4 @@
-"""ISOBMFF metadata probes (MP4/MOV/M4A/AVIF/HEIC) + the libheif
-native-codec adapter.
+"""ISOBMFF metadata probes (MP4/MOV/M4A/AVIF/HEIC).
 
 Two evidence classes:
 - hand-built boxes from the ISO 14496-12 grammar (independent writer
@@ -7,11 +6,7 @@ Two evidence classes:
   breaks naive parsers: a HEIF whose thumbnail carries its own ispe,
   where only the ipma association gives the primary item's true dims;
 - REAL files produced by the system libheif (HEVC via x265, AV1 via
-  aom) anchor the probes against a production encoder, and the
-  ctypes adapter in llm/native_codecs.py must decode them back to the
-  pixels we fed in (lossy tolerance) — the documented codec-hook swap
-  path exercised end to end, including the drop-in contract through
-  extract_features.
+  aom) anchor the probes against a production encoder.
 """
 
 from __future__ import annotations
@@ -189,10 +184,10 @@ def test_hostile_bytes_total():
 
 
 # ---------------------------------------------------------------------------
-# real libheif files + the native adapter
+# real libheif files
 
 
-def _heif_encode(fmt: int, rgb: np.ndarray, quality: int = 90) -> bytes:
+def _heif_encode(fmt: int, rgb: np.ndarray) -> bytes:
     """Encode RGB via the system libheif (1 = HEVC/x265, 4 = AV1/aom)."""
     lib = c.CDLL(_LIBHEIF)
 
@@ -237,7 +232,7 @@ def _heif_encode(fmt: int, rgb: np.ndarray, quality: int = 90) -> bytes:
     buf = np.ctypeslib.as_array(p, shape=(h, stride.value))
     for row in range(h):
         buf[row, : w * 3] = rgb[row].reshape(-1)
-    set_q(enc, quality)
+    set_q(enc, 90)
     set_param(enc, b"chroma", b"444")  # keep chroma-rich tests honest
     handle = c.c_void_p()
     assert encode(ctx, img, enc, None, c.byref(handle)).code == 0
@@ -257,21 +252,6 @@ def _gradient(w: int = 40, h: int = 24) -> np.ndarray:
     ).astype(np.uint8)
 
 
-def _sinusoid(w: int = 40, h: int = 24) -> np.ndarray:
-    """Strong low-frequency structure: the pHash's DCT coefficients are
-    well separated from the median, so codec noise cannot flip bits (a
-    LINEAR gradient is the degenerate case — nearly every coefficient
-    sits AT the median and re-encode noise coin-flips the hash; same
-    lesson as the zeta clique's measured re-encode drift)."""
-    yy, xx = np.mgrid[0:h, 0:w]
-    base = 128 + 90 * np.sin(2 * np.pi * xx / 13.0) * np.cos(2 * np.pi * yy / 7.0)
-    rgb = np.stack(
-        [base, 255 - base, 128 + 60 * np.sin(2 * np.pi * (xx + yy) / 9.0)],
-        axis=-1,
-    )
-    return np.clip(rgb, 0, 255).astype(np.uint8)
-
-
 needs_libheif = pytest.mark.skipif(
     not os.path.exists(_LIBHEIF), reason="system libheif not present"
 )
@@ -288,43 +268,3 @@ def test_probe_real_libheif_files():
     codec, w, h, _n = probe_heif(heic)
     # libheif tiles HEVC stills as a grid of hvc1 items (iPhone layout)
     assert codec in ("hvc1", "grid:hvc1") and (w, h) == (40, 24)
-
-
-@needs_libheif
-def test_native_adapter_decodes_real_pixels():
-    from travel_data_ingestion_spark.llm import native_codecs
-
-    rgb = _gradient()
-    for fmt in (4, 1):  # AV1, HEVC
-        payload = _heif_encode(fmt, rgb, quality=95)
-        got = native_codecs.image_codec(payload)
-        assert got is not None
-        w, h, raw = got
-        assert (w, h) == (40, 24)
-        dec = np.frombuffer(raw, np.uint8).reshape(24, 40, 3)
-        err = np.abs(dec.astype(int) - rgb.astype(int)).mean()
-        assert err < 8.0, err  # lossy but the same picture
-    # declines non-HEIF payloads (pure path keeps handling them)
-    assert native_codecs.image_codec(b"\x89PNG\r\n\x1a\n" + bytes(64)) is None
-    assert native_codecs.image_codec(_mp4()) is None
-
-
-@needs_libheif
-def test_native_adapter_is_a_drop_in_through_the_hook():
-    from travel_data_ingestion_spark.llm import multimodal, native_codecs
-
-    rgb = _sinusoid()
-    payload = _heif_encode(4, rgb, quality=95)
-    assert multimodal.decode_image(payload) is None  # pure path gates
-    multimodal.register_image_codec(native_codecs.image_codec)
-    try:
-        dec = multimodal.decode_image(payload)
-        assert dec is not None and (dec[0], dec[1]) == (40, 24)
-        # pHash via the hook matches the pHash of the source pixels'
-        # lossless PPM render within the near-dup threshold
-        ppm = b"P6\n40 24\n255\n" + rgb.tobytes()
-        h_avif = multimodal.phash_bytes(payload)
-        h_ppm = multimodal.phash_bytes(ppm)
-        assert bin((h_avif ^ h_ppm) & ((1 << 64) - 1)).count("1") <= 3
-    finally:
-        multimodal.register_image_codec(None)

@@ -102,9 +102,7 @@ def test_executor_loss_mid_query_is_recovered():
 def test_aqe_skew_join_splits_under_real_shuffle():
     # a 95%-hot key through a forced sort-merge join with test-scaled
     # skew thresholds: the final adaptive plan must report the skewed
-    # partition as split AND the join result must be exactly right —
-    # the runtime half of the skew story (skew.salted_join is the
-    # compile-time half)
+    # partition as split AND the join result must be exactly right
     out = _run(["skewtest", "-"], timeout=600)
     assert out["skew_split_observed"] is True
     assert out["rows"] == out["expected"] == 2_000_000

@@ -5,23 +5,11 @@ from __future__ import annotations
 import hashlib
 import os
 
-import pytest
-
 from tests.conftest import SF_DIR
 from travel_data_ingestion_spark.llm.multimodal import (
-    decode_image_stub,
     extract_features,
     media_from_documents,
 )
-
-
-def test_decode_stub_contract():
-    w, h = decode_image_stub(b"hello world")
-    assert 64 <= w < 256 and 64 <= h < 256
-    # deterministic
-    assert (w, h) == decode_image_stub(b"hello world")
-    with pytest.raises(NotImplementedError):
-        decode_image_stub(b"x", fake=False)
 
 
 def test_feature_extraction_roundtrip(spark):
@@ -311,7 +299,6 @@ def test_mixed_modality_binary_ingest_e2e(spark, tmp_path):
     library anywhere."""
     import numpy as np
 
-    from travel_data_ingestion_spark.io import read_table
     from travel_data_ingestion_spark.llm.multimodal import (
         extract_audio_features,
         extract_features,
@@ -332,7 +319,7 @@ def test_mixed_modality_binary_ingest_e2e(spark, tmp_path):
     (land / "clip.wav").write_bytes(_wav_bytes(16000, 1, 16, [1000, -1000] * 50))
     (land / "blob.bin").write_bytes(b"opaque-payload")
 
-    raw = read_table(spark, str(land), fmt="binary")
+    raw = spark.read.format("binaryFile").load(str(land))
     media = raw.select(
         F.xxhash64("path", "modificationTime").alias("media_id"),
         F.col("content").alias("payload"),
@@ -356,82 +343,3 @@ def test_mixed_modality_binary_ingest_e2e(spark, tmp_path):
     af = extract_audio_features(audio).collect()
     assert len(af) == 1 and af[0].sample_rate == 16000 and af[0].n_samples == 100
     assert af[0].duration_s == 0.00625
-
-
-def test_native_codec_hook_is_a_drop_in(tmp_path, monkeypatch):
-    """The pluggable codec hook: a native decoder registered for a
-    container must produce IDENTICAL feature/pHash results to the pure
-    path (same canonical decode contract), payloads it declines fall
-    through, and the env-var registration path loads on import — the
-    mechanism that reaches executor Python workers."""
-    import sys
-
-    import numpy as np
-
-    from travel_data_ingestion_spark.llm import multimodal as mm
-    from travel_data_ingestion_spark.llm.multimodal import (
-        decode_audio,
-        decode_image,
-        phash_bytes,
-    )
-
-    rgb = np.random.RandomState(3).randint(0, 256, (12, 10, 3)).astype("uint8")
-    jpeg_like = b"\xff\xd8FAKE-NATIVE-ONLY"  # no pure decoder claims this
-    ppm = b"P6\n10 12\n255\n" + rgb.tobytes()
-
-    base_hash = phash_bytes(ppm)
-    assert decode_image(jpeg_like) is None
-
-    calls = []
-
-    def fake_native(payload):
-        calls.append(payload[:4])
-        if payload == jpeg_like:
-            return 10, 12, rgb.tobytes()
-        return None  # decline: pure path takes over
-
-    monkeypatch.setattr(mm, "_IMAGE_CODEC", fake_native)
-    try:
-        # the hook decodes a container the pure path cannot...
-        assert decode_image(jpeg_like) == (10, 12, rgb.tobytes())
-        # ...and its pHash is identical to the pure decode of the same
-        # pixels — the drop-in contract oracles depend on
-        assert phash_bytes(jpeg_like) == base_hash
-        # declined payloads fall through to the pure decoders unchanged
-        assert decode_image(ppm) == (10, 12, rgb.tobytes())
-        assert phash_bytes(ppm) == base_hash
-        assert calls  # the hook was genuinely consulted first
-    finally:
-        monkeypatch.undo()
-    assert decode_image(jpeg_like) is None  # unregistered again
-
-    # audio twin
-    x = np.zeros((8, 1)) + 0.25
-
-    def fake_audio(payload):
-        return (8000, 1, x) if payload == b"FAKEAUDIO" else None
-
-    monkeypatch.setattr(mm, "_AUDIO_CODEC", fake_audio)
-    try:
-        got = decode_audio(b"FAKEAUDIO")
-        assert got is not None and got[0] == 8000 and (got[2] == x).all()
-    finally:
-        monkeypatch.undo()
-    assert decode_audio(b"FAKEAUDIO") is None
-
-    # env-var registration: the worker-side mechanism
-    codec_mod = tmp_path / "fake_codec_mod.py"
-    codec_mod.write_text(
-        "def image_codec(payload):\n"
-        "    if payload == b'MAGICIMG':\n"
-        "        return 1, 1, b'abc'\n"
-        "    return None\n"
-    )
-    monkeypatch.syspath_prepend(str(tmp_path))
-    monkeypatch.setenv("SPARK_GRAFT_CODEC_MODULE", "fake_codec_mod")
-    try:
-        mm._load_codec_hooks()
-        assert decode_image(b"MAGICIMG") == (1, 1, b"abc")
-    finally:
-        monkeypatch.setattr(mm, "_IMAGE_CODEC", None)
-        sys.modules.pop("fake_codec_mod", None)

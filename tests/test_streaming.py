@@ -189,29 +189,6 @@ def test_stream_ingest_epoch_map_survives_batch_interleave(spark, tmp_path):
         assert markers2[e] == lid
 
 
-def test_stateful_user_profile(spark, tmp_path):
-    """applyInPandasWithState accumulates per-user state across batches."""
-    from travel_data_ingestion_spark.streaming.stateful import user_profile_stream
-
-    stream = _event_stream(spark, str(tmp_path)).select("ts", "user_id", "value")
-    q = (
-        user_profile_stream(stream)
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName("profile_out")
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    rows = spark.sql(
-        "SELECT user_id, max(total_events) AS n, max(total_value) AS v "
-        "FROM profile_out GROUP BY user_id"
-    ).collect()
-    out = {r.user_id: (r.n, r.v) for r in rows}
-    assert out[1] == (3, 7.0)   # 1.0 + 2.0 + 4.0
-    assert out[2] == (2, 8.0)   # 3.0 + 5.0
-
-
 def test_stream_dedup_across_microbatches(spark, tmp_path):
     """deduped_doc_stream: re-delivered content in a LATER micro-batch is
     dropped (cross-batch state), distinct content passes through."""

@@ -197,9 +197,7 @@ def skewtest() -> dict:
     disabled) with test-scaled skew thresholds. Asserts (a) the final
     adaptive plan actually split the skewed partition (the
     AQEShuffleRead reports ``skewed``), and (b) the join result is
-    exactly right — AQE splitting must never change semantics. This is
-    the runtime half of the skew story; skew.salted_join is the
-    compile-time half for engines/joins AQE cannot split."""
+    exactly right — AQE splitting must never change semantics."""
     import io
     from contextlib import redirect_stdout
 

@@ -15,32 +15,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from travel_data_ingestion_spark.catalog import Warehouse
-from travel_data_ingestion_spark.compat import (
-    qualify_dedup_latest,
-    qualify_latest_batch,
-    try_to_date,
-)
-
-# Recency dedup per silver table — IDENTICAL to the gold consumers'
-# keys (gold/*.py, pinned by the e2e QUALIFY oracles): silver keeps one
-# partition per load_id, so a re-uploaded file leaves both batches and
-# a raw read double-counts. Every dashboard query reads through this.
-_DEDUP_KEYS = {
-    "google_timeline": ["start_time", "end_time", "segment_type"],
-    "manual_logs": ["date"],
-    "flight_logs": ["date", "flight_number"],
-    "sleep_log": ["sleep_log_entry_id"],
-    "hourly_step_count": ["date", "hour"],
-}
-
-
-def _silver(spark: SparkSession, wh: Warehouse, table: str) -> DataFrame:
-    df = wh.read(spark, "silver", table)
-    if table == "all_spending":
-        # spending rows have no natural key; latest re-upload of a FILE
-        # wins wholesale (sp_full_travel_costs.sql:21-24 semantics)
-        return qualify_latest_batch(df, ["_source_file"])
-    return qualify_dedup_latest(df, _DEDUP_KEYS[table])
+from travel_data_ingestion_spark.compat import try_to_date
+from travel_data_ingestion_spark.silver import read_current
 
 
 def bearing(lat1: Column, lon1: Column, lat2: Column, lon2: Column) -> Column:
@@ -86,7 +62,7 @@ def _between(col: Column, start: str, end: str) -> Column:
 
 def visits(spark: SparkSession, wh: Warehouse, start: str, end: str) -> DataFrame:
     """travel_and_movement_map.py:89-94 — visit points with tooltip."""
-    tl = _silver(spark, wh, "google_timeline")
+    tl = read_current(spark, wh, "google_timeline")
     return (
         tl.filter(
             (F.col("segment_type") == "VISIT")
@@ -110,7 +86,7 @@ def visits(spark: SparkSession, wh: Warehouse, start: str, end: str) -> DataFram
 def movements(spark: SparkSession, wh: Warehouse, start: str, end: str) -> DataFrame:
     """travel_and_movement_map.py:103-122 — activity segments with color,
     tooltip, and ground-segment bearing (FLYING excluded from bearing)."""
-    tl = _silver(spark, wh, "google_timeline")
+    tl = read_current(spark, wh, "google_timeline")
     mv = tl.filter(
         (F.col("segment_type") == "ACTIVITY")
         & _between(F.to_date("start_time"), start, end)
@@ -149,7 +125,7 @@ def movements(spark: SparkSession, wh: Warehouse, start: str, end: str) -> DataF
 def itinerary(spark: SparkSession, wh: Warehouse, start: str, end: str) -> DataFrame:
     """travel_and_movement_map.py:124 — itinerary rows. The consumer
     spells the column COUNTRY; silver stores `country` (SURVEY §7.4-6)."""
-    logs = _silver(spark, wh, "manual_logs")
+    logs = read_current(spark, wh, "manual_logs")
     return (
         logs.filter(_between(try_to_date(F.col("date")), start, end))
         .select("date", "city", F.col("country"), "description", "comments", "hotel")
@@ -159,7 +135,7 @@ def itinerary(spark: SparkSession, wh: Warehouse, start: str, end: str) -> DataF
 
 def spending(spark: SparkSession, wh: Warehouse, start: str, end: str) -> DataFrame:
     """travel_and_movement_map.py:125 — transactions, multi-key sort."""
-    sp = _silver(spark, wh, "all_spending")
+    sp = read_current(spark, wh, "all_spending")
     return (
         sp.filter(_between(try_to_date(F.col("date")), start, end))
         .select("date", "type", "name", "amount")
@@ -169,7 +145,7 @@ def spending(spark: SparkSession, wh: Warehouse, start: str, end: str) -> DataFr
 
 def flights(spark: SparkSession, wh: Warehouse, start: str, end: str) -> DataFrame:
     """travel_and_movement_map.py:126 — flight rows for the range."""
-    fl = _silver(spark, wh, "flight_logs")
+    fl = read_current(spark, wh, "flight_logs")
     return fl.filter(_between(F.col("date"), start, end)).select(
         "date", "flight_number", "airline", "from", "to", "aircraft", "duration"
     )
@@ -178,7 +154,7 @@ def flights(spark: SparkSession, wh: Warehouse, start: str, end: str) -> DataFra
 def sleep(spark: SparkSession, wh: Warehouse, start: str, end: str) -> DataFrame:
     """travel_and_movement_map.py:127 — sleep scores by date prefix
     (LEFT(TIMESTAMP, 10), H-02)."""
-    sl = _silver(spark, wh, "sleep_log")
+    sl = read_current(spark, wh, "sleep_log")
     date = F.to_date(F.substring(F.col("timestamp").cast("string"), 1, 10))
     return (
         sl.filter(_between(date, start, end))
@@ -194,7 +170,7 @@ def sleep(spark: SparkSession, wh: Warehouse, start: str, end: str) -> DataFrame
 
 def daily_steps(spark: SparkSession, wh: Warehouse, start: str, end: str) -> DataFrame:
     """travel_and_movement_map.py:128 — daily step totals (D-11)."""
-    st = _silver(spark, wh, "hourly_step_count")
+    st = read_current(spark, wh, "hourly_step_count")
     return (
         st.filter(_between(F.col("date"), start, end))
         .groupBy("date")
@@ -206,7 +182,7 @@ def daily_steps(spark: SparkSession, wh: Warehouse, start: str, end: str) -> Dat
 def spend_by_type_pivot(spark: SparkSession, wh: Warehouse, start: str, end: str) -> DataFrame:
     """Client-side stacked-chart pivot moved executor-side
     (travel_and_movement_map.py:199 unstack().fillna(0), D-12)."""
-    sp = _silver(spark, wh, "all_spending")
+    sp = read_current(spark, wh, "all_spending")
     return (
         sp.filter(_between(try_to_date(F.col("date")), start, end))
         .groupBy("date")
@@ -218,7 +194,7 @@ def spend_by_type_pivot(spark: SparkSession, wh: Warehouse, start: str, end: str
 
 def top_expenses(spark: SparkSession, wh: Warehouse, start: str, end: str, k: int = 5) -> DataFrame:
     """travel_and_movement_map.py:210 nlargest(5,'AMOUNT') (F-04)."""
-    sp = _silver(spark, wh, "all_spending")
+    sp = read_current(spark, wh, "all_spending")
     return (
         sp.filter(_between(try_to_date(F.col("date")), start, end))
         .orderBy(F.desc("amount"))
@@ -228,7 +204,7 @@ def top_expenses(spark: SparkSession, wh: Warehouse, start: str, end: str, k: in
 
 def distance_by_mode(spark: SparkSession, wh: Warehouse, start: str, end: str) -> DataFrame:
     """travel_and_movement_map.py:220-224 — km per activity type."""
-    tl = _silver(spark, wh, "google_timeline")
+    tl = read_current(spark, wh, "google_timeline")
     return (
         tl.filter(
             (F.col("segment_type") == "ACTIVITY")

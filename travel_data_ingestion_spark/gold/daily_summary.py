@@ -19,11 +19,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from travel_data_ingestion_spark.catalog import Warehouse
-from travel_data_ingestion_spark.compat import (
-    qualify_dedup_latest,
-    qualify_latest_batch,
-    try_to_date,
-)
+from travel_data_ingestion_spark.compat import try_to_date
+from travel_data_ingestion_spark.silver import read_current
 
 
 def _rows_array(*cols: F.Column) -> F.Column:
@@ -34,24 +31,12 @@ def daily_travel_summary_df(spark: SparkSession, wh: Warehouse, date: str) -> Da
     """Assemble the one-row document DataFrame for ``date``."""
     d = F.lit(date).cast("date")
 
-    spending = qualify_latest_batch(wh.read(spark, "silver", "all_spending"), ["_source_file"])
-    spending = spending.filter(try_to_date("date") == d)
-    logs = qualify_dedup_latest(wh.read(spark, "silver", "manual_logs"), ["date"]).filter(
-        try_to_date("date") == d
-    )
-    flights = qualify_dedup_latest(
-        wh.read(spark, "silver", "flight_logs"), ["date", "flight_number"]
-    ).filter(F.col("date") == d)
-    sleep = qualify_dedup_latest(
-        wh.read(spark, "silver", "sleep_log"), ["sleep_log_entry_id"]
-    ).filter(F.to_date("timestamp") == d)
-    steps = qualify_dedup_latest(
-        wh.read(spark, "silver", "hourly_step_count"), ["date", "hour"]
-    ).filter(F.col("date") == d)
-    timeline = qualify_dedup_latest(
-        wh.read(spark, "silver", "google_timeline"),
-        ["start_time", "end_time", "segment_type"],
-    ).filter(F.to_date("start_time") == d)
+    spending = read_current(spark, wh, "all_spending").filter(try_to_date("date") == d)
+    logs = read_current(spark, wh, "manual_logs").filter(try_to_date("date") == d)
+    flights = read_current(spark, wh, "flight_logs").filter(F.col("date") == d)
+    sleep = read_current(spark, wh, "sleep_log").filter(F.to_date("timestamp") == d)
+    steps = read_current(spark, wh, "hourly_step_count").filter(F.col("date") == d)
+    timeline = read_current(spark, wh, "google_timeline").filter(F.to_date("start_time") == d)
 
     total_spent = spending.agg(F.coalesce(F.sum("amount"), F.lit(0.0)).alias("v"))
     total_steps = steps.agg(F.coalesce(F.sum("steps"), F.lit(0)).alias("v"))

@@ -12,21 +12,15 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from travel_data_ingestion_spark.catalog import Warehouse
-from travel_data_ingestion_spark.compat import (
-    listagg,
-    qualify_dedup_latest,
-    qualify_latest_batch,
-    try_to_date,
-)
+from travel_data_ingestion_spark.compat import listagg, try_to_date
+from travel_data_ingestion_spark.silver import read_current
 
 
 def full_travel_cost_df(spending: DataFrame, logs: DataFrame) -> DataFrame:
-    # LOGIC 1 (sp_full_travel_costs.sql:14-17): newest re-upload of each
-    # source file wins, whole batch kept.
-    spending = qualify_latest_batch(spending, ["_source_file"])
-    # LOGIC 2 (:21-24): one itinerary row per date, newest load wins.
-    logs = qualify_dedup_latest(logs, ["date"])
-
+    """``spending`` and ``logs`` are the current silver rows
+    (silver.read_current): LOGIC 1 and 2 of sp_full_travel_costs.sql
+    (:14-24) keep the newest re-upload of each spending file and one
+    itinerary row per date."""
     # 3. Pivot spending by category + ordered comment aggregation (:27-43).
     cat = F.upper(F.trim(F.col("type")))
 
@@ -110,8 +104,8 @@ def full_travel_cost_df(spending: DataFrame, logs: DataFrame) -> DataFrame:
 
 def build_full_travel_cost(spark: SparkSession, wh: Warehouse) -> DataFrame:
     """CREATE OR REPLACE TABLE gold.full_travel_cost (A-11)."""
-    spending = wh.read(spark, "silver", "all_spending")
-    logs = wh.read(spark, "silver", "manual_logs")
+    spending = read_current(spark, wh, "all_spending")
+    logs = read_current(spark, wh, "manual_logs")
     out = full_travel_cost_df(spending, logs).drop("order_date")
     wh.overwrite(spark, out, "gold", "full_travel_cost")
     return out

@@ -14,14 +14,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from travel_data_ingestion_spark.catalog import Warehouse
-from travel_data_ingestion_spark.compat import qualify_dedup_latest
+from travel_data_ingestion_spark.silver import read_current
 
 
 def transport_mode_df(timeline: DataFrame) -> DataFrame:
-    dedup = qualify_dedup_latest(
-        timeline, ["start_time", "end_time", "segment_type"]
-    )
-    moves = dedup.filter(
+    """``timeline`` is the current silver rows (silver.read_current)."""
+    moves = timeline.filter(
         (F.col("segment_type") == "ACTIVITY") & F.col("activity_type").isNotNull()
     )
     return moves.groupBy(F.col("activity_type").alias("mode")).agg(
@@ -33,6 +31,6 @@ def transport_mode_df(timeline: DataFrame) -> DataFrame:
 
 
 def build_transport_mode_analysis(spark: SparkSession, wh: Warehouse) -> DataFrame:
-    out = transport_mode_df(wh.read(spark, "silver", "google_timeline"))
+    out = transport_mode_df(read_current(spark, wh, "google_timeline"))
     wh.overwrite(spark, out, "gold", "transport_mode_analysis")
     return out

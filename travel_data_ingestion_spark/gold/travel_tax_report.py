@@ -14,19 +14,22 @@ from pyspark.sql import functions as F
 from travel_data_ingestion_spark.catalog import Warehouse
 from travel_data_ingestion_spark.compat import (
     listagg,
-    qualify_dedup_latest,
     try_time_to_hours,
     try_to_date,
     zeroifnull,
 )
+from travel_data_ingestion_spark.silver import read_current
 
 
 def travel_tax_report_df(
     flights: DataFrame, sleep: DataFrame, hr_hourly: DataFrame
 ) -> DataFrame:
-    # STEP A (:29-36): dedup flights per (date, flight_number), parse the
-    # "HH:MM" duration to fractional hours (H-07 TRY_TO_TIME).
-    clean_flights = qualify_dedup_latest(flights, ["date", "flight_number"]).select(
+    """The three inputs are the current silver rows (silver.read_current):
+    flights per (date, flight_number), sleep per entry id and hourly HR
+    per (date, hour), newest load winning (:29-36, :49-57, :60-69)."""
+    # STEP A (:29-36): parse the "HH:MM" duration to fractional hours
+    # (H-07 TRY_TO_TIME).
+    clean_flights = flights.select(
         try_to_date(F.col("date").cast("string")).alias("flight_date"),
         F.col("to").alias("arrival_airport"),
         try_time_to_hours("duration").alias("duration_hours"),
@@ -37,18 +40,17 @@ def travel_tax_report_df(
         F.count(F.lit(1)).alias("flight_count"),
         listagg("arrival_airport", ", ", distinct=True).alias("destinations"),
     )
-    # STEP C (:49-57): one sleep row per entry id, newest load wins.
-    clean_sleep = qualify_dedup_latest(sleep, ["sleep_log_entry_id"]).select(
+    # STEP C (:49-57): one sleep row per entry id.
+    clean_sleep = sleep.select(
         F.to_date("timestamp").alias("wake_up_date"),
         "overall_score",
         "deep_sleep_in_minutes",
         "resting_heart_rate",
     )
-    # STEP D (:60-81): hourly HR dedup, then daily re-agg. The daily AVG
-    # is an AVG of hourly AVGs by contract (SURVEY §7.4-5) — not
+    # STEP D (:60-81): daily re-agg of the deduped hourly HR. The daily
+    # AVG is an AVG of hourly AVGs by contract (SURVEY §7.4-5) — not
     # reading-weighted.
-    hr_dedup = qualify_dedup_latest(hr_hourly, ["date", "hour"])
-    daily_hr = hr_dedup.groupBy(F.col("date").alias("hr_date")).agg(
+    daily_hr = hr_hourly.groupBy(F.col("date").alias("hr_date")).agg(
         F.min("hourly_min_hr").alias("daily_min_hr"),
         F.max("hourly_max_hr").alias("daily_max_hr"),
         F.avg("hourly_avg_hr").alias("daily_avg_hr"),
@@ -83,9 +85,9 @@ def travel_tax_report_df(
 def build_travel_tax_report(spark: SparkSession, wh: Warehouse) -> DataFrame:
     """Truncate-and-insert sink (A-12) -> overwrite."""
     out = travel_tax_report_df(
-        wh.read(spark, "silver", "flight_logs"),
-        wh.read(spark, "silver", "sleep_log"),
-        wh.read(spark, "silver", "heart_rate_hourly_summary"),
+        read_current(spark, wh, "flight_logs"),
+        read_current(spark, wh, "sleep_log"),
+        read_current(spark, wh, "heart_rate_hourly_summary"),
     )
     wh.overwrite(spark, out, "gold", "travel_tax_report")
     return out

@@ -33,9 +33,17 @@ from pyspark.sql.streaming import DataStreamReader
 from travel_data_ingestion_spark import ledger
 from travel_data_ingestion_spark.catalog import BRONZE_SCHEMAS, LINEAGE_FIELDS, Warehouse
 from travel_data_ingestion_spark.config import FileDetail
-from travel_data_ingestion_spark.io import CSV_OPTIONS
 
 _LINEAGE_COLS = [f.name for f in LINEAGE_FIELDS]
+
+CSV_OPTIONS = {
+    # file_format_csv.sql:1-6 semantics
+    "header": "true",
+    "quote": '"',
+    "escape": '"',
+    "nullValue": "NULL",
+    "mode": "PERMISSIVE",
+}
 
 
 def lineage_row_id(load_id: int) -> F.Column:
@@ -116,10 +124,9 @@ def read_landing_file(spark: SparkSession, path: str, file_format: str, table: s
 
 def read_csv(reader: DataFrameReader | DataStreamReader, table: str, path: str) -> DataFrame:
     """The CSV landing scan of both the batch and the streaming ingest:
-    the positional schema, io.CSV_OPTIONS (the single source of truth
-    for parsing options, shared with io.read_table) and the NULL_IF
-    tokens, so a file produces identical bronze rows whichever path
-    ingested it — or replays and re-ingests diverge."""
+    the positional schema, CSV_OPTIONS and the NULL_IF tokens, so a
+    file produces identical bronze rows whichever path ingested it — or
+    replays and re-ingests diverge."""
     return _csv_null_tokens(reader.schema(landing_schema(table)).options(**CSV_OPTIONS).csv(path))
 
 

@@ -6,8 +6,7 @@ the default for most CDNs), and WARC stores the wire bytes, so a
 text-extraction pipeline that cannot undo brotli silently drops a
 large slice of the modern web. CPython has no brotli in the stdlib;
 this adapter drives the installed libbrotlidec.so.1 (public C API,
-plain-argument functions — the same system-library pattern as the
-libheif adapter in llm/native_codecs.py) through ctypes:
+plain-argument functions) through ctypes:
 
 - ``BrotliDecoderCreateInstance`` / ``DestroyInstance`` per call;
 - ``BrotliDecoderDecompressStream`` in bounded output chunks, so a

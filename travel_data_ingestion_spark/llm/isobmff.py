@@ -15,8 +15,7 @@ H.264/AAC (MP4/M4A) payloads need normative tables and reference
 decoders this environment cannot reproduce or verify from scratch —
 the same gate class as mp3 (llm/mp3.py docstring). The metadata here
 is what a training-data pipeline filters on before spending decode:
-dimensions, duration, codec, track shape. A native codec registered
-via the multimodal hook upgrades decode per deployment.
+dimensions, duration, codec, track shape.
 
 Every reader is total: malformed/hostile bytes return None, never
 raise; box recursion is depth- and count-capped (box bombs).

@@ -21,10 +21,7 @@ cross-checked — and no network). A from-memory transcription paired
 with a same-table test encoder is exactly the self-consistent-but-
 wrong failure mode the round-11 QM-coder ADVICE documented, so we
 refuse to fake it: ``decode_audio`` returns typed-NULL PCM fields for
-mp3 while this probe still fills the header-derived metadata. A native
-codec registered via ``register_audio_codec`` /
-``SPARK_GRAFT_CODEC_MODULE`` claims mp3 payloads first and upgrades
-decode in deployments that have one.
+mp3 while this probe still fills the header-derived metadata.
 """
 
 from __future__ import annotations

@@ -34,7 +34,7 @@ codes / llm/vp8.py's full RFC 6386 key-frame decoder), arithmetic
 JPEG via llm/jpeg.decode_jpeg, ...)
 fall back to the documented
 md5-derived stub
-(decode_image_stub with fake=True for dimensions, md5-prefix
+(digest-derived dimensions, md5-prefix
 signatures) or NULL typed audio fields, which keeps every downstream
 operator testable on opaque bytes. The Spark-side plumbing — schema,
 batch shape, partitioning, UDF signature — is identical on both paths
@@ -57,54 +57,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from travel_data_ingestion_spark.llm.jpeg import decode_jpeg
-
-# ---------------------------------------------------------------------------
-# Pluggable native-codec hooks. The pure-Python decoders below are
-# correct but 10-100x slower than libjpeg-turbo/libFLAC/ffmpeg; on a
-# real cluster the CPU bill at 100 TB of media is dominated by decode,
-# so a deployment that HAS native libraries plugs them in here and
-# every kernel (features, pHash, resize, frame sampling) — and every
-# oracle — is untouched: the hook returns the same canonical tuples
-# the pure decoders do, and anything it declines (returns None for)
-# falls through to the pure path.
-#
-# Registration propagates to executor Python workers through module
-# import, not driver state: set SPARK_GRAFT_CODEC_MODULE to a module
-# importable on every worker that exposes ``image_codec(bytes) ->
-# (w, h, rgb_bytes) | None`` and/or ``audio_codec(bytes) ->
-# (rate, n_channels, float_frames) | None`` (the decode_image /
-# decode_audio contracts). register_image_codec/register_audio_codec
-# do the same in-process (tests, notebooks, driver-side calls).
-_IMAGE_CODEC = None
-_AUDIO_CODEC = None
-
-
-def register_image_codec(fn) -> None:
-    global _IMAGE_CODEC
-    _IMAGE_CODEC = fn
-
-
-def register_audio_codec(fn) -> None:
-    global _AUDIO_CODEC
-    _AUDIO_CODEC = fn
-
-
-def _load_codec_hooks() -> None:
-    import importlib
-    import os
-
-    name = os.environ.get("SPARK_GRAFT_CODEC_MODULE")
-    if not name:
-        return
-    mod = importlib.import_module(name)  # loud on a misconfigured env
-    img, aud = getattr(mod, "image_codec", None), getattr(mod, "audio_codec", None)
-    if img is not None:
-        register_image_codec(img)
-    if aud is not None:
-        register_audio_codec(aud)
-
-
-_load_codec_hooks()
 
 MEDIA_SCHEMA = T.StructType(
     [
@@ -191,9 +143,8 @@ def mime_from_path(path_col):
 
 
 def _dims_from_digest(digest: bytes) -> tuple[int, int]:
-    """Deterministic fake (width, height) from a payload md5 digest —
-    the single definition shared by the scalar stub and the batched
-    kernel, so the two can never drift."""
+    """Deterministic fake (width, height) from a payload md5 digest: the
+    opaque-bytes stub dimensions of extract_features."""
     return 64 + digest[0] % 192, 64 + digest[1] % 192
 
 
@@ -1680,14 +1631,8 @@ def decode_image(payload: bytes) -> tuple[int, int, bytes] | None:
     strip-based TIFF (none/PackBits/LZW) — to (width,
     height, rgb_bytes); None routes the caller to the opaque-bytes
     stub path. The single decode entry every image operator (features,
-    pHash, resize) goes through, so a new container added here — or a
-    native codec registered via register_image_codec /
-    SPARK_GRAFT_CODEC_MODULE, consulted first — lights up the whole
-    pipeline."""
-    if _IMAGE_CODEC is not None:
-        dec = _IMAGE_CODEC(payload)
-        if dec is not None:
-            return dec
+    pHash, resize) goes through, so a new container added here lights
+    up the whole pipeline."""
     dec = decode_ppm(payload)
     if dec is None and payload[:1] == b"P":
         dec = decode_pnm(payload)
@@ -1777,30 +1722,6 @@ def phash_bytes(payload: bytes) -> int:
         if b:
             v |= 1 << i
     return v - (1 << 64) if v >= (1 << 63) else v
-
-
-def decode_image_stub(payload: bytes, fake: bool = True) -> tuple[int, int]:
-    """Decode an image payload to (width, height).
-
-    netpbm, PNG, GIF, JPEG, BMP, TIFF, ICO, and WebP (lossless VP8L
-    and lossy VP8 key-frame) payloads decode for REAL (decode_image). For the remaining formats a codec
-    library is
-    required and absent in this container: with ``fake=True`` the
-    dimensions derive deterministically from the payload digest,
-    keeping every downstream operator testable; with ``fake=False`` the
-    gap is loud."""
-    dec = decode_image(payload)
-    if dec is not None:
-        return dec[0], dec[1]
-    if not fake:
-        raise NotImplementedError(
-            "decoding this image format requires a codec library (e.g. "
-            "Pillow); not available in this environment (netpbm, PNG, "
-            "GIF, baseline/progressive/arithmetic JPEG, BMP, TIFF, ICO, "
-            "and WebP — lossless VP8L and lossy VP8 key-frame — decode "
-            "natively via decode_image)"
-        )
-    return _dims_from_digest(hashlib.md5(payload).digest())
 
 
 def media_from_documents(docs: DataFrame) -> DataFrame:
@@ -2286,17 +2207,11 @@ def decode_audio(payload: bytes):
     llm/vorbis.py when present). mp3 and Ogg-Opus PCM need normative
     tables this environment cannot reproduce or verify (llm/mp3.py
     module docstring records the specifics) and return None — the
-    documented stub path, unless a native codec registered via
-    register_audio_codec / SPARK_GRAFT_CODEC_MODULE (consulted first)
-    claims the payload."""
+    documented stub path."""
     import struct
 
     import numpy as np
 
-    if _AUDIO_CODEC is not None:
-        dec = _AUDIO_CODEC(payload)
-        if dec is not None:
-            return dec
     try:
         rate = n_ch = None
         x = None

@@ -18,8 +18,7 @@ Payload codecs:
 - **Opus** is identified (OpusHead: channels, pre-skip, input rate)
   and measured (granulepos runs at 48 kHz regardless of input rate)
   but its PCM is gated: SILK/CELT need normative tables this
-  environment cannot reproduce or verify (no system libopus). A codec
-  registered via ``register_audio_codec`` claims it first.
+  environment cannot reproduce or verify (no system libopus).
 
 ``probe_ogg`` exposes the metadata a crawl pipeline filters on without
 decoding: codec, sample rate, channel count, duration from the last

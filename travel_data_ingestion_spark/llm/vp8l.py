@@ -30,8 +30,7 @@ None instead of hangs or overreads.
 
 Performance note: like llm/jpeg.py this is a pure-Python per-payload
 kernel inside the Arrow-batched image operators — the honest slow
-path; a native codec would bind at the decode_image boundary
-(multimodal.register_image_codec).
+path.
 """
 
 from __future__ import annotations

@@ -528,7 +528,7 @@ def _simhash_oracle() -> str:
     "output-bounded equi-join on simhash and cross-signature candidates "
     "re-expand through the doc lists (tests/test_dedup_skew.py pins "
     "both the 1k-identical-docs completion and the candidate-volume "
-    "bound). Residual skew on chunk_val salts via skew.salted_join. "
+    "bound). "
     "Plan gate: tests/test_plans.py::test_dedup_pair_scans_are_blocked.",
 )
 def dd04_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:

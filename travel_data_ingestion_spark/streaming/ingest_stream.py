@@ -192,7 +192,7 @@ def stream_ingest_media(
 ) -> None:
     """Stream raw media files into a media table (AvailableNow drains
     then stops) — the streaming twin of the batch binaryFile source
-    (io.read_table fmt='binary') feeding llm/multimodal.
+    (``spark.read.format("binaryFile")``) feeding llm/multimodal.
 
     Each file becomes one MEDIA_SCHEMA-shaped row: opaque payload bytes
     plus typed metadata (source path, byte length, mime derived from the
