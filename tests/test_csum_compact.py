@@ -1,6 +1,6 @@
 """Equivalence pins for the r17 compact-buffer sum conversions.
 
-compat.csum/cavg/csum_dec replace the wide DECIMAL(28,·) dsum/davg forms
+compat.csum/cavg/csum_dec replace the wide DECIMAL(28,·) sum/avg forms
 at every non-benched aggregate call site (d-family, su02/su03/su04
 members, tr dashboards, j01, q06, t11). The compact hi/lo split must be
 BIT-identical to the wide form; ``compat.CSUM_COMPACT`` routes the same

@@ -446,56 +446,6 @@ def test_cluster_index_million_pair_batch(spark, tmp_path):
     assert (clusters[0].cluster_id, clusters[0].cluster_size) == (0, n + 1)
 
 
-def test_epoch_replay_reemits_same_pairs(spark, tmp_path):
-    """Streaming crash contract: update(batch_id=N) run twice (the
-    replayed-epoch shape) re-emits EXACTLY the first attempt's pairs —
-    so an epoch-partitioned idempotent pairs write can never lose pairs
-    to a crash between the index commit and the write — while index
-    appends stay exactly-once."""
-    docs = load_table(spark, SF_DIR, "documents")
-    idx = MinHashIndex(str(tmp_path / "mh"))
-    b0 = docs.filter(F.col("doc_id") % 3 == 0)
-    b1 = docs.filter(F.col("doc_id") % 3 == 1)
-    idx.update(spark, b0, batch_id=0).count()
-
-    first = _pairs(idx.update(spark, b1, batch_id=1))
-    replay = _pairs(idx.update(spark, b1, batch_id=1))
-    assert replay == first and first  # identical, and non-trivially so
-    # appends stayed exactly-once through the replay
-    ledger = idx._read_docs(spark)
-    assert ledger.count() == ledger.select("doc_id").distinct().count()
-    # the batch API on the same index still treats everything as seen
-    assert _pairs(idx.update(spark, b1)) == set()
-
-
-def test_embedding_epoch_replay_reemits_same_pairs(spark, tmp_path):
-    from travel_data_ingestion_spark.dedup_index import EmbeddingIndex
-
-    emb = load_table(spark, SF_DIR, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
-    # plant an exact duplicate pair split across the two epochs
-    dup = emb.filter(F.col("vec_id") == 0).select(
-        (F.col("vec_id") + 1_000_000).alias("vec_id"), "e"
-    )
-    e0 = emb.filter(F.col("vec_id") % 2 == 0)
-    e1 = emb.filter(F.col("vec_id") % 2 == 1).unionByName(dup)
-    idx = EmbeddingIndex(str(tmp_path / "emb"))
-    idx.update(spark, e0, batch_id=0).count()
-
-    def pset(df):
-        return {(r.vec_a, r.vec_b, r.cos_sim) for r in df.collect()}
-
-    first = pset(idx.update(spark, e1, batch_id=1))
-    replay = pset(idx.update(spark, e1, batch_id=1))
-    assert replay == first
-    assert (0, 1_000_000) in {(a, b) for a, b, _ in first}  # cross-epoch pair
-    # no self-pairs on replay (the old side excludes the epoch's own ids)
-    assert all(a != b for a, b, _ in replay)
-    vecs = idx._read_vecs(spark)
-    assert vecs.count() == vecs.select("vec_id").distinct().count()
-
-
 def test_dirty_batch_duplicate_ids_are_collapsed(spark, tmp_path):
     """An at-least-once source can deliver the same doc twice in ONE
     batch; the ledger must still hold it exactly once (a doubled ledger
@@ -510,9 +460,9 @@ def test_dirty_batch_duplicate_ids_are_collapsed(spark, tmp_path):
 
 
 def test_cluster_merge_survives_lost_remap_rewrite(spark, tmp_path):
-    """Crash between the assign append and the remap rewrite: replaying
-    the epoch re-derives the lost merges from the re-emitted pairs (the
-    self-healing contract clustered_neardup_stream documents)."""
+    """Crash between the assign append and the remap rewrite: feeding
+    the same pairs again re-derives the lost merges (the batch's docs
+    are already assigned, so only the endpoint re-contraction runs)."""
     import os
     import shutil
 
@@ -523,9 +473,9 @@ def test_cluster_merge_survives_lost_remap_rewrite(spark, tmp_path):
     cc = ClusterIndex(str(tmp_path / "cc"))
     b0 = docs.filter(F.col("doc_id") % 2 == 0)
     b1 = docs.filter(F.col("doc_id") % 2 == 1)
-    p0 = mh.update(spark, b0, batch_id=0)
-    cc.update(spark, b0.select("doc_id"), p0)
-    p1 = mh.update(spark, b1, batch_id=1)
+    cc.update(spark, b0.select("doc_id"), mh.update(spark, b0))
+    # materialized once, so the re-feed below sees the identical pairs
+    p1 = mh.update(spark, b1).localCheckpoint()
     cc.update(spark, b1.select("doc_id"), p1)
     want = {
         (r.cluster_id, r.cluster_size, r.kept_doc_id)
@@ -533,14 +483,12 @@ def test_cluster_merge_survives_lost_remap_rewrite(spark, tmp_path):
     }
     assert want  # the corpus has near-dup clusters
 
-    # simulate the crash: epoch 1's remap rewrite never landed
+    # simulate the crash: b1's remap rewrite never landed
     shutil.rmtree(cc.remap_path, ignore_errors=True)
     shutil.rmtree(f"{cc.remap_path}__old", ignore_errors=True)
     assert not os.path.isdir(cc.remap_path)
 
-    # replay epoch 1: same pairs re-emerge; cc re-derives the merges
-    p1r = mh.update(spark, b1, batch_id=1)
-    cc.update(spark, b1.select("doc_id"), p1r)
+    cc.update(spark, b1.select("doc_id"), p1)
     got = {
         (r.cluster_id, r.cluster_size, r.kept_doc_id)
         for r in cc.clusters(spark).collect()

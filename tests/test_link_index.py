@@ -8,8 +8,6 @@ from __future__ import annotations
 import os
 import shutil
 
-import pytest
-
 EDGES = [
     (1, 2), (1, 3), (1, 4), (2, 3), (3, 4), (4, 1), (2, 1), (6, 5),
 ]
@@ -67,7 +65,7 @@ def test_source_exactly_once_skips_resubmitted_sources(spark, tmp_path):
 
 def test_orphan_claim_full_replacement(spark, tmp_path):
     """A crashed update (edge partition on disk, no ledger rows) is
-    claimed by the NEXT batch-API update and fully replaced; the
+    claimed by the NEXT update and fully replaced; the
     crashed batch resubmits cleanly afterwards."""
     idx = _mk(spark, tmp_path)
     idx.update(spark, _edges_df(spark, [(1, 2)]))          # bid -1
@@ -132,17 +130,6 @@ def test_compact_crash_window_heals_via_distinct(spark, tmp_path):
     idx.compact(spark)  # finishes the removal or re-folds; still exact
     assert {(r.src, r.dst)
             for r in idx.edges(spark).collect()} == got
-
-
-def test_stream_epoch_ids_and_negative_rejection(spark, tmp_path):
-    idx = _mk(spark, tmp_path)
-    idx.update(spark, _edges_df(spark, [(1, 2)]), batch_id=5)
-    assert os.path.isdir(os.path.join(idx.edge_path, "batch_id=5"))
-    # epoch replay: fully replaces its own partition, no duplicates
-    idx.update(spark, _edges_df(spark, [(1, 2)]), batch_id=5)
-    assert idx.edges(spark).count() == 1
-    with pytest.raises(ValueError):
-        idx.update(spark, _edges_df(spark, [(3, 4)]), batch_id=-1)
 
 
 def test_empty_index_rank_is_empty(spark, tmp_path):

@@ -4,11 +4,8 @@ doesn't.
 PhashIndex is MinHashIndex's media sibling. The invariant pinned here:
 splitting the planted media set into arbitrary ingest batches and
 accumulating each update's new pairs reproduces the one-shot
-hamming_pairs answer exactly; replays are no-ops (batch API) or
-re-emit exactly the original pairs (epoch API); signatures — i.e. the
-expensive payload decodes — are computed once per media_id ever; and
-the streaming wrapper lands epoch-partitioned pairs exactly once under
-replay.
+hamming_pairs answer exactly; replays are no-ops; and signatures — i.e.
+the expensive payload decodes — are computed once per media_id ever.
 """
 
 from __future__ import annotations
@@ -66,22 +63,8 @@ def test_resubmission_is_noop_and_signatures_computed_once(spark, tmp_path):
     n_sigs = idx._read_sigs(spark).count()
     assert n_sigs == len(media)  # one signature row per media_id
     again = _pairs(idx.update(spark, _media_df(spark, media)))
-    assert again == set()  # batch API: full no-op
+    assert again == set()  # full no-op
     assert idx._read_sigs(spark).count() == n_sigs  # no re-appends
-
-
-def test_epoch_replay_reemits_original_pairs(spark, tmp_path):
-    media = planted_image_media()
-    idx = PhashIndex(str(tmp_path / "px"))
-    idx.update(spark, _media_df(spark, media[:4]), batch_id=0)
-    e1 = _pairs(idx.update(spark, _media_df(spark, media[4:]), batch_id=1))
-    assert e1
-    n_sigs = idx._read_sigs(spark).count()
-    replay = _pairs(idx.update(spark, _media_df(spark, media[4:]), batch_id=1))
-    assert replay == e1  # identical pairs on replay
-    assert idx._read_sigs(spark).count() == n_sigs  # appends exactly-once
-    with pytest.raises(ValueError):
-        idx.update(spark, _media_df(spark, media), batch_id=-2)
 
 
 def test_mixed_modalities_share_one_index(spark, tmp_path):
@@ -102,50 +85,3 @@ def test_mixed_modalities_share_one_index(spark, tmp_path):
     assert len(aud_pairs) == 45
     assert all(a >= 4_000_000_000 and b >= 4_000_000_000 for a, b, _h in aud_pairs)
     assert img_pairs and not (img_pairs & aud_pairs)
-
-
-@pytest.mark.slow
-def test_media_neardup_stream_exactly_once(spark, tmp_path):
-    """The streaming twin: micro-batches of media land epoch-partitioned
-    pairs; a restart with one new file emits only the new file's pairs,
-    and accumulated pairs equal the one-shot answer."""
-    from travel_data_ingestion_spark.streaming.neardup import media_neardup_stream
-
-    media = planted_image_media()
-    src = tmp_path / "landing"
-    src.mkdir()
-    idx_path = str(tmp_path / "px")
-    pairs_path = str(tmp_path / "pairs")
-    ckpt = str(tmp_path / "ckpt")
-
-    def land(name, items):
-        _media_df(spark, items).write.parquet(str(src / name))
-
-    def drain():
-        stream = spark.readStream.schema("media_id long, payload binary").option(
-            "maxFilesPerTrigger", 1
-        ).parquet(str(src) + "/*")
-        q = (
-            media_neardup_stream(stream, idx_path, pairs_path)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    land("b0", media[:4])
-    drain()
-    land("b1", media[4:])
-    drain()  # restart: only the new file processes
-    got = {
-        (r.id_a, r.id_b, r.hamming)
-        for r in spark.read.parquet(pairs_path).collect()
-    }
-    sigs = phash_signatures(_media_df(spark, media))
-    want = {
-        (r.id_a, r.id_b, r.hamming)
-        for r in hamming_pairs(sigs, "media_id", "phash").collect()
-    }
-    assert got == want
-    # every media_id indexed exactly once across both drains
-    assert PhashIndex(idx_path)._read_sigs(spark).count() == len(media)

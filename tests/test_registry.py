@@ -79,7 +79,8 @@ def test_money_columns_are_exact_cents():
         "l_tax": 1.0,
         "value": 1e6,
         # r17: compat.csum/cavg extend the integer-cents treatment to the
-        # dsum/davg call sites over orders.o_totalprice (real max ~5e5)
+        # wide decimal sum/avg call sites over orders.o_totalprice (real
+        # max ~5e5)
         "o_totalprice": 1e6,
     }
 
@@ -152,7 +153,7 @@ def test_money_columns_are_exact_cents():
                 continue
             assert isinstance(k, int) and abs(k) <= 1e6, (
                 f"{sf}.props.k: {k!r} breaks the h18 compact-sum envelope "
-                "(compat.csum frac=0) — re-derive or revert h18 to dsum"
+                "(compat.csum frac=0) — re-derive or revert h18 to the wide decimal sum"
             )
             checked += 1
     assert checked > 0, "no testdata found to check"

@@ -69,25 +69,17 @@ def test_replay_is_noop(spark, tmp_path):
     idx.update(spark, docs)
     first = _as_map(idx.df(spark))
     n_ledger = idx._read_ledger(spark).count()
-    idx.update(spark, docs)  # batch API: fully-ledgered batch is a no-op
+    idx.update(spark, docs)  # fully-ledgered batch is a no-op
     assert _as_map(idx.df(spark)) == first
     assert idx._read_ledger(spark).count() == n_ledger
-    # streaming epoch API: same epoch re-delivered is also a no-op once
-    # its docs are ledgered
-    idx.update(spark, _docs(spark, range(12, 18)), batch_id=5)
-    second = _as_map(idx.df(spark))
-    idx.update(spark, _docs(spark, range(12, 18)), batch_id=5)
-    assert _as_map(idx.df(spark)) == second
 
 
-def _orphan_increments(spark, idx, batch, bid=None):
+def _orphan_increments(spark, idx, batch):
     """Reproduce update()'s increments commit WITHOUT the ledger append
-    — the state a crash between the two writes leaves behind. ``bid``
-    overrides the derived batch-API id to fake a crashed STREAM epoch."""
-    if bid is None:
-        ledger = idx._read_ledger(spark)
-        prev_min = ledger.agg(F.min("batch_id")).first()[0]
-        bid = min(int(prev_min or 0), 0) - 1
+    — the state a crash between the two writes leaves behind."""
+    ledger = idx._read_ledger(spark)
+    prev_min = ledger.agg(F.min("batch_id")).first()[0]
+    bid = min(int(prev_min or 0), 0) - 1
     inc = (
         shingle_docs(batch.select("doc_id", "text"))
         .select("doc_id", F.explode("shingles").alias("term"))
@@ -121,39 +113,6 @@ def test_crashed_update_heals_on_retry(spark, tmp_path):
         r.batch_id for r in idx._read_ledger(spark).select("batch_id").collect()
     }
     assert orphan_bid in ledgered
-
-
-def test_batch_update_never_claims_crashed_stream_epoch(spark, tmp_path):
-    """A POSITIVE unledgered id is a crashed stream epoch, owned by its
-    own replay. A batch-API update claiming it would ledger docs under
-    an id the stream's replay then rmtree's — a permanent silent
-    undercount (ADVICE r9). The batch update must allocate from the
-    negative id space and leave the stream orphan for the stream."""
-    b1 = _docs(spark, range(8))
-    b2 = _docs(spark, range(8, 16))
-    b3 = _docs(spark, range(16, 24))
-    idx = DocFreqIndex(str(tmp_path / "dfi"), n_buckets=4)
-    idx.update(spark, b1)
-    # stream epoch 7 crashes between its increments commit and its
-    # ledger append
-    _orphan_increments(spark, idx, b2, bid=7)
-    # an interleaved batch-API update must NOT claim id 7
-    idx.update(spark, b3)
-    ledgered = {
-        r.batch_id for r in idx._read_ledger(spark).select("batch_id").collect()
-    }
-    assert 7 not in ledgered
-    assert min(ledgered) < 0  # b3 landed in the batch id space
-    assert os.path.isdir(os.path.join(idx.incr_path, "batch_id=7"))
-    # the stream's own replay of epoch 7 heals it; totals are exact
-    idx.update(spark, b2, batch_id=7)
-    assert _as_map(idx.df(spark)) == _as_map(
-        _oneshot_df(b1.unionByName(b2).unionByName(b3))
-    )
-    ledgered = {
-        r.batch_id for r in idx._read_ledger(spark).select("batch_id").collect()
-    }
-    assert 7 in ledgered
 
 
 def test_compact_skips_unledgered_orphan(spark, tmp_path):
@@ -209,64 +168,8 @@ def test_lookup_values_and_partition_pruning(spark, tmp_path):
     assert "PartitionFilters" in plan and "bkt" in plan
 
 
-def test_docfreq_stream_accumulates_and_restarts_exactly_once(spark, tmp_path):
-    """docfreq_stream: micro-batches accumulate into the persisted DF
-    table; a restart on the same checkpoint ingests only NEW files, and
-    the final table equals the one-shot DF over everything delivered."""
-    from pyspark.sql import types as T
-
-    from travel_data_ingestion_spark.streaming import docfreq_stream
-
-    src = str(tmp_path / "docs_src")
-    os.makedirs(src)
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("text", T.StringType())]
-    )
-
-    def write_file(name, rows):
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(src, name))
-
-    write_file("b1", [(1, "alpha beta gamma delta"), (2, "alpha beta gamma zeta")])
-    write_file("b2", [(3, "alpha beta gamma eta"), (4, "one two")])  # doc 4 unindexable
-
-    index_path = str(tmp_path / "dfi")
-    ckpt = str(tmp_path / "ckpt")
-
-    def run_stream():
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(os.path.join(src, "*"))
-        )
-        q = docfreq_stream(stream, index_path).option(
-            "checkpointLocation", ckpt
-        ).start()
-        q.processAllAvailable()
-        q.stop()
-        return q
-
-    q = run_stream()
-    assert len(q.recentProgress) >= 2  # really micro-batched
-    idx = DocFreqIndex(index_path)
-    all_docs = spark.read.schema(schema).parquet(os.path.join(src, "*"))
-    assert _as_map(idx.df(spark)) == _as_map(_oneshot_df(all_docs))
-
-    # restart on the same checkpoint: old files are NOT re-delivered, a
-    # new file is counted once; ledger stays duplicate-free
-    write_file("b3", [(5, "alpha beta gamma theta")])
-    run_stream()
-    all_docs = spark.read.schema(schema).parquet(os.path.join(src, "*"))
-    assert _as_map(idx.df(spark)) == _as_map(_oneshot_df(all_docs))
-    ledger = idx._read_ledger(spark)
-    assert ledger.count() == ledger.select("doc_id").distinct().count() == 5
-
-
 def test_invalid_inputs(spark, tmp_path):
     idx = DocFreqIndex(str(tmp_path / "dfi"), n_buckets=4)
-    with pytest.raises(ValueError, match="batch_id"):
-        idx.update(spark, _docs(spark, range(3)), batch_id=-2)
     with pytest.raises(ValueError, match="n_buckets"):
         DocFreqIndex(str(tmp_path / "bad"), n_buckets=0)
     # empty lookup on an empty index

@@ -154,45 +154,13 @@ def qualify_dedup_latest(
 # back to double. This costs <5% over double sums and removes an entire
 # class of flaky comparisons — at 100 TB the nondeterminism would otherwise
 # grow with partition count.
-# ---------------------------------------------------------------------------
-
-def dsum(col: Column | str, scale: int = 6, prec: int = 28) -> Column:
-    """Order-independent SUM: decimal-exact accumulation, double result.
-
-    ``prec`` is the INPUT cast precision; Spark's SUM buffer gets
-    ``prec + 10`` digits, so the default 28 yields a 38-digit buffer
-    that can never overflow. A caller may narrow ``prec`` when the
-    column's domain is provably bounded: the double->decimal cast
-    rounds identically at any precision that fits the value, and
-    decimal addition is exact at every precision, so the result is
-    bit-identical — only the overflow envelope changes. E.g. prec=12 at
-    scale 2 admits inputs up to 1e10 and sums up to 1e20; for a column
-    bounded by ~1e6 that is four orders of magnitude of headroom above
-    a 100 TB corpus-wide sum (~6e11 rows x 1e6 = 6e17). The win is
-    mechanical: a 22-digit buffer still updates in UnsafeRow's 16-byte
-    decimal slot, but the narrower input cast stays on the compact
-    long representation instead of allocating a BigDecimal per row
-    (measured r16: q01's 8-agg pass 1.36 -> 1.18 s at sf0.1).
-    """
-    c = F.col(col) if isinstance(col, str) else col
-    return F.sum(c.cast(f"decimal({prec},{scale})")).cast("double")
-
-
-def davg(col: Column | str, scale: int = 6, prec: int = 28) -> Column:
-    """Order-independent AVG: exact decimal sum divided by count.
-
-    ``prec`` as in :func:`dsum` — narrow only with a documented bound.
-    """
-    c = F.col(col) if isinstance(col, str) else col
-    return F.sum(c.cast(f"decimal({prec},{scale})")).cast("double") / F.count(c)
-
-
-# ---------------------------------------------------------------------------
+#
 # Compact-buffer (long-backed) exact sums — the hi/lo split generalized.
 #
-# dsum/davg BigDecimal-add per row into a DECIMAL(38) buffer (Spark keeps
-# a Decimal "compact" — a plain long — only at precision <= 18, and SUM's
-# buffer is input precision + 10). For a column that is an exact
+# The wide form CAST(SUM(CAST(x AS DECIMAL(28,s))) AS DOUBLE) BigDecimal-
+# adds per row into a DECIMAL(38) buffer (Spark keeps a Decimal
+# "compact" — a plain long — only at precision <= 18, and SUM's buffer
+# is input precision + 10). For a column that is an exact
 # fixed-point value with <= ``frac`` fractional digits (canary-pinned, or
 # pre-rounded by construction), the decimal algebra collapses to integer
 # algebra exactly as in queries/relational.py's q01/d06 fast path:
@@ -250,7 +218,7 @@ def _csum_units_sql(col_sql: str, frac: int, split: int | None) -> str:
 def csum_sql(
     col_sql: str, scale: int, frac: int = 2, split: int | None = 10000
 ) -> str:
-    """SQL fragment equal bit-for-bit to the dsum(col, scale) fragment
+    """SQL fragment equal bit-for-bit to the wide form
     ``CAST(SUM(CAST(col AS DECIMAL(28,scale))) AS DOUBLE)`` for a
     non-negative exact-``frac``-decimal column, on compact buffers."""
     if not CSUM_COMPACT:
@@ -262,12 +230,15 @@ def csum_sql(
 
 
 def csum(col_sql: str, scale: int, frac: int = 2, split: int | None = 10000) -> Column:
-    """Compact-buffer :func:`dsum` — see :func:`csum_sql`."""
+    """Order-independent exact SUM as a DOUBLE: the wide
+    ``CAST(SUM(CAST(x AS DECIMAL(28,s))) AS DOUBLE)`` on compact
+    buffers — see :func:`csum_sql`."""
     return F.expr(csum_sql(col_sql, scale, frac, split))
 
 
 def cavg(col_sql: str, scale: int, frac: int = 2, split: int | None = 10000) -> Column:
-    """Compact-buffer :func:`davg`: identical double sum / COUNT(col)."""
+    """Order-independent exact AVG: the :func:`csum` double sum /
+    COUNT(col), identical to the wide form divided by COUNT."""
     return F.expr(f"{csum_sql(col_sql, scale, frac, split)} / COUNT({col_sql})")
 
 

@@ -28,8 +28,8 @@ Layout under ``path``:
 - ``docs/``  parquet ledger: (doc_id, n_sh, shingles, batch_id) —
   shingles kept for candidate verification without re-reading the
   corpus; empty for unindexable (<3-token) docs, which are remembered
-  but never join; batch_id powers streaming epoch-replay pair
-  recomputation (see update).
+  but never join; batch_id names the update that indexed the doc and
+  splits the post-append ledger into new and old sides (see update).
 - ``bands/`` parquet: (doc_id, n_sh, band_id, sig) — 8 rows per
   indexable doc, the LSH bucket table.
 
@@ -51,13 +51,17 @@ from travel_data_ingestion_spark.queries.llm_dedup import (
     shingle_docs,
 )
 
-# batch_id: which update() call indexed the doc (-1 for the batch API).
-# It exists for STREAMING epoch replay: a replayed epoch recomputes the
-# SAME pairs it emitted the first time (its own docs are excluded from
-# the "already seen" set), so a crash between the index commit and the
-# pairs write cannot lose pairs — see update(batch_id=...).
+# batch_id: which update() call indexed the doc (-1, -2, ... per call).
 _DOCS_SCHEMA = "doc_id long, n_sh int, shingles array<string>, batch_id long"
 _BANDS_SCHEMA = "doc_id long, n_sh int, band_id int, sig string"
+
+
+def _fresh_batch_id(ledger: DataFrame) -> int:
+    """The batch id of one update: one below the ledger's minimum
+    (-1 on an empty or legacy NULL-batch_id ledger), so every call
+    gets an id no earlier call used."""
+    prev_min = ledger.agg(F.min("batch_id")).first()[0]
+    return min(int(prev_min or 0), 0) - 1
 
 
 class MinHashIndex:
@@ -83,9 +87,7 @@ class MinHashIndex:
             return spark.createDataFrame([], _BANDS_SCHEMA)
         return spark.read.schema(_BANDS_SCHEMA).parquet(self.bands_path)
 
-    def update(
-        self, spark: SparkSession, batch: DataFrame, batch_id: int | None = None
-    ) -> DataFrame:
+    def update(self, spark: SparkSession, batch: DataFrame) -> DataFrame:
         """Index a batch of (doc_id, text) docs; return the NEW near-dup
         pairs (doc_a, doc_b, jaccard) this batch introduces.
 
@@ -93,21 +95,9 @@ class MinHashIndex:
         both sides predate the batch were returned by the update that
         introduced them. ``build`` is just ``update`` on an empty index.
 
-        ``batch_id`` selects the replay semantics:
-
-        - **None (the batch API)**: a fresh NEGATIVE id is allocated
-          internally per call (-1, -2, ...), so a repeated update with
-          already-ledgered docs is a full no-op — no appends, no pairs.
-        - **>= 0 (streaming epochs)**: docs this same batch_id indexed
-          earlier are EXCLUDED from the "seen" set when computing pairs
-          (appends stay exactly-once via the full-ledger anti-join), so
-          a replayed epoch re-emits exactly the pairs the first attempt
-          produced. The caller writes pairs idempotently per epoch
-          (streaming/neardup.py partitions by epoch and overwrites), so
-          a crash ANYWHERE between the index commit and the pairs write
-          loses nothing and duplicates nothing. Do not mix the two APIs'
-          id spaces on one index: epochs are non-negative, batch
-          allocations negative, so they cannot collide.
+        Each call indexes its fresh docs under a new batch id
+        (``_fresh_batch_id``), so a repeated update with already-ledgered
+        docs is a full no-op — no appends, no pairs.
 
         The "new side" of the candidate join derives from the
         POST-append ledger filtered by batch_id — deliberately NOT from
@@ -126,13 +116,7 @@ class MinHashIndex:
         """
         batch = batch.select("doc_id", "text").dropDuplicates(["doc_id"])
         ledger = self._read_docs(spark)
-        if batch_id is None:
-            prev_min = ledger.agg(F.min("batch_id")).first()[0]
-            bid = min(int(prev_min or 0), 0) - 1
-        else:
-            bid = int(batch_id)
-            if bid < 0:
-                raise ValueError("stream batch_id must be >= 0")
+        bid = _fresh_batch_id(ledger)
         fresh = batch.join(ledger.select("doc_id"), "doc_id", "left_anti").persist()
 
         sh_new = shingle_docs(fresh).persist()
@@ -160,8 +144,7 @@ class MinHashIndex:
 
         # Re-reads below list the index files AFTER the append, so they
         # see old + new rows; the new side is "this batch minus docs
-        # indexed under OTHER batch ids" — the fresh set on first run,
-        # the epoch's own docs again on a replay.
+        # indexed under OTHER batch ids" — exactly the fresh set.
         bands_all = self._read_bands(spark)
         docs_all = self._read_docs(spark)
         # eqNullSafe: an index written by a pre-batch_id schema reads
@@ -268,19 +251,15 @@ class EmbeddingIndex:
             return spark.createDataFrame([], _BUCKETS_SCHEMA)
         return spark.read.schema(_BUCKETS_SCHEMA).parquet(self.buckets_path)
 
-    def update(
-        self, spark: SparkSession, batch: DataFrame, batch_id: int | None = None
-    ) -> DataFrame:
+    def update(self, spark: SparkSession, batch: DataFrame) -> DataFrame:
         """Index a batch of (vec_id, e: array<double>) vectors; return the
         NEW near-dup pairs (vec_a, vec_b, cos_sim) this batch introduces.
 
-        ``batch_id`` semantics mirror ``MinHashIndex.update``: None =
-        replay is a full no-op; set (streaming epoch) = a replayed epoch
-        re-emits exactly its own pairs (appends stay exactly-once), so
-        epoch-partitioned idempotent pairs writes survive any crash
-        point. Buckets land BEFORE the vec ledger (the replay key) for
-        the same crash-window reason; bucket duplicates from a partial
-        replay are absorbed by the output dropDuplicates.
+        Replay semantics mirror ``MinHashIndex.update``: resubmitting
+        indexed vectors is a full no-op. Buckets land BEFORE the vec
+        ledger (the replay key) for the same crash-window reason; bucket
+        duplicates from a crashed partial append are absorbed by the
+        output dropDuplicates.
         """
         from travel_data_ingestion_spark.queries.llm_similarity import (
             _lsh_planes,
@@ -291,13 +270,7 @@ class EmbeddingIndex:
         planes = _lsh_planes(self.N_PLANES)
         stored_vecs = self._read_vecs(spark)
         batch = batch.select("vec_id", "e").dropDuplicates(["vec_id"])
-        if batch_id is None:
-            prev_min = stored_vecs.agg(F.min("batch_id")).first()[0]
-            bid = min(int(prev_min or 0), 0) - 1
-        else:
-            bid = int(batch_id)
-            if bid < 0:
-                raise ValueError("stream batch_id must be >= 0")
+        bid = _fresh_batch_id(stored_vecs)
 
         fresh = batch.join(stored_vecs.select("vec_id"), "vec_id", "left_anti")
         keyed_fresh = fresh.withColumn(
@@ -317,9 +290,7 @@ class EmbeddingIndex:
         # re-evaluated after the write (the write refreshes cached file
         # listings; see MinHashIndex.update). New side = this batch minus
         # vectors indexed under OTHER ids (signatures recompute — pure
-        # function — so a replayed epoch reproduces its buckets); old
-        # side = everything indexed under other ids, so a replayed epoch
-        # cannot pair a vector with its own committed copy.
+        # function); old side = everything indexed under other ids.
         # eqNullSafe: legacy (pre-batch_id) vecs read back with NULL
         # batch_id; a plain != NULLs them out of BOTH sides — old_vecs
         # would silently exclude every legacy vector (missed pairs) and
@@ -407,14 +378,12 @@ class PhashIndex:
     land within the threshold of each other in practice (mm03 pins the
     measured separation).
 
-    Replay semantics mirror MinHashIndex exactly: ``batch_id=None``
-    allocates a fresh negative id (resubmitting indexed media is a full
-    no-op); ``batch_id >= 0`` is the streaming-epoch API (a replayed
-    epoch re-emits exactly its original pairs; appends stay
-    exactly-once via the ledger anti-join). The new side derives from
-    the POST-append ledger filtered by batch_id — not a pre-append
-    frame, which a write-triggered file-listing refresh can silently
-    empty (the measured r7 trap, see MinHashIndex.update).
+    Replay semantics mirror MinHashIndex exactly: each update allocates
+    a fresh negative batch id, so resubmitting indexed media is a full
+    no-op (the ledger anti-join keeps appends exactly-once). The new
+    side derives from the POST-append ledger filtered by batch_id — not
+    a pre-append frame, which a write-triggered file-listing refresh can
+    silently empty (the measured r7 trap, see MinHashIndex.update).
 
     Invariant (pinned by tests/test_phash_index.py): the union of pair
     sets from build + every update equals the one-shot
@@ -436,11 +405,7 @@ class PhashIndex:
         return spark.read.schema(_SIGS_SCHEMA).parquet(self.sigs_path)
 
     def update(
-        self,
-        spark: SparkSession,
-        batch: DataFrame,
-        batch_id: int | None = None,
-        signature_fn=None,
+        self, spark: SparkSession, batch: DataFrame, signature_fn=None
     ) -> DataFrame:
         """Index a batch of (media_id, payload) rows; return the NEW
         near-dup pairs (id_a, id_b, hamming) this batch introduces. A
@@ -453,13 +418,7 @@ class PhashIndex:
             signature_fn = phash_signatures
         batch = batch.select("media_id", "payload").dropDuplicates(["media_id"])
         ledger = self._read_sigs(spark)
-        if batch_id is None:
-            prev_min = ledger.agg(F.min("batch_id")).first()[0]
-            bid = min(int(prev_min or 0), 0) - 1
-        else:
-            bid = int(batch_id)
-            if bid < 0:
-                raise ValueError("stream batch_id must be >= 0")
+        bid = _fresh_batch_id(ledger)
         fresh = batch.join(ledger.select("media_id"), "media_id", "left_anti")
         sigs_new = signature_fn(fresh).select(
             "media_id", "phash", F.lit(bid).alias("batch_id")
@@ -467,7 +426,7 @@ class PhashIndex:
         sigs_new.write.mode("append").parquet(self.sigs_path)
 
         sigs_all = self._read_sigs(spark)
-        # the epoch's own rows are the new side on first run AND replay
+        # this update's own rows are the new side
         new_side = sigs_all.filter(F.col("batch_id").eqNullSafe(F.lit(bid)))
         return self._pairs_new_vs_all(new_side, sigs_all)
 
@@ -598,7 +557,7 @@ class ClusterIndex:
         if not os.path.isdir(path):
             # crash landed between the two swap renames: the parked old
             # log is the consistent pre-rewrite state (the interrupted
-            # batch's merges heal when its epoch replays)
+            # batch's merges are re-derived when its pairs are fed again)
             old = f"{self.remap_path}__old"
             if not os.path.isdir(old):
                 return {}
@@ -885,9 +844,8 @@ class ClusterIndex:
         # Single-driver contract (SURVEY §7.4-4): a truly concurrent
         # resolve() is out of scope; a crash mid-swap is repaired by
         # the next update, and a crash BETWEEN the assign append and
-        # this rewrite heals on epoch replay because the replayed
-        # pairs re-derive the lost merges (MinHashIndex batch_id
-        # semantics + the endpoint re-contraction here).
+        # this rewrite heals when the same pairs are fed again: the
+        # endpoint re-contraction here re-derives the lost merges.
         import shutil
 
         tmp = f"{self.remap_path}__tmp"
@@ -900,7 +858,7 @@ class ClusterIndex:
         # renames), the parked copy is the one _read_remap fed this
         # rewrite — deleting it pre-promotion would re-open the no-log
         # window this swap exists to close (a second crash would lose
-        # every historical merge, unrecoverable by epoch replay).
+        # every historical merge, unrecoverable by re-feeding pairs).
         if os.path.isdir(self.remap_path):
             shutil.rmtree(old, ignore_errors=True)
             os.rename(self.remap_path, old)

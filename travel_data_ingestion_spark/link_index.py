@@ -27,10 +27,8 @@ with the same contracts as the rest of the index family
   edge. Write ordering is still the crash contract: the edge
   partition commits FIRST (directory cleared + dynamic overwrite),
   the ledger appends LAST; a crash between the two leaves an orphan
-  partition that the next batch-API update claims and fully replaces
-  (ORPHAN-FIRST allocation, the DocFreqIndex doctrine — only
-  NEGATIVE ids, the batch-API space; a positive unledgered id is a
-  crashed stream epoch whose own replay heals it).
+  partition that the next update claims and fully replaces
+  (ORPHAN-FIRST allocation, the DocFreqIndex doctrine).
 
 ``rank()`` re-ranks from the PERSISTED adjacency — no HTML is
 re-parsed — by running llm.linkgraph.pagerank over ``edges()``:
@@ -93,13 +91,13 @@ class LinkGraphIndex:
         return ledgered, live
 
     def _alloc_batch_id(self, spark: SparkSession) -> int:
-        """ORPHAN-FIRST negative-id allocation (text_index doctrine):
-        claim the smallest unledgered negative partition (a crashed
-        update's half-commit — fully replaced below), else one below
-        the ledger/edge minimum (which includes compact()'s
-        reservation sentinels, so fold partitions never reallocate)."""
+        """ORPHAN-FIRST allocation (text_index doctrine): claim the
+        smallest unledgered partition (a crashed update's half-commit —
+        fully replaced below), else one below the ledger/edge minimum
+        (which includes compact()'s reservation sentinels, so fold
+        partitions never reallocate)."""
         ledgered, live = self._batch_id_sets(spark)
-        orphans = sorted(i for i in live - ledgered if i < 0)
+        orphans = sorted(live - ledgered)
         if orphans:
             return int(orphans[0])
         return min(int(min(ledgered | live)) if (ledgered | live) else 0,
@@ -113,28 +111,18 @@ class LinkGraphIndex:
         return min(int(min(ledgered | live)) if (ledgered | live) else 0,
                    0) - 1
 
-    def update(
-        self, spark: SparkSession, edge_batch: DataFrame,
-        batch_id: int | None = None,
-    ) -> None:
+    def update(self, spark: SparkSession, edge_batch: DataFrame) -> None:
         """Ingest a batch of (src, dst) edges: sources already in the
         ledger are skipped wholesale (their edge set was ingested at
         their fetch round); fresh sources' edges land as one new
-        partition. ``batch_id`` spaces mirror DocFreqIndex.update:
-        None (the batch API) allocates negative orphan-first ids;
-        streaming epochs pass their non-negative epoch_id and replay
-        by fully replacing their own partition."""
+        partition under an orphan-first batch id, as in
+        DocFreqIndex.update."""
         batch = edge_batch.select(
             F.col("src").cast("string").alias("src"),
             F.col("dst").cast("string").alias("dst"),
         ).dropDuplicates(["src", "dst"])
         ledger = self._read_ledger(spark)
-        if batch_id is None:
-            bid = self._alloc_batch_id(spark)
-        else:
-            bid = int(batch_id)
-            if bid < 0:
-                raise ValueError("stream batch_id must be >= 0")
+        bid = self._alloc_batch_id(spark)
         fresh = batch.join(ledger.select("src"), "src", "left_anti")
         if not fresh.limit(1).count():
             return
@@ -186,8 +174,8 @@ class LinkGraphIndex:
         removed — a crash between 2 and 3 leaves duplicates that
         ``edges()``'s distinct absorbs, and re-running compact
         finishes the removal. Only LEDGERED partitions fold: an
-        unledgered negative partition is a crashed update's orphan
-        whose retry must replace it in place."""
+        unledgered partition is a crashed update's orphan whose retry
+        must replace it in place."""
         import shutil
 
         ledgered = self._read_ledger(spark).select("batch_id").distinct()

@@ -112,39 +112,6 @@ def _sample_key(path: str) -> tuple[str, str]:
     return base, ext.lower()
 
 
-def archive_members(df, payload_col: str = "payload"):
-    """Explode archive payloads into member rows, Arrow-batched:
-    (archive_id, path, n_bytes, unsafe_path)."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("archive_id", T.LongType()),
-            T.StructField("path", T.StringType()),
-            T.StructField("n_bytes", T.LongType()),
-            T.StructField("unsafe_path", T.BooleanType()),
-        ]
-    )
-    cols = df.select("archive_id", payload_col)
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {"archive_id": [], "path": [], "n_bytes": [],
-                   "unsafe_path": []}
-            for aid, payload in zip(pdf["archive_id"], pdf[payload_col]):
-                for path, data, unsafe in iter_members(bytes(payload)):
-                    out["archive_id"].append(aid)
-                    out["path"].append(path)
-                    out["n_bytes"].append(len(data))
-                    out["unsafe_path"].append(unsafe)
-            yield pd.DataFrame(out)
-
-    return cols.mapInPandas(batches, schema=schema)
-
-
 def webdataset_samples(df, payload_col: str = "payload",
                        text_exts: tuple = ("txt", "cls")):
     """Group a tar shard's members into WebDataset samples: one row per

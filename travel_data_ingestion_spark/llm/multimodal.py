@@ -128,8 +128,7 @@ MIME_BY_EXT = {
 def mime_from_path(path_col):
     """Column expression: mime type derived from a file path's extension
     (lowercased), ``application/octet-stream`` when unknown — JVM-side
-    (a literal map lookup), so the streaming ingest path stays free of
-    Python."""
+    (a literal map lookup), so no Python UDF runs per row."""
     ext = F.lower(F.regexp_extract(path_col, r"\.([A-Za-z0-9]+)$", 1))
     pairs: list = []
     for k, v in MIME_BY_EXT.items():

@@ -6,9 +6,10 @@ IDENTICAL column names and deterministic values. The driver's correctness
 gate runs both sides at sf=0.01 and hash-compares; ``tests/test_parity.py``
 runs the same comparison locally at sf=0.001.
 
-Cross-engine determinism rules used throughout (see compat.dsum/davg):
+Cross-engine determinism rules used throughout (see compat.csum_sql):
 - money/quantity aggregates accumulate in DECIMAL (order-independent,
-  exact) and cast the final value to DOUBLE on both sides;
+  exact) and cast the final value to DOUBLE on both sides — the wide
+  SQL form ``CAST(SUM(CAST(x AS DECIMAL(28,s))) AS DOUBLE)``;
 - timestamps in outputs are rendered with date_format/strftime or cast
   to DATE;
 - every computed column is explicitly aliased, lowercase, on both sides.

@@ -297,8 +297,8 @@ def _verify_jaccard(cand: DataFrame, sh: DataFrame) -> DataFrame:
 # constant re-orders the 60-bit hash space non-monotonically, so the 32
 # orders behave independently — unlike linear h1 + i*h2 (tried first:
 # for large i the h2 term dominates, every permutation in a band picks
-# the same min-shingle, and banding recall collapses — caught by the
-# streaming fixture).
+# the same min-shingle, and banding recall collapses — caught by a
+# near-dup test fixture).
 import hashlib as _hashlib
 
 

@@ -795,7 +795,7 @@ def _media_clusters_oracle() -> str:
     "Propagation runs over edge endpoints only (O(pairs) per pass, "
     "converged-verified, memoized per run); the DuckDB oracle computes "
     "the same components with a recursive-CTE transitive closure over "
-    "the planted pair literals. The incremental/streaming form of the "
+    "the planted pair literals. The incremental form of the "
     "same composition is ClusterIndex fed by mm03 pairs "
     "(tests/test_dedup_index.py::test_media_phash_pairs_compose_with_cluster_index).",
 )

@@ -38,11 +38,6 @@ def dot_sql(x: str, y: str) -> str:
     return f"aggregate(zip_with({x}, {y}, (p, q) -> p * q), 0.0D, (a, z) -> a + z)"
 
 
-def cosine_sql(x: str, y: str) -> str:
-    """SQL-fragment twin of :func:`cosine` (same expression tree)."""
-    return f"{dot_sql(x, y)} / (sqrt({dot_sql(x, x)}) * sqrt({dot_sql(y, y)}))"
-
-
 @register(
     "sim01_knn_bruteforce",
     f"""

@@ -39,18 +39,6 @@ _DISC_PRICE = "CAST(l_extendedprice AS DECIMAL(12,2)) * (CAST(1 AS DECIMAL(3,2))
 _CHARGE = f"({_DISC_PRICE}) * (CAST(1 AS DECIMAL(3,2)) + CAST(l_tax AS DECIMAL(3,2)))"
 
 
-def _disc_price_col() -> F.Column:
-    return F.col("l_extendedprice").cast("decimal(12,2)") * (
-        F.lit(1).cast("decimal(3,2)") - F.col("l_discount").cast("decimal(3,2)")
-    )
-
-
-def _charge_col() -> F.Column:
-    return _disc_price_col() * (
-        F.lit(1).cast("decimal(3,2)") + F.col("l_tax").cast("decimal(3,2)")
-    )
-
-
 # --- integer-cents fast path for the money aggregates -------------------
 #
 # The TPC-H-shaped money columns are exact two-decimal values ("cents"):
@@ -1374,8 +1362,7 @@ def a14_existence_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY 1, 2
     """,
     survey_ops=("J-01",),
-    doc="Tumbling event-time window aggregation — the batch-mode twin of "
-    "the Structured Streaming pipeline in streaming/ (SURVEY §2.J: the "
+    doc="Tumbling event-time window aggregation (SURVEY §2.J: the "
     "reference's minute/hour grains as window()). Epoch-aligned 5-minute "
     "buckets.",
 )
@@ -1418,7 +1405,7 @@ def j01_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     survey_ops=("J-02", "E-02"),
     doc="Sessionization via lag + session-start sum (30-minute inactivity "
-    "gap) — the batch twin of streaming session_window. The oracle's "
+    "gap). The oracle's "
     "gap-cumsum session_id is a per-user RUNNING count of session "
     "starts, so COUNT(DISTINCT session_id) == SUM(new_session): the "
     "second window pass and the COUNT(DISTINCT) expand-aggregate both "

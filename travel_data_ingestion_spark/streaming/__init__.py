@@ -1,57 +1,15 @@
 """Structured Streaming layer.
 
 The reference has no true streaming — its incrementality is a batch
-micro-ledger (SURVEY §2.J). This package is the idiomatic Spark upgrade
-path kept semantically equivalent:
+micro-ledger (SURVEY §2.J). Its one streaming element is an optional
+file source for the landing stage, which this package provides:
 
 - ``ingest_stream``: file-source ingestion with Trigger.AvailableNow +
   checkpoint = the ingestion ledger (A-07/A-08) as engine-managed state;
   foreachBatch lands each epoch through the idempotent
   per-load_id partition overwrite (replay-safe).
-- ``windows``: watermarked tumbling/sliding window aggregations — the
-  streaming twins of the minute/hour batch grains (D-02/D-03) — and
-  gap-based sessionization via session_window.
-- ``dedup``: exactly-once content dedup with watermark-bounded state —
-  the streaming twin of dd01 for continuous corpus ingestion.
-- ``neardup``: continuous NEAR-dup detection — foreachBatch feeding the
-  incremental MinHash index (dedup_index), the streaming twin of dd03.
-- ``frontier``: per-host politeness scheduling over a continuously
-  arriving crawl frontier — applyInPandasWithState keeping the
-  per-host issue counter and crawl budget across micro-batches, the
-  streaming twin of t22's batch schedule_frontier.
 """
 
-from travel_data_ingestion_spark.streaming.frontier import (
-    scheduled_frontier_stream,
-)
-from travel_data_ingestion_spark.streaming.dedup import (
-    deduped_doc_stream,
-    deduped_stream,
-)
-from travel_data_ingestion_spark.streaming.neardup import (
-    clustered_neardup_stream,
-    docfreq_stream,
-    embedding_neardup_stream,
-    neardup_stream,
-)
-from travel_data_ingestion_spark.streaming.ingest_stream import (
-    stream_ingest_csv,
-    stream_ingest_media,
-)
-from travel_data_ingestion_spark.streaming.windows import (
-    sessionized_counts,
-    windowed_event_stats,
-)
+from travel_data_ingestion_spark.streaming.ingest_stream import stream_ingest_csv
 
-__all__ = [
-    "scheduled_frontier_stream",
-    "stream_ingest_csv",
-    "windowed_event_stats",
-    "sessionized_counts",
-    "deduped_stream",
-    "deduped_doc_stream",
-    "neardup_stream",
-    "embedding_neardup_stream",
-    "clustered_neardup_stream",
-    "docfreq_stream",
-]
+__all__ = ["stream_ingest_csv"]

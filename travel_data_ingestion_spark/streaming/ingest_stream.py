@@ -37,7 +37,6 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from travel_data_ingestion_spark import ledger
 from travel_data_ingestion_spark.catalog import Warehouse
@@ -176,85 +175,6 @@ def stream_ingest_csv(
     q = (
         stream.writeStream.foreachBatch(write_batch)
         .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def stream_ingest_media(
-    spark: SparkSession,
-    landing_dir: str,
-    out_path: str,
-    checkpoint_dir: str,
-    pattern: str = "*",
-    media_type: str = "image",
-) -> None:
-    """Stream raw media files into a media table (AvailableNow drains
-    then stops) — the streaming twin of the batch binaryFile source
-    (``spark.read.format("binaryFile")``) feeding llm/multimodal.
-
-    Each file becomes one MEDIA_SCHEMA-shaped row: opaque payload bytes
-    plus typed metadata (source path, byte length, mime derived from the
-    file extension so downstream format filters work on streamed media
-    exactly as on batch-ingested media); media_id is the xxhash64 of
-    (path, content) — re-processing an UNCHANGED (or touched-but-
-    identical) file is the same id (downstream per-id dedup is a
-    no-op), while a file whose content changed at the same path gets a
-    NEW id, so per-id dedup keeps both versions instead of silently
-    discarding the new one. Content, not mtime: mtime resolution is
-    store-dependent (second-granularity object stores, mtime-preserving
-    copy tools) and can miss a rewrite entirely. (Within ONE checkpoint
-    a modified path is never re-emitted at all — FileStreamSource keys
-    seen-files by path — so the changed-content case arises on
-    re-ingest under a fresh checkpoint or across parallel ingest runs
-    over a mutable landing area.) Note the id space differs from the
-    batch twin media_from_documents (raw doc_id); the two sources must
-    not share one media table.
-    The parquet streaming sink + checkpoint gives exactly-once per file
-    across restarts — the same contract as stream_ingest_csv, with no
-    load_id machinery needed because the sink is append-only and the
-    file-source checkpoint is the ledger. At 100 TB: file discovery is
-    incremental; payload bytes go straight from source to parquet
-    without leaving the JVM; maxFilesPerTrigger bounds per-epoch memory.
-    """
-    # streaming sources require an explicit schema; binaryFile's is fixed
-    binary_schema = T.StructType(
-        [
-            T.StructField("path", T.StringType()),
-            T.StructField("modificationTime", T.TimestampType()),
-            T.StructField("length", T.LongType()),
-            T.StructField("content", T.BinaryType()),
-        ]
-    )
-    stream = (
-        spark.readStream.format("binaryFile")
-        .schema(binary_schema)
-        .option("pathGlobFilter", pattern)
-        .option("maxFilesPerTrigger", 16)
-        .load(landing_dir)
-    )
-    from travel_data_ingestion_spark.llm.multimodal import mime_from_path
-
-    media = stream.select(
-        # the CONTENT itself is folded into the id (not mtime, whose
-        # store-dependent resolution can miss a rewrite): a changed
-        # file at the same path is a NEW media row, an untouched or
-        # touched-but-identical file keeps its id — per-id dedup then
-        # does exactly the right thing in both directions
-        F.xxhash64(F.col("path"), F.col("content")).alias("media_id"),
-        F.lit(media_type).alias("media_type"),
-        F.col("content").alias("payload"),
-        F.struct(
-            F.col("path").alias("source"),
-            F.col("length").cast("long").alias("n_bytes"),
-            mime_from_path(F.col("path")).alias("mime"),
-        ).alias("meta"),
-    )
-    q = (
-        media.writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()
     )

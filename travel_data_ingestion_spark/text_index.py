@@ -21,8 +21,7 @@ incremental, with the same contracts as the dedup/ANN index family
   ``distinct`` absorbs), so each batch's increments commit as a fully
   replaced partition (directory cleared + dynamic overwrite) and the
   doc ledger appends LAST. A crash between the two leaves an ORPHAN:
-  an increments partition whose id has no ledger rows. Streaming
-  epochs heal by replaying their own epoch_id; the batch API heals by
+  an increments partition whose id has no ledger rows. It heals by
   ORPHAN-FIRST allocation — the next update (the retry, or any other
   batch) claims the smallest unledgered partition id and fully
   replaces it, so the half-ingested batch rolls back cleanly and can
@@ -93,11 +92,11 @@ class DocFreqIndex:
 
     def _next_negative_id(self, spark: SparkSession) -> int:
         """Fresh negative id, unique across BOTH tables: the ledger
-        (batch-API updates ledger their docs) AND the increment
-        partitions (a compact() fold writes a negative partition with
-        NO ledger rows — deriving from the ledger alone could reuse the
-        fold's id, and a later update's dynamic overwrite would then
-        replace folded buckets)."""
+        (updates ledger their docs) AND the increment partitions (a
+        compact() fold writes a negative partition with NO ledger rows —
+        deriving from the ledger alone could reuse the fold's id, and a
+        later update's dynamic overwrite would then replace folded
+        buckets)."""
         lmin = self._read_ledger(spark).agg(F.min("batch_id")).first()[0]
         imin = self._read_incr(spark).agg(F.min("batch_id")).first()[0]
         return min(int(lmin or 0), int(imin or 0), 0) - 1
@@ -105,60 +104,39 @@ class DocFreqIndex:
     def _bkt(self, term: F.Column) -> F.Column:
         return F.pmod(F.xxhash64(term), F.lit(self.n_buckets)).cast("int")
 
-    def update(
-        self, spark: SparkSession, batch: DataFrame, batch_id: int | None = None
-    ) -> None:
-        """Count a batch of (doc_id, text) docs into the index.
-
-        ``batch_id`` id spaces mirror MinHashIndex.update: None (the
-        batch API) uses NEGATIVE ids (orphan-first — see the allocation
-        comment below); streaming epochs pass their non-negative
-        epoch_id, so the two spaces cannot collide. Write ordering is
-        the crash contract: the increments partition commits FIRST
-        (directory cleared + dynamic overwrite — a replay or a claimant
-        fully replaces it), the doc ledger appends LAST (see module
-        docstring for the window analysis).
+    def update(self, spark: SparkSession, batch: DataFrame) -> None:
+        """Count a batch of (doc_id, text) docs into the index under an
+        orphan-first batch id (see the allocation comment below). Write
+        ordering is the crash contract: the increments partition commits
+        FIRST (directory cleared + dynamic overwrite — a claimant fully
+        replaces it), the doc ledger appends LAST (see module docstring
+        for the window analysis).
         """
         batch = batch.select("doc_id", "text").dropDuplicates(["doc_id"])
         ledger = self._read_ledger(spark)
-        if batch_id is None:
-            # ORPHAN-FIRST allocation: an increment partition whose id
-            # has no ledger rows is a crashed update's half-commit (the
-            # increments landed, the ledger append didn't). The next
-            # batch-API update claims the smallest such id — and the
-            # write below clears the claimed directory first — so the
-            # orphan is fully replaced instead of being stranded while
-            # its docs (unledgered) get recounted under a fresh id.
-            # With no orphan, ids derive from the ledger min, which
-            # includes compact()'s reservation sentinels, so fold
-            # partitions are never reallocated.
-            ledgered_ids = {
-                r.batch_id
-                for r in ledger.select("batch_id").distinct().collect()
-            }
-            live_ids = {
-                r.batch_id
-                for r in self._read_incr(spark)
-                .select("batch_id")
-                .distinct()
-                .collect()
-            }
-            # Only NEGATIVE orphans belong to the batch-API id space. A
-            # positive unledgered id is a crashed STREAM epoch: its own
-            # replay will rewrite that partition, so a batch update
-            # claiming it would ledger docs under an id the stream then
-            # rmtree's — a permanent silent undercount. Leave it alone.
-            orphans = sorted(i for i in live_ids - ledgered_ids if i < 0)
-            if orphans:
-                bid = int(orphans[0])
-            else:
-                bid = min(int(min(ledgered_ids) if ledgered_ids else 0), 0) - 1
+        # ORPHAN-FIRST allocation: an increment partition whose id has
+        # no ledger rows is a crashed update's half-commit (the
+        # increments landed, the ledger append didn't). The next update
+        # claims the smallest such id — and the write below clears the
+        # claimed directory first — so the orphan is fully replaced
+        # instead of being stranded while its docs (unledgered) get
+        # recounted under a fresh id. With no orphan, ids derive from
+        # the ledger min, which includes compact()'s reservation
+        # sentinels, so fold partitions are never reallocated.
+        ledgered_ids = {
+            r.batch_id for r in ledger.select("batch_id").distinct().collect()
+        }
+        live_ids = {
+            r.batch_id
+            for r in self._read_incr(spark).select("batch_id").distinct().collect()
+        }
+        orphans = sorted(live_ids - ledgered_ids)
+        if orphans:
+            bid = int(orphans[0])
         else:
-            bid = int(batch_id)
-            if bid < 0:
-                raise ValueError("stream batch_id must be >= 0")
-        # Exactly-once per doc; a replayed epoch's own docs are NOT in
-        # the ledger yet exactly when the increments write needs to be
+            bid = min(int(min(ledgered_ids) if ledgered_ids else 0), 0) - 1
+        # Exactly-once per doc: a retried batch's docs are NOT in the
+        # ledger yet exactly when the increments write needs to be
         # recomputed (crash before the ledger append), and are all
         # ledgered (=> empty increments, untouched partitions) when the
         # first attempt fully committed.
@@ -254,8 +232,8 @@ class DocFreqIndex:
 
         1. A sentinel ledger row (NULL doc_id — matches no real doc in
            any anti-join) RESERVES the fold's batch id, so a future
-           batch-API update (which derives ids from the ledger min) can
-           never claim the fold partition and dynamically overwrite
+           update (which derives ids from the ledger min) can never
+           claim the fold partition and dynamically overwrite
            folded buckets. The id itself comes from the min over BOTH
            tables, so it also cannot collide with a crashed batch's
            orphaned (unledgered) partition. A crash after this step
