@@ -114,27 +114,6 @@ def test_search_equals_direct_ivfpq(spark, built):
     assert got == want
 
 
-def test_nprobe_sweep_selects_minimal_budget(spark, built):
-    """The sweep picks the smallest nprobe whose MEASURED recall meets
-    min(target, best observed) — recall@k under ADC ranking is not
-    assumed monotone (quantized distances can displace true neighbors
-    when extra lists add candidates)."""
-    from travel_data_ingestion_spark.ann_index import nprobe_sweep
-
-    corpus = _corpus(spark)
-    out = nprobe_sweep(
-        spark, built, corpus, query_ids=[7, 42, 101], k=5, target_recall=0.5
-    )
-    assert set(out["recalls"]) == set(range(1, 9))  # nlist=8 budgets swept
-    assert all(0.0 <= r <= 1.0 for r in out["recalls"].values())
-    assert out["best_recall"] == max(out["recalls"].values())
-    bar = min(0.5, out["best_recall"])
-    assert out["recalls"][out["chosen_nprobe"]] >= bar
-    # minimality: every smaller budget misses the bar
-    for p in range(1, out["chosen_nprobe"]):
-        assert out["recalls"][p] < bar
-
-
 def test_probe_filter_prunes_partitions(spark, built):
     """The list_id predicate must reach PARTITION pruning in the physical
     scan (PartitionFilters on the FileScan), so unprobed list dirs are

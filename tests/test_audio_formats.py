@@ -21,7 +21,6 @@ import pytest
 from travel_data_ingestion_spark.llm.multimodal import (
     audio_phash_bytes,
     decode_audio,
-    decode_wav,
 )
 
 _FIX = "/root/.pyenv/versions/3.7.16/lib/python3.7/test/audiodata"
@@ -224,14 +223,12 @@ def test_au_synthetic_encodings():
     assert decode_audio(_au(8000, 1, 3, be16)[:20]) is None  # truncated header
 
 
-def test_decode_wav_legacy_contract_unchanged():
-    """The narrow legacy API still returns raw (rate, ch, bits, data)
-    for integer PCM 8/16 and None for everything else."""
-    x = (np.sin(np.arange(100) / 3.0) * 30000).astype("<i2")
-    got = decode_wav(_wav(8000, 1, 1, 16, x.tobytes()))
-    assert got is not None and got[:3] == (8000, 1, 16)
-    assert decode_wav(_wav(8000, 1, 3, 32, np.zeros(4, "<f4").tobytes())) is None
-    assert decode_wav(_wav(8000, 1, 1, 24, bytes(12))) is None
+def test_mp3_pcm_is_gated():
+    """mp3 PCM needs normative tables this environment cannot verify, so
+    a well-formed MPEG-1 Layer III stream (128 kbps, 44.1 kHz, no CRC)
+    decodes to None — the documented stub path."""
+    frame = bytes.fromhex("fffb9000") + bytes(144 * 128000 // 44100 - 4)
+    assert decode_audio(frame * 5) is None
 
 
 def test_audio_adversarial_totality():

@@ -1,10 +1,7 @@
-"""Training-shard export: membership is a pure function of the key."""
+"""Training-data export order: ranks and samples are pure functions of
+the keys, and the salted 100 TB paths equal the naive windows."""
 
 from __future__ import annotations
-
-import glob
-import heapq
-import os
 
 import pytest
 
@@ -13,70 +10,11 @@ from pyspark.sql import functions as F
 
 from travel_data_ingestion_spark.export import (
     curriculum_interleave,
-    shard_id,
     token_budget_sample,
-    write_curriculum_shards,
-    write_training_shards,
 )
 from travel_data_ingestion_spark.queries import load_table
 
 SF_DIR = "/root/testdata/sf0.001"
-
-
-def _shard_contents(spark, path, n_shards):
-    out = {}
-    for s in range(n_shards):
-        rows = spark.read.parquet(os.path.join(path, f"shard={s}")).collect()
-        out[s] = {tuple(r) for r in rows}
-    return out
-
-
-def test_shards_are_deterministic_and_complete(spark, tmp_path):
-    docs = load_table(spark, SF_DIR, "documents").select("doc_id", "source", "text")
-    n_shards = 4
-
-    p1 = str(tmp_path / "run1")
-    p2 = str(tmp_path / "run2")
-    write_training_shards(docs, p1, key="doc_id", n_shards=n_shards)
-    # second run from a differently-partitioned input — membership must
-    # not depend on physical layout
-    write_training_shards(docs.repartition(13), p2, key="doc_id", n_shards=n_shards)
-
-    c1 = _shard_contents(spark, p1, n_shards)
-    c2 = _shard_contents(spark, p2, n_shards)
-    assert c1 == c2
-
-    # complete and disjoint: every input row lands in exactly one shard
-    total = sum(len(v) for v in c1.values())
-    assert total == docs.count()
-    # shard assignment matches the documented pure function
-    expected = {
-        r.doc_id: r.s
-        for r in docs.select(
-            "doc_id", shard_id(F.col("doc_id"), n_shards).alias("s")
-        ).collect()
-    }
-    for s, rows in c1.items():
-        for row in rows:
-            assert expected[row[0]] == s
-
-
-def test_max_records_bounds_files(spark, tmp_path):
-    docs = load_table(spark, SF_DIR, "documents").select("doc_id", "text")
-    p = str(tmp_path / "bounded")
-    write_training_shards(docs, p, key="doc_id", n_shards=2, max_records_per_file=50)
-    for f in glob.glob(os.path.join(p, "shard=*", "*.parquet")):
-        n = spark.read.parquet(f).count()
-        assert n <= 50, f
-
-
-def test_rows_sorted_by_key_within_files(spark, tmp_path):
-    docs = load_table(spark, SF_DIR, "documents").select("doc_id", "text")
-    p = str(tmp_path / "sorted")
-    write_training_shards(docs, p, key="doc_id", n_shards=2)
-    for f in glob.glob(os.path.join(p, "shard=*", "*.parquet")):
-        ids = [r.doc_id for r in spark.read.parquet(f).collect()]
-        assert ids == sorted(ids), f
 
 
 def test_curriculum_salted_rank_equals_global_window(spark):
@@ -246,25 +184,6 @@ def test_curriculum_stride_property(spark):
             assert abs(seen.get(lang, 0) - expected) <= 1, (cut, lang)
 
 
-def test_curriculum_shards_replay_global_order(spark, tmp_path):
-    """k-way-merging the shard streams by vt replays the exact global
-    curriculum; every shard's rows are already vt-sorted on disk."""
-    docs = load_table(spark, SF_DIR, "documents")
-    vts = curriculum_interleave(docs, stratum="lang")
-    p = str(tmp_path / "curr")
-    n_shards = 4
-    write_curriculum_shards(vts, p, key="doc_id", n_shards=n_shards)
-    streams = []
-    for s in range(n_shards):
-        rows = spark.read.parquet(os.path.join(p, f"shard={s}")).collect()
-        keys = [(r.vt, r.doc_id) for r in rows]
-        assert keys == sorted(keys), f"shard {s} not vt-sorted on disk"
-        streams.append([(r.vt, r.doc_id) for r in rows])
-    merged = list(heapq.merge(*streams))
-    expected = sorted((r.vt, r.doc_id) for r in vts.collect())
-    assert merged == expected
-
-
 def test_curriculum_config_weights(spark):
     """Config-table weights: vt must equal (rk+1) * sum(w) / w_s with
     w_s read from the config (default for absent strata, extra config
@@ -322,24 +241,6 @@ def test_curriculum_rejects_bad_weights_config(spark):
     for dw in (0.0, -1.0, float("nan")):
         with pytest.raises(ValueError, match="default_weight"):
             curriculum_interleave(docs, stratum="lang", default_weight=dw)
-
-
-def test_reexport_with_fewer_shards_leaves_no_stale_dirs(spark, tmp_path):
-    """Shard export is a FULL replace: re-exporting with fewer shards
-    (post-dedup) must remove the previous export's extra shard dirs —
-    under the session's dynamic partitionOverwriteMode a plain
-    overwrite would leave them, and a loader would read stale rows."""
-    docs = load_table(spark, SF_DIR, "documents").select("doc_id", "lang")
-    p = str(tmp_path / "shards")
-    write_training_shards(docs, p, n_shards=8)
-    assert len(glob.glob(os.path.join(p, "shard=*"))) == 8
-    half = docs.filter(F.col("doc_id") % 2 == 0)
-    write_training_shards(half, p, n_shards=2)
-    assert sorted(os.path.basename(d) for d in glob.glob(os.path.join(p, "shard=*"))) == [
-        "shard=0",
-        "shard=1",
-    ]
-    assert spark.read.parquet(p).count() == half.count()
 
 
 def test_epoch_repeat_matches_naive_and_boundary_rules(spark):

@@ -298,32 +298,6 @@ def test_decode_image_takes_first_gif_frame():
     assert decode_image(gif) == (4, 4, pal[a].tobytes())
 
 
-def test_resize_gif_reencodes_lossless_png(spark):
-    """Palette containers can't round-trip a resize without
-    quantization, so resize_images re-encodes GIF as lossless PNG —
-    pixels exact, container honest."""
-    from travel_data_ingestion_spark.llm.multimodal import (
-        PNG_SIGNATURE,
-        _nearest_grid,
-        resize_images,
-    )
-
-    pal = _pal(8, seed=17)
-    idx = np.random.RandomState(18).randint(0, 8, (10, 12)).astype(np.uint8)
-    gif = _gif(12, 10, pal, [{"idx": idx}])
-    media = spark.createDataFrame(
-        [(1, bytearray(gif))], "media_id long, payload binary"
-    )
-    out = resize_images(media, 6, 5).collect()[0]
-    p = bytes(out.payload)
-    assert p.startswith(PNG_SIGNATURE) and out.resized
-    arr = pal[idx]
-    expect = np.ascontiguousarray(
-        arr[np.ix_(_nearest_grid(5, 10), _nearest_grid(6, 12))]
-    ).tobytes()
-    assert decode_image(p) == (6, 5, expect)
-
-
 def test_sample_frames_end_to_end(spark):
     """Animated GIF -> every-10th composited frame as a real PPM
     payload; still image -> frame 0; opaque -> nothing. Sampled frames

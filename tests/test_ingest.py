@@ -14,7 +14,7 @@ from travel_data_ingestion_spark.catalog import BRONZE_SCHEMAS, Warehouse
 from travel_data_ingestion_spark.config import FileDetail
 from travel_data_ingestion_spark.ingest import (
     glob_to_regex,
-    ingest_dataset,
+    ingest_all,
     list_stage_files,
     read_csv,
 )
@@ -55,7 +55,7 @@ def test_per_file_failure_isolation(spark, tmp_path):
     wh = Warehouse(str(tmp_path / "wh"))
     wh.init()
     detail = FileDetail(1, str(landing), "transactions*.csv", "bronze", "transactions", "csv")
-    loads = ingest_dataset(spark, wh, detail)
+    loads = ingest_all(spark, wh, {"transactions": detail})["transactions"]
     assert len(loads) == 1  # only the good file loaded
     status = {r.file_name: r.status for r in _ingestion_rows(spark, wh)}
     assert status["transactions_good.csv"] == "SUCCESS"
@@ -77,7 +77,7 @@ def test_column_count_tolerance(spark, tmp_path):
     wh = Warehouse(str(tmp_path / "wh"))
     wh.init()
     detail = FileDetail(1, str(landing), "transactions*.csv", "bronze", "transactions", "csv")
-    ingest_dataset(spark, wh, detail)
+    ingest_all(spark, wh, {"transactions": detail})
     row = wh.read(spark, "bronze", "transactions").first()
     assert row.country == "JP" and row.type is None and row.amount is None
 
@@ -128,6 +128,34 @@ def test_row_id_overflow_raises(spark):
     df = spark.range(10).withColumn("row_id", lineage_row_id(1 << 15))
     with pytest.raises(Exception, match="row_id bit-field overflow"):
         df.collect()
+
+
+def test_load_id_boundary_logs_failure_past_32767(spark, tmp_path):
+    """The last load_id the row_id bit field holds is 32,767: a file given
+    that id lands; the next file (32,768) logs FAILURE with the overflow
+    message instead of raising out of the run or colliding."""
+    from travel_data_ingestion_spark.silver.runner import bronze_load_ids
+
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    header = "country,date,name,type,amount,comments\n"
+    for name in ("transactions_a.csv", "transactions_b.csv"):
+        (landing / name).write_text(header + "JP,2026-02-01,m1,Food,10.5,ok\n")
+    wh = Warehouse(str(tmp_path / "wh"))
+    wh.init()
+    ledger.append(spark, wh, "ingestion_logs", [
+        (32766, 1, "transactions_old.csv", "transactions", "SUCCESS", 1, None)])
+    assert ledger.snapshot(spark, wh, "ingestion_logs").next_id == 32767
+
+    detail = FileDetail(1, str(landing), "transactions*.csv", "bronze", "transactions", "csv")
+    assert ingest_all(spark, wh, {"transactions": detail}) == {"transactions": [32767]}
+    rows = {r.file_name: r for r in _ingestion_rows(spark, wh)}
+    assert (rows["transactions_a.csv"].load_id, rows["transactions_a.csv"].status) == (
+        32767, "SUCCESS")
+    failed = rows["transactions_b.csv"]
+    assert (failed.load_id, failed.status) == (32768, "FAILURE")
+    assert "row_id bit-field overflow" in failed.error_message
+    assert bronze_load_ids(spark, wh, "transactions") == [32767]
 
 
 def _root_parts(p):
@@ -225,7 +253,7 @@ def test_header_only_first_landing_file(spark, tmp_path):
     wh = Warehouse(str(tmp_path / "wh"))
     wh.init()
     detail = FileDetail(1, str(landing), "transactions*.csv", "bronze", "transactions", "csv")
-    assert ingest_dataset(spark, wh, detail) == [1]
+    assert ingest_all(spark, wh, {"transactions": detail})["transactions"] == [1]
     assert not [f for _, _, fs in os.walk(wh.path("bronze", "transactions"))
                 for f in fs if f.endswith(".parquet")]
     bronze = wh.read(spark, "bronze", "transactions")
@@ -235,7 +263,7 @@ def test_header_only_first_landing_file(spark, tmp_path):
     assert wh.read(spark, "admin", "transformation_logs").count() == 0
 
     (landing / "transactions_02.csv").write_text(header + "JP,2026-02-01,m1,Food,10.5,ok\n")
-    assert ingest_dataset(spark, wh, detail) == [2]
+    assert ingest_all(spark, wh, {"transactions": detail})["transactions"] == [2]
     assert bronze_load_ids(spark, wh, "transactions") == [2]
     # one all_spending row + one daily_spend row
     assert run_silver(spark, wh, datasets=["transactions"]) == {"transactions": 2}
@@ -284,7 +312,6 @@ def _slice_wh(spark, tmp_path, name, landing):
 
 def _medallion(spark, wh, cfg):
     from travel_data_ingestion_spark.gold import build_full_travel_cost
-    from travel_data_ingestion_spark.ingest import ingest_all
     from travel_data_ingestion_spark.silver import run_silver
 
     ingest_all(spark, wh, cfg)
@@ -348,7 +375,6 @@ def test_crash_after_bronze_commit_reuses_reserved_load_id(
     ledger append: the re-run overwrites the committed partitions under
     the reserved load_ids instead of landing the files a second time, so
     bronze and gold match a clean run (no doubled totals)."""
-    from travel_data_ingestion_spark.ingest import ingest_all
 
     wh, cfg = _slice_wh(spark, tmp_path, "wh", slice_landing)
     _crash_on_terminal_append(monkeypatch, status_col=4)
@@ -374,7 +400,6 @@ def test_crash_before_bronze_commit_retries_cleanly(
 ):
     """Crash after the RUNNING reservation, before any data commit: the
     re-run loads every file once, under the reserved ids."""
-    from travel_data_ingestion_spark.ingest import ingest_all
 
     wh, cfg = _slice_wh(spark, tmp_path, "wh", slice_landing)
 
@@ -398,7 +423,6 @@ def test_allocations_stay_above_reserved_ids(spark, tmp_path, monkeypatch, slice
     """Ids reserved by a crashed run are never handed out again: silver's
     next transformation_id and a new stream epoch's load_id both land
     above every reserved id."""
-    from travel_data_ingestion_spark.ingest import ingest_all
     from travel_data_ingestion_spark.silver import run_silver
     from travel_data_ingestion_spark.streaming.ingest_stream import _epoch_load_id
 
@@ -433,8 +457,6 @@ def test_ledger_tie_prefers_terminal_status(spark, tmp_path):
     from datetime import datetime, timezone
 
     from travel_data_ingestion_spark.catalog import ADMIN_SCHEMAS
-    from travel_data_ingestion_spark.ingest import ingest_dataset
-
     landing = tmp_path / "landing"
     landing.mkdir()
     (landing / "transactions_a.csv").write_text("country,date\nJP,2026-02-01\n")
@@ -455,7 +477,7 @@ def test_ledger_tie_prefers_terminal_status(spark, tmp_path):
     assert {r.load_id: r.status for r in _ingestion_rows(spark, wh)} == {
         1: "SUCCESS", 2: "SUCCESS"}
     detail = FileDetail(1, str(landing), "transactions*.csv", "bronze", "transactions", "csv")
-    assert ingest_dataset(spark, wh, detail) == []  # both files are done
+    assert ingest_all(spark, wh, {"transactions": detail}) == {"transactions": []}  # both done
 
 
 def _count_jobs(spark, group, fn):
@@ -485,7 +507,6 @@ def test_ledger_jobs_are_fixed_per_run(spark, tmp_path, slice_landing):
     (2 jobs) and writes nothing. Silver's rows_written is the batch
     total: every silver row of the dataset's output tables carrying the
     batch's load_ids."""
-    from travel_data_ingestion_spark.ingest import ingest_all
     from travel_data_ingestion_spark.silver import run_silver
     from travel_data_ingestion_spark.silver.runner import SILVER_TRANSFORMS
 

@@ -23,7 +23,6 @@ from travel_data_ingestion_spark.llm.isobmff import (
     probe_dims,
     probe_heif,
     probe_mp4,
-    probe_mp4_audio,
 )
 
 _LIBHEIF = "/usr/lib/x86_64-linux-gnu/libheif.so.1"
@@ -97,24 +96,9 @@ def test_mp4_probe_fields():
     assert (aud["sample_rate"], aud["n_channels"]) == (44100, 2)
     assert aud["duration_s"] == 2.5
     assert probe_dims(_mp4()) == (320, 180)
-    assert probe_mp4_audio(_mp4()) == (44100, 2, 2.5)
+    from travel_data_ingestion_spark.llm.multimodal import decode_audio
 
-
-def test_m4a_metadata_flows_into_audio_features(spark):
-    from travel_data_ingestion_spark.llm.multimodal import (
-        decode_audio,
-        extract_audio_features,
-    )
-
-    m4a = _mp4(video=False)
-    assert decode_audio(m4a) is None  # AAC PCM honestly gated
-    media = spark.createDataFrame(
-        [(1, bytearray(m4a))], "media_id long, payload binary"
-    )
-    row = extract_audio_features(media).collect()[0]
-    assert row.sample_rate == 44100 and row.n_channels == 2
-    assert row.duration_s == 2.5
-    assert row.rms is None and row.n_samples is None
+    assert decode_audio(_mp4(video=False)) is None  # AAC PCM honestly gated
 
 
 def _heif(primary_ispe=(640, 480), thumb_ispe=(64, 48)) -> bytes:
@@ -173,7 +157,7 @@ def test_hostile_bytes_total():
     rng = random.Random(11)
     for n in (0, 8, 16, 64, 512):
         blob = bytes(rng.randrange(256) for _ in range(n))
-        for probe in (probe_mp4, probe_heif, probe_dims, probe_mp4_audio):
+        for probe in (probe_mp4, probe_heif, probe_dims):
             probe(blob)
             probe(b"\x00\x00\x00\x10ftypavif" + blob)
             probe(b"\x00\x00\x00\x10ftypisom" + blob)

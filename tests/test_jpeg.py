@@ -28,7 +28,6 @@ from travel_data_ingestion_spark.llm.multimodal import (
     decode_image,
     decode_jpeg,
     phash_bytes,
-    resize_images,
 )
 
 # ---------------------------------------------------------------- forward
@@ -441,22 +440,6 @@ def test_real_world_jpeg_interop(path, expect_dims):
     assert r is not None and (r[0], r[1]) == expect_dims
     a = np.frombuffer(r[2], np.uint8)
     assert 10 < a.mean() < 245  # decoded something image-like, not noise
-
-
-def test_resize_reencodes_jpeg_as_lossless_png(spark):
-    """A resized JPEG comes back as LOSSLESS PNG (re-encoding lossy
-    would change pixels twice) with the shared nearest-resample grid."""
-    from travel_data_ingestion_spark.llm.multimodal import PNG_SIGNATURE
-
-    img = _smooth(24, 16, 6)
-    j = encode_jpeg(img, quality=95)
-    media = spark.createDataFrame(
-        [(1, bytearray(j))], "media_id long, payload binary"
-    )
-    out = resize_images(media, 8, 8).collect()[0]
-    assert out.resized and bytes(out.payload).startswith(PNG_SIGNATURE)
-    dec = decode_image(bytes(out.payload))
-    assert dec is not None and (dec[0], dec[1]) == (8, 8)
 
 
 # ------------------------------------------------- progressive forward

@@ -172,52 +172,24 @@ def _wav_bytes(rate, n_ch, bits, samples):
     return b"RIFF" + struct.pack("<I", 4 + len(body)) + b"WAVE" + body
 
 
-def test_wav_decode_and_audio_features(spark):
-    """Real RIFF/PCM parse: sample rate, channels, duration and RMS come
-    from the decoded samples; non-WAV payloads keep NULL typed fields."""
+def test_wav_decode_and_audio_features():
+    """Real RIFF/PCM parse through decode_audio: sample rate, channels,
+    frame count and RMS come from the decoded samples; non-WAV payloads
+    decode to None."""
     import math
 
-    from travel_data_ingestion_spark.llm.multimodal import (
-        decode_wav,
-        extract_audio_features,
-    )
+    from travel_data_ingestion_spark.llm.multimodal import decode_audio
 
     # 16-bit mono: a full-scale square wave -> RMS ~1.0
     sq = [32767, -32768] * 100
-    wav16 = _wav_bytes(8000, 1, 16, sq)
-    dec = decode_wav(wav16)
-    assert dec is not None and dec[0] == 8000 and dec[1] == 1 and dec[2] == 16
-    # 8-bit stereo silence -> RMS 0
-    wav8 = _wav_bytes(4000, 2, 8, [0] * 80)
-    media = spark.createDataFrame(
-        [(1, bytearray(wav16)), (2, bytearray(wav8)), (3, bytearray(b"mp3junk"))],
-        "media_id long, payload binary",
-    )
-    feats = {r.media_id: r for r in extract_audio_features(media).collect()}
-    f1 = feats[1]
-    assert f1.sample_rate == 8000 and f1.n_channels == 1
-    assert f1.n_samples == 200 and f1.duration_s == 0.025
-    assert math.isclose(f1.rms, 1.0, rel_tol=1e-4)
-    f2 = feats[2]
-    assert (f2.sample_rate, f2.n_channels, f2.n_samples) == (4000, 2, 40)
-    assert f2.duration_s == 0.01 and f2.rms == 0.0
-    f3 = feats[3]
-    assert f3.sample_rate is None and f3.rms is None and f3.n_bytes == 7
-
-
-def test_decode_wav_rejects_non_pcm():
-    import struct
-
-    from travel_data_ingestion_spark.llm.multimodal import decode_wav
-
-    # format tag 3 (IEEE float) is a codec-path format here
-    fmt = struct.pack("<HHIIHH", 3, 1, 8000, 16000, 2, 16)
-    body = b"fmt " + struct.pack("<I", len(fmt)) + fmt
-    body += b"data" + struct.pack("<I", 4) + b"\x00" * 4
-    payload = b"RIFF" + struct.pack("<I", 4 + len(body)) + b"WAVE" + body
-    assert decode_wav(payload) is None
-    assert decode_wav(b"RIFFxxxx") is None
-    assert decode_wav(b"") is None
+    rate, n_ch, frames = decode_audio(_wav_bytes(8000, 1, 16, sq))
+    assert (rate, n_ch, frames.shape) == (8000, 1, (200, 1))
+    assert math.isclose(float((frames ** 2).mean()) ** 0.5, 1.0, rel_tol=1e-4)
+    # 8-bit stereo silence (unsigned 128) -> RMS 0
+    rate, n_ch, frames = decode_audio(_wav_bytes(4000, 2, 8, [0] * 80))
+    assert (rate, n_ch, frames.shape) == (4000, 2, (40, 2))
+    assert not frames.any()
+    assert decode_audio(b"mp3junk") is None
 
 
 def _env_wav(seed: int, gain: float = 1.0, noise: float = 0.0) -> bytes:
@@ -292,22 +264,17 @@ def test_audio_neardup_pairs_via_standard_hamming_blocking(spark):
 
 
 def test_mixed_modality_binary_ingest_e2e(spark, tmp_path):
-    """End-to-end media landing: raw PPM + WAV + opaque files through the
-    binaryFile source, routed by extension-derived mime — image rows get
-    real header dims + pixel pHash, audio rows get real PCM features,
-    opaque rows fall back to the documented stubs. One schema, no codec
-    library anywhere."""
+    """End-to-end media landing: raw PPM + PNG + opaque files through the
+    binaryFile source; image rows get real header dims + pixel pHash.
+    One schema, no codec library anywhere."""
     import numpy as np
 
-    from travel_data_ingestion_spark.llm.multimodal import (
-        extract_audio_features,
-        extract_features,
-        mime_from_path,
-        phash_signatures,
-    )
     from pyspark.sql import functions as F
 
-    from travel_data_ingestion_spark.llm.multimodal import encode_png
+    from travel_data_ingestion_spark.llm.multimodal import (
+        encode_png,
+        phash_signatures,
+    )
 
     land = tmp_path / "media_land"
     land.mkdir()
@@ -316,30 +283,19 @@ def test_mixed_modality_binary_ingest_e2e(spark, tmp_path):
     # the SAME pixels re-encoded as a real compressed PNG: decodes to
     # identical dims and pHash-pairs with its PPM twin at hamming 0
     (land / "shot.png").write_bytes(encode_png(10, 12, img.tobytes()))
-    (land / "clip.wav").write_bytes(_wav_bytes(16000, 1, 16, [1000, -1000] * 50))
     (land / "blob.bin").write_bytes(b"opaque-payload")
 
     raw = spark.read.format("binaryFile").load(str(land))
     media = raw.select(
         F.xxhash64("path", "modificationTime").alias("media_id"),
         F.col("content").alias("payload"),
-        mime_from_path(F.col("path")).alias("mime"),
         F.col("path").alias("source"),
     )
-    by_mime = {os.path.basename(r.source): r.mime for r in media.collect()}
-    assert by_mime == {
-        "shot.ppm": "image/x-portable-pixmap",
-        "shot.png": "image/png",
-        "clip.wav": "audio/wav",
-        "blob.bin": "application/octet-stream",
-    }
-    images = media.filter(F.col("mime").startswith("image/"))
-    audio = media.filter(F.col("mime").startswith("audio/"))
+    assert sorted(os.path.basename(r.source) for r in media.collect()) == [
+        "blob.bin", "shot.png", "shot.ppm"]
+    images = media.filter(F.col("source").rlike(r"\.(ppm|png)$"))
     feats = extract_features(images).collect()
     assert len(feats) == 2
     assert {(f.width, f.height) for f in feats} == {(10, 12)}  # both REAL parses
     sigs = [r.phash for r in phash_signatures(images).collect()]
     assert len(sigs) == 2 and sigs[0] == sigs[1]  # format-invariant pHash
-    af = extract_audio_features(audio).collect()
-    assert len(af) == 1 and af[0].sample_rate == 16000 and af[0].n_samples == 100
-    assert af[0].duration_s == 0.00625

@@ -11,11 +11,10 @@ the byte-identical PCM of the native FLAC stream it wraps.
 from __future__ import annotations
 
 import numpy as np
-import pytest
 
 from tests.test_flac import _flac, _rand
 from travel_data_ingestion_spark.llm.multimodal import decode_audio
-from travel_data_ingestion_spark.llm.ogg import decode_ogg, demux, probe_ogg
+from travel_data_ingestion_spark.llm.ogg import _identify, decode_ogg, demux
 
 
 def _crc_bitwise(data: bytes) -> int:
@@ -143,29 +142,19 @@ def test_audio_packet_splits_are_equivalent():
         np.testing.assert_array_equal(got[2], ref[2])
 
 
-def test_probe_reports_codec_rate_channels_duration():
-    native = _flac(_rand(5, 800, 2, 16), rate=8000, bits=16, kind="verbatim")
-    ogg = _ogg_flac(native, final_granule=800)
-    codec, rate, n_ch, dur = probe_ogg(ogg)
-    assert codec == "flac" and rate == 8000 and n_ch == 2
-    assert dur == pytest.approx(800 / 8000)
-
-
 def test_probe_identifies_vorbis_and_opus_headers():
     ident = (b"\x01vorbis" + (0).to_bytes(4, "little") + bytes([2])
              + (48000).to_bytes(4, "little") + b"\x00" * 12
              + bytes([0x68]) + b"\x01")
     ogg = _mux([ident], serial=7, final_granule=96000)
-    codec, rate, n_ch, dur = probe_ogg(ogg)
-    assert (codec, rate, n_ch) == ("vorbis", 48000, 2)
-    assert dur == pytest.approx(2.0)
+    [(pkts, _g0, g1)] = demux(ogg).values()
+    assert _identify(pkts[0]) == "vorbis" and g1 == 96000
 
     opus = (b"OpusHead" + bytes([1, 2]) + (312).to_bytes(2, "little")
             + (44100).to_bytes(4, "little") + b"\x00\x00\x00")
     ogg = _mux([opus], serial=9, final_granule=48000 + 312)
-    codec, rate, n_ch, dur = probe_ogg(ogg)
-    assert (codec, rate, n_ch) == ("opus", 44100, 2)
-    assert dur == pytest.approx(1.0)
+    [(pkts, _g0, g1)] = demux(ogg).values()
+    assert _identify(pkts[0]) == "opus" and g1 == 48000 + 312
     # gated codec: identified, not decoded
     assert decode_ogg(ogg) is None
 
@@ -210,9 +199,7 @@ def test_hostile_bytes_total():
     for n in (0, 1, 26, 27, 100, 4096):
         blob = bytes(rng.randrange(256) for _ in range(n))
         assert decode_ogg(blob) is None
-        assert probe_ogg(blob) is None
         assert decode_ogg(b"OggS" + blob) is None
-        assert probe_ogg(b"OggS" + blob) is None
 
 
 def test_truncated_stream_total():

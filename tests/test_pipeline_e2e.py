@@ -304,7 +304,7 @@ def test_interleaved_disjoint_writers_keep_ledger_consistent(spark, pipeline_wh)
 
     from tests.fixtures_gen import _w
     from travel_data_ingestion_spark.config import load_config
-    from travel_data_ingestion_spark.ingest import ingest_dataset
+    from travel_data_ingestion_spark.ingest import ingest_all
 
     wh = pipeline_wh
     # the base fixture ships ONE transactions load; land a second file
@@ -316,7 +316,7 @@ def test_interleaved_disjoint_writers_keep_ledger_consistent(spark, pipeline_wh)
         [["Japan", "2026-03-01", "merchant_x", "Hotel", "$120.00", "Dinner"],
          ["Japan", "2026-03-02", "merchant_y", "food", "55.50", "Train ticket"]],
     )
-    ingest_dataset(spark, wh, cfg)
+    ingest_all(spark, wh, {"transactions": cfg})
     bronze_ids = sorted(
         int(r.load_id)
         for r in wh.read(spark, "bronze", "transactions")

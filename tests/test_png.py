@@ -1,4 +1,4 @@
-"""Pure-stdlib PNG decode/encode + the image resize operator.
+"""Pure-stdlib PNG decode/encode.
 
 decode_png covers every legal PNG (color types 0/2/3/4/6, depths
 1/2/4/8/16 where the spec allows, non-interlaced and Adam7) with
@@ -7,8 +7,7 @@ INDEPENDENT forward filter/packer implementation (all five scanline
 filters, sub-byte bit packing, 16-bit samples, Adam7 pass extraction),
 pin the rejection of genuinely-malformed streams, prove pHash
 format-invariance (PPM vs PNG of the same pixels, interlaced vs not),
-decode real-world files from other encoders, and exercise
-resize_images end-to-end through Spark.
+and decode real-world files from other encoders.
 """
 
 from __future__ import annotations
@@ -23,12 +22,9 @@ from hypothesis import strategies as st
 
 from travel_data_ingestion_spark.llm.multimodal import (
     PNG_SIGNATURE,
-    _nearest_grid,
-    decode_image,
     decode_png,
     encode_png,
     phash_bytes,
-    resize_images,
 )
 
 
@@ -195,39 +191,6 @@ def test_extract_features_parses_png_headers(spark):
     assert feats[1].n_bytes == len(png)
     # opaque bytes keep the documented digest-derived stub dims
     assert 64 <= feats[2].width < 256
-
-
-def test_resize_images_end_to_end(spark):
-    """resize_images: source container preserved, nearest resample
-    matches the numpy reference, opaque payloads pass through."""
-    w0, h0, W, H = 12, 9, 8, 8
-    rgb = _rand_px(31, w0 * h0 * 3)
-    arr = np.frombuffer(rgb, np.uint8).reshape(h0, w0, 3)
-    expect = np.ascontiguousarray(
-        arr[np.ix_(_nearest_grid(H, h0), _nearest_grid(W, w0))]
-    ).tobytes()
-    ppm = b"P6\n%d %d\n255\n" % (w0, h0) + rgb
-    png = encode_png(w0, h0, rgb)
-    media = spark.createDataFrame(
-        [(1, bytearray(ppm)), (2, bytearray(png)), (3, bytearray(b"not-an-image"))],
-        "media_id long, payload binary",
-    )
-    out = {r.media_id: r for r in resize_images(media, W, H).collect()}
-    # PPM in -> PPM out, resampled exactly
-    p1 = bytes(out[1].payload)
-    assert p1.startswith(b"P6\n") and (out[1].width, out[1].height) == (W, H)
-    assert decode_image(p1) == (W, H, expect)
-    # PNG in -> PNG out, same pixels
-    p2 = bytes(out[2].payload)
-    assert p2.startswith(PNG_SIGNATURE) and out[2].resized
-    assert decode_image(p2) == (W, H, expect)
-    # resize-then-pHash == pHash of the direct resample (shared grid)
-    assert phash_bytes(p1) == phash_bytes(p2)
-    # opaque passthrough: bytes unchanged, flagged, NULL dims
-    assert bytes(out[3].payload) == b"not-an-image" and not out[3].resized
-    assert out[3].width is None and out[3].height is None
-    with pytest.raises(ValueError):
-        resize_images(media, 0, 8)
 
 
 def _expected_rgb(color: int, raw: bytes, w: int, h: int) -> bytes:

@@ -95,9 +95,15 @@ def test_phash_bytes_total_and_deterministic(payload):
     st.binary(min_size=0, max_size=64),
 )
 def test_decode_wav_roundtrip(n_ch, rate, bits, data):
+    """decode_audio's RIFF/WAVE chunk walk: integer PCM 8/16-bit samples
+    round-trip exactly (8-bit unsigned around 128, 16-bit signed LE, both
+    scaled to [-1, 1)); a non-PCM tag or a truncated header returns None
+    without raising."""
     import struct
 
-    from travel_data_ingestion_spark.llm.multimodal import decode_wav
+    import numpy as np
+
+    from travel_data_ingestion_spark.llm.multimodal import decode_audio
 
     block = n_ch * bits // 8
     frames = data[: (len(data) // max(block, 1)) * max(block, 1)]
@@ -108,10 +114,16 @@ def test_decode_wav_roundtrip(n_ch, rate, bits, data):
         + (b"\x00" if len(frames) & 1 else b"")  # word alignment
     )
     payload = b"RIFF" + struct.pack("<I", 4 + len(body)) + b"WAVE" + body
-    dec = decode_wav(payload)
-    assert dec == (rate, n_ch, bits, frames)
+    if bits == 8:
+        want = (np.frombuffer(frames, np.uint8).astype(np.int64) - 128) / 128.0
+    else:
+        want = np.frombuffer(frames, "<i2").astype(np.int64) / 32768.0
+    got_rate, got_ch, samples = decode_audio(payload)
+    assert (got_rate, got_ch) == (rate, n_ch)
+    assert samples.shape == (len(frames) // block, n_ch)
+    assert np.array_equal(samples.reshape(-1), want)
     # non-PCM tag and truncated header are rejected, never raise
     bad_fmt = struct.pack("<HHIIHH", 3, n_ch, rate, rate * block, block, bits)
     bad = payload.replace(fmt, bad_fmt, 1)
-    assert decode_wav(bad) is None
-    assert decode_wav(payload[:20]) is None
+    assert decode_audio(bad) is None
+    assert decode_audio(payload[:20]) is None

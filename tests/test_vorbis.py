@@ -888,18 +888,6 @@ def test_through_ogg_container_and_decode_audio():
     np.testing.assert_allclose(pcm, exp, atol=1e-9)
 
 
-def test_probe_ogg_reports_vorbis():
-    from travel_data_ingestion_spark.llm.ogg import probe_ogg
-
-    rng = random.Random(71)
-    frames = [_rand_frame(rng, False, 1, 1) for _ in range(3)]
-    pkts = _make_stream(frames, 1)
-    ogg = _mux(pkts, final_granule=64)
-    codec, rate, n_ch, dur = probe_ogg(ogg)
-    assert (codec, rate, n_ch) == ("vorbis", RATE, 1)
-    assert dur == pytest.approx(64 / RATE)
-
-
 def test_hostile_packets_total():
     rng = random.Random(97)
     for _ in range(30):

@@ -780,7 +780,7 @@ def test_lz77_before_any_pixel_rejected():
 
 def test_decode_image_dispatch():
     """decode_image routes RIFF/WEBP payloads to the VP8L decoder, so
-    the whole pipeline (features, pHash, resize) lights up."""
+    the whole pipeline (features, pHash) lights up."""
     from travel_data_ingestion_spark.llm.multimodal import decode_image, phash_bytes
 
     rgb = _rand_rgb(21, 24, 24)
@@ -901,29 +901,6 @@ def test_chained_subtract_green_then_predictor():
         bytes([(p >> 16) & 0xFF, (p >> 8) & 0xFF, p & 0xFF]) for p in target
     )
     assert dec[2] == expect
-
-
-def test_resize_webp_reencodes_lossless_png(spark):
-    """resize_images re-encodes BOTH WebP flavors as lossless PNG (the
-    GIF/JPEG rule: the package ships no WebP encoder, and re-encoding
-    a lossy stream would lose pixels a second time)."""
-    from travel_data_ingestion_spark.llm.multimodal import decode_png, resize_images
-    from travel_data_ingestion_spark.queries import media_literals as ML
-
-    rgb = _rand_rgb(31, 24, 24)
-    media = spark.createDataFrame(
-        [
-            (1, bytearray(_webp_lossless(rgb))),
-            (2, bytearray(ML.ZETA_WEBP_LOSSY)),
-        ],
-        "media_id long, payload binary",
-    )
-    rows = {r.media_id: r for r in resize_images(media, 12, 12).collect()}
-    for mid in (1, 2):
-        row = rows[mid]
-        assert row.resized and (row.width, row.height) == (12, 12)
-        dec = decode_png(bytes(row.payload))
-        assert dec is not None and (dec[0], dec[1]) == (12, 12)
 
 
 # ---------------------------------------------------------------------------

@@ -184,87 +184,3 @@ class PQIndex:
         pruned = codes.filter(F.col("list_id").isin(probes))
         return adc_topk(pruned, books, query, k=k)
 
-
-def nprobe_sweep(
-    spark: SparkSession,
-    idx: PQIndex,
-    corpus: DataFrame,
-    query_ids: list[int],
-    k: int = 10,
-    target_recall: float = 0.9,
-) -> dict:
-    """Cost-based nprobe selection: measure recall@k of the index against
-    exact L2 for each nprobe in 1..nlist over a sample of query vectors,
-    and pick the smallest nprobe meeting ``target_recall``.
-
-    This is a control-plane calibration sweep (run once per index build
-    over tens of sampled queries, not per search): each query costs one
-    exact top-k scan + nlist pruned ADC scans. The CANDIDATE set grows
-    monotonically with nprobe, but measured recall@k need not — ADC
-    distances are quantized, so a newly-probed list can contribute a
-    false candidate whose approximate distance displaces a true
-    neighbor from the fixed-k cut. The sweep therefore selects from
-    MEASURED recall, not an assumed curve: chosen_nprobe is the
-    smallest budget reaching min(target, best observed recall). The gap
-    between best observed recall and 1.0 is PQ quantization loss, which
-    no probe budget recovers — retrain with more subspaces/centroids if
-    that ceiling is too low.
-
-    Returns {"recalls": {nprobe: mean_recall}, "chosen_nprobe": int,
-    "best_recall": float}.
-    """
-    _books, centers = idx.load_books(spark)
-    nlist = len(centers)
-    qvecs = {
-        r.vec_id: list(r.e)
-        for r in corpus.filter(F.col("vec_id").isin(list(query_ids))).collect()
-    }
-    missing = set(query_ids) - set(qvecs)
-    if missing:
-        raise ValueError(
-            f"nprobe_sweep: query_ids absent from the corpus: "
-            f"{sorted(missing)[:5]}{'...' if len(missing) > 5 else ''} — "
-            "recall would be silently computed over a different sample"
-        )
-    if not qvecs:
-        raise ValueError("nprobe_sweep: empty query sample")
-
-    def exact_topk(qid: int, query: list[float]) -> set[int]:
-        dist = F.aggregate(
-            F.zip_with("e", F.lit(query), lambda a, b: (a - b) * (a - b)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        return {
-            r.vec_id
-            for r in corpus.filter(F.col("vec_id") != qid)
-            .select("vec_id", dist.alias("d"))
-            .orderBy(F.asc("d"), F.asc("vec_id"))
-            .limit(k)
-            .collect()
-        }
-
-    # Ground truth depends only on the query, not on nprobe — compute it
-    # ONCE per query (one exact scan each), not once per (query, nprobe):
-    # the sweep's stated budget is "one exact top-k scan + nlist pruned
-    # ADC scans" per query, and recomputing truth inside the loop would
-    # multiply the exact-scan cost by nlist.
-    truths = {qid: exact_topk(qid, q) for qid, q in qvecs.items()}
-    if any(not t for t in truths.values()):
-        raise ValueError("nprobe_sweep: corpus too small for ground-truth top-k")
-    recalls: dict[int, float] = {}
-    for nprobe in range(1, nlist + 1):
-        hits = 0.0
-        for qid, q in qvecs.items():
-            truth = truths[qid]
-            # over-fetch one, drop the query itself, keep the top-k
-            rows = idx.search(spark, q, k=k + 1, nprobe=nprobe).collect()
-            got = [r.vec_id for r in rows if r.vec_id != qid][:k]
-            hits += len(truth & set(got)) / len(truth)
-        recalls[nprobe] = round(hits / len(qvecs), 4)
-
-    best = max(recalls.values())
-    chosen = next(
-        p for p in range(1, nlist + 1) if recalls[p] >= min(target_recall, best)
-    )
-    return {"recalls": recalls, "chosen_nprobe": chosen, "best_recall": best}

@@ -250,8 +250,7 @@ class Warehouse:
             )
         # writer-level option only — mutating the SESSION conf here would
         # silently flip every later partitioned overwrite in the session
-        # to dynamic semantics (stale-partition hazard export.py has to
-        # pin 'static' against)
+        # to dynamic semantics, leaving stale partitions behind
         seen = Observation()
         (
             df.observe(seen, F.count(F.lit(1)).alias("rows"))

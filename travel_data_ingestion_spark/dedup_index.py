@@ -208,162 +208,13 @@ class MinHashIndex:
     build = update
 
 
-_VECS_SCHEMA = "vec_id long, e array<double>, batch_id long"
-_BUCKETS_SCHEMA = "vec_id long, bucket long"
-
-
-class EmbeddingIndex:
-    """Incremental embedding near-dup index — dd05's hyperplane-LSH
-    bucketing with the same once-per-vector persistence contract as
-    ``MinHashIndex``:
-
-    - bucket signatures (``llm_similarity.hyperplane_signature`` over the
-      md5-seeded literal planes) are pure per-vector functions, computed
-      once and persisted;
-    - each update probes O(batch x (n_planes+1)) bucket keys against the
-      stored uniform bucket table — never rescans the corpus;
-    - the vec ledger anti-join makes replays no-ops (exactly-once).
-
-    Pair semantics match dd05 exactly (multi-probe hamming<=1 candidates,
-    exact cosine >= 0.99 on the 4dp-rounded score): accumulating update
-    outputs over arbitrary batches equals the one-shot dd05 pair set —
-    pinned by tests/test_dedup_index.py::test_embedding_incremental_equals_batch.
-    """
-
-    N_PLANES = 8
-    THRESHOLD = 0.99
-
-    def __init__(self, path: str):
-        self.path = path.rstrip("/")
-        self.vecs_path = f"{self.path}/vecs"
-        self.buckets_path = f"{self.path}/buckets"
-
-    def exists(self) -> bool:
-        return os.path.isdir(self.vecs_path)
-
-    def _read_vecs(self, spark: SparkSession) -> DataFrame:
-        if not self.exists():
-            return spark.createDataFrame([], _VECS_SCHEMA)
-        return spark.read.schema(_VECS_SCHEMA).parquet(self.vecs_path)
-
-    def _read_buckets(self, spark: SparkSession) -> DataFrame:
-        if not os.path.isdir(self.buckets_path):
-            return spark.createDataFrame([], _BUCKETS_SCHEMA)
-        return spark.read.schema(_BUCKETS_SCHEMA).parquet(self.buckets_path)
-
-    def update(self, spark: SparkSession, batch: DataFrame) -> DataFrame:
-        """Index a batch of (vec_id, e: array<double>) vectors; return the
-        NEW near-dup pairs (vec_a, vec_b, cos_sim) this batch introduces.
-
-        Replay semantics mirror ``MinHashIndex.update``: resubmitting
-        indexed vectors is a full no-op. Buckets land BEFORE the vec
-        ledger (the replay key) for the same crash-window reason; bucket
-        duplicates from a crashed partial append are absorbed by the
-        output dropDuplicates.
-        """
-        from travel_data_ingestion_spark.queries.llm_similarity import (
-            _lsh_planes,
-            cosine,
-            hyperplane_signature,
-        )
-
-        planes = _lsh_planes(self.N_PLANES)
-        stored_vecs = self._read_vecs(spark)
-        batch = batch.select("vec_id", "e").dropDuplicates(["vec_id"])
-        bid = _fresh_batch_id(stored_vecs)
-
-        fresh = batch.join(stored_vecs.select("vec_id"), "vec_id", "left_anti")
-        keyed_fresh = fresh.withColumn(
-            "bucket", hyperplane_signature(F.col("e"), planes)
-        ).persist()
-        try:
-            keyed_fresh.select("vec_id", "bucket").write.mode("append").parquet(
-                self.buckets_path
-            )
-            keyed_fresh.select(
-                "vec_id", "e", F.lit(bid).alias("batch_id")
-            ).write.mode("append").parquet(self.vecs_path)
-        finally:
-            keyed_fresh.unpersist()
-
-        # Post-append reads split by batch_id — never a pre-append frame
-        # re-evaluated after the write (the write refreshes cached file
-        # listings; see MinHashIndex.update). New side = this batch minus
-        # vectors indexed under OTHER ids (signatures recompute — pure
-        # function); old side = everything indexed under other ids.
-        # eqNullSafe: legacy (pre-batch_id) vecs read back with NULL
-        # batch_id; a plain != NULLs them out of BOTH sides — old_vecs
-        # would silently exclude every legacy vector (missed pairs) and
-        # new_ids would re-admit re-submitted legacy docs. Null-safe,
-        # NULL counts as "some other (legacy) batch".
-        all_vecs = self._read_vecs(spark)
-        keyed_new = batch.join(
-            all_vecs.filter(~F.col("batch_id").eqNullSafe(F.lit(bid))).select("vec_id"),
-            "vec_id",
-            "left_anti",
-        ).withColumn("bucket", hyperplane_signature(F.col("e"), planes))
-        old_vecs = all_vecs.filter(
-            ~F.col("batch_id").eqNullSafe(F.lit(bid))
-        ).select("vec_id", "e")
-        old_buckets = self._read_buckets(spark).join(
-            old_vecs.select("vec_id"), "vec_id", "left_semi"
-        )
-
-        # Multi-probe side: each new vector probes its own bucket + every
-        # 1-bit flip (hamming-0 matches via the own-bucket probe, hamming-1
-        # via the single differing flip — each candidate forms exactly once).
-        probes = keyed_new.select(
-            "vec_id",
-            "e",
-            F.explode(
-                F.array(
-                    F.col("bucket"),
-                    *[
-                        F.col("bucket").bitwiseXOR(F.lit(1 << p))
-                        for p in range(self.N_PLANES)
-                    ],
-                )
-            ).alias("probe"),
-        ).alias("a")
-
-        # new-vs-new: both sides probe, so a.vec_id < b.vec_id emits each
-        # pair once (dd05's rule). new-vs-old: only the new side probes,
-        # so every id ordering is accepted and the pair still forms once.
-        new_b = keyed_new.alias("b")
-        cand_new = probes.join(
-            new_b,
-            (F.col("a.probe") == F.col("b.bucket"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        old_b = old_buckets.join(old_vecs, "vec_id").alias("b")
-        cand_old = probes.join(old_b, F.col("a.probe") == F.col("b.bucket"))
-        cos = F.round(cosine(F.col("a.e"), F.col("b.e")), 4)
-
-        def pair(c: DataFrame) -> DataFrame:
-            return c.select(
-                F.least("a.vec_id", "b.vec_id").alias("vec_a"),
-                F.greatest("a.vec_id", "b.vec_id").alias("vec_b"),
-                cos.alias("cos_sim"),
-            )
-        return (
-            pair(cand_new)
-            .unionByName(pair(cand_old))
-            .filter(F.col("cos_sim") >= self.THRESHOLD)
-            # defensive canonicalization: bucket-row duplicates left by a
-            # crashed partial append must not duplicate a pair
-            .dropDuplicates(["vec_a", "vec_b"])
-        )
-
-    build = update
-
-
 _SIGS_SCHEMA = "media_id long, phash long, batch_id long"
 
 
 class PhashIndex:
     """Parquet-backed incremental near-dup index over a MEDIA table —
-    the perceptual-hash sibling of MinHashIndex, completing the
-    modality set (text shingles / embeddings / media signatures).
+    the perceptual-hash sibling of MinHashIndex (text shingles vs
+    media signatures).
 
     Signatures are computed exactly once per media_id ever (the pHash
     kernels decode payload bytes — by far the expensive step — so

@@ -1,76 +1,28 @@
-"""Training-data export: deterministic hash-sharded parquet writes.
+"""Training-data export order: deterministic mixture sampling.
 
-The last stage of a pretraining pipeline: a corpus (typically after
-dedup/filter/packing — see t08) is exported as S shards whose membership
-is a pure function of the key, so the same corpus always produces the
-same shard contents on any cluster size, any partition count, any run —
-the reproducibility contract training jobs rely on (and the same
-hash-determinism rule as cu01's sampling: no rand(), no
-zipWithIndex-style physical-order dependence).
+The last stage of a pretraining pipeline orders or samples a corpus
+(typically after dedup/filter/packing — see t08) by strata such as
+language. Every function here is a pure function of the keys, so the
+same corpus always yields the same order or sample on any cluster size,
+any partition count, any run — the reproducibility contract training
+jobs rely on (the same hash-determinism rule as cu01's sampling: no
+rand(), no zipWithIndex-style physical-order dependence).
 
-- shard id = pmod(xxhash64(key), n_shards) — uniform, stable;
-- one output dir per shard (hive partition layout shard=K/), each
-  written by a single task (repartition on the shard id), rows sorted
-  by key within files;
-- ``max_records_per_file`` bounds file sizes (Spark splits a task's
-  output at the limit), so downstream loaders get bounded units.
+- ``curriculum_interleave``: stride-scheduling interleave of strata by
+  mixture weight (cu10);
+- ``token_budget_sample``: per-stratum token-budget prefix selection;
+- ``epoch_repeat_sample``: token targets above a stratum's size,
+  met by whole-epoch repetition.
 
-At 100 TB: the export is one hash shuffle on the shard id + a sorted
-write; no driver involvement, no global sort.
+At 100 TB: within-stratum ranks and running token sums are computed
+over 256 md5-prefix salt buckets plus broadcast bucket offsets, so no
+dominant stratum lands in one window partition; no global sort.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-SHARD_COL = "shard"
-
-
-def shard_id(key: F.Column, n_shards: int) -> F.Column:
-    return F.pmod(F.xxhash64(key), F.lit(n_shards)).cast("int")
-
-
-def _write_shards(
-    df: DataFrame,
-    path: str,
-    key: str,
-    n_shards: int,
-    sort_cols: list[str],
-    max_records_per_file: int | None,
-) -> None:
-    """Shared shard-writer: deterministic hash shard id on ``key``, one
-    task per shard, rows sorted by ``sort_cols`` within files."""
-    sharded = df.withColumn(SHARD_COL, shard_id(F.col(key), n_shards))
-    writer = (
-        sharded.repartition(n_shards, SHARD_COL)
-        .sortWithinPartitions(SHARD_COL, *sort_cols)
-        .write.mode("overwrite")
-        # STATIC overwrite on purpose: the session default is dynamic
-        # (for the idempotent silver sink), under which a re-export with
-        # fewer shards — or an empty shard — would leave the previous
-        # export's extra shard dirs in place and a loader would read
-        # stale rows. A shard export is a full replace of the target.
-        .option("partitionOverwriteMode", "static")
-        .partitionBy(SHARD_COL)
-    )
-    if max_records_per_file is not None:
-        writer = writer.option("maxRecordsPerFile", max_records_per_file)
-    writer.parquet(path)
-
-
-def write_training_shards(
-    df: DataFrame,
-    path: str,
-    key: str = "doc_id",
-    n_shards: int = 8,
-    max_records_per_file: int | None = None,
-) -> None:
-    """Write ``df`` as ``n_shards`` deterministic hash shards under
-    ``path`` (dirs ``shard=0/`` .. ``shard=N-1/``), rows sorted by
-    ``key`` within files."""
-    _write_shards(df, path, key, n_shards, [key], max_records_per_file)
-
 
 NULL_STRATUM = "\x00<null-stratum>"
 
@@ -433,18 +385,3 @@ def epoch_repeat_sample(
         (global_before + F.col(token_col)).cast("long").alias("cum_tokens"),
     )
 
-
-def write_curriculum_shards(
-    vts: DataFrame,
-    path: str,
-    key: str = "doc_id",
-    n_shards: int = 8,
-    max_records_per_file: int | None = None,
-) -> None:
-    """Write a curriculum_interleave result as ``n_shards`` deterministic
-    xxhash64 hash shards with rows sorted by (vt, key) within each shard.
-    A training loader k-way-merging (or round-robin reading) the shard
-    streams replays the global curriculum order; the write itself is one
-    hash shuffle + a sorted write — no global sort, no driver
-    involvement, the same 100 TB shape as write_training_shards."""
-    _write_shards(vts, path, key, n_shards, ["vt", key], max_records_per_file)

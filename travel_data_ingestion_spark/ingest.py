@@ -175,11 +175,6 @@ def ingest_file(
     return wh.write_idempotent(spark, rows, "bronze", detail.target_table)
 
 
-def ingest_dataset(spark: SparkSession, wh: Warehouse, detail: FileDetail) -> list[int]:
-    """Ingest every new file of one dataset; returns the load_ids created."""
-    return ingest_all(spark, wh, {detail.target_table: detail})[detail.target_table]
-
-
 def ingest_all(spark: SparkSession, wh: Warehouse, config: dict[str, FileDetail]) -> dict[str, list[int]]:
     """Dynamic task-per-dataset loop (K-01, dynamic_ingestion_dag.py:18-26).
 

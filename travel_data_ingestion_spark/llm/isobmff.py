@@ -13,7 +13,7 @@ real iPhone files).
 What stays honestly gated: pixel/PCM decode. AV1 (AVIF), HEVC (HEIC),
 H.264/AAC (MP4/M4A) payloads need normative tables and reference
 decoders this environment cannot reproduce or verify from scratch —
-the same gate class as mp3 (llm/mp3.py docstring). The metadata here
+the same gate class as mp3 (``multimodal.decode_audio``). The metadata here
 is what a training-data pipeline filters on before spending decode:
 dimensions, duration, codec, track shape.
 
@@ -24,11 +24,6 @@ raise; box recursion is depth- and count-capped (box bombs).
 from __future__ import annotations
 
 import struct
-
-_CONTAINERS = frozenset(
-    (b"moov", b"trak", b"mdia", b"minf", b"stbl", b"edts", b"udta",
-     b"iprp", b"moof", b"traf")
-)
 
 
 def _boxes(data: bytes, start: int, end: int, depth: int = 0):
@@ -315,16 +310,3 @@ def probe_dims(payload: bytes):
                 return int(t["width"]), int(t["height"])
     return None
 
-
-def probe_mp4_audio(payload: bytes):
-    """(sample_rate, n_channels, duration_s) of the first audio track
-    (the M4A case), or None."""
-    mp4 = probe_mp4(payload)
-    if mp4 is None:
-        return None
-    duration, tracks = mp4
-    for t in tracks:
-        if t["kind"] == "audio":
-            return (t["sample_rate"], t["n_channels"],
-                    t["duration_s"] if t["duration_s"] is not None else duration)
-    return None

@@ -2,8 +2,8 @@
 
 Model: media (image/audio/video) travels as an opaque ``binary`` column
 with a typed metadata struct alongside; decode / feature-extraction /
-resize / frame-sampling run as Arrow-batched ``mapInPandas`` operators so
-Python touches whole columnar batches, never rows.
+hashing / frame-sampling run as Arrow-batched ``mapInPandas`` operators
+so Python touches whole columnar batches, never rows.
 
 Media decode REALLY decodes: binary PPM (P6) payloads are parsed
 (decode_ppm) for true dimensions and pixels, the FULL legal PNG matrix
@@ -20,11 +20,8 @@ integer PCM / IEEE float / G.711 mu-law+a-law / extensible, AIFF/AIFC,
 Sun AU, native FLAC, and Ogg — Ogg-FLAC decodes completely through
 the RFC 3533 demux in llm/ogg.py, Ogg-Vorbis decodes completely via
 llm/vorbis.py (in-band codebooks, floor1, residue 0-2, coupling,
-IMDCT); mp3 and Ogg-Opus yield header-true metadata via llm/mp3.py's
-frame walk / the Ogg granule clock with PCM
-honestly gated — feeding extract_audio_features and a
-container-invariant audio pHash). resize_images nearest-resamples decodable payloads
-and re-encodes in the source container. Formats that genuinely need a
+IMDCT); mp3 and Ogg-Opus PCM stay honestly gated — feeding a
+container-invariant audio pHash). Formats that genuinely need a
 codec absent from this environment (mp3/opus PCM, INTER-frame video
 coding — key frames of VP8 WebM / animated WebP decode for real via
 decode_webm/decode_webp_anim on llm/vp8.py, and MJPEG/DIB AVI and
@@ -35,7 +32,7 @@ JPEG via llm/jpeg.decode_jpeg, ...)
 fall back to the documented
 md5-derived stub
 (digest-derived dimensions, md5-prefix
-signatures) or NULL typed audio fields, which keeps every downstream
+signatures), which keeps every downstream
 operator testable on opaque bytes. The Spark-side plumbing — schema,
 batch shape, partitioning, UDF signature — is identical on both paths
 (tests/test_multimodal.py, tests/test_png.py).
@@ -58,24 +55,6 @@ from pyspark.sql import types as T
 
 from travel_data_ingestion_spark.llm.jpeg import decode_jpeg
 
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("media_type", T.StringType()),  # image | audio | video
-        T.StructField("payload", T.BinaryType()),
-        T.StructField(
-            "meta",
-            T.StructType(
-                [
-                    T.StructField("source", T.StringType()),
-                    T.StructField("n_bytes", T.LongType()),
-                    T.StructField("mime", T.StringType()),
-                ]
-            ),
-        ),
-    ]
-)
-
 FEATURE_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType()),
@@ -85,60 +64,6 @@ FEATURE_SCHEMA = T.StructType(
         T.StructField("height", T.IntegerType()),
     ]
 )
-
-
-# extension -> mime for media landing files; anything unknown stays the
-# opaque default so downstream format filters can still route it
-MIME_BY_EXT = {
-    "jpg": "image/jpeg",
-    "jpeg": "image/jpeg",
-    "png": "image/png",
-    "gif": "image/gif",
-    "bmp": "image/bmp",
-    "tif": "image/tiff",
-    "tiff": "image/tiff",
-    "ppm": "image/x-portable-pixmap",
-    "pgm": "image/x-portable-graymap",
-    "pbm": "image/x-portable-bitmap",
-    "pnm": "image/x-portable-anymap",
-    "webp": "image/webp",
-    "wav": "audio/wav",
-    "mp3": "audio/mpeg",
-    "flac": "audio/flac",
-    "ogg": "audio/ogg",
-    "oga": "audio/ogg",
-    "opus": "audio/opus",
-    "aif": "audio/aiff",
-    "aiff": "audio/aiff",
-    "au": "audio/basic",
-    "m4a": "audio/mp4",
-    "avif": "image/avif",
-    "heic": "image/heic",
-    "heif": "image/heif",
-    "avi": "video/x-msvideo",
-    "mp4": "video/mp4",
-    "m4v": "video/mp4",
-    "mov": "video/quicktime",
-    "webm": "video/webm",
-    "mkv": "video/x-matroska",
-    "y4m": "video/x-yuv4mpeg",
-}
-
-
-def mime_from_path(path_col):
-    """Column expression: mime type derived from a file path's extension
-    (lowercased), ``application/octet-stream`` when unknown — JVM-side
-    (a literal map lookup), so no Python UDF runs per row."""
-    ext = F.lower(F.regexp_extract(path_col, r"\.([A-Za-z0-9]+)$", 1))
-    pairs: list = []
-    for k, v in MIME_BY_EXT.items():
-        pairs.extend([F.lit(k), F.lit(v)])
-    # try_element_at: a missing key is NULL under ANSI too (element_at
-    # would raise there — NOTES determinism rule 6)
-    return F.coalesce(
-        F.try_element_at(F.create_map(*pairs), ext),
-        F.lit("application/octet-stream"),
-    )
 
 
 def _dims_from_digest(digest: bytes) -> tuple[int, int]:
@@ -391,9 +316,8 @@ def decode_png(payload: bytes) -> tuple[int, int, bytes] | None:
 
 def encode_png(width: int, height: int, rgb: bytes) -> bytes:
     """Minimal RGB PNG writer (8-bit truecolor, filter 0, stdlib zlib):
-    the inverse of decode_png's happy path, used by resize_images to
-    keep a resized PNG in its source container and by tests to build
-    real compressed fixtures without a codec library."""
+    the inverse of decode_png's happy path, used to plant real
+    compressed fixtures without a codec library."""
     import struct
     import zlib
 
@@ -1672,8 +1596,7 @@ _DCT32 = None
 
 def _nearest_grid(n_out: int, n_in: int):
     """Nearest-neighbor source indices for resampling n_in samples onto
-    an n_out grid — the ONE resample rule shared by phash_bytes and
-    resize_images, so a resized image pHashes like its original."""
+    an n_out grid (phash_bytes' 32x32 resample, Y4M chroma upsampling)."""
     import numpy as np
 
     return (np.arange(n_out) * n_in) // n_out
@@ -1850,89 +1773,6 @@ def phash_signatures(media: DataFrame) -> DataFrame:
     return cols.mapInPandas(batches, schema="media_id long, phash long")
 
 
-RESIZE_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("payload", T.BinaryType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("resized", T.BooleanType()),
-    ]
-)
-
-
-def resize_images(media: DataFrame, width: int, height: int) -> DataFrame:
-    """Arrow-batched image resize over the binary column: decodable
-    payloads (via decode_image) are nearest-neighbor
-    resampled to (width, height) — the SAME _nearest_grid rule the
-    pHash uses, so a resize then pHash equals pHashing the resample
-    directly — and re-encoded in their SOURCE container (PPM stays PPM,
-    PNG stays PNG: a resize must not silently change what downstream
-    format filters see). Palette containers (GIF), lossy containers
-    (JPEG, lossy-VP8 WebP), and containers whose encoder the package
-    deliberately lacks (WebP-lossless) re-encode as LOSSLESS PNG:
-    writing a palette back would force color quantization and
-    re-encoding a lossy stream would lose pixels a second time —
-    re-encoding losslessly is the honest move. Undecodable payloads pass through byte-for-byte
-    with resized=false and NULL dimensions — a training-data pipeline
-    drops or routes them, it never fabricates pixels.
-
-    100 TB shape: map-only like the feature extractors — payload bytes
-    cross the Arrow boundary once per batch and the (smaller) resized
-    payload returns; no shuffle, no driver involvement. Typical use is
-    normalizing a crawl's image sizes before batch featurization."""
-    import numpy as np
-
-    if width <= 0 or height <= 0:
-        raise ValueError("resize target dimensions must be positive")
-    cols = media.select("media_id", "payload")
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out_payload: list[bytes] = []
-            out_w: list[int | None] = []
-            out_h: list[int | None] = []
-            out_flag: list[bool] = []
-            for p in pdf["payload"]:
-                b = bytes(p)
-                dec = decode_image(b)
-                if dec is None:
-                    out_payload.append(b)
-                    out_w.append(None)
-                    out_h.append(None)
-                    out_flag.append(False)
-                    continue
-                w0, h0, px = dec
-                arr = np.frombuffer(px, dtype=np.uint8).reshape(h0, w0, 3)
-                res = np.ascontiguousarray(
-                    arr[np.ix_(_nearest_grid(height, h0), _nearest_grid(width, w0))]
-                )
-                if (
-                    b.startswith(PNG_SIGNATURE)
-                    or b[:6] in (b"GIF87a", b"GIF89a")
-                    or b[:2] == b"\xff\xd8"
-                    or (b[:4] == b"RIFF" and b[8:12] == b"WEBP")
-                ):
-                    enc = encode_png(width, height, res.tobytes())
-                else:
-                    enc = b"P6\n%d %d\n255\n" % (width, height) + res.tobytes()
-                out_payload.append(enc)
-                out_w.append(width)
-                out_h.append(height)
-                out_flag.append(True)
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "payload": out_payload,
-                    "width": pd.array(out_w, dtype="Int32"),
-                    "height": pd.array(out_h, dtype="Int32"),
-                    "resized": out_flag,
-                }
-            )
-
-    return cols.mapInPandas(batches, schema=RESIZE_SCHEMA)
-
-
 _IMA_INDEX_ADJUST = [-1, -1, -1, -1, 2, 4, 6, 8]
 
 _IMA_STEPS = [
@@ -2068,8 +1908,7 @@ def _ms_adpcm(data: bytes, n_ch: int, block_align: int):
 
 
 def _wav_chunks(payload: bytes):
-    """RIFF/WAVE chunk walk shared by decode_wav (legacy narrow API)
-    and decode_audio (full matrix): returns (rate, n_channels,
+    """RIFF/WAVE chunk walk for decode_audio: returns (rate, n_channels,
     format_tag, bits, data_bytes, block_align) or None.
     WAVE_FORMAT_EXTENSIBLE (0xFFFE) resolves to the SubFormat GUID's
     leading tag; block_align is what the ADPCM block walk needs."""
@@ -2094,21 +1933,6 @@ def _wav_chunks(payload: bytes):
     if fmt is None or data is None:
         return None
     return fmt[0], fmt[1], fmt[2], fmt[3], data, fmt[4]
-
-
-def decode_wav(payload: bytes) -> tuple[int, int, int, bytes] | None:
-    """Parse an uncompressed RIFF/WAVE payload (integer PCM, 8/16-bit):
-    returns (sample_rate, n_channels, bits_per_sample, data_bytes) or
-    None for anything else. This is the narrow legacy API some callers
-    still bind; decode_audio is the full-matrix decoder (24/32-bit,
-    float, mu-law/a-law, extensible, plus AIFF and AU containers)."""
-    got = _wav_chunks(payload)
-    if got is None:
-        return None
-    rate, n_ch, tag, bits, data, _ba = got
-    if tag != 1 or bits not in (8, 16):
-        return None
-    return rate, n_ch, bits, data
 
 
 def _ulaw_table():
@@ -2204,9 +2028,10 @@ def decode_audio(payload: bytes):
     type and channel assignment, bit-exact), and Ogg (llm/ogg.py:
     Ogg-FLAC re-framed to native and decoded bit-exactly; Vorbis via
     llm/vorbis.py when present). mp3 and Ogg-Opus PCM need normative
-    tables this environment cannot reproduce or verify (llm/mp3.py
-    module docstring records the specifics) and return None — the
-    documented stub path."""
+    tables this environment cannot reproduce or verify (mp3 Layer III:
+    the ISO/IEC 11172-3 Annex B Huffman tables and synthesis window,
+    which have no generating formula and no system library to check
+    against) and return None — the documented stub path."""
     import struct
 
     import numpy as np
@@ -2328,111 +2153,6 @@ def decode_audio(payload: bytes):
         return rate, n_ch, x[: n_frames * n_ch].reshape(n_frames, n_ch)
     except (struct.error, ValueError, IndexError, OverflowError):
         return None
-
-
-def _probe_audio_meta(payload: bytes):
-    """(sample_rate, n_channels, duration_s) from container headers of
-    codecs whose PCM is gated here (mp3 frame walk; Ogg Opus/Speex/
-    Theora granule clock), or None. Never raises."""
-    if len(payload) >= 4 and (
-        payload[:3] == b"ID3"
-        or (payload[0] == 0xFF and (payload[1] & 0xE0) == 0xE0)
-    ):
-        from travel_data_ingestion_spark.llm.mp3 import probe_mp3
-
-        got = probe_mp3(payload)
-        if got is not None:
-            _layer, rate, n_ch, _frames, dur, _kbps, _vbr = got
-            return rate, n_ch, dur
-        return None
-    if payload[:4] == b"OggS":
-        from travel_data_ingestion_spark.llm.ogg import probe_ogg
-
-        got = probe_ogg(payload)
-        if got is not None:
-            _codec, rate, n_ch, dur = got
-            return rate, n_ch, dur
-        return None
-    if len(payload) >= 16 and payload[4:8] == b"ftyp":
-        from travel_data_ingestion_spark.llm.isobmff import probe_mp4_audio
-
-        return probe_mp4_audio(payload)  # the M4A / MP4-audio case
-    return None
-
-
-AUDIO_FEATURE_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("n_bytes", T.LongType()),
-        T.StructField("digest", T.StringType()),
-        T.StructField("sample_rate", T.IntegerType()),
-        T.StructField("n_channels", T.IntegerType()),
-        T.StructField("n_samples", T.LongType()),
-        T.StructField("duration_s", T.DoubleType()),
-        T.StructField("rms", T.DoubleType()),
-    ]
-)
-
-
-def extract_audio_features(media: DataFrame) -> DataFrame:
-    """Arrow-batched audio feature extraction: REAL container parse
-    (decode_audio — WAV incl. float/mu-law/a-law/extensible, AIFF/AIFC,
-    Sun AU) for sample rate / channel count / duration and an RMS
-    energy over the decoded samples; undecodable payloads yield NULL
-    typed fields (digest/byte count still computed) so mixed media
-    tables keep one schema. Same 100 TB shape as extract_features:
-    map-only, payload bytes cross to Python once, only small feature
-    rows return."""
-    import numpy as np
-
-    cols = media.select("media_id", "payload")
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {
-                "media_id": [], "n_bytes": [], "digest": [], "sample_rate": [],
-                "n_channels": [], "n_samples": [], "duration_s": [], "rms": [],
-            }
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                b = bytes(p)
-                out["media_id"].append(mid)
-                out["n_bytes"].append(len(b))
-                out["digest"].append(hashlib.md5(b).hexdigest())
-                dec = decode_audio(b)
-                if dec is None:
-                    # header-derived metadata for gated-PCM codecs:
-                    # mp3 frame walk / Ogg granule clock fill
-                    # rate/channels/duration; n_samples and rms stay
-                    # NULL — they would need the decode we refuse to
-                    # fake (llm/mp3.py module docstring)
-                    meta = _probe_audio_meta(b)
-                    if meta is None:
-                        meta = (None, None, None)
-                    rate, n_ch, dur = meta
-                    out["sample_rate"].append(rate)
-                    out["n_channels"].append(n_ch)
-                    out["n_samples"].append(None)
-                    out["duration_s"].append(
-                        round(dur, 6) if dur is not None else None
-                    )
-                    out["rms"].append(None)
-                    continue
-                rate, n_ch, frames = dec
-                n_samples = frames.shape[0]
-                out["sample_rate"].append(rate)
-                out["n_channels"].append(n_ch)
-                out["n_samples"].append(n_samples)
-                out["duration_s"].append(
-                    round(n_samples / rate, 6) if rate else None
-                )
-                out["rms"].append(
-                    round(float(np.sqrt((frames ** 2).mean())), 6)
-                    if frames.size
-                    else 0.0
-                )
-            yield pd.DataFrame(out)
-
-    return cols.mapInPandas(batches, schema=AUDIO_FEATURE_SCHEMA)
 
 
 def audio_phash_bytes(payload: bytes) -> int:

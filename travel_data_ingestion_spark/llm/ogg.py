@@ -15,19 +15,14 @@ Payload codecs:
 - **Vorbis decodes completely** via :mod:`.vorbis` (floor1 / residue
   0-2 / coupling / IMDCT — every table arrives in-band in the setup
   header, see that module's honesty notes on float tolerance).
-- **Opus** is identified (OpusHead: channels, pre-skip, input rate)
-  and measured (granulepos runs at 48 kHz regardless of input rate)
-  but its PCM is gated: SILK/CELT need normative tables this
-  environment cannot reproduce or verify (no system libopus).
-
-``probe_ogg`` exposes the metadata a crawl pipeline filters on without
-decoding: codec, sample rate, channel count, duration from the last
-page's granule position.
+- **Opus** is identified (OpusHead) but its PCM is gated: SILK/CELT
+  need normative tables this environment cannot reproduce or verify
+  (no system libopus).
 
 Scope parity: the reference pipeline ingests opaque media blobs and
 filters on typed metadata (see ``multimodal.py`` module docstring);
 this module extends the honestly-decodable audio matrix that feeds
-``decode_audio`` / ``extract_audio_features`` / the audio pHash.
+``decode_audio`` and the audio pHash.
 """
 
 from __future__ import annotations
@@ -146,54 +141,6 @@ def _identify(first_packet: bytes) -> str:
     if first_packet[:8] == b"Speex   ":
         return "speex"
     return "unknown"
-
-
-def _stream_meta(codec: str, first: bytes):
-    """(sample_rate, n_channels, granule_rate, pre_skip) from a BOS
-    packet; granule_rate is the clock granulepos ticks at (Opus pins
-    it to 48 kHz independent of the input rate)."""
-    if codec == "flac" and len(first) >= 51:
-        # 9B mapping hdr + 4B 'fLaC' + 4B block hdr + 10B into the
-        # STREAMINFO body (2+2 blocksizes, 3+3 framesizes) = rate at 27
-        b = first[27:]
-        rate = (b[0] << 12) | (b[1] << 4) | (b[2] >> 4)
-        n_ch = ((b[2] >> 1) & 0x07) + 1
-        return rate, n_ch, rate, 0
-    if codec == "vorbis" and len(first) >= 16:
-        n_ch = first[11]
-        rate = int.from_bytes(first[12:16], "little")
-        return rate, n_ch, rate, 0
-    if codec == "opus" and len(first) >= 19:
-        n_ch = first[9]
-        pre_skip = int.from_bytes(first[10:12], "little")
-        rate = int.from_bytes(first[12:16], "little") or 48000
-        return rate, n_ch, 48000, pre_skip
-    return None, None, None, 0
-
-
-def probe_ogg(payload: bytes):
-    """Metadata without decode: ``(codec, sample_rate, n_channels,
-    duration_s)`` for the first recognized audio stream, or None.
-    Duration comes from the stream's final granule position (PCM
-    sample clock for FLAC/Vorbis; 48 kHz minus pre-skip for Opus)."""
-    try:
-        if payload[:4] != b"OggS":
-            return None
-        streams = demux(payload, max_bytes=1 << 26)
-        for _serial, (pkts, _g0, g1) in streams.items():
-            if not pkts:
-                continue
-            codec = _identify(pkts[0])
-            if codec == "unknown":
-                continue
-            rate, n_ch, granule_rate, pre_skip = _stream_meta(codec, pkts[0])
-            dur = None
-            if g1 is not None and granule_rate:
-                dur = max(g1 - pre_skip, 0) / float(granule_rate)
-            return codec, rate, n_ch, dur
-        return None
-    except (ValueError, IndexError, OverflowError):
-        return None
 
 
 def _flac_audio_packets(pkts):

@@ -18,8 +18,6 @@ from __future__ import annotations
 
 import ctypes
 
-ZSTD_MAGIC = b"\x28\xb5\x2f\xfd"
-
 _CHUNK = 1 << 18
 
 

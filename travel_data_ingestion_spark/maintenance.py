@@ -1,4 +1,5 @@
-"""Table maintenance: small-file compaction.
+"""Table maintenance: small-file compaction, plus the Z-order curve
+value (``zorder_value``) that zo01's data-skipping contract grades.
 
 Incremental load_id-partitioned writes accumulate one-file-per-batch
 fragments; at 100 TB the resulting small-file storm dominates scan time
@@ -99,7 +100,8 @@ def zorder_value(cols, bits: int = 16, boundaries=None):
     expressions — codegen'd, no UDF, no shuffle of its own.
 
     ``boundaries`` is {col: sorted list of 2**bits - 1 cut points}
-    (from ``approxQuantile``); required — computed by ``zorder_layout``.
+    (quantiles from ``approxQuantile``, or exact equal-width cuts as
+    zo01 uses); required.
 
     ``bits * len(cols)`` must fit in 63 bits: plane 63 is the LONG sign
     bit, and an interleaved value reaching it flips negative — rows in
@@ -132,30 +134,3 @@ def zorder_value(cols, bits: int = 16, boundaries=None):
             z = z + F.shiftleft(bit, i * len(ranks) + j)
     return z
 
-
-def zorder_layout(df, cols, bits: int = 8, num_files: int | None = None):
-    """Re-layout ``df`` along a Z-order curve over ``cols`` for
-    multi-column data skipping: after writing, each file's min/max
-    footer stats cover a small hyper-rectangle in (cols) space, so
-    point/range predicates on ANY of the columns prune most files —
-    unlike a single-column sort, which only skips on its leading column.
-
-    Returns the re-partitioned, sorted DataFrame (caller writes it).
-    repartitionByRange on the z-value is the only shuffle; within-
-    partition sort is spill-safe.
-    """
-    from pyspark.sql import functions as F
-
-    n_cuts = (1 << bits) - 1
-    qs = [i / (n_cuts + 1) for i in range(1, n_cuts + 1)]
-    boundaries = {
-        c: df.approxQuantile(c, qs, 0.001) for c in cols
-    }
-    z = zorder_value(cols, bits=bits, boundaries=boundaries)
-    out = df.withColumn("__z", z)
-    n = num_files or out.rdd.getNumPartitions()
-    return (
-        out.repartitionByRange(n, "__z")
-        .sortWithinPartitions("__z")
-        .drop("__z")
-    )

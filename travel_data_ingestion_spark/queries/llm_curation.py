@@ -860,11 +860,9 @@ def _curriculum_oracle() -> str:
     "sorting by virtual time interleaves languages proportionally to "
     "their weights at every point of the training order. The graded "
     "head is top-k by (vt, lang, doc_id): TakeOrderedAndProject, never "
-    "a global sort; the full-corpus export path is "
-    "export.write_curriculum_shards (xxhash64 shards sorted by vt "
-    "within files, loader k-way-merges — tests/test_export.py). The "
-    "within-stratum rank is computed scale-safely via 256 md5-prefix "
-    "salt buckets + broadcast offsets, not one giant per-language "
+    "a global sort. The within-stratum rank is computed scale-safely "
+    "via 256 md5-prefix salt buckets + broadcast offsets, not one "
+    "giant per-language "
     "window. vt's arithmetic is IEEE-identical in DuckDB (DECIMAL "
     "weight-sum accumulation; sqrt/mul/div correctly rounded), so the "
     "oracle hash-compares the full ordering.",

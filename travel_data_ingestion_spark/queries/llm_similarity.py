@@ -107,9 +107,7 @@ def _lsh_planes(n_planes: int = 8, dim: int = 64) -> list[list[float]]:
 
 def hyperplane_signature(e: Column, planes: list[list[float]]) -> Column:
     """n-bit sign signature of a vector against literal hyperplanes —
-    shared by sim02/dd05 and the incremental EmbeddingIndex (the bucket
-    key must be the same pure function everywhere so persisted buckets
-    stay joinable with freshly-computed ones)."""
+    shared by sim02 and dd05, so both bucket a vector the same way."""
     sig = None
     for p, plane in enumerate(planes):
         bit = F.when(dot(e, F.array(*[F.lit(c) for c in plane])) >= 0, 1).otherwise(0)

@@ -678,19 +678,19 @@ def _zorder_oracle() -> str:
     survey_ops=("X-LAYOUT-1",),
     doc="Z-order layout skip-ratio CONTRACT, deterministically graded: "
     "events rows get 4-bit equal-width bucket ranks per column "
-    "(user_id, value) through the SAME maintenance.zorder_value bit "
-    "interleave the production zorder_layout uses, files are the 16 "
+    "(user_id, value) through the maintenance.zorder_value bit "
+    "interleave, files are the 16 "
     "equal z-ranges (zfile = z >> 4, i.e. the top two bucket bits of "
     "EACH column — a 4x4 grid of min/max rectangles), and two 5%-of-"
     "range band predicates are tested against every file's min/max "
     "stats. The output pins the layout tradeoff the SCALE.md data-"
     "skipping story claims: the z-order layout skips ~75% of files on "
     "EITHER column's predicate, while the single-column sort layout "
-    "skips more on its own column but ZERO on the other. Production "
-    "writes use zorder_layout (approxQuantile boundaries + "
-    "repartitionByRange — sampled, not grading-deterministic); this "
-    "graded twin swaps in exact equal-width boundaries and value-"
-    "bucket file assignment so both engines derive identical files. "
+    "skips more on its own column but ZERO on the other. A physical "
+    "layout would take approxQuantile boundaries and repartitionByRange "
+    "on the z-value (sampled, not grading-deterministic); this graded "
+    "member uses exact equal-width boundaries and value-bucket file "
+    "assignment so both engines derive identical files. "
     "No window, no collect on data rows: one min/max agg (driver "
     "scalars, the d13 pattern), one map pass, one groupBy.",
 )

@@ -89,7 +89,6 @@ def _epoch_load_id(
     checkpoint: str,
     epoch_id: int,
     target_table: str,
-    floor: int | None = None,
 ) -> int:
     """Return the load_id for this (checkpoint, epoch), exactly-once and
     collision-free against interleaved batch ingests.
@@ -97,8 +96,8 @@ def _epoch_load_id(
     A per-epoch marker (``<checkpoint>/_load_id_map/epoch-<n>``) records
     each epoch's id the first time it runs; a REPLAYED epoch reads it
     back and rewrites its original bronze partition. A NEW epoch
-    allocates the ledger's MAX(load_id)+1 (or the caller's ``floor`` if
-    higher), appends a RUNNING reservation row to the ledger, and THEN
+    allocates the ledger's MAX(load_id)+1, appends a RUNNING
+    reservation row to the ledger, and THEN
     writes the marker: the reservation makes the id visible to any
     batch allocation before this epoch writes data under it, so a batch
     ingest interleaved between stream runs can never take an id a later
@@ -121,8 +120,6 @@ def _epoch_load_id(
     if recorded is not None:
         return recorded
     lid = ledger.snapshot(spark, wh, "ingestion_logs").next_id
-    if floor is not None:
-        lid = max(lid, int(floor))
     # reservation; collapsed by the SUCCESS row's recency
     ledger.append(spark, wh, "ingestion_logs",
                   [(lid, None, f"stream:{target_table}", target_table, "RUNNING", None, None)])
@@ -137,13 +134,13 @@ def stream_ingest_csv(
     target_table: str,
     pattern: str = "*.csv",
     checkpoint_dir: str | None = None,
-    load_id: int | None = None,
 ) -> None:
     """Stream-ingest CSV files into bronze.<target_table> and wait for
-    completion (AvailableNow drains then stops). ``load_id`` is an
-    optional allocation FLOOR for newly-allocated epochs; replayed
-    epochs always reuse the id recorded in the checkpoint's per-epoch
-    map so they rewrite their original bronze partitions."""
+    completion (AvailableNow drains then stops). A new epoch takes the
+    ledger's next load_id; a replayed epoch reuses the id recorded in
+    the checkpoint's per-epoch map, so it rewrites its original bronze
+    partition. ``checkpoint_dir`` defaults to
+    ``<warehouse>/_checkpoints/<target_table>``."""
     checkpoint = checkpoint_dir or os.path.join(wh.root, "_checkpoints", target_table)
     # the batch ingest's CSV scan, so a file produces identical bronze
     # rows whichever path ingested it
@@ -159,7 +156,7 @@ def stream_ingest_csv(
             # a file-less epoch lands nothing: allocating would leak one
             # reserved load_id + ledger rows per empty restart
             return
-        eid = _epoch_load_id(s, wh, checkpoint, epoch_id, target_table, floor=load_id)
+        eid = _epoch_load_id(s, wh, checkpoint, epoch_id, target_table)
         out = with_lineage(df, F.element_at(F.split(F.input_file_name(), "/"), -1), eid)
         # dynamic partition overwrite on load_id: an epoch replayed
         # after a crash rewrites exactly its own partition — no dupes
