@@ -22,7 +22,7 @@ from travel_data_ingestion_spark.ingest import (
 
 def _ingestion_rows(spark, wh):
     """The ingestion ledger's latest row per load_id."""
-    return ledger.snapshot(spark, wh, "ingestion_logs", latest_only=True).rows
+    return ledger.snapshot(wh, "ingestion_logs", latest_only=True).rows
 
 
 def test_glob_to_regex_matches_reference_conversion():
@@ -133,7 +133,8 @@ def test_row_id_overflow_raises(spark):
 def test_load_id_boundary_logs_failure_past_32767(spark, tmp_path):
     """The last load_id the row_id bit field holds is 32,767: a file given
     that id lands; the next file (32,768) logs FAILURE with the overflow
-    message instead of raising out of the run or colliding."""
+    message instead of raising out of the run or colliding. A re-run
+    retries the failed file under its own load_id: no new id is taken."""
     from travel_data_ingestion_spark.silver.runner import bronze_load_ids
 
     landing = tmp_path / "landing"
@@ -143,9 +144,9 @@ def test_load_id_boundary_logs_failure_past_32767(spark, tmp_path):
         (landing / name).write_text(header + "JP,2026-02-01,m1,Food,10.5,ok\n")
     wh = Warehouse(str(tmp_path / "wh"))
     wh.init()
-    ledger.append(spark, wh, "ingestion_logs", [
+    ledger.append(wh, "ingestion_logs", [
         (32766, 1, "transactions_old.csv", "transactions", "SUCCESS", 1, None)])
-    assert ledger.snapshot(spark, wh, "ingestion_logs").next_id == 32767
+    assert ledger.snapshot(wh, "ingestion_logs").next_id == 32767
 
     detail = FileDetail(1, str(landing), "transactions*.csv", "bronze", "transactions", "csv")
     assert ingest_all(spark, wh, {"transactions": detail}) == {"transactions": [32767]}
@@ -156,6 +157,11 @@ def test_load_id_boundary_logs_failure_past_32767(spark, tmp_path):
     assert (failed.load_id, failed.status) == (32768, "FAILURE")
     assert "row_id bit-field overflow" in failed.error_message
     assert bronze_load_ids(spark, wh, "transactions") == [32767]
+
+    assert ingest_all(spark, wh, {"transactions": detail}) == {"transactions": []}
+    retried = {r.file_name: r for r in _ingestion_rows(spark, wh)}["transactions_b.csv"]
+    assert (retried.load_id, retried.status) == (32768, "FAILURE")
+    assert ledger.snapshot(wh, "ingestion_logs").next_id == 32769
 
 
 def _root_parts(p):
@@ -359,10 +365,10 @@ def _crash_on_terminal_append(monkeypatch, status_col):
     returns the real append."""
     real = ledger.append
 
-    def append(spark, wh, table, rows):
+    def append(wh, table, rows):
         if any(r[status_col] != "RUNNING" for r in rows):
             raise Crash
-        real(spark, wh, table, rows)
+        real(wh, table, rows)
 
     monkeypatch.setattr(ledger, "append", append)
     return real
@@ -445,7 +451,7 @@ def test_allocations_stay_above_reserved_ids(spark, tmp_path, monkeypatch, slice
 
     # a batch reservation that never completed still bounds the stream
     landed = max(r.load_id for r in _ingestion_rows(spark, wh))
-    real(spark, wh, "ingestion_logs",
+    real(wh, "ingestion_logs",
          [(landed + 5, 1, "late.csv", "transactions", "RUNNING", None, None)])
     ckpt = str(tmp_path / "ckpt")
     assert _epoch_load_id(spark, wh, ckpt, 0, "transactions") == landed + 6
@@ -480,6 +486,70 @@ def test_ledger_tie_prefers_terminal_status(spark, tmp_path):
     assert ingest_all(spark, wh, {"transactions": detail}) == {"transactions": []}  # both done
 
 
+def test_mixed_spark_and_driver_ledger_files(spark, tmp_path):
+    """Ledger files written by Spark (INT96 event_time) and by the driver
+    (pyarrow, UTC microseconds) read as one ledger: ``snapshot`` gives the
+    rows and next_id an all-Spark ledger of the same rows gives, with an
+    event_time tie between a Spark RUNNING row and a driver SUCCESS row
+    going to SUCCESS; and Spark reads the driver's files with the
+    registered schema."""
+    from datetime import timedelta
+
+    from travel_data_ingestion_spark.catalog import ADMIN_SCHEMAS
+
+    def spark_append(wh, table, rows):
+        df = spark.createDataFrame(rows, ADMIN_SCHEMAS[table]).coalesce(1)
+        wh.append(spark, df, "admin", table)
+
+    def naive(rows):
+        """Rows as tuples, timestamps as the naive local times Spark's
+        collect gives."""
+        return sorted(
+            tuple(v.astimezone().replace(tzinfo=None) if hasattr(v, "tzinfo") else v for v in r)
+            for r in rows
+        )
+
+    mixed = Warehouse(str(tmp_path / "mixed"))
+    mixed.init()
+    ledger.append(mixed, "ingestion_logs", [
+        (1, 1, "a.csv", "transactions", "SUCCESS", 3, None),
+        (4, 1, "d.csv", "transactions", "RUNNING", None, None),
+    ])
+    driver_rows = [tuple(r) for r in ledger.read(mixed, "ingestion_logs")]
+    t = driver_rows[0][-1]
+    earlier = t - timedelta(seconds=1)
+    spark_rows = [
+        (1, 1, "a.csv", "transactions", "RUNNING", None, None, t),
+        (2, 1, "b.csv", "transactions", "RUNNING", None, None, earlier),
+        (2, 1, "b.csv", "transactions", "SUCCESS", 7, None, t),
+        (3, 1, "c.csv", "transactions", "FAILURE", None, "boom", earlier),
+        (5, 1, "e.csv", "transactions", "RUNNING", None, None, earlier),
+    ]
+    spark_append(mixed, "ingestion_logs", spark_rows)
+    spark_only = Warehouse(str(tmp_path / "spark_only"))
+    spark_only.init()
+    spark_append(spark_only, "ingestion_logs", driver_rows + spark_rows)
+
+    for latest_only in (False, True):
+        got = ledger.snapshot(mixed, "ingestion_logs", latest_only)
+        want = ledger.snapshot(spark_only, "ingestion_logs", latest_only)
+        assert naive(got.rows) == naive(want.rows)
+        assert got.next_id == want.next_id == 6
+    latest = ledger.snapshot(mixed, "ingestion_logs", latest_only=True).rows
+    assert {r.load_id: r.status for r in latest} == {
+        1: "SUCCESS", 2: "SUCCESS", 3: "FAILURE", 4: "RUNNING", 5: "RUNNING"}
+
+    # Spark reads the mixed table and a driver-only table, and infers the
+    # registered schema from the driver's files
+    assert naive(mixed.read(spark, "admin", "ingestion_logs").collect()) == naive(
+        driver_rows + spark_rows)
+    ledger.append(mixed, "transformation_logs", [(1, "transactions", 1, "SUCCESS", 2, None)])
+    back = mixed.read(spark, "admin", "transformation_logs")
+    assert naive(back.collect()) == naive(ledger.read(mixed, "transformation_logs"))
+    path = mixed.path("admin", "transformation_logs")
+    assert spark.read.parquet(path).schema == ADMIN_SCHEMAS["transformation_logs"]
+
+
 def _count_jobs(spark, group, fn):
     sc = spark.sparkContext
     sc.setJobGroup(group, group)
@@ -502,11 +572,11 @@ def _data_files(root):
 
 
 def test_ledger_jobs_are_fixed_per_run(spark, tmp_path, slice_landing):
-    """A first ingest_all costs at most 4 Spark jobs per landing file, and
-    a no-op re-run of ingest_all + run_silver reads each ledger once
-    (2 jobs) and writes nothing. Silver's rows_written is the batch
-    total: every silver row of the dataset's output tables carrying the
-    batch's load_ids."""
+    """A first ingest_all costs at most 1 Spark job per landing file (its
+    bronze write; the ledger is read and written on the driver), and a
+    no-op re-run of ingest_all + run_silver runs no Spark job and writes
+    nothing. Silver's rows_written is the batch total: every silver row
+    of the dataset's output tables carrying the batch's load_ids."""
     from travel_data_ingestion_spark.silver import run_silver
     from travel_data_ingestion_spark.silver.runner import SILVER_TRANSFORMS
 
@@ -514,13 +584,13 @@ def test_ledger_jobs_are_fixed_per_run(spark, tmp_path, slice_landing):
     n_files = sum(len(list_stage_files(d.source_path, d.file_pattern)) for d in cfg.values())
     assert n_files == 2
     jobs = _count_jobs(spark, "ledger_first_ingest", lambda: ingest_all(spark, wh, cfg))
-    assert jobs <= 4 * n_files, jobs
+    assert jobs <= n_files, jobs
     run_silver(spark, wh, datasets=list(SLICE))
 
     before = _data_files(wh.root)
     jobs = _count_jobs(spark, "ledger_noop_rerun", lambda: (
         ingest_all(spark, wh, cfg), run_silver(spark, wh, datasets=list(SLICE))))
-    assert jobs <= 2, jobs
+    assert jobs == 0, jobs
     assert _data_files(wh.root) == before
 
     for r in wh.read(spark, "admin", "transformation_logs").collect():

@@ -351,7 +351,7 @@ def test_interleaved_disjoint_writers_keep_ledger_consistent(spark, pipeline_wh)
 
     # ledger: no pending work afterwards, and an unpinned run is a no-op
     done = {(r.transformation_name, r.load_id)
-            for r in ledger.snapshot(spark, wh, "transformation_logs").rows
+            for r in ledger.snapshot(wh, "transformation_logs").rows
             if r.status == "SUCCESS"}
     assert all(("transactions", i) in done for i in bronze_load_ids(spark, wh, "transactions"))
     assert run_silver(spark, wh, datasets=["transactions"]) == {}

@@ -110,3 +110,17 @@ def test_pythonpath_export_gated_on_shared_fs_masters(monkeypatch):
     assert not _export_pythonpath("spark://master:7077")
     monkeypatch.setenv("SPARK_EXPORT_PYTHONPATH", "1")
     assert _export_pythonpath("spark://master:7077")
+
+
+def test_default_driver_memory_is_half_of_ram_up_to_48g():
+    """Unset SPARK_DRIVER_MEMORY gives the driver half the machine's RAM,
+    capped at 48g: a 16 GB machine gets 8g, not a 48g heap that can grow
+    past physical memory."""
+    from travel_data_ingestion_spark.session import default_driver_memory
+
+    gib = 1 << 30
+    assert default_driver_memory(16 * gib) == "8192m"
+    assert default_driver_memory(96 * gib) == "49152m"
+    assert default_driver_memory(512 * gib) == "49152m"
+    here = int(default_driver_memory().removesuffix("m"))
+    assert 0 < here <= 48 << 10

@@ -18,6 +18,17 @@ empty keeps a zero-row schema footer in ``load_id=0/`` (ledger ids
 start at 1). A crash mid-write leaves only staging files that readers
 ignore; the retry overwrites the same partitions (``write_idempotent``).
 
+The admin tables (``ADMIN_SCHEMAS``) are the exception to Spark-written
+tables: they hold a few rows per file and per dataset, so ``ledger``
+reads and writes them on the driver with pyarrow, one parquet file per
+write, committed by renaming a hidden temp file. They stay ordinary
+parquet that ``read`` (and DuckDB) scans with the registered schema.
+That relies on the warehouse being a local path written by a single
+driver, as the ``os.walk``/``os.listdir`` checks here already do
+(SURVEY §7.4-4). A crash while ``file_details`` is replaced can leave
+old and new rows side by side; the next run's ``save_config`` rewrites
+the table.
+
 Bronze business columns are all strings (schema-on-read, matching
 reset_schemas.sql:65-161 where even AMOUNT is VARCHAR); four lineage
 columns are appended at load time (reset_schemas.sql:68-71).
@@ -118,8 +129,9 @@ BRONZE_SCHEMAS: dict[str, T.StructType] = {
     ),
 }
 
-# Admin ledgers (reference sql/admin_*.sql). Append-only; latest row per
-# key wins on read (no in-place UPDATE needed — SURVEY §2 A-08).
+# Admin tables (reference sql/admin_*.sql), driver-written by ``ledger``.
+# The two logs are append-only; latest row per key wins on read (no
+# in-place UPDATE needed — SURVEY §2 A-08).
 ADMIN_SCHEMAS: dict[str, T.StructType] = {
     "file_details": T.StructType(
         [
@@ -161,6 +173,13 @@ ADMIN_SCHEMAS: dict[str, T.StructType] = {
 SCHEMAS = ("admin", "bronze", "silver", "gold")
 
 
+def _empty_frame(spark: SparkSession, schema: T.StructType) -> DataFrame:
+    """A zero-row frame of ``schema``, every column nullable, planned in
+    the JVM: ``spark.createDataFrame([], schema)`` builds a Python RDD,
+    and running it starts Python workers."""
+    return spark.range(0).select([F.lit(None).cast(f.dataType).alias(f.name) for f in schema])
+
+
 @dataclass
 class Warehouse:
     """Path-based medallion warehouse rooted at ``root``."""
@@ -197,7 +216,7 @@ class Warehouse:
             return reader.parquet(self.path(schema, table))
         if st is None:
             raise FileNotFoundError(f"table {schema}.{table} does not exist")
-        return spark.createDataFrame([], st)
+        return _empty_frame(spark, st)
 
     def append(self, spark: SparkSession, df: DataFrame, schema: str, table: str) -> None:
         df.write.mode("append").parquet(self.path(schema, table))
@@ -261,7 +280,7 @@ class Warehouse:
         )
         rows = int(seen.get["rows"])
         if not rows and self.registered_schema(schema, table) is None and not self.exists(schema, table):
-            spark.createDataFrame([], df.drop("load_id").schema).coalesce(1).write.mode(
+            _empty_frame(spark, df.drop("load_id").schema).coalesce(1).write.mode(
                 "overwrite"
             ).parquet(os.path.join(p, "load_id=0"))
         return rows

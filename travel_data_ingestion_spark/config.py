@@ -3,7 +3,9 @@
 The reference drives its whole ingestion layer from a config table keyed
 by lower-cased target table (reference ingestion_logic.py:5-25
 load_config; sql/admin_file_details.sql:1-9). Same model here: config
-rows live in ``admin.file_details`` and are loaded into a dict.
+rows live in ``admin.file_details`` and are loaded into a dict. The
+table is read and written on the driver (``ledger.read``/``replace``):
+no Spark job.
 """
 
 from __future__ import annotations
@@ -12,6 +14,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import SparkSession
 
+from travel_data_ingestion_spark import ledger
 from travel_data_ingestion_spark.catalog import Warehouse
 
 
@@ -54,7 +57,9 @@ def default_config(landing_dir: str) -> dict[str, FileDetail]:
 
 
 def save_config(spark: SparkSession, wh: Warehouse, config: dict[str, FileDetail]) -> None:
-    rows = [
+    """Replace the config table with ``config``'s rows. ``spark`` is
+    unused: the signature is the other pipeline steps'."""
+    ledger.replace(wh, "file_details", [
         (
             d.file_id,
             d.container,
@@ -66,16 +71,11 @@ def save_config(spark: SparkSession, wh: Warehouse, config: dict[str, FileDetail
             d.file_format,
         )
         for d in config.values()
-    ]
-    from travel_data_ingestion_spark.catalog import ADMIN_SCHEMAS
-
-    df = spark.createDataFrame(rows, ADMIN_SCHEMAS["file_details"])
-    wh.overwrite(spark, df, "admin", "file_details")
+    ])
 
 
 def load_config(spark: SparkSession, wh: Warehouse) -> dict[str, FileDetail]:
     """Config-table scan -> dict (reference ingestion_logic.py:5-25)."""
-    rows = wh.read(spark, "admin", "file_details").collect()
     return {
         r.target_table.lower(): FileDetail(
             r.file_id,
@@ -87,5 +87,5 @@ def load_config(spark: SparkSession, wh: Warehouse) -> dict[str, FileDetail]:
             r.container,
             r.stage_name,
         )
-        for r in rows
+        for r in ledger.read(wh, "file_details")
     }

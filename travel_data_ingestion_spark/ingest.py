@@ -17,7 +17,9 @@ dynamic-partition overwrite of its reserved ``load_id``, and one append
 records every SUCCESS/FAILURE. A file whose latest ledger row is still
 RUNNING (a crashed run) is retried under its reserved id, so the retry
 overwrites whatever partition the crashed run committed: exactly-once
-holds across a crash between the data commit and the ledger write.
+holds across a crash between the data commit and the ledger write. A
+file whose latest row is FAILURE is retried under its id the same way,
+so a file that keeps failing does not use up the 15-bit load_id space.
 """
 
 from __future__ import annotations
@@ -184,13 +186,14 @@ def ingest_all(spark: SparkSession, wh: Warehouse, config: dict[str, FileDetail]
     (ON_ERROR='SKIP_FILE', ingestion_logic.py:157-182). Returns each
     dataset's SUCCESS load_ids.
     """
-    snap = ledger.snapshot(spark, wh, "ingestion_logs", latest_only=True)
+    snap = ledger.snapshot(wh, "ingestion_logs", latest_only=True)
     done = {(r.target_table, r.file_name) for r in snap.rows if r.status == "SUCCESS"}
-    # a crashed run's reservation (the highest, if it crashed twice)
+    # a crashed run's reservation or a failed load (the highest, if there
+    # are several)
     reserved = {
         (r.target_table, r.file_name): r.load_id
         for r in sorted(snap.rows, key=lambda r: r.load_id)
-        if r.status == "RUNNING"
+        if r.status != "SUCCESS"
     }
     next_id = snap.next_id
     work = []
@@ -208,7 +211,7 @@ def ingest_all(spark: SparkSession, wh: Warehouse, config: dict[str, FileDetail]
         return (load_id, detail.file_id, os.path.basename(path), detail.target_table,
                 status, rows, error)
 
-    ledger.append(spark, wh, "ingestion_logs", [entry(d, p, i, "RUNNING") for _, d, p, i in work])
+    ledger.append(wh, "ingestion_logs", [entry(d, p, i, "RUNNING") for _, d, p, i in work])
     loaded: dict[str, list[int]] = {name: [] for name in sorted(config)}
     terminal = []
     for name, detail, path, load_id in work:
@@ -219,5 +222,5 @@ def ingest_all(spark: SparkSession, wh: Warehouse, config: dict[str, FileDetail]
             continue
         terminal.append(entry(detail, path, load_id, "SUCCESS", rows))
         loaded[name].append(load_id)
-    ledger.append(spark, wh, "ingestion_logs", terminal)
+    ledger.append(wh, "ingestion_logs", terminal)
     return loaded

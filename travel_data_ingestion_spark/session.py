@@ -26,6 +26,15 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
+def default_driver_memory(physical_bytes: int | None = None) -> str:
+    """The driver heap when SPARK_DRIVER_MEMORY is unset: 48g, or half of
+    the machine's physical memory when that is less, so a local JVM
+    never grows past the RAM it shares with Python and the OS."""
+    if physical_bytes is None:
+        physical_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(48 << 10, physical_bytes // 2 >> 20)}m"
+
+
 def session_token(spark: SparkSession) -> str:
     """Stable identity for a Python SparkSession wrapper, for keying
     driver-side memo caches. ``id(spark)`` is NOT usable for this:
@@ -69,7 +78,8 @@ def get_spark(
         # local mode = driver-only: the driver heap is ALL the memory
         # (executors, broadcasts, shuffle). The 1g default OOMs the first
         # nontrivial broadcast at >=8x sf0.1 (measured via scale_probe).
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory())
         .config("spark.sql.shuffle.partitions", str(cores))
         .config("spark.default.parallelism", str(cores))
         .config("spark.sql.adaptive.enabled", "true")

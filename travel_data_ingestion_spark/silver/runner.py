@@ -52,7 +52,7 @@ def run_silver(
     affected partitions. The ledger is read once and written twice per
     run: one RUNNING row per dataset, then every terminal row.
     """
-    snap = ledger.snapshot(spark, wh, "transformation_logs")
+    snap = ledger.snapshot(wh, "transformation_logs")
     done = {(r.transformation_name, r.load_id) for r in snap.rows if r.status == "SUCCESS"}
     work = []
     for name in datasets or list(SILVER_TRANSFORMS):
@@ -62,7 +62,7 @@ def run_silver(
         ]
         if ids:
             work.append((snap.next_id + len(work), name, ids))
-    ledger.append(spark, wh, "transformation_logs",
+    ledger.append(wh, "transformation_logs",
                   [(tid, name, max(ids), "RUNNING", None, None) for tid, name, ids in work])
     results: dict[str, int] = {}
     failures: dict[str, str] = {}
@@ -82,7 +82,7 @@ def run_silver(
         # exactly-once contract the next run's selection reads
         terminal += [(trans_id, name, i, "SUCCESS", total, None) for i in ids]
         results[name] = total
-    ledger.append(spark, wh, "transformation_logs", terminal)
+    ledger.append(wh, "transformation_logs", terminal)
     if failures:
         # true per-dataset isolation (each reference transform is its own
         # Airflow task): every healthy dataset was processed and logged

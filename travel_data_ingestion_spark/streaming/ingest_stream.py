@@ -119,9 +119,9 @@ def _epoch_load_id(
     recorded = _read_int_marker(jvm, fs, marker)
     if recorded is not None:
         return recorded
-    lid = ledger.snapshot(spark, wh, "ingestion_logs").next_id
+    lid = ledger.snapshot(wh, "ingestion_logs").next_id
     # reservation; collapsed by the SUCCESS row's recency
-    ledger.append(spark, wh, "ingestion_logs",
+    ledger.append(wh, "ingestion_logs",
                   [(lid, None, f"stream:{target_table}", target_table, "RUNNING", None, None)])
     _write_int_marker(jvm, fs, marker, lid)
     return lid
@@ -164,7 +164,7 @@ def stream_ingest_csv(
         # ledger row so the batch path's MAX(load_id)+1 sees this load;
         # a replayed epoch appends a duplicate row, which the append+
         # latest-wins ledger semantics absorb (same load_id, same file)
-        ledger.append(s, wh, "ingestion_logs", [
+        ledger.append(wh, "ingestion_logs", [
             # file_id: streams have no config row
             (eid, None, f"stream:{target_table}", target_table, "SUCCESS", None, None)
         ])
