@@ -430,7 +430,7 @@ def test_allocations_stay_above_reserved_ids(spark, tmp_path, monkeypatch, slice
     next transformation_id and a new stream epoch's load_id both land
     above every reserved id."""
     from travel_data_ingestion_spark.silver import run_silver
-    from travel_data_ingestion_spark.streaming.ingest_stream import _epoch_load_id
+    from travel_data_ingestion_spark.streaming import stream_ingest_csv
 
     wh, cfg = _slice_wh(spark, tmp_path, "wh", slice_landing)
     ingest_all(spark, wh, cfg)
@@ -453,8 +453,47 @@ def test_allocations_stay_above_reserved_ids(spark, tmp_path, monkeypatch, slice
     landed = max(r.load_id for r in _ingestion_rows(spark, wh))
     real(wh, "ingestion_logs",
          [(landed + 5, 1, "late.csv", "transactions", "RUNNING", None, None)])
-    ckpt = str(tmp_path / "ckpt")
-    assert _epoch_load_id(spark, wh, ckpt, 0, "transactions") == landed + 6
+    stream_ingest_csv(spark, wh, str(slice_landing), "transactions", "transactions*.csv")
+    epochs = [r for r in _ingestion_rows(spark, wh) if r.file_name.startswith("stream:")]
+    assert [(r.load_id, r.status) for r in epochs] == [(landed + 6, "SUCCESS")]
+
+
+def test_ledger_append_keeps_one_file_and_heals_a_crashed_rewrite(tmp_path, monkeypatch):
+    """Each append rewrites the table as one parquet file holding every
+    row; an empty append writes nothing. A crash after the new file is
+    renamed in, before the old one is deleted, shows every old row
+    twice until the next append drops the duplicates."""
+    wh = Warehouse(str(tmp_path / "wh"))
+    wh.init()
+    path = wh.path("admin", "ingestion_logs")
+
+    def files():
+        return [n for n in os.listdir(path) if not n.startswith((".", "_"))]
+
+    def ids():
+        return sorted(r.load_id for r in ledger.read(wh, "ingestion_logs"))
+
+    def row(i):
+        return (i, 1, f"transactions_{i}.csv", "transactions", "SUCCESS", i, None)
+
+    for i in (1, 2, 3):
+        ledger.append(wh, "ingestion_logs", [row(i)])
+    one = files()
+    assert len(one) == 1 and ids() == [1, 2, 3]
+    ledger.append(wh, "ingestion_logs", [])
+    assert files() == one
+
+    def crash(p):
+        raise OSError("crash before the deletes")
+
+    monkeypatch.setattr(os, "remove", crash)
+    with pytest.raises(OSError, match="crash before the deletes"):
+        ledger.append(wh, "ingestion_logs", [row(4)])
+    monkeypatch.undo()
+    assert len(files()) == 2 and ids() == [1, 1, 2, 2, 3, 3, 4]
+
+    ledger.append(wh, "ingestion_logs", [row(5)])
+    assert len(files()) == 1 and ids() == [1, 2, 3, 4, 5]
 
 
 def test_ledger_tie_prefers_terminal_status(spark, tmp_path):

@@ -1,83 +1,5 @@
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import functions as F
-
-from travel_data_ingestion_spark.maintenance import compact_parquet, table_bytes
-
-
-def test_compaction_reduces_files_preserves_rows(spark, tmp_path):
-    path = str(tmp_path / "frag")
-    # simulate 20 tiny incremental appends
-    for i in range(20):
-        spark.range(i * 100, (i + 1) * 100).select(
-            F.col("id"), (F.col("id") % 7).alias("k")
-        ).write.mode("append").parquet(path)
-    before_files = sum(
-        1 for _, _, fs in os.walk(path) for f in fs if f.endswith(".parquet")
-    )
-    assert before_files >= 20
-    before_rows = spark.read.parquet(path).count()
-    n_out = compact_parquet(spark, path, target_file_bytes=10 * 1024 * 1024)
-    assert n_out < before_files
-    after = spark.read.parquet(path)
-    assert after.count() == before_rows == 2000
-    assert sorted(r.id for r in after.collect()) == list(range(2000))
-    assert table_bytes(path) > 0
-
-
-def test_partitioned_compaction_one_file_per_dir(spark, tmp_path):
-    """repartition(n, *partition_by) routes each partition dir's rows to
-    one task — the old bare repartition(n) wrote ~n files per dir."""
-    path = str(tmp_path / "part_frag")
-    for i in range(5):
-        spark.range(i * 200, (i + 1) * 200).select(
-            F.col("id"), (F.col("id") % 4).alias("k")
-        ).write.mode("append").partitionBy("k").parquet(path)
-    compact_parquet(spark, path, target_file_bytes=10 * 1024 * 1024, partition_by=("k",))
-    for d in os.listdir(path):
-        if not d.startswith("k="):
-            continue
-        files = [f for f in os.listdir(os.path.join(path, d)) if f.endswith(".parquet")]
-        assert len(files) == 1, f"{d}: {len(files)} files"
-    after = spark.read.parquet(path)
-    assert after.count() == 1000
-    assert after.select("k").distinct().count() == 4
-
-
-def test_compaction_swap_failure_restores_table(spark, tmp_path, monkeypatch):
-    """A crash during the staging->live rename must leave the original
-    table in place, not absent."""
-    import pytest
-
-    path = str(tmp_path / "swapfail")
-    spark.range(500).write.parquet(path)
-    real_rename = os.rename
-
-    def failing_rename(src, dst):
-        if src.endswith("__compacting"):
-            raise OSError("simulated crash during swap")
-        return real_rename(src, dst)
-
-    monkeypatch.setattr(os, "rename", failing_rename)
-    with pytest.raises(OSError, match="simulated crash"):
-        compact_parquet(spark, path, target_file_bytes=10 * 1024 * 1024)
-    monkeypatch.undo()
-    assert spark.read.parquet(path).count() == 500  # table intact
-
-
-def test_recover_compaction_heals_mid_swap_state(spark, tmp_path):
-    from travel_data_ingestion_spark.maintenance import recover_compaction
-
-    path = str(tmp_path / "midswap")
-    spark.range(300).write.parquet(path)
-    backup = path + "__old"
-    os.rename(path, backup)  # crashed after rename 1 of 2
-    recover_compaction(path)
-    assert not os.path.exists(backup)
-    assert spark.read.parquet(path).count() == 300
-
 
 def test_zorder_rejects_sign_bit_overflow(spark):
     """bits*len(cols) > 63 would interleave into the long sign bit and

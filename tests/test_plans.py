@@ -205,6 +205,27 @@ def test_bench_checksum_is_not_prunable(spark):
             spark.conf.set(conf_key, saved)
 
 
+def test_q03_broadcast_hint_reads_unit_suffixed_threshold(spark):
+    """q03's build-side pick reads the broadcast threshold as Spark parses
+    it: under "64MB" the analyzed plan carries the same broadcast hint as
+    under the byte count session.py sets (an int() parse of "64MB" used
+    to drop the hint silently)."""
+    import re
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    saved = spark.conf.get(key)
+    plans = {}
+    try:
+        for value in ("64MB", str(64 * 1024 * 1024)):
+            spark.conf.set(key, value)
+            df = SPECS["q03_top_revenue_orders"].fn(spark, SF_DIR)
+            plans[value] = re.sub(r"#\d+", "#", df._jdf.queryExecution().analyzed().toString())
+    finally:
+        spark.conf.set(key, saved)
+    assert "ResolvedHint (strategy=broadcast)" in plans["64MB"]
+    assert plans["64MB"] == plans[str(64 * 1024 * 1024)]
+
+
 def test_runtime_bloom_filter_prunes_probe_side(spark):
     """Runtime bloom-filter join pruning (semi-join reduction): with a
     selective build side, the optimizer injects a bloom filter of the

@@ -1,19 +1,38 @@
 """Streaming file ingestion tests: ``stream_ingest_csv`` (AvailableNow
 over a CSV landing dir) consumes each file exactly once across
-restarts, parses exactly like the batch ingest, and keeps its per-epoch
-load_id map collision-free against interleaved batch loads and partial
-markers left by a crash.
+restarts, parses exactly like the batch ingest, and takes each epoch's
+load_id from the ingestion ledger: collision-free against interleaved
+batch loads, and exactly-once across a lost commit, a crash inside an
+epoch and a recreated checkpoint.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
+from collections import Counter
 
+import pytest
 from pyspark.sql import functions as F
 
 from tests.fixtures_gen import generate_landing
+from travel_data_ingestion_spark import ledger
 from travel_data_ingestion_spark.catalog import Warehouse
 from travel_data_ingestion_spark.streaming import stream_ingest_csv
+
+
+def _stream_ids(wh, status="SUCCESS"):
+    """epoch key (``stream:<query id>:<epoch id>``) -> load_id, from the
+    ledger's latest rows with ``status``."""
+    return {
+        r.file_name: r.load_id
+        for r in ledger.snapshot(wh, "ingestion_logs", latest_only=True).rows
+        if r.file_name.startswith("stream:") and r.status == status
+    }
+
+
+def _bronze(spark, wh):
+    return Counter(map(tuple, wh.read(spark, "bronze", "transactions").collect()))
 
 
 def test_stream_ingest_exactly_once(spark, tmp_path):
@@ -37,10 +56,11 @@ def test_stream_ingest_exactly_once(spark, tmp_path):
 
 
 def test_stream_ingest_epoch_map_survives_batch_interleave(spark, tmp_path):
-    """Per-epoch load_id map: replayed epochs keep their recorded ids,
-    and a NEW epoch after an interleaved batch ingest allocates ABOVE
-    the batch's load_id — the batch's bronze partition must survive the
-    restarted stream (the round-8 single-base scheme overwrote it)."""
+    """The ledger's epoch -> load_id rows: earlier epochs keep their
+    ids, and a NEW epoch after an interleaved batch ingest allocates
+    ABOVE the batch's load_id — the batch's bronze partition must
+    survive the restarted stream (the round-8 single-base scheme
+    overwrote it)."""
     import csv
     from datetime import datetime, timezone
 
@@ -52,18 +72,13 @@ def test_stream_ingest_epoch_map_survives_batch_interleave(spark, tmp_path):
     wh = Warehouse(str(tmp_path / "wh"))
     wh.init()
     stream_ingest_csv(spark, wh, landing, "transactions", "transactions*.csv")
-    map_dir = os.path.join(wh.root, "_checkpoints", "transactions", "_load_id_map")
-    assert os.path.isdir(map_dir)
-    markers = {
-        int(name.split("-", 1)[1]): int(open(os.path.join(map_dir, name)).read())
-        for name in os.listdir(map_dir)
-        if name.startswith("epoch-")
-    }
+    epochs = _stream_ids(wh)
+    assert epochs
     lids1 = {
         r.load_id
         for r in wh.read(spark, "bronze", "transactions").select("load_id").distinct().collect()
     }
-    assert lids1 == set(markers.values())
+    assert lids1 == set(epochs.values())
 
     # an interleaved BATCH ingest takes the ledger's next id and writes
     # its own bronze partition under it
@@ -101,14 +116,11 @@ def test_stream_ingest_epoch_map_survives_batch_interleave(spark, tmp_path):
         r.load_id for r in bronze.select("load_id").distinct().collect()
     } - lids1 - {batch_lid}
     assert new and min(new) > batch_lid, f"stream reused/undercut batch id: {sorted(new)}"
-    # original epochs' markers unchanged
-    markers2 = {
-        int(name.split("-", 1)[1]): int(open(os.path.join(map_dir, name)).read())
-        for name in os.listdir(map_dir)
-        if name.startswith("epoch-")
-    }
-    for e, lid in markers.items():
-        assert markers2[e] == lid
+    # the original epochs' ledger rows are unchanged, and the new epoch
+    # recorded the id it landed under
+    epochs2 = _stream_ids(wh)
+    assert {k: epochs2[k] for k in epochs} == epochs
+    assert set(epochs2.values()) - set(epochs.values()) == new
 
 
 def test_stream_ingest_matches_batch_parsing_and_load_ids(spark, tmp_path):
@@ -157,8 +169,6 @@ def test_stream_ingest_matches_batch_parsing_and_load_ids(spark, tmp_path):
     }
     stream_landing = str(tmp_path / "landing2")
     os.makedirs(stream_landing)
-    import shutil
-
     shutil.copy(nasty, stream_landing)
     stream_ingest_csv(spark, wh_s, stream_landing, "transactions", "transactions*.csv")
     streamed = wh_s.read(spark, "bronze", "transactions").filter(
@@ -182,21 +192,87 @@ def test_stream_ingest_matches_batch_parsing_and_load_ids(spark, tmp_path):
     assert stream_only and min(stream_only) > max(batch_loads)
 
 
-def test_stream_ingest_partial_marker_recovers(spark, tmp_path):
-    """A crash mid-create can leave an empty/garbage epoch marker; the
-    next start must treat it as absent (reallocate + rewrite), not crash
-    — the epoch never wrote data under a partial marker, so
-    reallocation is safe."""
+def test_stream_replay_after_lost_commit_is_skipped(spark, tmp_path):
+    """A lost commit-log entry replays the last epoch with its epoch id
+    and input files; its SUCCESS row marks it done, so bronze is
+    unchanged (not even rewritten) and the ledger keeps one SUCCESS row
+    per epoch."""
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    for i in range(20):  # > maxFilesPerTrigger: two epochs
+        (landing / f"transactions_{i:02d}.csv").write_text(
+            "country,date,name,type,amount,comments\n"
+            f"Japan,2026-02-{i + 1:02d},m{i},Hotel,{i}.25,note {i}\n"
+        )
+    wh = Warehouse(str(tmp_path / "wh"))
+    wh.init()
+    stream_ingest_csv(spark, wh, str(landing), "transactions", "transactions*.csv")
+    before = _bronze(spark, wh)
+    assert sum(before.values()) == 20
+    commits = os.path.join(wh.root, "_checkpoints", "transactions", "commits")
+    last = max(int(n) for n in os.listdir(commits) if n.isdigit())
+    assert last >= 1
+    for name in (str(last), f".{last}.crc"):
+        if os.path.exists(os.path.join(commits, name)):
+            os.remove(os.path.join(commits, name))
+
+    stream_ingest_csv(spark, wh, str(landing), "transactions", "transactions*.csv")
+    assert _bronze(spark, wh) == before
+    success = [r.file_name for r in ledger.read(wh, "ingestion_logs") if r.status == "SUCCESS"]
+    assert len(success) == len(set(success)) == last + 1
+
+
+def test_stream_crash_inside_epoch_reuses_running_id(spark, tmp_path, monkeypatch):
+    """A crash right after an epoch's bronze commit, before its SUCCESS
+    row: the re-run replays the epoch under the RUNNING row's id and
+    overwrites the committed partition, so every row lands once."""
+    from travel_data_ingestion_spark.ingest import read_csv
+
     landing = str(tmp_path / "landing")
     generate_landing(landing)
     wh = Warehouse(str(tmp_path / "wh"))
     wh.init()
-    map_dir = os.path.join(wh.root, "_checkpoints", "transactions", "_load_id_map")
-    os.makedirs(map_dir, exist_ok=True)
-    marker = os.path.join(map_dir, "epoch-0")
-    with open(marker, "w") as fh:
-        fh.write("")  # crash between create and close: empty marker
+    real = Warehouse.write_idempotent
+
+    def crash(self, *args, **kwargs):
+        real(self, *args, **kwargs)
+        raise RuntimeError("crash after the bronze commit")
+
+    monkeypatch.setattr(Warehouse, "write_idempotent", crash)
+    with pytest.raises(Exception, match="crash after the bronze commit"):
+        stream_ingest_csv(spark, wh, landing, "transactions", "transactions*.csv")
+    monkeypatch.undo()
+    running = _stream_ids(wh, "RUNNING")
+    assert len(running) == 1 and not _stream_ids(wh)
+
     stream_ingest_csv(spark, wh, landing, "transactions", "transactions*.csv")
-    assert wh.read(spark, "bronze", "transactions").count() > 0
-    with open(marker) as fh:
-        assert int(fh.read().strip()) >= 1  # rewritten with a real id
+    assert _stream_ids(wh) == running
+    bronze = wh.read(spark, "bronze", "transactions")
+    assert {r.load_id for r in bronze.select("load_id").distinct().collect()} == set(
+        running.values()
+    )
+    cols = ["country", "date", "name", "type", "amount", "comments"]
+    landed = read_csv(spark.read, "transactions", os.path.join(landing, "transactions*.csv"))
+    assert Counter(map(tuple, bronze.select(cols).collect())) == Counter(
+        map(tuple, landed.select(cols).collect())
+    )
+
+
+def test_stream_recreated_checkpoint_takes_fresh_ids(spark, tmp_path):
+    """A recreated checkpoint is a new query: its epochs are new loads
+    under fresh ids above every existing one, and none is skipped as a
+    match for the old query's epoch of the same number."""
+    landing = str(tmp_path / "landing")
+    generate_landing(landing)
+    wh = Warehouse(str(tmp_path / "wh"))
+    wh.init()
+    stream_ingest_csv(spark, wh, landing, "transactions", "transactions*.csv")
+    n1 = wh.read(spark, "bronze", "transactions").count()
+    old = _stream_ids(wh)
+
+    shutil.rmtree(os.path.join(wh.root, "_checkpoints", "transactions"))
+    stream_ingest_csv(spark, wh, landing, "transactions", "transactions*.csv")
+    assert wh.read(spark, "bronze", "transactions").count() == 2 * n1
+    new = {k: v for k, v in _stream_ids(wh).items() if k not in old}
+    assert len(new) == len(old)
+    assert min(new.values()) > max(old.values())

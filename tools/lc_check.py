@@ -28,6 +28,7 @@ from __future__ import annotations
 import json
 import math
 import os
+import re
 import signal
 import subprocess
 import sys
@@ -39,7 +40,7 @@ sys.path.insert(0, REPO)
 
 MASTER = os.environ.get("SPARK_LC_MASTER", "local-cluster[3,4,3072]")
 
-_LC_RE = None
+_LC_RE = re.compile(r"^local-cluster\[\s*\d+\s*,\s*\d+\s*,\s*(\d+)\s*\]$")
 
 
 def _lc_mem_mb(master: str, default: int) -> int:
@@ -48,11 +49,6 @@ def _lc_mem_mb(master: str, default: int) -> int:
     to ``default`` — naive ``rsplit(',')`` parsing on ``local[8]``
     used to yield the nonsense executor memory ``'local[8m'`` and a
     confusing session failure."""
-    global _LC_RE
-    if _LC_RE is None:
-        import re
-
-        _LC_RE = re.compile(r"^local-cluster\[\s*\d+\s*,\s*\d+\s*,\s*(\d+)\s*\]$")
     m = _LC_RE.match(master.strip())
     return int(m.group(1)) if m else default
 
@@ -244,9 +240,9 @@ def streamkill(workdir: str) -> dict:
     """Exactly-once STREAMING ingestion under executor loss: ~120
     landing CSVs drain through stream_ingest_csv (AvailableNow,
     maxFilesPerTrigger=16 -> several micro-batches) while one executor
-    JVM is SIGKILLed mid-stream. The checkpoint + per-epoch load_id
-    map + dynamic-overwrite bronze writes must make the retried work
-    invisible: bronze business rows, per-file lineage, and the
+    JVM is SIGKILLed mid-stream. The checkpoint + the ledger's per-epoch
+    load_ids + dynamic-overwrite bronze writes must make the retried
+    work invisible: bronze business rows, per-file lineage, and the
     ingestion ledger must all match a clean run exactly."""
     import glob
 
@@ -283,8 +279,12 @@ def streamkill(workdir: str) -> dict:
         rows = sorted(
             tuple(str(r[c]) for c in cols) for r in bronze.collect()
         )
+        # each run is its own query: its id in the epoch key
+        # ('stream:<query id>:<epoch id>') becomes a placeholder, and
+        # the epoch numbers are compared
         ledger = sorted(
-            (r.file_name, r.target_table, r.status)
+            (re.sub(r"^stream:[^:]+:", "stream:<query>:", r.file_name),
+             r.target_table, r.status)
             for r in wh.read(spark, "admin", "ingestion_logs").collect()
         )
         return rows, ledger

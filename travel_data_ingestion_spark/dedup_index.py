@@ -33,9 +33,7 @@ Layout under ``path``:
 - ``bands/`` parquet: (doc_id, n_sh, band_id, sig) — 8 rows per
   indexable doc, the LSH bucket table.
 
-At 100 TB, both tables append one file-set per batch; compact with
-``maintenance.compact_parquet`` on the same cadence as any other
-incrementally-loaded table.
+Both tables append one file-set per batch; nothing here compacts them.
 """
 
 from __future__ import annotations

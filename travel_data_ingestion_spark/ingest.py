@@ -9,17 +9,18 @@ Reproduces the reference's ingestion semantics (SURVEY §2.A) Spark-first:
 - filename exactly-once ledger           (ingestion_logic.py:124-129, A-07)
 - RUNNING -> SUCCESS/FAILURE logging     (ingestion_logic.py:84-201, A-08)
 
-Allocation happens once per run, from one snapshot of the ledger
-(``ledger.snapshot``): it gives both the files already loaded and the
-next free ``load_id``. One RUNNING append then reserves an id for every
-new file before any data is written, each file's bronze write is a
-dynamic-partition overwrite of its reserved ``load_id``, and one append
-records every SUCCESS/FAILURE. A file whose latest ledger row is still
-RUNNING (a crashed run) is retried under its reserved id, so the retry
-overwrites whatever partition the crashed run committed: exactly-once
-holds across a crash between the data commit and the ledger write. A
-file whose latest row is FAILURE is retried under its id the same way,
-so a file that keeps failing does not use up the 15-bit load_id space.
+Allocation happens once per run, in ``ledger.reserve`` (the allocator
+the stream ingest shares): from one snapshot of the ledger it skips the
+files already loaded, gives every other file its ``load_id`` and
+reserves them all in one RUNNING append before any data is written.
+Each file's bronze write is a dynamic-partition overwrite of its
+reserved ``load_id``, and one append records every SUCCESS/FAILURE. A
+file whose latest ledger row is still RUNNING (a crashed run) is retried
+under its reserved id, so the retry overwrites whatever partition the
+crashed run committed: exactly-once holds across a crash between the
+data commit and the ledger write. A file whose latest row is FAILURE is
+retried under its id the same way, so a file that keeps failing does
+not use up the 15-bit load_id space.
 """
 
 from __future__ import annotations
@@ -186,32 +187,20 @@ def ingest_all(spark: SparkSession, wh: Warehouse, config: dict[str, FileDetail]
     (ON_ERROR='SKIP_FILE', ingestion_logic.py:157-182). Returns each
     dataset's SUCCESS load_ids.
     """
-    snap = ledger.snapshot(wh, "ingestion_logs", latest_only=True)
-    done = {(r.target_table, r.file_name) for r in snap.rows if r.status == "SUCCESS"}
-    # a crashed run's reservation or a failed load (the highest, if there
-    # are several)
-    reserved = {
-        (r.target_table, r.file_name): r.load_id
-        for r in sorted(snap.rows, key=lambda r: r.load_id)
-        if r.status != "SUCCESS"
-    }
-    next_id = snap.next_id
-    work = []
-    for name, detail in sorted(config.items()):
-        for path in list_stage_files(detail.source_path, detail.file_pattern):
-            key = (detail.target_table, os.path.basename(path))
-            if key in done:
-                continue
-            load_id = reserved.get(key)
-            if load_id is None:
-                load_id, next_id = next_id, next_id + 1
-            work.append((name, detail, path, load_id))
+    found = [
+        (name, detail, path)
+        for name, detail in sorted(config.items())
+        for path in list_stage_files(detail.source_path, detail.file_pattern)
+    ]
+    ids = ledger.reserve(
+        wh, [(d.file_id, os.path.basename(p), d.target_table) for _, d, p in found]
+    )
+    work = [(*f, load_id) for f, load_id in zip(found, ids) if load_id is not None]
 
     def entry(detail, path, load_id, status, rows=None, error=None):
         return (load_id, detail.file_id, os.path.basename(path), detail.target_table,
                 status, rows, error)
 
-    ledger.append(wh, "ingestion_logs", [entry(d, p, i, "RUNNING") for _, d, p, i in work])
     loaded: dict[str, list[int]] = {name: [] for name in sorted(config)}
     terminal = []
     for name, detail, path, load_id in work:

@@ -9,24 +9,25 @@ written on the driver with pyarrow: no Spark job and no Python worker.
 The files are ordinary parquet under ``<root>/admin/<table>/`` with the
 registered schema (``catalog.ADMIN_SCHEMAS``), so ``Warehouse.read``,
 DuckDB and the older Spark-written files (INT96 ``event_time``) all mix.
-Each write is one parquet file, written under a hidden temp name (which
-every reader skips) and committed by ``os.rename``; a crash mid-write
-leaves only the temp file.
+Every write rewrites the table as one parquet file: it is written under
+a hidden temp name (which every reader skips), committed by
+``os.rename``, and then every other entry of the table is deleted. A
+crash mid-write leaves only the temp file; a crash between the rename
+and the deletes leaves the old rows twice, which the next write's
+rewrite drops (``append``) or replaces (``replace``).
 
-The ledgers are append-only. An "UPDATE" is a new row, and the latest
-row per id wins on read: latest ``event_time`` first, and on a tie a
-terminal status (SUCCESS/FAILURE) over RUNNING. A run reads a ledger
-once (``snapshot``), allocates every id it needs from that one snapshot
-(``Snapshot.next_id`` = MAX(id)+1, the reference's own MAX-based
-retrieval, ingestion_logic.py:149), and writes each stage's rows in one
-``append``. ``file_details`` is replaced whole (``replace``): the new
-file is renamed in, then the old files are deleted. A crash between the
-two leaves old and new rows side by side; the next run's ``save_config``
-rewrites the table. Single-driver contract (SURVEY §7.4-4): one process
-writes the warehouse, and nothing else allocates between a run's
-snapshot and its RUNNING append.
+The ledgers are logically append-only. An "UPDATE" is a new row, and
+the latest row per id wins on read: latest ``event_time`` first, and on
+a tie a terminal status (SUCCESS/FAILURE) over RUNNING. A run reads a
+ledger once (``snapshot``), allocates every id it needs from that one
+snapshot (``Snapshot.next_id`` = MAX(id)+1, the reference's own
+MAX-based retrieval, ingestion_logic.py:149), and writes each stage's
+rows in one ``append``. ``reserve`` is the one allocator of load_ids:
+batch files and stream epochs both take theirs from it.
+``file_details`` is replaced whole (``replace``). Single-driver
+contract (SURVEY §7.4-4): one process writes the warehouse, and nothing
+else allocates between a run's snapshot and its RUNNING append.
 """
-
 from __future__ import annotations
 
 import os
@@ -81,32 +82,65 @@ def snapshot(wh: Warehouse, table: str, latest_only: bool = False) -> Snapshot:
     return Snapshot(rows, max((r[key] for r in rows), default=0) + 1)
 
 
-def _write(wh: Warehouse, table: str, rows: list[tuple]) -> str:
-    """Commit ``rows`` as one new parquet file; returns its name."""
+def reserve(wh: Warehouse, loads: list[tuple[int | None, str, str]]) -> list[int | None]:
+    """The load_id of each ``(file_id, file_name, target_table)`` load,
+    from one snapshot of the ingestion ledger, keyed on
+    ``(target_table, file_name)``: a key whose latest row is SUCCESS is
+    done (None); a key whose latest row is RUNNING (a crashed run) or
+    FAILURE keeps that row's load_id, so its retry overwrites whatever
+    partition the earlier attempt committed; a new key takes the next
+    free id. One RUNNING append then records every id handed out, before
+    any data is written under it."""
+    snap = snapshot(wh, "ingestion_logs", latest_only=True)
+    done = {(r.target_table, r.file_name) for r in snap.rows if r.status == "SUCCESS"}
+    # a crashed run's reservation or a failed load (the highest, if there
+    # are several)
+    reserved = {
+        (r.target_table, r.file_name): r.load_id
+        for r in sorted(snap.rows, key=lambda r: r.load_id)
+        if r.status != "SUCCESS"
+    }
+    next_id = snap.next_id
+    ids: list[int | None] = []
+    for _, file_name, table in loads:
+        key = (table, file_name)
+        load_id = None
+        if key not in done:
+            load_id = reserved.get(key)
+            if load_id is None:
+                load_id, next_id = next_id, next_id + 1
+        ids.append(load_id)
+    append(wh, "ingestion_logs", [
+        (i, file_id, file_name, table, "RUNNING", None, None)
+        for i, (file_id, file_name, table) in zip(ids, loads)
+        if i is not None
+    ])
+    return ids
+
+
+def append(wh: Warehouse, table: str, rows: list[tuple]) -> None:
+    """Add ``rows`` (every ledger column but ``event_time``, which is
+    stamped now, the same for the whole batch) by rewriting the table as
+    its old rows plus the new ones; exact duplicates, which a crash
+    inside an earlier rewrite leaves, are dropped. No rows, no write."""
+    if rows:
+        now = datetime.now(timezone.utc)
+        old = [tuple(r) for r in read(wh, table)]
+        replace(wh, table, list(dict.fromkeys(old + [(*r, now) for r in rows])))
+
+
+def replace(wh: Warehouse, table: str, rows: list[tuple]) -> None:
+    """The table's whole content becomes ``rows``, committed as one new
+    parquet file (temp name, then ``os.rename``); then every other entry
+    of the table is deleted."""
     schema = _arrow_schema(table)
     data = pa.Table.from_pylist([dict(zip(schema.names, r)) for r in rows], schema)
     path = wh.path("admin", table)
     os.makedirs(path, exist_ok=True)
-    name = f"part-{uuid.uuid4().hex}.parquet"
-    tmp = os.path.join(path, f".{name}.tmp")
+    keep = f"part-{uuid.uuid4().hex}.parquet"
+    tmp = os.path.join(path, f".{keep}.tmp")
     pq.write_table(data, tmp)
-    os.rename(tmp, os.path.join(path, name))
-    return name
-
-
-def append(wh: Warehouse, table: str, rows: list[tuple]) -> None:
-    """One file of ``rows``: every ledger column but ``event_time``,
-    which is stamped now, the same for the whole batch."""
-    if rows:
-        now = datetime.now(timezone.utc)
-        _write(wh, table, [(*r, now) for r in rows])
-
-
-def replace(wh: Warehouse, table: str, rows: list[tuple]) -> None:
-    """The table's whole content becomes ``rows``: the new file is
-    committed first, then every other entry of the table is deleted."""
-    keep = _write(wh, table, rows)
-    path = wh.path("admin", table)
+    os.rename(tmp, os.path.join(path, keep))
     for name in os.listdir(path):
         if name != keep:
             p = os.path.join(path, name)

@@ -23,6 +23,19 @@ from travel_data_ingestion_spark.compat import (
 )
 from travel_data_ingestion_spark.queries import load_table, register
 
+
+def _fits_broadcast(spark: SparkSession, df: DataFrame) -> bool:
+    """True when the planner's size estimate for ``df`` is within the
+    session's broadcast threshold: the comparison the planner itself
+    makes. The threshold is read parsed from the session's SQLConf, so a
+    unit-suffixed value ("64MB", Spark's default "10MB") counts the same
+    as its byte count; -1 (broadcast off) never fits."""
+    thr = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    if thr <= 0:
+        return False
+    return int(str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())) <= thr
+
+
 # --- shared SQL fragments for the DuckDB oracle (exact decimal sums) ----
 
 def _dsum(expr: str, scale: int = 6) -> str:
@@ -232,17 +245,8 @@ def q03_top_revenue_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     # is attached, and the plan is byte-identical to the unhinted
     # bloom+shuffle shape. The decision derives from the scan relation's
     # statistics, not a constant tuned to this box.
-    li_proj = li.select("l_orderkey", "l_extendedprice", "l_discount")
-    try:
-        thr = int(spark.conf.get("spark.sql.autoBroadcastJoinThreshold"))
-    except ValueError:
-        thr = -1  # unit-suffixed or unset: leave the plan alone
-    if thr > 0:
-        li_est = int(
-            str(li_proj._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-        )
-        if li_est <= thr:
-            filtered_orders = filtered_orders.hint("broadcast")
+    if _fits_broadcast(spark, li.select("l_orderkey", "l_extendedprice", "l_discount")):
+        filtered_orders = filtered_orders.hint("broadcast")
     # Integer-cents revenue (derivation + canary at _DISC_PRICE_C4):
     # the group is ONE order, so the cents4 sum is structurally bounded
     # (an order would need ~8.5e6 lineitems to push the exact sum past
@@ -328,17 +332,8 @@ def q05_region_nation_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     # threshold (the same statistic the planner compares), pin dims as
     # the build side; at scale customer's estimate crosses the threshold,
     # no hint attaches, and AQE demotes exactly as before.
-    try:
-        thr = int(spark.conf.get("spark.sql.autoBroadcastJoinThreshold"))
-    except ValueError:
-        thr = -1
-    if thr > 0:
-        cust_proj = cust.select("c_custkey", "c_nationkey")
-        cust_est = int(
-            str(cust_proj._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-        )
-        if cust_est <= thr:
-            dims = dims.hint("broadcast")
+    if _fits_broadcast(spark, cust.select("c_custkey", "c_nationkey")):
+        dims = dims.hint("broadcast")
     # Final cross-order sum on compact buffers via the hi/lo split
     # (_csum_split block): the aggregation input here is one row per
     # ORDER (data-scaled — ~4e10 rows at 100 TB), so the wide

@@ -248,8 +248,7 @@ class DocFreqIndex:
         Only LEDGERED partitions fold: an unledgered partition is
         either a crashed batch's orphan (its retry will overwrite it in
         place — folding it first would bake its counts in and let the
-        retry double-count) or nothing. Run compaction on the same
-        cadence as maintenance.compact_parquet elsewhere."""
+        retry double-count) or nothing."""
         import shutil
 
         live = self._live_incr(spark)
