@@ -102,6 +102,31 @@ def test_running_decimal_prefix_matches_global_window(spark):
     assert e == g
 
 
+def test_running_decimal_prefix_nullable_values(spark):
+    """NULL values add nothing, as in the global window's SUM: a bucket
+    whose rows so far are all NULL carries the earlier buckets' total,
+    and the prefix is NULL only before the first non-NULL value."""
+    from pyspark.sql import Window
+
+    from travel_data_ingestion_spark.compat import running_decimal_prefix
+
+    # 128-day buckets from 1970-01-01: NULLs open bucket 0 (nothing
+    # before them), open bucket 1, fill bucket 2, and open bucket 3
+    days = {0: None, 1: None, 2: "1.25", 5: "2.50", 128: None, 129: None,
+            130: "4.00", 256: None, 257: None, 384: None, 390: "0.75"}
+    base = spark.createDataFrame(
+        [(d, v) for d, v in days.items()], "n int, v string"
+    ).selectExpr("date_add(DATE'1970-01-01', n) AS d", "CAST(v AS DECIMAL(38,2)) AS v")
+    w = Window.orderBy("d").rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    expected = base.select("d", F.sum("v").over(w).alias("run"))
+    got = running_decimal_prefix(base, "d", "v").select("d", F.col("__running").alias("run"))
+    assert got.schema == expected.schema
+    e = sorted(expected.collect())
+    assert e == sorted(got.collect())
+    # bucket 1's leading NULLs carry bucket 0's 3.75; bucket 0's are NULL
+    assert [str(r.run) for r in e[:2] + e[4:6]] == ["None", "None", "3.75", "3.75"]
+
+
 def test_t11_nll_micro_units_identity(spark):
     """The t11 envelope is derived, not data-pinned: nll = round(x, 6)
     is an exact 6-decimal non-negative value < 60, so

@@ -496,6 +496,48 @@ def test_ledger_append_keeps_one_file_and_heals_a_crashed_rewrite(tmp_path, monk
     assert len(files()) == 1 and ids() == [1, 2, 3, 4, 5]
 
 
+def test_reserve_gives_one_load_id_per_key_per_call(tmp_path):
+    """A key repeated within one call gets its first occurrence's id and
+    one RUNNING row, not a second id that would load the file again."""
+    wh = Warehouse(str(tmp_path / "wh"))
+    wh.init()
+    ids = ledger.reserve(wh, [
+        (1, "transactions_a.csv", "transactions"),
+        (2, "transactions_a.csv", "transactions"),
+        (1, "transactions_b.csv", "transactions"),
+    ])
+    assert ids == [1, 1, 2]
+    assert sorted((r.load_id, r.file_id, r.file_name, r.status)
+                  for r in ledger.read(wh, "ingestion_logs")) == [
+        (1, 1, "transactions_a.csv", "RUNNING"),
+        (2, 1, "transactions_b.csv", "RUNNING"),
+    ]
+
+
+def test_two_config_rows_matching_one_file_load_it_once(spark, tmp_path):
+    """Two datasets that target one table with patterns matching one
+    file: the first by config name ingests it, once, under one SUCCESS
+    row; the other dataset loads nothing."""
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    (landing / "transactions_a.csv").write_text(
+        "country,date,name,type,amount,comments\n"
+        "JP,2026-02-01,m1,Food,10.5,ok\nJP,2026-02-02,m2,Hotel,80,ok\n"
+    )
+    wh = Warehouse(str(tmp_path / "wh"))
+    wh.init()
+    config = {
+        "tx_all": FileDetail(1, str(landing), "transactions*.csv", "bronze", "transactions", "csv"),
+        "tx_a": FileDetail(2, str(landing), "transactions_a*.csv", "bronze", "transactions", "csv"),
+    }
+    loaded = ingest_all(spark, wh, config)
+    assert loaded == {"tx_a": [1], "tx_all": []}
+    assert [(r.load_id, r.file_id, r.status, r.rows_loaded)
+            for r in _ingestion_rows(spark, wh)] == [(1, 2, "SUCCESS", 2)]
+    assert wh.read(spark, "bronze", "transactions").count() == 2
+    assert ingest_all(spark, wh, config) == {"tx_a": [], "tx_all": []}
+
+
 def test_ledger_tie_prefers_terminal_status(spark, tmp_path):
     """RUNNING and SUCCESS rows with equal event_time: the terminal row is
     the latest, whichever was appended first, so the file is done."""

@@ -124,3 +124,29 @@ def test_default_driver_memory_is_half_of_ram_up_to_48g():
     assert default_driver_memory(512 * gib) == "49152m"
     here = int(default_driver_memory().removesuffix("m"))
     assert 0 < here <= 48 << 10
+
+
+def test_jit_policy_in_effect_on_the_jvm(spark):
+    """get_spark launches its JVM with the tier-4 (C2) thresholds at 10x
+    HotSpot's defaults. Read back from the running JVM, not from the
+    conf string: a flag that never reached the launcher reads as the
+    default here. The executor option carries the same policy."""
+    from travel_data_ingestion_spark.session import JIT_OPTIONS
+
+    jvm = spark.sparkContext._jvm
+    bean = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
+        jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean")
+    )
+    want = {
+        "Tier4InvocationThreshold": "50000",
+        "Tier4MinInvocationThreshold": "6000",
+        "Tier4CompileThreshold": "150000",
+        "Tier4BackEdgeThreshold": "400000",
+    }
+    got = {name: bean.getVMOption(name).getValue() for name in want}
+    assert got == want
+    flags = {f"-XX:{k}={v}" for k, v in want.items()}
+    assert set(JIT_OPTIONS.split()) == flags
+    conf = spark.sparkContext.getConf()
+    for key in ("spark.driver.defaultJavaOptions", "spark.executor.defaultJavaOptions"):
+        assert flags <= set(conf.get(key, "").split()), key

@@ -224,8 +224,9 @@ def test_stream_replay_after_lost_commit_is_skipped(spark, tmp_path):
 
 def test_stream_crash_inside_epoch_reuses_running_id(spark, tmp_path, monkeypatch):
     """A crash right after an epoch's bronze commit, before its SUCCESS
-    row: the re-run replays the epoch under the RUNNING row's id and
-    overwrites the committed partition, so every row lands once."""
+    row: the epoch records a FAILURE row with the error, and the re-run
+    replays it under that row's id and overwrites the committed
+    partition, so every row lands once."""
     from travel_data_ingestion_spark.ingest import read_csv
 
     landing = str(tmp_path / "landing")
@@ -242,14 +243,17 @@ def test_stream_crash_inside_epoch_reuses_running_id(spark, tmp_path, monkeypatc
     with pytest.raises(Exception, match="crash after the bronze commit"):
         stream_ingest_csv(spark, wh, landing, "transactions", "transactions*.csv")
     monkeypatch.undo()
-    running = _stream_ids(wh, "RUNNING")
-    assert len(running) == 1 and not _stream_ids(wh)
+    failed = _stream_ids(wh, "FAILURE")
+    assert len(failed) == 1 and not _stream_ids(wh) and not _stream_ids(wh, "RUNNING")
+    (error,) = [r.error_message for r in ledger.read(wh, "ingestion_logs")
+                if r.status == "FAILURE"]
+    assert error == "crash after the bronze commit"
 
     stream_ingest_csv(spark, wh, landing, "transactions", "transactions*.csv")
-    assert _stream_ids(wh) == running
+    assert _stream_ids(wh) == failed
     bronze = wh.read(spark, "bronze", "transactions")
     assert {r.load_id for r in bronze.select("load_id").distinct().collect()} == set(
-        running.values()
+        failed.values()
     )
     cols = ["country", "date", "name", "type", "amount", "comments"]
     landed = read_csv(spark.read, "transactions", os.path.join(landing, "transactions*.csv"))

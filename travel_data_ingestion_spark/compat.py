@@ -318,8 +318,12 @@ def running_decimal_prefix(
     # both branches stay identical and runtime stage reuse kicks in.
     offs = offs.withColumnRenamed("__b", "__ob")
     joined = din.join(F.broadcast(offs), F.col("__b").eqNullSafe(F.col("__ob")))
-    running = F.when(F.col("__off").isNull(), F.col("__run_in")).otherwise(
-        F.col("__off") + F.col("__run_in")
+    # a NULL side adds nothing, as in SUM: a bucket whose prefix so far
+    # is all NULL carries the earlier buckets' total; NULL only when both are
+    running = (
+        F.when(F.col("__off").isNull(), F.col("__run_in"))
+        .when(F.col("__run_in").isNull(), F.col("__off"))
+        .otherwise(F.col("__off") + F.col("__run_in"))
     )
     rn = (F.coalesce(F.col("__offn"), F.lit(0)) + F.col("__rn_in")).cast("bigint")
     return (

@@ -181,8 +181,11 @@ def ingest_file(
 def ingest_all(spark: SparkSession, wh: Warehouse, config: dict[str, FileDetail]) -> dict[str, list[int]]:
     """Dynamic task-per-dataset loop (K-01, dynamic_ingestion_dag.py:18-26).
 
-    Exactly-once is per (file, dataset): two datasets with overlapping
-    glob patterns each ingest the file into their own bronze table.
+    Exactly-once is per (target table, file name), the ingestion
+    ledger's key: two datasets with overlapping glob patterns each ingest
+    the file into their own bronze table, and when two datasets target
+    one table and both match a file, the first by config name ingests it
+    (later runs find its ledger row, so the rule holds across runs too).
     Per-file error isolation: a failing file logs FAILURE and is skipped
     (ON_ERROR='SKIP_FILE', ingestion_logic.py:157-182). Returns each
     dataset's SUCCESS load_ids.
@@ -195,7 +198,11 @@ def ingest_all(spark: SparkSession, wh: Warehouse, config: dict[str, FileDetail]
     ids = ledger.reserve(
         wh, [(d.file_id, os.path.basename(p), d.target_table) for _, d, p in found]
     )
-    work = [(*f, load_id) for f, load_id in zip(found, ids) if load_id is not None]
+    # a key found twice got one id: only its first entry loads
+    work: dict[int, tuple[str, FileDetail, str]] = {}
+    for f, load_id in zip(found, ids):
+        if load_id is not None:
+            work.setdefault(load_id, f)
 
     def entry(detail, path, load_id, status, rows=None, error=None):
         return (load_id, detail.file_id, os.path.basename(path), detail.target_table,
@@ -203,7 +210,7 @@ def ingest_all(spark: SparkSession, wh: Warehouse, config: dict[str, FileDetail]
 
     loaded: dict[str, list[int]] = {name: [] for name in sorted(config)}
     terminal = []
-    for name, detail, path, load_id in work:
+    for load_id, (name, detail, path) in work.items():
         try:
             rows = ingest_file(spark, wh, detail, path, load_id)
         except Exception as exc:  # noqa: BLE001 - per-file isolation

@@ -89,8 +89,9 @@ def reserve(wh: Warehouse, loads: list[tuple[int | None, str, str]]) -> list[int
     done (None); a key whose latest row is RUNNING (a crashed run) or
     FAILURE keeps that row's load_id, so its retry overwrites whatever
     partition the earlier attempt committed; a new key takes the next
-    free id. One RUNNING append then records every id handed out, before
-    any data is written under it."""
+    free id. A key repeated within one call gets its first occurrence's
+    id and no second RUNNING row. One RUNNING append then records every
+    id handed out, before any data is written under it."""
     snap = snapshot(wh, "ingestion_logs", latest_only=True)
     done = {(r.target_table, r.file_name) for r in snap.rows if r.status == "SUCCESS"}
     # a crashed run's reservation or a failed load (the highest, if there
@@ -101,21 +102,20 @@ def reserve(wh: Warehouse, loads: list[tuple[int | None, str, str]]) -> list[int
         if r.status != "SUCCESS"
     }
     next_id = snap.next_id
-    ids: list[int | None] = []
-    for _, file_name, table in loads:
+    # the id each key gets in this call: a repeated key keeps its first
+    given: dict[tuple[str, str], int] = {}
+    running = []
+    for file_id, file_name, table in loads:
         key = (table, file_name)
-        load_id = None
-        if key not in done:
-            load_id = reserved.get(key)
-            if load_id is None:
-                load_id, next_id = next_id, next_id + 1
-        ids.append(load_id)
-    append(wh, "ingestion_logs", [
-        (i, file_id, file_name, table, "RUNNING", None, None)
-        for i, (file_id, file_name, table) in zip(ids, loads)
-        if i is not None
-    ])
-    return ids
+        if key in done or key in given:
+            continue
+        load_id = reserved.get(key)
+        if load_id is None:
+            load_id, next_id = next_id, next_id + 1
+        given[key] = load_id
+        running.append((load_id, file_id, file_name, table, "RUNNING", None, None))
+    append(wh, "ingestion_logs", running)
+    return [given.get((table, file_name)) for _, file_name, table in loads]
 
 
 def append(wh: Warehouse, table: str, rows: list[tuple]) -> None:

@@ -18,10 +18,11 @@ allocator. The query id is the checkpoint's persistent id, and a
 replayed micro-batch keeps its epoch id and its input files (Armbrust et
 al., SIGMOD 2018), so a replayed epoch finds its own ledger rows: after
 a SUCCESS row it is skipped (its partition committed before that row
-was written); after a RUNNING row it rewrites its partition under the
-reserved id. A recreated checkpoint has a new query id, so its epochs
-are new loads with fresh ids rather than matches for the old epochs'
-rows. Single-driver contract, same as the warehouse's other ledgers.
+was written); after a RUNNING or FAILURE row it rewrites its partition
+under the reserved id. An epoch whose bronze write raises records a
+FAILURE row with the error, then fails the query. A recreated
+checkpoint has a new query id, so its epochs are new loads with fresh
+ids rather than matches for the old epochs' rows. Single-driver contract, same as the warehouse's other ledgers.
 
 At scale this is the preferred ingestion mode: file discovery is
 incremental (no full LIST per run), and maxFilesPerTrigger bounds batch
@@ -77,7 +78,14 @@ def stream_ingest_csv(
         out = with_lineage(df, F.element_at(F.split(F.input_file_name(), "/"), -1), eid)
         # dynamic partition overwrite on load_id: a replayed epoch
         # rewrites exactly its own partition — no dupes
-        rows = wh.write_idempotent(s, out, "bronze", target_table)
+        try:
+            rows = wh.write_idempotent(s, out, "bronze", target_table)
+        except Exception as exc:
+            # logged the way the batch ingest logs a failed file; the
+            # replay keeps this id and rewrites the same partition
+            ledger.append(wh, "ingestion_logs",
+                          [(eid, None, name, target_table, "FAILURE", None, str(exc)[:2000])])
+            raise
         ledger.append(wh, "ingestion_logs",
                       [(eid, None, name, target_table, "SUCCESS", rows, None)])
 
