@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from travel_data_ingestion_spark.compat import (
+    ascii_upper,
     listagg,
     qualify_dedup_latest,
     qualify_latest_batch,
@@ -93,3 +94,14 @@ def test_listagg_all_null_group_is_null(spark):
         for r in df.groupBy("g").agg(listagg("v").alias("agg")).collect()
     }
     assert got == {"a": "x", "b": None}
+
+
+def test_ascii_upper_matches_upper(spark):
+    """ASCII and NULL values take the translate path; every other value
+    goes to ICU's upper, which can change the length ('ß' -> 'SS')."""
+    values = ["Hotel", " food ", "ACTIVITY", "mIxEd_case-9", "", None,
+              "ß", "ı", "ﬅ", "straße", "İstanbul"]
+    df = spark.createDataFrame([(v,) for v in values], "v string")
+    got = df.select("v", ascii_upper("v").alias("a"), F.upper("v").alias("u")).collect()
+    assert [r.a for r in got] == [r.u for r in got]
+    assert {r.v: r.a for r in got}["straße"] == "STRASSE"

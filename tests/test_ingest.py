@@ -655,9 +655,11 @@ def _data_files(root):
 def test_ledger_jobs_are_fixed_per_run(spark, tmp_path, slice_landing):
     """A first ingest_all costs at most 1 Spark job per landing file (its
     bronze write; the ledger is read and written on the driver), and a
-    no-op re-run of ingest_all + run_silver runs no Spark job and writes
-    nothing. Silver's rows_written is the batch total: every silver row
-    of the dataset's output tables carrying the batch's load_ids."""
+    no-op re-run of ingest_all + run_silver + the gold build runs no
+    Spark job and writes nothing. Silver's rows_written is the batch
+    total: every silver row of the dataset's output tables carrying the
+    batch's load_ids."""
+    from travel_data_ingestion_spark.gold import build_full_travel_cost
     from travel_data_ingestion_spark.silver import run_silver
     from travel_data_ingestion_spark.silver.runner import SILVER_TRANSFORMS
 
@@ -667,10 +669,12 @@ def test_ledger_jobs_are_fixed_per_run(spark, tmp_path, slice_landing):
     jobs = _count_jobs(spark, "ledger_first_ingest", lambda: ingest_all(spark, wh, cfg))
     assert jobs <= n_files, jobs
     run_silver(spark, wh, datasets=list(SLICE))
+    build_full_travel_cost(spark, wh)
 
     before = _data_files(wh.root)
     jobs = _count_jobs(spark, "ledger_noop_rerun", lambda: (
-        ingest_all(spark, wh, cfg), run_silver(spark, wh, datasets=list(SLICE))))
+        ingest_all(spark, wh, cfg), run_silver(spark, wh, datasets=list(SLICE)),
+        build_full_travel_cost(spark, wh)))
     assert jobs == 0, jobs
     assert _data_files(wh.root) == before
 

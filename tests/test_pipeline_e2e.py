@@ -282,6 +282,58 @@ def test_transport_mode_and_summary(spark, pipeline_wh):
     assert len(doc["timeline_segments"]) == 2  # one visit + one activity
 
 
+def test_footer_schemas_equal_spark_inference(spark, pipeline_wh):
+    """Warehouse.read takes an unregistered table's schema from a footer:
+    it must be exactly what Spark's inference gives, for every silver and
+    gold table of the pipeline."""
+    wh = pipeline_wh
+    for schema in ("silver", "gold"):
+        for table in sorted(os.listdir(wh.path(schema, ""))):
+            inferred = spark.read.parquet(wh.path(schema, table)).schema
+            assert wh.read(spark, schema, table).schema == inferred, (schema, table)
+
+
+# a fresh Python and JVM: builds every gold report, prints its job count
+_FRESH_GOLD = """
+import sys
+from travel_data_ingestion_spark.catalog import Warehouse
+from travel_data_ingestion_spark.gold import build_all_gold
+from travel_data_ingestion_spark.session import get_spark
+
+spark = get_spark(app_name="fresh_gold")
+sc = spark.sparkContext
+sc.setJobGroup("gold", "gold")
+build_all_gold(spark, Warehouse(sys.argv[1]))
+sc._jsc.sc().listenerBus().waitUntilEmpty(30000)
+print(len(sc.statusTracker().getJobIdsForGroup("gold")))
+spark.stop()
+"""
+
+
+def test_fresh_process_skips_unchanged_gold(spark, pipeline_wh):
+    """The build key holds across processes: after this process builds
+    gold, a new Python+JVM over the same warehouse runs no Spark job for
+    any of the three reports and leaves their files as they were."""
+    import subprocess
+    import sys
+
+    from travel_data_ingestion_spark.gold import build_all_gold
+
+    def gold_files():
+        return {os.path.join(d, f): os.path.getmtime(os.path.join(d, f))
+                for d, _, fs in os.walk(pipeline_wh.path("gold", "")) for f in fs}
+
+    build_all_gold(spark, pipeline_wh)
+    before = gold_files()
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {**os.environ, "PYTHONPATH": repo, "SPARK_DRIVER_MEMORY": "1g"}
+    out = subprocess.run([sys.executable, "-c", _FRESH_GOLD, pipeline_wh.root], cwd=repo,
+                         env=env, capture_output=True, text=True, timeout=600)
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert out.stdout.split()[-1] == "0", out.stdout
+    assert gold_files() == before
+
+
 def test_interleaved_disjoint_writers_keep_ledger_consistent(spark, pipeline_wh):
     """Two 'drivers' with STALE batch selections writing DISJOINT
     load_ids of the same dataset (the interleave the single-driver

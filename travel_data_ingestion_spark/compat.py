@@ -96,6 +96,21 @@ def zeroifnull(col: Column | str) -> Column:
     return F.coalesce(c, F.lit(0))
 
 
+_LOWER = "abcdefghijklmnopqrstuvwxyz"
+
+
+def ascii_upper(col: Column | str) -> Column:
+    """``F.upper``'s values, with ASCII and NULL values folded by
+    ``translate``. Spark's ICU-backed ``upper`` builds a case table over
+    every code point on its first call in a JVM (seconds of CPU); ICU's
+    upper of an ASCII string is exactly a-z -> A-Z, so only a value with
+    a non-ASCII character (more bytes than characters) goes to ICU."""
+    c = F.col(col) if isinstance(col, str) else col
+    return F.when(
+        c.isNull() | (F.octet_length(c) == F.length(c)), F.translate(c, _LOWER, _LOWER.upper())
+    ).otherwise(F.upper(c))
+
+
 def qualify_latest_batch(df: DataFrame, partition_by: Sequence[str], batch_col: str = "load_id") -> DataFrame:
     """QUALIFY LOAD_ID = MAX(LOAD_ID) OVER (PARTITION BY ...).
 

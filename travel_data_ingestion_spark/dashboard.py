@@ -15,7 +15,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from travel_data_ingestion_spark.catalog import Warehouse
-from travel_data_ingestion_spark.compat import try_to_date
+from travel_data_ingestion_spark.compat import ascii_upper, try_to_date
 from travel_data_ingestion_spark.silver import read_current
 
 
@@ -42,7 +42,7 @@ def bearing(lat1: Column, lon1: Column, lat2: Column, lon2: Column) -> Column:
 def activity_color(activity: Column) -> Column:
     """Activity -> RGBA array (reference travel_and_movement_map.py:41-52,
     I-04). when() chain over array literals."""
-    a = F.upper(activity.cast("string"))
+    a = ascii_upper(activity.cast("string"))
 
     def rgba(r: int, g: int, b: int, al: int) -> Column:
         return F.array(F.lit(r), F.lit(g), F.lit(b), F.lit(al))

@@ -12,7 +12,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from travel_data_ingestion_spark.catalog import Warehouse
-from travel_data_ingestion_spark.compat import listagg, try_to_date
+from travel_data_ingestion_spark.compat import ascii_upper, listagg, try_to_date
 from travel_data_ingestion_spark.silver import read_current
 
 
@@ -22,7 +22,7 @@ def full_travel_cost_df(spending: DataFrame, logs: DataFrame) -> DataFrame:
     (:14-24) keep the newest re-upload of each spending file and one
     itinerary row per date."""
     # 3. Pivot spending by category + ordered comment aggregation (:27-43).
-    cat = F.upper(F.trim(F.col("type")))
+    cat = ascii_upper(F.trim(F.col("type")))
 
     def cost(name: str) -> F.Column:
         return F.sum(F.when(cat == name, F.col("amount")).otherwise(0)).alias(
