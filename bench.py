@@ -18,7 +18,6 @@ steady-state throughput.
 
 from __future__ import annotations
 
-import hashlib
 import json
 import os
 import re
@@ -54,109 +53,6 @@ BENCH_QUERIES = [
 # minimum of 5 runs is the steady-state number.
 N_RUNS = 5
 
-# VM-speed idle references (BASELINE.md round-5 addendum protocol):
-# the md5 chain tracks single-core CPU speed, the matmul tracks the
-# memory bandwidth shuffles bind on. Measured on the round-6 idle VM —
-# the same hardware state the 4.0842 s canonical per-query baseline was
-# confirmed on. The benchmark VM is re-provisioned every round with an
-# uncontrolled CPU (observed 20-40% drift WITHIN one session, r10), so
-# raw totals are only comparable after dividing out the ratio
-# md5_calib / MD5_IDLE_REF. value_calibrated in the emitted JSON does
-# exactly that; BASELINE.md records the rule.
-MD5_IDLE_REF = 0.127
-MATMUL_IDLE_REF = 0.201
-
-
-def microbench_md5() -> float:
-    """200k-iteration chained md5 of a 1 KiB block (single-core CPU probe)."""
-    h = b"x" * 1024
-    t0 = time.perf_counter()
-    for _ in range(200_000):
-        h = hashlib.md5(h).digest()
-    return time.perf_counter() - t0
-
-
-def microbench_matmul() -> float:
-    """2000x2000 float64 matmul (memory-bandwidth probe)."""
-    import numpy as np
-
-    rng = np.random.default_rng(0)
-    a = rng.random((2000, 2000))
-    t0 = time.perf_counter()
-    (a @ a).sum()
-    return time.perf_counter() - t0
-
-
-def measure_calibration(samples: int = 3) -> dict:
-    """Min-of-N microbench pair, same semantics as the query timings
-    (the minimum is the least-contended moment, i.e. the VM's actual
-    speed class rather than transient load)."""
-    md5s = [microbench_md5() for _ in range(samples)]
-    mms = [microbench_matmul() for _ in range(samples)]
-    return {
-        "md5": round(min(md5s), 4),
-        "matmul": round(min(mms), 4),
-        "md5_samples": [round(x, 4) for x in md5s],
-        "matmul_samples": [round(x, 4) for x in mms],
-    }
-
-
-# Pinned reference Spark job for cross-VM calibration: the md5/matmul
-# probes measure single-core burst / BLAS bandwidth, which round 11
-# showed do NOT predict Spark local[32] throughput across VM classes
-# (r11 VM: md5 0.081 = 1.57x faster than the r6 idle ref, yet bench
-# total identical to r10's md5-0.16..0.22 VM — Spark's floor is task
-# scheduling + shuffle + codegen, not single-core clock). This job IS
-# that stack: in-JVM range source (no IO, no data dependence), a
-# modular projection through whole-stage codegen, one hash shuffle,
-# and a checksum reduce — byte-identical every round by construction.
-# The probe is 64M rows (~0.6 s hot) so fixed per-job overheads (task
-# scheduling, JIT warmth — measured swinging a 0.3 s variant 0.24-0.41
-# within one session) amortize away, and its samples are INTERLEAVED
-# between the query blocks (see run_bench) so min-of-9 samples the
-# same load window the query minima do (consecutive end-of-run
-# sampling swung 0.41 vs 0.64 across two otherwise-identical runs).
-# SPARK_CALIB_REF is the bench-context FLOOR on the round-11 VM
-# (min-semantics, like every other number in this harness: observed
-# mins 0.41-0.54 across runs as machine load varied), pinned alongside
-# that round's raw bench totals (5.3-7.0 s) so later rounds can compare
-# value * SPARK_CALIB_REF / spark_calib against round 11's number
-# directly (BASELINE.md round-11 addendum). Caveat recorded there:
-# the probe deliberately excludes IO, so it tracks the compute class,
-# not parquet-scan throughput — treat it as the secondary signal
-# behind the md5-clamped value_calibrated and per-query ratios.
-SPARK_CALIB_REF = 0.41
-
-
-def microbench_spark(spark) -> float:
-    """One timed run of the pinned reference job (call min-of-N)."""
-    t0 = time.perf_counter()
-    (
-        spark.range(0, 64_000_000, 1, 64)
-        .select(
-            (F.col("id") % 9973).alias("k"),
-            (F.col("id") * 2654435761 % 1000003).alias("v"),
-        )
-        .groupBy("k")
-        .agg(F.sum("v").alias("s"))
-        .agg(F.sum(F.xxhash64("k", "s")).alias("checksum"))
-        .collect()
-    )
-    return time.perf_counter() - t0
-
-
-def measure_spark_calibration(spark, samples: int = 5) -> dict:
-    # two warmups: the first compiles codegen, the second lets the JIT
-    # finish profiling the generated loops (measured: a single warmup
-    # leaves the first timed samples 10-20% slow)
-    microbench_spark(spark)
-    microbench_spark(spark)
-    runs = [microbench_spark(spark) for _ in range(samples)]
-    return {
-        "spark": round(min(runs), 4),
-        "spark_samples": [round(x, 4) for x in runs],
-    }
-
 
 def checksum_plan(df: DataFrame) -> DataFrame:
     """Non-prunable materialization: hash every column of every row.
@@ -181,18 +77,9 @@ def run_bench(spark, specs, sf_dir: str, queries=None, n_runs: int = N_RUNS) -> 
     names = list(queries or BENCH_QUERIES)
     errors: dict[str, str] = {}
 
-    # VM-speed calibration BEFORE the warmup (and again after the timed
-    # pass below): the drift the calibration exists to catch happens
-    # within a single session, so both endpoints are recorded and the
-    # faster one (min) is the VM's speed class for this run.
-    calib_pre = measure_calibration()
-
     # warmup pass: JVM spin-up, whole-stage codegen compilation, parquet
     # footer reads — one run of every query so the timed pass measures
-    # steady-state throughput, not one-time compilation. The reference
-    # probe warms here too (its codegen + JIT profiling).
-    microbench_spark(spark)
-    microbench_spark(spark)
+    # steady-state throughput, not one-time compilation.
     for name in names:
         try:
             materialize(specs[name].fn(spark, sf_dir))
@@ -212,16 +99,7 @@ def run_bench(spark, specs, sf_dir: str, queries=None, n_runs: int = N_RUNS) -> 
     # reads ~25% slower on identical hardware because every sample then
     # includes the other queries' cleanup churn — back-to-back min-of-N
     # is the steady-state number BASELINE.md was measured with.)
-    # The reference-probe samples are INTERLEAVED between the query
-    # blocks (one per block) rather than taken consecutively at the
-    # end: the probe is a pure-CPU burst whose consecutive samples all
-    # land in whatever machine state one instant has (two back-to-back
-    # bench runs measured 0.41 vs 0.64 while the bench total itself
-    # was stable at 5.5) — spreading the samples across the same
-    # minute the queries are timed in makes min-of-9 sample the same
-    # load window the query minima do.
     timings: dict[str, float] = {}
-    spark_probe_samples: list[float] = []
     for name in names:
         if name in errors:
             continue
@@ -235,54 +113,14 @@ def run_bench(spark, specs, sf_dir: str, queries=None, n_runs: int = N_RUNS) -> 
             timings[name] = round(best, 4)
         except Exception as e:  # noqa: BLE001
             errors[name] = f"{type(e).__name__}: {e}"[:500]
-        spark_probe_samples.append(round(microbench_spark(spark), 4))
 
-    total = round(sum(timings.values()), 4)
     m = re.search(r"sf([\d.]+)", sf_dir)
-    sf = float(m.group(1)) if m else None
-
-    calib_post = measure_calibration()
-    spark_calib = {
-        "spark": min(spark_probe_samples) if spark_probe_samples else None,
-        "spark_samples": spark_probe_samples,
-    }
-    md5_calib = min(calib_pre["md5"], calib_post["md5"])
     out = {
         "metric": "bench_total_9q",
-        "value": total,
+        "value": round(sum(timings.values()), 4),
         "unit": "sec",
         "queries": timings,
-        "sf": sf,
-        # Self-calibration (BASELINE.md round-5/round-11 addenda, made
-        # machine-readable in round 11). value_calibrated divides out a
-        # SLOW-VM multiplier only: max(md5_calib, idle_ref) in the
-        # denominator clamps the correction at 1 when the VM's
-        # single-core probe is FASTER than the idle reference, because
-        # fast single-core does not make Spark local[32] faster (r11
-        # evidence: md5 0.081 vs ref 0.127, bench total unchanged vs
-        # r10's md5-0.16 VM — the floor is scheduling/shuffle, not
-        # clock). The symmetric cross-VM probe is spark_calib (the
-        # pinned reference job, same stack as the measured queries);
-        # compare value * spark_calib_ref / spark_calib across rounds.
-        "md5_calib": md5_calib,
-        "idle_ref": MD5_IDLE_REF,
-        "value_calibrated": round(
-            total * MD5_IDLE_REF / max(md5_calib, MD5_IDLE_REF), 4
-        ),
-        "spark_calib": spark_calib["spark"],
-        "spark_calib_ref": SPARK_CALIB_REF,
-        "value_spark_calibrated": (
-            round(total * SPARK_CALIB_REF / spark_calib["spark"], 4)
-            if spark_calib["spark"]
-            else None
-        ),
-        "calib": {
-            "pre": calib_pre,
-            "post": calib_post,
-            "spark_samples": spark_calib["spark_samples"],
-            "md5_idle_ref": MD5_IDLE_REF,
-            "matmul_idle_ref": MATMUL_IDLE_REF,
-        },
+        "sf": float(m.group(1)) if m else None,
     }
     if errors:
         out["errors"] = errors

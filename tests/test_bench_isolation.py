@@ -39,6 +39,7 @@ def test_broken_query_yields_partial_timings(spark):
     assert "zz_broken" in out["errors"]
     assert "deliberately broken" in out["errors"]["zz_broken"]
     assert out["value"] == round(sum(out["queries"].values()), 4)
+    assert set(out) == {"metric", "value", "unit", "queries", "sf", "errors"}
     json.dumps(out)  # payload must remain one serializable JSON object
 
 
@@ -46,74 +47,5 @@ def test_all_healthy_has_no_errors_key(spark):
     specs = member_queries()
     out = run_bench(spark, specs, SF_DIR, queries=["b01_project_filter"], n_runs=1)
     assert "errors" not in out
+    assert set(out) == {"metric", "value", "unit", "queries", "sf"}
     assert set(out["queries"]) == {"b01_project_filter"}
-
-
-def test_bench_json_is_self_calibrating(spark):
-    """Round-11 contract: every BENCH_r{N}.json carries its own VM-speed
-    calibration so the 2x bar survives cross-round hardware drift
-    (r10's byte-identical code read 5.24-6.7 s depending on VM state).
-    The normalization rule is value_calibrated = value * idle_ref /
-    md5_calib; BASELINE.md round-11 addendum records it."""
-    from bench import MD5_IDLE_REF, SPARK_CALIB_REF
-
-    specs = member_queries()
-    out = run_bench(spark, specs, SF_DIR, queries=["b01_project_filter"], n_runs=1)
-    assert out["idle_ref"] == MD5_IDLE_REF
-    assert out["md5_calib"] > 0
-    # min-of-samples from both endpoints of the run
-    c = out["calib"]
-    assert out["md5_calib"] == min(c["pre"]["md5"], c["post"]["md5"])
-    assert c["pre"]["md5"] == min(c["pre"]["md5_samples"])
-    assert c["pre"]["matmul"] == min(c["pre"]["matmul_samples"])
-    # md5 correction is clamped: it divides out a slow VM but never
-    # inflates a fast-single-core one (r11: fast md5, unchanged bench)
-    expected = round(
-        out["value"] * MD5_IDLE_REF / max(out["md5_calib"], MD5_IDLE_REF), 4
-    )
-    assert out["value_calibrated"] == expected
-    assert out["value_calibrated"] <= out["value"] + 1e-9
-    # the symmetric probe runs the measured stack itself
-    assert out["spark_calib"] == min(c["spark_samples"])
-    assert out["spark_calib_ref"] == SPARK_CALIB_REF
-    expected_s = round(out["value"] * SPARK_CALIB_REF / out["spark_calib"], 4)
-    assert out["value_spark_calibrated"] == expected_s
-    json.dumps(out)  # stays one serializable JSON object
-
-
-def test_bar_number_is_the_md5_clamped_form():
-    """Which field IS the 2x bar must not silently flip: BASELINE.md's
-    normalization rule names `value_calibrated` (the clamped md5 form,
-    recomputable from the emitted md5_calib/idle_ref) as the number
-    judged against the canonical 4.0842 s, and keeps
-    `value_spark_calibrated` a DIAGNOSTIC cross-check — its probe's
-    own cross-run noise band is +/-25% (round-11 addendum), too wide to
-    decide a 2x bar. Pin both the prose rule and the recomputability
-    of the bar field from the last emitted BENCH JSON, if one exists."""
-    import os
-    import re
-
-    base = os.path.join(os.path.dirname(__file__), "..", "BASELINE.md")
-    with open(base) as f:
-        text = f.read()
-    m = re.search(r"\*\*Normalization rule for judging the 2. bar:\*\*.*?(?=\n\n|\Z)",
-                  text, re.S)
-    assert m, "BASELINE.md lost its normalization-rule paragraph"
-    rule = m.group(0)
-    assert "value_calibrated" in rule.split("cross-check")[0]
-    assert "value_spark_calibrated" in rule.split("cross-check", 1)[1]
-    # the bar field must be recomputable from its own JSON: check every
-    # committed BENCH_r*.json from round 11 on (earlier rounds predate
-    # the self-calibrating contract)
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    for name in sorted(os.listdir(repo)):
-        mm = re.match(r"BENCH_r(\d+)\.json$", name)
-        if not mm or int(mm.group(1)) < 11:
-            continue
-        with open(os.path.join(repo, name)) as f:
-            d = json.load(f)
-        d = d.get("parsed", d)  # driver wraps the JSON line in metadata
-        expected = round(
-            d["value"] * d["idle_ref"] / max(d["md5_calib"], d["idle_ref"]), 4
-        )
-        assert d["value_calibrated"] == expected, name

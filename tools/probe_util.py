@@ -1,9 +1,7 @@
 """Shared probe instrumentation: plan fingerprints + GC counters.
 
-Used by scale_probe.py (density/ISO tiers) and tools/lc_bench.py (the
-arbitered LC bench) so the two evidence protocols cannot drift. Kept
-import-light: importing this module must never parse argv or start a
-session (tools/lc_bench.py children import it under their own argv).
+Used by scale_probe.py (density/ISO tiers). Kept import-light:
+importing this module must never parse argv or start a session.
 """
 
 from __future__ import annotations

@@ -21,7 +21,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import BENCH_QUERIES, checksum_plan, microbench_spark  # noqa: E402
+from bench import BENCH_QUERIES, checksum_plan  # noqa: E402
 
 
 def profile_query(spark, spec, sf_dir, n_runs=5):
@@ -66,8 +66,6 @@ def main():
     names = sys.argv[1:] or BENCH_QUERIES
 
     # global warmup, same as bench.py
-    microbench_spark(spark)
-    microbench_spark(spark)
     for n in names:
         checksum_plan(specs[n].fn(spark, sf_dir)).collect()
 

@@ -159,8 +159,8 @@ def get_spark(
         builder = builder.master(master)
     elif os.environ.get("SPARK_MASTER"):
         # explicit override (e.g. SPARK_MASTER=local-cluster[4,8,6144]
-        # for the multi-JVM evidence tier — tools/lc_bench.py,
-        # tools/lc_check.py, SCALE.md §9)
+        # for the multi-JVM correctness tier — tools/lc_check.py,
+        # SCALE.md §9)
         builder = builder.master(os.environ["SPARK_MASTER"])
     else:
         builder = builder.master(f"local[{cores}]")
