@@ -1,5 +1,7 @@
-"""Warehouse catalog: footer schemas of unregistered tables, and the build
-key that makes an unchanged gold replace a no-op."""
+"""Warehouse catalog: footer schemas of unregistered tables, the build
+key that makes an unchanged gold replace a no-op, write counts from the
+new files' footers, and the spending read that skips the latest-batch
+window when no row can fall to it."""
 
 from __future__ import annotations
 
@@ -20,8 +22,9 @@ from tests.test_ingest import (  # noqa: F401 (slice_landing is a fixture)
     _slice_wh,
     slice_landing,
 )
-from travel_data_ingestion_spark import catalog
+from travel_data_ingestion_spark import catalog, ledger
 from travel_data_ingestion_spark.catalog import BUILD_KEY, Warehouse
+from travel_data_ingestion_spark.compat import qualify_latest_batch
 from travel_data_ingestion_spark.gold import build_full_travel_cost
 from travel_data_ingestion_spark.silver import read_current, run_silver
 
@@ -66,7 +69,7 @@ def test_footer_schema_equals_spark_inference_without_a_job(spark, built):
     Spark job."""
     wh = built[0]
     empty = spark.createDataFrame([], "a int, b string, ts timestamp, load_id long")
-    assert wh.write_idempotent(spark, empty, "silver", "probe") == 0
+    assert wh.write_idempotent(spark, empty, "silver", "probe") == {}
     tables = [(s, t) for s in ("silver", "gold") for t in sorted(os.listdir(wh.path(s, "")))]
     assert ("silver", "probe") in tables and GOLD in tables
     for schema, table in tables:
@@ -164,3 +167,104 @@ def test_different_query_over_the_same_inputs_rewrites(spark, built):
         assert _rewritten(spark, wh, lambda: wh.overwrite(spark, df, *GOLD))
     assert wh.read(spark, *GOLD).columns == ["date", "cost"]
     assert not _rewritten(spark, wh, lambda: wh.overwrite(spark, variants[-1], *GOLD))
+
+
+# --------------------------------------------------------------------------
+# write counts from the new files' footers
+
+
+def _probe(spark, rows):
+    return spark.createDataFrame(rows, "a int, load_id long")
+
+
+def test_write_counts_only_the_partitions_it_wrote(spark, tmp_path):
+    """The count is ``{load_id: rows}`` of this write's partitions: an
+    untouched partition beside them is never counted, a rewritten
+    partition counts only its new rows, and an empty write returns {}
+    (a new silver table still gets its load_id=0 footer)."""
+    wh = Warehouse(str(tmp_path / "wh"))
+    wh.init()
+    assert wh.write_idempotent(spark, _probe(spark, [(9, 3)] * 4), "silver", "t") == {3: 4}
+    both = _probe(spark, [(1, 1)] * 2 + [(2, 2)] * 5)
+    assert wh.write_idempotent(spark, both.repartition(3), "silver", "t") == {1: 2, 2: 5}
+    assert wh.write_idempotent(spark, _probe(spark, [(2, 2)] * 3), "silver", "t") == {2: 3}
+    got = wh.read(spark, "silver", "t").groupBy("load_id").count().collect()
+    assert {r.load_id: r["count"] for r in got} == {1: 2, 2: 3, 3: 4}
+    assert sorted(wh.partitions("silver", "t")) == [1, 2, 3]
+
+    empty = _probe(spark, [])
+    assert wh.write_idempotent(spark, empty, "silver", "t") == {}
+    assert sorted(wh.partitions("silver", "t")) == [1, 2, 3]
+    assert wh.write_idempotent(spark, empty, "silver", "fresh") == {}
+    assert sorted(wh.partitions("silver", "fresh")) == [0]
+    assert wh.read(spark, "silver", "fresh").count() == 0
+    assert wh.write_idempotent(spark, _probe(spark, [(1, 4)]), "silver", "fresh") == {4: 1}
+
+
+# --------------------------------------------------------------------------
+# current spending: the latest-batch window only where it can drop a row
+
+
+def _spending(spark, wh):
+    return read_current(spark, wh, "all_spending")
+
+
+def _plans_window(df) -> bool:
+    return "Window" in df._jdf.queryExecution().optimizedPlan().toString()
+
+
+def _same_as_window(spark, wh):
+    """read_current's rows equal the window's over the whole table; returns
+    the rows."""
+    got = sorted(map(repr, _spending(spark, wh).collect()))
+    want = qualify_latest_batch(wh.read(spark, "silver", "all_spending"), ["_source_file"])
+    assert got == sorted(map(repr, want.collect()))
+    return got
+
+
+def test_batch_only_spending_reads_without_the_window(spark, built):
+    """Several batch files, each its own load: every row is current, and
+    the plan has no Window."""
+    wh, cfg, landing = built
+    _w(os.path.join(landing, "transactions_2026_03.csv"),
+       ["country", "date", "name", "type", "amount", "comments"],
+       [["Japan", "2026-03-03", "late_hotel", "Hotel", "120.00", "Late fee"]])
+    _medallion(spark, wh, cfg)
+    assert len(wh.partitions("silver", "all_spending")) == 2
+    assert not _plans_window(_spending(spark, wh))
+    assert len(_same_as_window(spark, wh)) == wh.read(spark, "silver", "all_spending").count()
+
+
+def test_stream_epoch_relanding_a_batch_file_keeps_the_newer_copy(spark, built):
+    """A stream epoch lands the file a batch load already landed: the
+    window runs and keeps only the epoch's copy."""
+    from travel_data_ingestion_spark.streaming import stream_ingest_csv
+
+    wh, cfg, landing = built
+    batch = wh.read(spark, "silver", "all_spending").count()
+    stream_ingest_csv(spark, wh, landing, "transactions", "transactions*.csv")
+    run_silver(spark, wh, datasets=["transactions"])
+    assert wh.read(spark, "silver", "all_spending").count() == 2 * batch
+    assert _plans_window(_spending(spark, wh))
+    assert len(_same_as_window(spark, wh)) == batch
+    (epoch,) = {r.load_id for r in _spending(spark, wh).select("load_id").collect()}
+    assert epoch == max(wh.partitions("silver", "all_spending"))
+
+
+def test_spending_load_without_a_ledger_row_keeps_the_window(spark, built):
+    """A silver load_id no ledger row names proves nothing: the window
+    runs, and a copy of a file's rows under a higher id replaces it. So
+    does a ledger that gives one file name two ids."""
+    wh = built[0]
+    spend = wh.read(spark, "silver", "all_spending")
+    batch = spend.count()
+    copy = spend.withColumn("load_id", F.lit(99).cast("long"))
+    copy = spark.createDataFrame(copy.collect(), copy.schema)
+    assert wh.write_idempotent(spark, copy, "silver", "all_spending") == {99: batch}
+    assert _plans_window(_spending(spark, wh))
+    assert len(_same_as_window(spark, wh)) == batch
+    assert {r.load_id for r in _spending(spark, wh).select("load_id").collect()} == {99}
+    (name,) = {r._source_file for r in spend.select("_source_file").collect()}
+    ledger.append(wh, "ingestion_logs", [(99, 1, name, "transactions", "SUCCESS", batch, None)])
+    assert _plans_window(_spending(spark, wh))
+    assert len(_same_as_window(spark, wh)) == batch

@@ -156,7 +156,7 @@ def test_load_id_boundary_logs_failure_past_32767(spark, tmp_path):
     failed = rows["transactions_b.csv"]
     assert (failed.load_id, failed.status) == (32768, "FAILURE")
     assert "row_id bit-field overflow" in failed.error_message
-    assert bronze_load_ids(spark, wh, "transactions") == [32767]
+    assert bronze_load_ids(wh, "transactions") == [32767]
 
     assert ingest_all(spark, wh, {"transactions": detail}) == {"transactions": []}
     retried = {r.file_name: r for r in _ingestion_rows(spark, wh)}["transactions_b.csv"]
@@ -189,7 +189,7 @@ def test_first_ever_empty_batch_bootstraps_readable_table(spark, tmp_path):
     wh.init()
     schema = "a int, b string, load_id long"
     empty = spark.createDataFrame([], schema)
-    assert wh.write_idempotent(spark, empty, "silver", "probe") == 0
+    assert wh.write_idempotent(spark, empty, "silver", "probe") == {}
     p = wh.path("silver", "probe")
     assert _root_parts(p) == []
 
@@ -204,7 +204,7 @@ def test_first_ever_empty_batch_bootstraps_readable_table(spark, tmp_path):
 
     # first real batch: lands in its own partition next to the footer
     rows = spark.createDataFrame([(1, "x", 7), (2, "y", 7)], schema)
-    assert wh.write_idempotent(spark, rows, "silver", "probe") == 2
+    assert wh.write_idempotent(spark, rows, "silver", "probe") == {7: 2}
     got = wh.read(spark, "silver", "probe")
     assert got.count() == 2
     assert {int(r.load_id) for r in got.select("load_id").collect()} == {7}
@@ -233,7 +233,7 @@ def test_crash_mid_write_next_to_footer_retries_once(spark, tmp_path):
     assert back.count() == 0 and set(back.columns) == {"a", "b", "load_id"}
 
     rows = spark.createDataFrame([(1, "x", 7), (2, "y", 7)], schema)
-    assert wh.write_idempotent(spark, rows, "silver", "probe") == 2
+    assert wh.write_idempotent(spark, rows, "silver", "probe") == {7: 2}
     got = wh.read(spark, "silver", "probe")
     assert sorted((r.a, r.b, int(r.load_id)) for r in got.collect()) == [(1, "x", 7), (2, "y", 7)]
     assert _root_parts(p) == []
@@ -264,13 +264,13 @@ def test_header_only_first_landing_file(spark, tmp_path):
                 for f in fs if f.endswith(".parquet")]
     bronze = wh.read(spark, "bronze", "transactions")
     assert bronze.schema == BRONZE_SCHEMAS["transactions"] and bronze.count() == 0
-    assert bronze_load_ids(spark, wh, "transactions") == []
+    assert bronze_load_ids(wh, "transactions") == []
     assert run_silver(spark, wh, datasets=["transactions"]) == {}
     assert wh.read(spark, "admin", "transformation_logs").count() == 0
 
     (landing / "transactions_02.csv").write_text(header + "JP,2026-02-01,m1,Food,10.5,ok\n")
     assert ingest_all(spark, wh, {"transactions": detail})["transactions"] == [2]
-    assert bronze_load_ids(spark, wh, "transactions") == [2]
+    assert bronze_load_ids(wh, "transactions") == [2]
     # one all_spending row + one daily_spend row
     assert run_silver(spark, wh, datasets=["transactions"]) == {"transactions": 2}
     assert [(r.load_id, r.status) for r in wh.read(spark, "admin", "transformation_logs")
@@ -293,6 +293,54 @@ def test_write_idempotent_rejects_unpartitioned_data(spark, tmp_path):
         )
     # original data untouched
     assert wh.read(spark, "silver", "probe").count() == 1
+
+
+def test_empty_retry_of_a_crashed_load_drops_its_partition(spark, tmp_path):
+    """A load commits 2 rows and crashes before its terminal ledger row;
+    the file is then replaced by its header. The retry under the reserved
+    id logs SUCCESS with 0 rows, and bronze holds none of the old rows."""
+    from travel_data_ingestion_spark.ingest import ingest_file
+    from travel_data_ingestion_spark.silver.runner import bronze_load_ids
+
+    header = "country,date,name,type,amount,comments\n"
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    path = landing / "transactions_a.csv"
+    path.write_text(header + "JP,2026-02-01,m1,Food,10.5,ok\nJP,2026-02-02,m2,Food,3,ok\n")
+    wh = Warehouse(str(tmp_path / "wh"))
+    wh.init()
+    detail = FileDetail(1, str(landing), "transactions*.csv", "bronze", "transactions", "csv")
+    (load_id,) = ledger.reserve(wh, [(1, path.name, "transactions")])
+    assert ingest_file(spark, wh, detail, str(path), load_id) == 2
+
+    path.write_text(header)
+    assert ingest_all(spark, wh, {"transactions": detail})["transactions"] == [load_id]
+    assert [(r.load_id, r.status, r.rows_loaded) for r in _ingestion_rows(spark, wh)] == [
+        (load_id, "SUCCESS", 0)]
+    assert wh.read(spark, "bronze", "transactions").count() == 0
+    assert bronze_load_ids(wh, "transactions") == []
+
+
+def test_silver_rows_written_is_each_loads_own(spark, tmp_path):
+    """Two loads in one silver batch: each SUCCESS row records the rows
+    its own load_id wrote over the dataset's output tables."""
+    from travel_data_ingestion_spark.silver import run_silver
+
+    header = "country,date,name,type,amount,comments\n"
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    (landing / "transactions_01.csv").write_text(header + "JP,2026-02-01,m1,Food,10.5,ok\n")
+    (landing / "transactions_02.csv").write_text(
+        header + "JP,2026-02-01,m2,Food,1,ok\nJP,2026-02-01,m3,Food,2,ok\n"
+        "JP,2026-02-02,m4,Food,3,ok\n")
+    wh = Warehouse(str(tmp_path / "wh"))
+    wh.init()
+    detail = FileDetail(1, str(landing), "transactions*.csv", "bronze", "transactions", "csv")
+    assert ingest_all(spark, wh, {"transactions": detail})["transactions"] == [1, 2]
+    # all_spending rows + daily_spend rows (one per date and type)
+    assert run_silver(spark, wh, datasets=["transactions"]) == {"transactions": 2 + 5}
+    done = [r for r in ledger.read(wh, "transformation_logs") if r.status == "SUCCESS"]
+    assert {r.load_id: r.rows_written for r in done} == {1: 2, 2: 5}
 
 
 # --------------------------------------------------------------------------
@@ -654,11 +702,14 @@ def _data_files(root):
 
 def test_ledger_jobs_are_fixed_per_run(spark, tmp_path, slice_landing):
     """A first ingest_all costs at most 1 Spark job per landing file (its
-    bronze write; the ledger is read and written on the driver), and a
-    no-op re-run of ingest_all + run_silver + the gold build runs no
-    Spark job and writes nothing. Silver's rows_written is the batch
-    total: every silver row of the dataset's output tables carrying the
-    batch's load_ids."""
+    bronze write; the ledger is read and written on the driver), the
+    first gold build 5 (the spending read needs no latest-batch window
+    when each load is one batch file, and the dashboard's spending plans
+    none), and a no-op re-run of ingest_all + run_silver + the gold
+    build runs no Spark job and writes nothing. Silver's rows_written is
+    per load_id: every silver row of the dataset's output tables carrying
+    that load_id."""
+    from travel_data_ingestion_spark import dashboard
     from travel_data_ingestion_spark.gold import build_full_travel_cost
     from travel_data_ingestion_spark.silver import run_silver
     from travel_data_ingestion_spark.silver.runner import SILVER_TRANSFORMS
@@ -669,7 +720,10 @@ def test_ledger_jobs_are_fixed_per_run(spark, tmp_path, slice_landing):
     jobs = _count_jobs(spark, "ledger_first_ingest", lambda: ingest_all(spark, wh, cfg))
     assert jobs <= n_files, jobs
     run_silver(spark, wh, datasets=list(SLICE))
-    build_full_travel_cost(spark, wh)
+    jobs = _count_jobs(spark, "ledger_first_gold", lambda: build_full_travel_cost(spark, wh))
+    assert jobs == 5, jobs
+    page = dashboard.spending(spark, wh, "2026-02-01", "2026-02-07")
+    assert "Window" not in page._jdf.queryExecution().optimizedPlan().toString()
 
     before = _data_files(wh.root)
     jobs = _count_jobs(spark, "ledger_noop_rerun", lambda: (

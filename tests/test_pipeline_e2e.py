@@ -176,29 +176,31 @@ def test_bronze_has_all_tables(spark, pipeline_wh):
         assert n > 0, f"bronze.{t} empty"
 
 
-def test_silver_rows_written_is_batch_total(spark, pipeline_wh):
-    """Each SUCCESS transformation row records its batch total: every
-    silver row of the dataset's output tables carrying the batch's
-    load_ids (the writes' observed counts, not a re-read)."""
+def test_silver_rows_written_is_per_load_id(spark, pipeline_wh):
+    """Each SUCCESS transformation row records its own load's rows: every
+    silver row of the dataset's output tables carrying that load_id (the
+    written files' footer counts, not a re-read). A load can write none
+    (google_timeline_bad.json is not JSON, so it yields no segment); a
+    dataset cannot."""
+    from collections import Counter
+
     from pyspark.sql import functions as F
 
     from travel_data_ingestion_spark.silver.runner import SILVER_TRANSFORMS
 
-    batches: dict[int, tuple[str, set[int], int]] = {}
-    for r in pipeline_wh.read(spark, "admin", "transformation_logs").collect():
-        if r.status == "SUCCESS":
-            _, ids, _ = batches.setdefault(
-                r.transformation_id, (r.transformation_name, set(), r.rows_written))
-            ids.add(r.load_id)
-    assert {name for name, _, _ in batches.values()} == set(SILVER_TRANSFORMS)
-    for name, ids, rows_written in batches.values():
-        bronze_table, fn = SILVER_TRANSFORMS[name]
+    done = [r for r in pipeline_wh.read(spark, "admin", "transformation_logs").collect()
+            if r.status == "SUCCESS"]
+    totals: Counter[str] = Counter()
+    for r in done:
+        bronze_table, fn = SILVER_TRANSFORMS[r.transformation_name]
         outputs = fn(pipeline_wh.read(spark, "bronze", bronze_table).limit(0))
-        total = sum(
-            pipeline_wh.read(spark, "silver", t).filter(F.col("load_id").isin(list(ids))).count()
+        rows = sum(
+            pipeline_wh.read(spark, "silver", t).filter(F.col("load_id") == r.load_id).count()
             for t in outputs
         )
-        assert rows_written == total > 0, (name, ids)
+        assert r.rows_written == rows, (r.transformation_name, r.load_id)
+        totals[r.transformation_name] += rows
+    assert set(totals) == set(SILVER_TRANSFORMS) and all(totals.values()), totals
 
 
 def test_ingestion_idempotent(spark, pipeline_wh, tmp_path):
@@ -405,5 +407,5 @@ def test_interleaved_disjoint_writers_keep_ledger_consistent(spark, pipeline_wh)
     done = {(r.transformation_name, r.load_id)
             for r in ledger.snapshot(wh, "transformation_logs").rows
             if r.status == "SUCCESS"}
-    assert all(("transactions", i) in done for i in bronze_load_ids(spark, wh, "transactions"))
+    assert all(("transactions", i) in done for i in bronze_load_ids(wh, "transactions"))
     assert run_silver(spark, wh, datasets=["transactions"]) == {}

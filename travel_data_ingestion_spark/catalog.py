@@ -17,6 +17,12 @@ A table written by that sink has one layout: every part file sits in a
 empty keeps a zero-row schema footer in ``load_id=0/`` (ledger ids
 start at 1). A crash mid-write leaves only staging files that readers
 ignore; the retry overwrites the same partitions (``write_idempotent``).
+That sink returns ``{load_id: rows}`` for the partitions it wrote,
+summed from the row counts in the footers of the part files that are new
+after the write: Spark names each part file with its write's job UUID,
+and a dynamic overwrite replaces every partition it writes whole, so the
+new names are exactly this write's files. ``partitions`` is the one
+listing of a table's ``load_id=N/`` part files, on the driver.
 
 The admin tables (``ADMIN_SCHEMAS``) are the exception to Spark-written
 tables: they hold a few rows per file and per dataset, so ``ledger``
@@ -24,10 +30,10 @@ reads and writes them on the driver with pyarrow, one parquet file per
 write, committed by renaming a hidden temp file. They stay ordinary
 parquet that ``read`` (and DuckDB) scans with the registered schema.
 That relies on the warehouse being a local path written by a single
-driver, as the ``os.walk``/``os.listdir`` checks here already do
-(SURVEY §7.4-4). A crash while ``file_details`` is replaced can leave
-old and new rows side by side; the next run's ``save_config`` rewrites
-the table.
+driver, as the ``os.walk``/``os.listdir`` listings here (write counts
+included) already do (SURVEY §7.4-4). A crash while ``file_details`` is
+replaced can leave old and new rows side by side; the next run's
+``save_config`` rewrites the table.
 
 A silver or gold table is read with the schema Spark stored in the
 footer of one of its committed part files (the
@@ -59,11 +65,12 @@ import json
 import os
 import re
 import uuid
+from collections.abc import Iterator
 from dataclasses import dataclass
 from urllib.parse import unquote, urlparse
 
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -294,19 +301,31 @@ class Warehouse:
     def path(self, schema: str, table: str) -> str:
         return os.path.join(self.root, schema, table)
 
-    def _part_file(self, schema: str, table: str) -> str | None:
-        """One committed part file of the table; the staging trees of an
-        uncommitted write ('.spark-staging-*', '_temporary') do not count."""
+    def part_files(self, schema: str, table: str) -> Iterator[str]:
+        """The table's committed part files, from a listing on the driver;
+        the staging trees of an uncommitted write ('.spark-staging-*',
+        '_temporary') and hidden files do not count."""
         for d, dirs, files in os.walk(self.path(schema, table)):
             dirs[:] = [x for x in dirs if not x.startswith((".", "_"))]
             for f in files:
                 if f.endswith(".parquet") and not f.startswith((".", "_")):
-                    return os.path.join(d, f)
-        return None
+                    yield os.path.join(d, f)
+
+    def partitions(self, schema: str, table: str) -> dict[int, list[str]]:
+        """Each ``load_id=N/`` directory of the table root that holds a
+        committed part file: N -> the paths of its part files. A part file
+        anywhere else (the root, another directory) is in none."""
+        root = self.path(schema, table)
+        out: dict[int, list[str]] = {}
+        for f in self.part_files(schema, table):
+            m = re.fullmatch(r"load_id=(\d+)", os.path.relpath(os.path.dirname(f), root))
+            if m:
+                out.setdefault(int(m.group(1)), []).append(f)
+        return out
 
     def exists(self, schema: str, table: str) -> bool:
         """True once the table holds a committed part file."""
-        return self._part_file(schema, table) is not None
+        return next(self.part_files(schema, table), None) is not None
 
     def _footer_schema(self, schema: str, table: str, part: str) -> T.StructType | None:
         """The schema Spark infers for the table, from the footer of its
@@ -331,7 +350,7 @@ class Warehouse:
         registered table is read with its schema and any other with its
         footer's, which skips Spark's schema-inference job."""
         st = self.registered_schema(schema, table)
-        part = self._part_file(schema, table)
+        part = next(self.part_files(schema, table), None)
         if part is not None:
             st = st or self._footer_schema(schema, table, part)
             reader = spark.read if st is None else spark.read.schema(st)
@@ -372,15 +391,27 @@ class Warehouse:
         df: DataFrame,
         schema: str,
         table: str,
-    ) -> int:
+    ) -> dict[int, int]:
         """DELETE-by-load_id + INSERT as dynamic partition overwrite;
-        returns the rows written, observed in the write itself.
+        returns ``{load_id: rows}`` for the partitions this write
+        produced, counted from their part files' footers.
 
         The reference deletes the batch's rows then appends
         (utils.py:12-46 save_idempotent). With the table partitioned by
         load_id, overwriting exactly the incoming partitions is the same
         contract with no row-level delete — and at 100 TB it touches only
         the affected partitions' files.
+
+        The count needs no extra Spark job: Spark names every part file
+        of a write with the write's job UUID, and a dynamic overwrite
+        replaces each partition it writes whole, so the part files listed
+        after the write and not before are exactly this write's files.
+        Their parquet footers' row counts, summed per partition, are the
+        rows written; a partition the write did not touch is never
+        counted, and a write of no rows returns ``{}``. The listing is a
+        local-path, single-driver contract: a file that another process
+        (or a hand copy) puts into a ``load_id=N/`` directory during the
+        write counts as written.
 
         Every file lives under ``load_id=N/``, none at the table root. An
         unregistered (silver) table whose first batch is empty gets a
@@ -407,18 +438,21 @@ class Warehouse:
                 "layout — rewrite the table (overwrite) before "
                 "switching sinks"
             )
+        before = {f for files in self.partitions(schema, table).values() for f in files}
         # writer-level option only — mutating the SESSION conf here would
         # silently flip every later partitioned overwrite in the session
         # to dynamic semantics, leaving stale partitions behind
-        seen = Observation()
         (
-            df.observe(seen, F.count(F.lit(1)).alias("rows"))
-            .write.mode("overwrite")
+            df.write.mode("overwrite")
             .partitionBy("load_id")
             .option("partitionOverwriteMode", "dynamic")
             .parquet(p)
         )
-        rows = int(seen.get["rows"])
+        rows: dict[int, int] = {}
+        for load_id, files in self.partitions(schema, table).items():
+            new = [f for f in files if f not in before]
+            if new:
+                rows[load_id] = sum(pq.read_metadata(f).num_rows for f in new)
         if not rows and self.registered_schema(schema, table) is None and not self.exists(schema, table):
             _empty_frame(spark, df.drop("load_id").schema).coalesce(1).write.mode(
                 "overwrite"

@@ -27,6 +27,7 @@ from __future__ import annotations
 
 import os
 import re
+import shutil
 
 from pyspark.sql import Column, DataFrame, DataFrameReader, SparkSession
 from pyspark.sql import functions as F
@@ -168,14 +169,20 @@ def ingest_file(
 ) -> int:
     """COPY INTO analog for one file (A-05): the business columns +
     lineage columns, overwriting bronze partition ``load_id``; returns
-    the rows written."""
+    the rows written. A file of no rows writes no partition, so the one
+    an earlier attempt at this load committed is deleted: ``load_id``
+    belongs to this file alone, and the retry's bronze must match it."""
     if not os.path.isfile(path):
         # a directory (or anything else) matching the pattern would read
         # as zero rows under an explicit schema and pass for a SUCCESS
         raise ValueError(f"not a regular file: {path}")
     raw = read_landing_file(spark, path, detail.file_format, detail.target_table)
     rows = with_lineage(raw, F.lit(os.path.basename(path)), load_id)
-    return wh.write_idempotent(spark, rows, "bronze", detail.target_table)
+    written = wh.write_idempotent(spark, rows, "bronze", detail.target_table)
+    stale = os.path.join(wh.path("bronze", detail.target_table), f"load_id={load_id}")
+    if load_id not in written and os.path.isdir(stale):
+        shutil.rmtree(stale)
+    return sum(written.values())
 
 
 def ingest_all(spark: SparkSession, wh: Warehouse, config: dict[str, FileDetail]) -> dict[str, list[int]]:

@@ -15,6 +15,7 @@ the difference between O(batches) round-trips and one shuffle at 100 TB.
 
 from pyspark.sql import DataFrame, SparkSession
 
+from travel_data_ingestion_spark import ledger
 from travel_data_ingestion_spark.catalog import Warehouse
 from travel_data_ingestion_spark.compat import qualify_dedup_latest, qualify_latest_batch
 from travel_data_ingestion_spark.silver.runner import SILVER_TRANSFORMS, run_silver
@@ -33,13 +34,53 @@ _CURRENT_KEYS = {
 }
 
 
+def _one_load_per_file(wh: Warehouse, table: str, bronze_table: str) -> bool:
+    """Whether every row of silver ``table`` sits in a ``load_id=N/``
+    partition that holds one batch-loaded file of its own: no part file
+    lies outside those partitions, the ingestion ledger maps each
+    partition's id to one batch file name (a row of any status for
+    ``bronze_table``, not a ``stream:`` epoch key), and no two partitions
+    to the same name."""
+    parts = wh.partitions("silver", table)
+    if sum(map(len, parts.values())) != sum(1 for _ in wh.part_files("silver", table)):
+        return False
+    names: dict[int, set[str]] = {}
+    for r in ledger.read(wh, "ingestion_logs"):
+        if r.target_table == bronze_table:
+            names.setdefault(r.load_id, set()).add(r.file_name)
+    seen: set[str] = set()
+    for load_id in parts:
+        if len(names.get(load_id, ())) != 1:
+            return False
+        (name,) = names[load_id]
+        if name.startswith("stream:") or name in seen:
+            return False
+        seen.add(name)
+    return True
+
+
 def read_current(spark: SparkSession, wh: Warehouse, table: str) -> DataFrame:
     """The current rows of a silver table: what every gold builder and
-    dashboard query reads."""
+    dashboard query reads.
+
+    ``all_spending`` keeps the newest load of each ``_source_file``
+    (``qualify_latest_batch``). When every partition of it is one batch
+    file's own load (``_one_load_per_file``), that window keeps every row
+    and the table is returned as read: a batch load writes ``_source_file``
+    = the file's name, which is the ledger's ``file_name``, and
+    ``ledger.reserve`` gives a (table, file name) one load_id ever, so each
+    ``_source_file`` lives in one partition. Otherwise the window runs: a
+    stream epoch lands many files under one id and may re-land a batch
+    file's name; a legacy ledger or a load_id with no ledger row proves
+    nothing; and a part file outside the ``load_id=N/`` layout (at the
+    table root, say) holds load_ids that no listing sees.
+    """
     df = wh.read(spark, "silver", table)
     if table == "all_spending":
         # spending rows have no natural key; latest re-upload of a FILE
         # wins wholesale (sp_full_travel_costs.sql:14-17)
+        if _one_load_per_file(wh, table, SILVER_TRANSFORMS["transactions"][0]):
+            return df
         return qualify_latest_batch(df, ["_source_file"])
     return qualify_dedup_latest(df, _CURRENT_KEYS[table])
 

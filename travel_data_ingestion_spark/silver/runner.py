@@ -5,7 +5,7 @@ and the per-dataset boilerplate in scripts/transformations/*.py).
 
 from __future__ import annotations
 
-import re
+from collections import Counter
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -27,11 +27,10 @@ SILVER_TRANSFORMS: dict[str, tuple[str, Callable[[DataFrame], dict[str, DataFram
 }
 
 
-def bronze_load_ids(spark: SparkSession, wh: Warehouse, bronze_table: str) -> list[int]:
-    """The table's load_ids, from its partition paths: a file listing, no
-    scan and no Spark job."""
-    paths = "\n".join(wh.read(spark, "bronze", bronze_table).inputFiles())
-    return sorted({int(m) for m in re.findall(r"/load_id=(\d+)/", paths)})
+def bronze_load_ids(wh: Warehouse, bronze_table: str) -> list[int]:
+    """The table's load_ids, from its partition directories: a file
+    listing, no scan and no Spark job."""
+    return sorted(wh.partitions("bronze", bronze_table))
 
 
 def run_silver(
@@ -57,7 +56,7 @@ def run_silver(
     work = []
     for name in datasets or list(SILVER_TRANSFORMS):
         ids = [load_id] if load_id is not None else [
-            i for i in bronze_load_ids(spark, wh, SILVER_TRANSFORMS[name][0])
+            i for i in bronze_load_ids(wh, SILVER_TRANSFORMS[name][0])
             if reprocess or (name, i) not in done
         ]
         if ids:
@@ -70,18 +69,19 @@ def run_silver(
     for trans_id, name, ids in work:
         bronze_table, fn = SILVER_TRANSFORMS[name]
         batch = wh.read(spark, "bronze", bronze_table).filter(F.col("load_id").isin(ids))
+        rows: Counter[int] = Counter()
         try:
-            total = sum(
-                wh.write_idempotent(spark, df, "silver", table) for table, df in fn(batch).items()
-            )
+            for table, df in fn(batch).items():
+                rows.update(wh.write_idempotent(spark, df, "silver", table))
         except Exception as exc:  # noqa: BLE001 - per-dataset isolation
             terminal.append((trans_id, name, max(ids), "FAILURE", None, str(exc)[:2000]))
             failures[name] = str(exc)[:500]
             continue
-        # one SUCCESS row per processed batch: the ledger is the
-        # exactly-once contract the next run's selection reads
-        terminal += [(trans_id, name, i, "SUCCESS", total, None) for i in ids]
-        results[name] = total
+        # one SUCCESS row per processed batch, with that batch's rows over
+        # the dataset's output tables: the ledger is the exactly-once
+        # contract the next run's selection reads
+        terminal += [(trans_id, name, i, "SUCCESS", rows[i], None) for i in ids]
+        results[name] = sum(rows.values())
     ledger.append(wh, "transformation_logs", terminal)
     if failures:
         # true per-dataset isolation (each reference transform is its own

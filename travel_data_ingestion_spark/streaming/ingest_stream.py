@@ -79,7 +79,7 @@ def stream_ingest_csv(
         # dynamic partition overwrite on load_id: a replayed epoch
         # rewrites exactly its own partition — no dupes
         try:
-            rows = wh.write_idempotent(s, out, "bronze", target_table)
+            rows = sum(wh.write_idempotent(s, out, "bronze", target_table).values())
         except Exception as exc:
             # logged the way the batch ingest logs a failed file; the
             # replay keeps this id and rewrites the same partition
