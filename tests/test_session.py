@@ -150,3 +150,29 @@ def test_jit_policy_in_effect_on_the_jvm(spark):
     conf = spark.sparkContext.getConf()
     for key in ("spark.driver.defaultJavaOptions", "spark.executor.defaultJavaOptions"):
         assert flags <= set(conf.get(key, "").split()), key
+
+
+def test_codegen_cache_holds_the_working_set(spark):
+    """get_spark sizes Spark's JVM-wide cache of compiled generated
+    classes to CODEGEN_CACHE_ENTRIES, so a session that re-runs more
+    distinct plans than the default cache holds (100) compiles each
+    class once: the second pass adds nothing to the JVM's count of
+    Janino compiles."""
+    from travel_data_ingestion_spark.session import CODEGEN_CACHE_ENTRIES
+
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == str(CODEGEN_CACHE_ENTRIES)
+    jvm = spark.sparkContext._jvm
+    compiles = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    ids = spark.range(8)
+    n_plans = 128
+
+    def compiled_in_a_pass():
+        before = compiles.getCount()
+        # fresh DataFrames each pass, as a dashboard builds them; each
+        # constant is inlined in the generated code: one class per plan
+        for k in range(n_plans):
+            ids.select((F.col("id") * k + k).alias("y")).where(F.col("y") > k).collect()
+        return compiles.getCount() - before
+
+    assert compiled_in_a_pass() >= n_plans
+    assert compiled_in_a_pass() == 0

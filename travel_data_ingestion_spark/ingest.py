@@ -139,11 +139,10 @@ def _csv_null_tokens(df: DataFrame) -> DataFrame:
     nullValue='NULL' handles only that token (and setting it OVERRIDES
     Spark's default ''-as-null, so a quoted empty field would otherwise
     survive as ''); normalize the remaining two tokens here."""
-    for c in df.columns:
-        df = df.withColumn(
-            c, F.when(F.col(c).isin("null", ""), None).otherwise(F.col(c))
-        )
-    return df
+    return df.withColumns({
+        c: F.when(F.col(c).isin("null", ""), None).otherwise(F.col(c))
+        for c in df.columns
+    })
 
 
 def with_lineage(df: DataFrame, source_file: Column, load_id: int) -> DataFrame:
@@ -152,12 +151,12 @@ def with_lineage(df: DataFrame, source_file: Column, load_id: int) -> DataFrame:
     per table via disjoint (load_id | partition | row) bit fields — no
     global window, no gaplessness requirement (the reference only ever
     takes MAX(load_id))."""
-    return (
-        df.withColumn("_ingestion_time", F.current_timestamp())
-        .withColumn("_source_file", source_file)
-        .withColumn("load_id", F.lit(load_id).cast("long"))
-        .withColumn("row_id", lineage_row_id(load_id))
-    )
+    return df.withColumns({
+        "_ingestion_time": F.current_timestamp(),
+        "_source_file": source_file,
+        "load_id": F.lit(load_id).cast("long"),
+        "row_id": lineage_row_id(load_id),
+    })
 
 
 def ingest_file(
