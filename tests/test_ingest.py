@@ -16,7 +16,7 @@ from travel_data_ingestion_spark.ingest import (
     glob_to_regex,
     ingest_all,
     list_stage_files,
-    read_csv,
+    read_landing_file,
 )
 
 
@@ -91,7 +91,7 @@ def test_csv_parse_contract(spark, tmp_path):
         'country,date,name,type,amount,comments\n'
         'JP,,"a""b","Ho,tel",NULL,null\n'
     )
-    rows = read_csv(spark.read, "transactions", str(path)).collect()
+    rows = read_landing_file(spark, str(path), "csv", "transactions").collect()
     assert len(rows) == 1
     r = rows[0]
     assert (r.country, r.name, r.type) == ("JP", 'a"b', "Ho,tel")
@@ -475,14 +475,13 @@ def test_crash_before_bronze_commit_retries_cleanly(
 
 def test_allocations_stay_above_reserved_ids(spark, tmp_path, monkeypatch, slice_landing):
     """Ids reserved by a crashed run are never handed out again: silver's
-    next transformation_id and a new stream epoch's load_id both land
+    next transformation_id and a new landing file's load_id both land
     above every reserved id."""
     from travel_data_ingestion_spark.silver import run_silver
-    from travel_data_ingestion_spark.streaming import stream_ingest_csv
 
     wh, cfg = _slice_wh(spark, tmp_path, "wh", slice_landing)
     ingest_all(spark, wh, cfg)
-    real = _crash_on_terminal_append(monkeypatch, status_col=3)
+    _crash_on_terminal_append(monkeypatch, status_col=3)
     with pytest.raises(Crash):
         run_silver(spark, wh, datasets=list(SLICE))
     monkeypatch.undo()
@@ -497,13 +496,19 @@ def test_allocations_stay_above_reserved_ids(spark, tmp_path, monkeypatch, slice
     assert {r.transformation_name for r in retried} == set(SLICE)
     assert min(r.transformation_id for r in retried) > crashed
 
-    # a batch reservation that never completed still bounds the stream
+    # a reservation that never completed still bounds the next file
     landed = max(r.load_id for r in _ingestion_rows(spark, wh))
-    real(wh, "ingestion_logs",
-         [(landed + 5, 1, "late.csv", "transactions", "RUNNING", None, None)])
-    stream_ingest_csv(spark, wh, str(slice_landing), "transactions", "transactions*.csv")
-    epochs = [r for r in _ingestion_rows(spark, wh) if r.file_name.startswith("stream:")]
-    assert [(r.load_id, r.status) for r in epochs] == [(landed + 6, "SUCCESS")]
+    ledger.append(wh, "ingestion_logs",
+                  [(landed + 5, 1, "late.csv", "transactions", "RUNNING", None, None)])
+    new = tmp_path / "new"
+    new.mkdir()
+    (new / "transactions_new.csv").write_text(
+        "country,date,name,type,amount,comments\nJP,2026-02-01,m1,Food,10.5,ok\n"
+    )
+    detail = FileDetail(1, str(new), "transactions*.csv", "bronze", "transactions", "csv")
+    assert ingest_all(spark, wh, {"transactions": detail}) == {"transactions": [landed + 6]}
+    (row,) = [r for r in _ingestion_rows(spark, wh) if r.file_name == "transactions_new.csv"]
+    assert (row.load_id, row.status, row.rows_loaded) == (landed + 6, "SUCCESS", 1)
 
 
 def test_ledger_append_keeps_one_file_and_heals_a_crashed_rewrite(tmp_path, monkeypatch):

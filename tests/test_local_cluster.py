@@ -109,17 +109,18 @@ def test_aqe_skew_join_splits_under_real_shuffle():
     assert out["rows"] == out["expected"] == 2_000_000
 
 
-def test_streaming_ingest_exactly_once_under_executor_loss(tmp_path):
-    # 120 landing CSVs drain through the checkpointed AvailableNow
-    # ingest (maxFilesPerTrigger=16 -> several micro-batches) while one
-    # executor JVM is SIGKILLed mid-stream; business rows, per-file
-    # lineage, and the ingestion ledger must match a clean run exactly
-    # (the streaming A-07 ledger + per-epoch load_id map must make
-    # retried work invisible)
-    out = _run(["streamkill", str(tmp_path)], timeout=900)
+def test_batch_ingest_exactly_once_under_executor_loss(tmp_path):
+    # 120 landing CSVs land through ingest_all (one bronze write per
+    # file) while one executor JVM is SIGKILLed during a job; business
+    # rows, per-file lineage, and the ingestion ledger must match a
+    # clean run exactly, every file SUCCESS (the A-07 ledger's reserved
+    # load_ids + per-load_id overwrites must make retried work
+    # invisible)
+    out = _run(["ingestkill", str(tmp_path)], timeout=900)
     assert out["active_when_killed"] is True
     assert out["executor_gone"] is True
     assert out["result_identical"] is True
+    assert out["all_success"] is True
     assert out["rows"] == 120 * 25
 
 

@@ -93,23 +93,19 @@ def test_session_token_stable_and_per_wrapper(spark):
         pass  # clone shares the context; nothing to stop
 
 
-def test_pythonpath_export_gated_on_shared_fs_masters(monkeypatch):
+def test_pythonpath_export_gated_on_shared_fs_masters():
     """spark.executorEnv.PYTHONPATH carries DRIVER-LOCAL paths, so it
     is only exported for masters whose executors share the driver's
     filesystem (local / local-cluster); on yarn/k8s it would silently
     export meaningless paths, and --py-files/wheels is the documented
-    mechanism (SPARK_EXPORT_PYTHONPATH=1 opts in for shared-FS
-    standalone)."""
+    mechanism (a shared-FS standalone caller passes the conf itself)."""
     from travel_data_ingestion_spark.session import _export_pythonpath
 
-    monkeypatch.delenv("SPARK_EXPORT_PYTHONPATH", raising=False)
     assert _export_pythonpath("local[32]")
     assert _export_pythonpath("local-cluster[4,8,6144]")
     assert not _export_pythonpath("yarn")
     assert not _export_pythonpath("k8s://https://host:6443")
     assert not _export_pythonpath("spark://master:7077")
-    monkeypatch.setenv("SPARK_EXPORT_PYTHONPATH", "1")
-    assert _export_pythonpath("spark://master:7077")
 
 
 def test_default_driver_memory_is_half_of_ram_up_to_48g():

@@ -236,20 +236,20 @@ def skewtest() -> dict:
             "master": MASTER}
 
 
-def streamkill(workdir: str) -> dict:
-    """Exactly-once STREAMING ingestion under executor loss: ~120
-    landing CSVs drain through stream_ingest_csv (AvailableNow,
-    maxFilesPerTrigger=16 -> several micro-batches) while one executor
-    JVM is SIGKILLed mid-stream. The checkpoint + the ledger's per-epoch
-    load_ids + dynamic-overwrite bronze writes must make the retried
-    work invisible: bronze business rows, per-file lineage, and the
-    ingestion ledger must all match a clean run exactly."""
+def ingestkill(workdir: str) -> dict:
+    """Exactly-once batch ingestion under executor loss: 120 landing
+    CSVs land through ``ingest_all`` (one ``FileDetail`` for
+    ``transactions*.csv``, one bronze write per file) while one executor
+    JVM is SIGKILLed during a job. The ledger's reserved load_ids and the
+    dynamic-overwrite bronze writes must make the retried work
+    invisible: bronze business rows, per-file lineage and the ingestion
+    ledger must all match a clean run exactly, with every file
+    SUCCESS."""
     import glob
 
     from travel_data_ingestion_spark.catalog import Warehouse
-    from travel_data_ingestion_spark.streaming.ingest_stream import (
-        stream_ingest_csv,
-    )
+    from travel_data_ingestion_spark.config import FileDetail
+    from travel_data_ingestion_spark.ingest import ingest_all
 
     landing = os.path.join(workdir, "landing")
     os.makedirs(landing, exist_ok=True)
@@ -262,32 +262,28 @@ def streamkill(workdir: str) -> dict:
                     f"Japan,2026-02-{(r % 28) + 1:02d},merchant_{i}_{r},"
                     f"Hotel,{(i * 25 + r) % 450 + 10}.25,note {i}-{r}\n"
                 )
+    detail = FileDetail(1, landing, "transactions*.csv", "bronze",
+                        "transactions", "csv")
 
-    spark = _get_spark("lc-streamkill")
+    spark = _get_spark("lc-ingestkill")
 
     def ingest(tag):
         wh = Warehouse(os.path.join(workdir, f"wh_{tag}"))
         wh.init()
-        stream_ingest_csv(spark, wh, landing, "transactions",
-                          "transactions*.csv")
+        ingest_all(spark, wh, {"transactions": detail})
         bronze = wh.read(spark, "bronze", "transactions")
-        # wall-clock lineage and epoch numbering legitimately differ
-        # between runs; exactly-once is judged on the business rows +
-        # per-file lineage multiset
+        # wall-clock lineage legitimately differs between runs;
+        # exactly-once is judged on the business rows + per-file lineage
+        # multiset
         cols = [c for c in bronze.columns
                 if c not in ("_ingestion_time", "load_id", "row_id")]
         rows = sorted(
             tuple(str(r[c]) for c in cols) for r in bronze.collect()
         )
-        # each run is its own query: its id in the epoch key
-        # ('stream:<query id>:<epoch id>') becomes a placeholder, and
-        # the epoch numbers are compared
-        ledger = sorted(
-            (re.sub(r"^stream:[^:]+:", "stream:<query>:", r.file_name),
-             r.target_table, r.status)
-            for r in wh.read(spark, "admin", "ingestion_logs").collect()
-        )
-        return rows, ledger
+        logs = wh.read(spark, "admin", "ingestion_logs").collect()
+        ledger = sorted((r.file_name, r.target_table, r.status) for r in logs)
+        succeeded = {r.file_name for r in logs if r.status == "SUCCESS"}
+        return rows, ledger, len(succeeded)
 
     clean = ingest("clean")
     before = _executor_pids()
@@ -315,14 +311,16 @@ def streamkill(workdir: str) -> dict:
             and state["killed"] not in _executor_pids())
     identical = wounded == clean
     n_files = len(glob.glob(os.path.join(landing, "*.csv")))
+    all_success = wounded[2] == n_files
     spark.stop()
     return {
         "ok": bool(state["killed"]) and state["active_when_killed"]
-        and gone and identical,
-        "mode": "streamkill", "killed_pid": state["killed"],
+        and gone and identical and all_success,
+        "mode": "ingestkill", "killed_pid": state["killed"],
         "active_when_killed": state["active_when_killed"],
         "executor_gone": gone, "result_identical": identical,
-        "rows": len(wounded[0]), "ledger_files": len(wounded[1]),
+        "all_success": all_success,
+        "rows": len(wounded[0]), "ledger_rows": len(wounded[1]),
         "landing_files": n_files, "master": MASTER,
     }
 
@@ -456,8 +454,8 @@ def main() -> None:
         out = parity(sys.argv[2], sys.argv[3].split(","))
     elif mode == "killtest":
         out = killtest(sys.argv[2], sys.argv[3])
-    elif mode == "streamkill":
-        out = streamkill(sys.argv[2])
+    elif mode == "ingestkill":
+        out = ingestkill(sys.argv[2])
     elif mode == "spilltest":
         out = spilltest(sys.argv[2], sys.argv[3].split(","),
                         int(sys.argv[4]) if len(sys.argv) > 4 else 1)

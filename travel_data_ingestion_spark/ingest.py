@@ -9,10 +9,10 @@ Reproduces the reference's ingestion semantics (SURVEY §2.A) Spark-first:
 - filename exactly-once ledger           (ingestion_logic.py:124-129, A-07)
 - RUNNING -> SUCCESS/FAILURE logging     (ingestion_logic.py:84-201, A-08)
 
-Allocation happens once per run, in ``ledger.reserve`` (the allocator
-the stream ingest shares): from one snapshot of the ledger it skips the
-files already loaded, gives every other file its ``load_id`` and
-reserves them all in one RUNNING append before any data is written.
+Allocation happens once per run, in ``ledger.reserve``: from one
+snapshot of the ledger it skips the files already loaded, gives every
+other file its ``load_id`` and reserves them all in one RUNNING append
+before any data is written.
 Each file's bronze write is a dynamic-partition overwrite of its
 reserved ``load_id``, and one append records every SUCCESS/FAILURE. A
 file whose latest ledger row is still RUNNING (a crashed run) is retried
@@ -29,10 +29,9 @@ import os
 import re
 import shutil
 
-from pyspark.sql import Column, DataFrame, DataFrameReader, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming import DataStreamReader
 
 from travel_data_ingestion_spark import ledger
 from travel_data_ingestion_spark.catalog import BRONZE_SCHEMAS, LINEAGE_FIELDS, Warehouse
@@ -120,18 +119,12 @@ def read_landing_file(spark: SparkSession, path: str, file_format: str, table: s
     each top-level value becomes one VARIANT row).
     """
     if file_format == "csv":
-        return read_csv(spark.read, table, path)
+        return _csv_null_tokens(
+            spark.read.schema(landing_schema(table)).options(**CSV_OPTIONS).csv(path)
+        )
     if file_format == "json":
         return spark.read.text(path, wholetext=True).toDF("raw_data")
     raise ValueError(f"unsupported file format: {file_format}")
-
-
-def read_csv(reader: DataFrameReader | DataStreamReader, table: str, path: str) -> DataFrame:
-    """The CSV landing scan of both the batch and the streaming ingest:
-    the positional schema, CSV_OPTIONS and the NULL_IF tokens, so a
-    file produces identical bronze rows whichever path ingested it — or
-    replays and re-ingests diverge."""
-    return _csv_null_tokens(reader.schema(landing_schema(table)).options(**CSV_OPTIONS).csv(path))
 
 
 def _csv_null_tokens(df: DataFrame) -> DataFrame:

@@ -23,7 +23,7 @@ ledger once (``snapshot``), allocates every id it needs from that one
 snapshot (``Snapshot.next_id`` = MAX(id)+1, the reference's own
 MAX-based retrieval, ingestion_logic.py:149), and writes each stage's
 rows in one ``append``. ``reserve`` is the one allocator of load_ids:
-batch files and stream epochs both take theirs from it.
+every landing file takes its id from it.
 ``file_details`` is replaced whole (``replace``). Single-driver
 contract (SURVEY §7.4-4): one process writes the warehouse, and nothing
 else allocates between a run's snapshot and its RUNNING append.
@@ -82,7 +82,7 @@ def snapshot(wh: Warehouse, table: str, latest_only: bool = False) -> Snapshot:
     return Snapshot(rows, max((r[key] for r in rows), default=0) + 1)
 
 
-def reserve(wh: Warehouse, loads: list[tuple[int | None, str, str]]) -> list[int | None]:
+def reserve(wh: Warehouse, loads: list[tuple[int, str, str]]) -> list[int | None]:
     """The load_id of each ``(file_id, file_name, target_table)`` load,
     from one snapshot of the ingestion ledger, keyed on
     ``(target_table, file_name)``: a key whose latest row is SUCCESS is

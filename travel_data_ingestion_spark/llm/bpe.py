@@ -28,8 +28,8 @@ module implements it Spark-shaped:
   the same bounded-iteration control plane as dd06's
   connected-components loop;
 - both evolving tables (words, pair counts) are checkpoint-truncated
-  each round (localCheckpoint, or reliable checkpoint when a dir is
-  set — the dd06/pagerank doctrine): the delta plan references the
+  each round (``session.truncate_lineage``, the dd06/pagerank
+  doctrine): the delta plan references the
   previous round's tables TWICE (changed and unchanged branches), so
   without truncation the logical plan doubles per round and Catalyst
   analysis goes exponential.
@@ -66,6 +66,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from travel_data_ingestion_spark.session import truncate_lineage
 
 _WORD_PAT = "[a-z]+"
 
@@ -118,11 +120,9 @@ def bpe_train_merges(
     Exactness is unchanged by construction — integer pair counts under
     add/subtract deltas equal a from-scratch re-count (pinned by the
     lockstep-with-oracle and planted-corpus tests)."""
-    from travel_data_ingestion_spark.llm.linkgraph import _truncate
-
     spark = docs.sparkSession
-    words = _truncate(word_symbol_table(docs, max_word_chars))
-    pc_tab = _truncate(_pair_counts(words))
+    words = truncate_lineage(word_symbol_table(docs, max_word_chars))
+    pc_tab = truncate_lineage(_pair_counts(words))
     merges: list[tuple[int, str, str, int]] = []
     for rank in range(1, k + 1):
         top = (
@@ -146,13 +146,13 @@ def bpe_train_merges(
         delta = _pair_counts(changed).select(
             "pair", (-F.col("pc")).alias("pc")
         ).unionByName(_pair_counts(merged))
-        pc_tab = _truncate(
+        pc_tab = truncate_lineage(
             pc_tab.unionByName(delta)
             .groupBy("pair")
             .agg(F.sum("pc").alias("pc"))
             .filter(F.col("pc") > 0)
         )
-        words = _truncate(words.filter(~hit).unionByName(merged))
+        words = truncate_lineage(words.filter(~hit).unionByName(merged))
     return spark.createDataFrame(
         merges,
         "merge_rank long, left_sym string, right_sym string, pair_count long",

@@ -14,15 +14,13 @@ pages). Power iteration, DataFrame-shaped:
   over one row), so NO per-iteration driver collect of anything
   data-scaled;
 - LINEAGE TRUNCATION IS LOAD-BEARING (the dd06 doctrine,
-  llm_dedup.py:903): each iteration references the previous rank
+  llm_dedup.propagate_min_labels): each iteration references the previous rank
   table TWICE (the dangling branch and the contribution branch), so
   without truncation the LOGICAL plan triples per iteration and
   Catalyst analysis goes exponential — measured: iterations 4/5/6 on
   a 6-node graph took 3/8/29 s under persist() alone, which caches
   execution but not analysis. Every iteration therefore checkpoints
-  its result: reliable ``checkpoint`` when the SparkContext has a
-  checkpoint dir (set one on a real cluster — executor loss then
-  costs nothing), ``localCheckpoint`` otherwise;
+  its result (``session.truncate_lineage``);
 - iteration count is fixed (k), the bounded-iteration control plane.
 
 The DuckDB oracle (queries.llm_crawl._pagerank_oracle_sql) is
@@ -38,15 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _truncate(df: DataFrame) -> DataFrame:
-    sc = df.sparkSession.sparkContext
-    try:
-        reliable = sc._jsc.sc().getCheckpointDir().isDefined()
-    except Exception:
-        reliable = False
-    return (df.checkpoint(eager=True) if reliable
-            else df.localCheckpoint(eager=True))
+from travel_data_ingestion_spark.session import truncate_lineage
 
 
 def pagerank(edges: DataFrame, k: int = 10,
@@ -54,7 +44,7 @@ def pagerank(edges: DataFrame, k: int = 10,
     """(src, dst) edges -> (node, rank): k power iterations with
     uniform dangling-mass redistribution; ranks sum to 1. Node set =
     distinct edge endpoints."""
-    nodes = _truncate(
+    nodes = truncate_lineage(
         edges.select(F.col("src").alias("node"))
         .union(edges.select(F.col("dst").alias("node")))
         .distinct()
@@ -63,7 +53,7 @@ def pagerank(edges: DataFrame, k: int = 10,
     if n == 0:
         # empty graph: no nodes, no ranks — not a 1/n division error
         return nodes.withColumn("rank", F.lit(0.0).cast("double"))
-    outdeg = _truncate(
+    outdeg = truncate_lineage(
         edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
     )
     ranks = nodes.withColumn("rank", F.lit(1.0 / n))
@@ -86,7 +76,7 @@ def pagerank(edges: DataFrame, k: int = 10,
             .agg(F.sum("c").alias("inc"))
             .select(F.col("e_dst").alias("node"), "inc")
         )
-        ranks = _truncate(
+        ranks = truncate_lineage(
             nodes.join(incoming, "node", "left")
             .crossJoin(dangling)
             .select(

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from travel_data_ingestion_spark.queries import load_table, register
 from travel_data_ingestion_spark.session import session_token as _session_token
+from travel_data_ingestion_spark.session import truncate_lineage
 
 _TOKENIZE_SQL = "string_split_regex(trim(text), '\\s+')"
 
@@ -251,7 +252,7 @@ def dd02_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # hamming_pairs' signature truncation): _prefix_candidates and both
     # _verify_jaccard sides otherwise re-tokenize + re-shingle the
     # corpus up to 4x
-    return _jaccard_pairs_exact(_truncate_lineage(sh))
+    return _jaccard_pairs_exact(truncate_lineage(sh))
 
 
 def _jaccard_pairs_exact(sh: DataFrame) -> DataFrame:
@@ -448,7 +449,7 @@ def dd03_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     # materialized once: consumed by the banding pass and both
     # verification sides (see dd02 / hamming_pairs notes)
-    sh = _truncate_lineage(shingle_docs(docs))
+    sh = truncate_lineage(shingle_docs(docs))
     bands = minhash_band_rows(sh)
     ba, bb = bands.alias("a"), bands.alias("b")
     candidates = (
@@ -619,7 +620,7 @@ def hamming_pairs(
     # the consumer stages concurrently and every one of them computes
     # the not-yet-materialized RDD (measured 5x decode), because block
     # reuse only begins once a first job has finished writing them.
-    sigs = _truncate_lineage(
+    sigs = truncate_lineage(
         sigs.select(F.col(id_col).alias("rid"), F.col(sig_col).alias("sig")),
     )
     usig = sigs.select("sig").distinct()
@@ -648,7 +649,7 @@ def hamming_pairs(
     # self-join (2 refs), the hot sub-chunk expansion (2 refs via
     # hot_sub) — without it each ref re-runs distinct + explode +
     # count-join over the signature table
-    chunks = _truncate_lineage(chunks.join(counts, ["chunk_id", "chunk_val"]))
+    chunks = truncate_lineage(chunks.join(counts, ["chunk_id", "chunk_val"]))
     cold = chunks.filter(F.col("__bucket_n") <= hot_block_threshold)
     hot = chunks.filter(F.col("__bucket_n") > hot_block_threshold)
     # the 48 bits OUTSIDE chunk c, packed low, as a CASE over chunk_id
@@ -913,23 +914,6 @@ _CC_LABELS_CACHE: dict[tuple[str, str, str, str], DataFrame] = {}
 _CC_LABELS_CACHE_CAP = 8
 
 
-def _truncate_lineage(df: DataFrame, eager: bool = True) -> DataFrame:
-    """Materialize ``df`` once and cut its lineage: reliable
-    ``checkpoint`` when the SparkContext has a checkpoint dir (set one
-    on a real cluster — executor loss then costs nothing),
-    ``localCheckpoint`` otherwise (fine in single-JVM local mode, where
-    executor loss means the app died anyway). ``eager=False`` defers the
-    materializing job to the first action — construction (plan audits,
-    explain) stays free; every consumer still reads the ONE materialized
-    copy because they share the same checkpointed RDD."""
-    sc = df.sparkSession.sparkContext
-    try:
-        reliable = sc._jsc.sc().getCheckpointDir().isDefined()
-    except Exception:
-        reliable = False
-    return df.checkpoint(eager=eager) if reliable else df.localCheckpoint(eager=eager)
-
-
 def propagate_min_labels(pairs: DataFrame, a_col: str, b_col: str) -> DataFrame:
     """Connected components over an undirected pair graph via bounded
     min-label propagation (large-star/small-star style): returns
@@ -949,14 +933,7 @@ def propagate_min_labels(pairs: DataFrame, a_col: str, b_col: str) -> DataFrame:
     convergence check), so without truncation the logical plan doubles
     per pass and Catalyst analysis goes exponential — a diameter-20
     chain hangs planning long before any data moves. Every pass
-    therefore checkpoints its result: reliable ``checkpoint`` when the
-    SparkContext has a checkpoint dir (set one on a real cluster —
-    executor loss then costs nothing), ``localCheckpoint`` otherwise
-    (fine in single-JVM local mode, where executor loss means the app
-    died anyway)."""
-
-    _truncate = _truncate_lineage
-
+    therefore checkpoints its result (``session.truncate_lineage``)."""
     edges = (
         pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
         .unionByName(pairs.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst")))
@@ -964,7 +941,7 @@ def propagate_min_labels(pairs: DataFrame, a_col: str, b_col: str) -> DataFrame:
         .cache()
     )
     try:
-        labels = _truncate(
+        labels = truncate_lineage(
             edges.select(F.col("src").alias("node"))
             .distinct()
             .select("node", F.col("node").alias("label"))
@@ -976,7 +953,7 @@ def propagate_min_labels(pairs: DataFrame, a_col: str, b_col: str) -> DataFrame:
                 .groupBy(F.col("src").alias("node"))
                 .agg(F.min("label").alias("nbr_label"))
             )
-            new_labels = _truncate(
+            new_labels = truncate_lineage(
                 labels.join(neighbor_min, "node", "left")
                 .select(
                     "node",

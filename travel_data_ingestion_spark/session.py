@@ -95,7 +95,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 # C2 (tier-4) compile thresholds at 10x HotSpot's JDK 17 defaults; see
@@ -149,11 +149,10 @@ def _export_pythonpath(effective_master: str) -> bool:
     the driver's filesystem: local / local-cluster masters (executor
     JVMs on this machine). On yarn/k8s/standalone-remote the driver's
     paths mean nothing on executors, so the export is skipped and
-    --py-files/wheels is the documented shipping mechanism;
-    SPARK_EXPORT_PYTHONPATH=1 opts in for shared-FS standalone."""
-    return effective_master.startswith("local") or (
-        os.environ.get("SPARK_EXPORT_PYTHONPATH") == "1"
-    )
+    --py-files/wheels is the documented shipping mechanism; a
+    shared-filesystem standalone caller passes
+    ``extra_conf={"spark.executorEnv.PYTHONPATH": ...}``."""
+    return effective_master.startswith("local")
 
 
 def get_spark(
@@ -217,8 +216,7 @@ def get_spark(
     # masters whose executors share the driver's filesystem (local /
     # local-cluster) — on a real cluster the driver's paths mean
     # nothing on remote executors, and --py-files/wheels is the
-    # documented shipping mechanism (SPARK_EXPORT_PYTHONPATH=1
-    # opts in anyway for shared-filesystem standalone setups).
+    # documented shipping mechanism.
     effective_master = (
         master
         or os.environ.get("SPARK_MASTER")
@@ -277,3 +275,25 @@ def _ensure_checkpoint_dir(spark: SparkSession) -> None:
         ckpt = tempfile.mkdtemp(prefix="spark_graft_ckpt_")
         atexit.register(shutil.rmtree, ckpt, ignore_errors=True)
     sc.setCheckpointDir(ckpt)
+
+
+def truncate_lineage(df: DataFrame) -> DataFrame:
+    """Materialize ``df`` once and cut its lineage: every consumer reads
+    the one copy, and an iterative loop's plan stops growing each pass
+    (connected components, PageRank, BPE merges).
+
+    Reliable ``checkpoint`` when the SparkContext has a checkpoint dir
+    (``_ensure_checkpoint_dir`` sets one wherever one can be correct):
+    executor loss then costs nothing. ``localCheckpoint`` otherwise,
+    whose blocks live on the executors. The checkpoint files are not
+    cleaned per query (``spark.cleaner.referenceTracking.cleanCheckpoints``
+    stays off). Under a local master with no ``SPARK_CHECKPOINT_DIR``
+    they sit in the process's temp dir, which ``_ensure_checkpoint_dir``
+    deletes at exit; under ``SPARK_CHECKPOINT_DIR`` they stay until
+    removed."""
+    sc = df.sparkSession.sparkContext
+    try:
+        reliable = sc._jsc.sc().getCheckpointDir().isDefined()
+    except Exception:
+        reliable = False
+    return df.checkpoint(eager=True) if reliable else df.localCheckpoint(eager=True)

@@ -39,8 +39,7 @@ def _one_load_per_file(wh: Warehouse, table: str, bronze_table: str) -> bool:
     partition that holds one batch-loaded file of its own: no part file
     lies outside those partitions, the ingestion ledger maps each
     partition's id to one batch file name (a row of any status for
-    ``bronze_table``, not a ``stream:`` epoch key), and no two partitions
-    to the same name."""
+    ``bronze_table``), and no two partitions to the same name."""
     parts = wh.partitions("silver", table)
     if sum(map(len, parts.values())) != sum(1 for _ in wh.part_files("silver", table)):
         return False
@@ -53,6 +52,10 @@ def _one_load_per_file(wh: Warehouse, table: str, bronze_table: str) -> bool:
         if len(names.get(load_id, ())) != 1:
             return False
         (name,) = names[load_id]
+        # a stream epoch key (``stream:<query id>:<epoch id>``) is no batch
+        # file: nothing writes one now, but a warehouse an earlier release
+        # stream-ingested keeps them, and an epoch landed many files under
+        # one id and could re-land a batch file, which only the window drops
         if name.startswith("stream:") or name in seen:
             return False
         seen.add(name)
@@ -69,11 +72,11 @@ def read_current(spark: SparkSession, wh: Warehouse, table: str) -> DataFrame:
     and the table is returned as read: a batch load writes ``_source_file``
     = the file's name, which is the ledger's ``file_name``, and
     ``ledger.reserve`` gives a (table, file name) one load_id ever, so each
-    ``_source_file`` lives in one partition. Otherwise the window runs: a
-    stream epoch lands many files under one id and may re-land a batch
-    file's name; a legacy ledger or a load_id with no ledger row proves
-    nothing; and a part file outside the ``load_id=N/`` layout (at the
-    table root, say) holds load_ids that no listing sees.
+    ``_source_file`` lives in one partition. Otherwise the window runs: an
+    older warehouse's stream epoch landed many files under one id; a
+    legacy ledger or a load_id with no ledger row proves nothing; and a
+    part file outside the ``load_id=N/`` layout (at the table root, say)
+    holds load_ids that no listing sees.
     """
     df = wh.read(spark, "silver", table)
     if table == "all_spending":
