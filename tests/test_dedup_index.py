@@ -14,7 +14,8 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
-from travel_data_ingestion_spark.dedup_index import MinHashIndex
+from travel_data_ingestion_spark.dedup_index import _DOCS_SCHEMA, MinHashIndex
+from travel_data_ingestion_spark.index_store import read
 from travel_data_ingestion_spark.queries import load_table
 from travel_data_ingestion_spark.queries.llm_dedup import dd03_minhash_lsh_pairs
 
@@ -400,7 +401,7 @@ def test_dirty_batch_duplicate_ids_are_collapsed(spark, tmp_path):
     dirty = docs.unionByName(docs)  # every doc twice
     idx = MinHashIndex(str(tmp_path / "mh"))
     idx.update(spark, dirty).count()
-    ledger = idx._read_docs(spark)
+    ledger = read(spark, idx.docs_path, _DOCS_SCHEMA)
     assert ledger.count() == 20
     assert ledger.select("doc_id").distinct().count() == 20
 

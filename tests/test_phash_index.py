@@ -13,7 +13,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from travel_data_ingestion_spark.dedup_index import PhashIndex
+from travel_data_ingestion_spark.dedup_index import _SIGS_SCHEMA, PhashIndex
+from travel_data_ingestion_spark.index_store import read
 from travel_data_ingestion_spark.llm.multimodal import (
     audio_phash_signatures,
     phash_signatures,
@@ -60,11 +61,11 @@ def test_resubmission_is_noop_and_signatures_computed_once(spark, tmp_path):
     idx = PhashIndex(str(tmp_path / "px"))
     first = _pairs(idx.update(spark, _media_df(spark, media)))
     assert first  # the planted cliques pair
-    n_sigs = idx._read_sigs(spark).count()
+    n_sigs = read(spark, idx.sigs_path, _SIGS_SCHEMA).count()
     assert n_sigs == len(media)  # one signature row per media_id
     again = _pairs(idx.update(spark, _media_df(spark, media)))
     assert again == set()  # full no-op
-    assert idx._read_sigs(spark).count() == n_sigs  # no re-appends
+    assert read(spark, idx.sigs_path, _SIGS_SCHEMA).count() == n_sigs  # no re-appends
 
 
 def test_mixed_modalities_share_one_index(spark, tmp_path):

@@ -68,18 +68,17 @@ def test_replay_is_noop(spark, tmp_path):
     idx = DocFreqIndex(str(tmp_path / "dfi"), n_buckets=4)
     idx.update(spark, docs)
     first = _as_map(idx.df(spark))
-    n_ledger = idx._read_ledger(spark).count()
+    n_ledger = idx.store.ledger(spark).count()
     idx.update(spark, docs)  # fully-ledgered batch is a no-op
     assert _as_map(idx.df(spark)) == first
-    assert idx._read_ledger(spark).count() == n_ledger
+    assert idx.store.ledger(spark).count() == n_ledger
 
 
 def _orphan_increments(spark, idx, batch):
     """Reproduce update()'s increments commit WITHOUT the ledger append
-    — the state a crash between the two writes leaves behind."""
-    ledger = idx._read_ledger(spark)
-    prev_min = ledger.agg(F.min("batch_id")).first()[0]
-    bid = min(int(prev_min or 0), 0) - 1
+    — the state a crash between the two writes leaves behind, under the
+    id the crashed update would have claimed."""
+    bid = idx.store.claim_id(spark)
     inc = (
         shingle_docs(batch.select("doc_id", "text"))
         .select("doc_id", F.explode("shingles").alias("term"))
@@ -110,7 +109,7 @@ def test_crashed_update_heals_on_retry(spark, tmp_path):
     idx.update(spark, b2)
     assert _as_map(idx.df(spark)) == _as_map(_oneshot_df(b1.unionByName(b2)))
     ledgered = {
-        r.batch_id for r in idx._read_ledger(spark).select("batch_id").collect()
+        r.batch_id for r in idx.store.ledger(spark).select("batch_id").collect()
     }
     assert orphan_bid in ledgered
 

@@ -35,6 +35,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from travel_data_ingestion_spark.index_store import read
 from travel_data_ingestion_spark.pq import adc_topk, encode, train_codebooks
 
 _CODES_SCHEMA = "vec_id long, list_id int, pq_code array<int>"
@@ -149,12 +150,8 @@ class PQIndex:
         if not self.exists():
             raise ValueError("PQIndex.update before build: no frozen codebooks")
         books, centers = self.load_books(spark)
-        fresh = batch.dropDuplicates(["vec_id"])
-        if os.path.isdir(self.codes_path):
-            seen = spark.read.schema(_CODES_SCHEMA).parquet(self.codes_path).select(
-                "vec_id"
-            )
-            fresh = fresh.join(seen, "vec_id", "left_anti")
+        seen = read(spark, self.codes_path, _CODES_SCHEMA).select("vec_id")
+        fresh = batch.dropDuplicates(["vec_id"]).join(seen, "vec_id", "left_anti")
         coded = self._encode_batch(fresh, books, centers).persist()
         try:
             n = coded.count()

@@ -214,10 +214,12 @@ _UNKEYED = re.compile(
 )
 
 
-def _empty_frame(spark: SparkSession, schema: T.StructType) -> DataFrame:
-    """A zero-row frame of ``schema``, every column nullable, planned in
-    the JVM: ``spark.createDataFrame([], schema)`` builds a Python RDD,
-    and running it starts Python workers."""
+def empty_frame(spark: SparkSession, schema: T.StructType | str) -> DataFrame:
+    """A zero-row frame of ``schema`` (a StructType or DDL string), every
+    column nullable, planned in the JVM: ``spark.createDataFrame([],
+    schema)`` builds a Python RDD, and running it starts Python workers."""
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
     return spark.range(0).select([F.lit(None).cast(f.dataType).alias(f.name) for f in schema])
 
 
@@ -357,7 +359,7 @@ class Warehouse:
             return reader.parquet(self.path(schema, table))
         if st is None:
             raise FileNotFoundError(f"table {schema}.{table} does not exist")
-        return _empty_frame(spark, st)
+        return empty_frame(spark, st)
 
     def append(self, spark: SparkSession, df: DataFrame, schema: str, table: str) -> None:
         df.write.mode("append").parquet(self.path(schema, table))
@@ -454,7 +456,7 @@ class Warehouse:
             if new:
                 rows[load_id] = sum(pq.read_metadata(f).num_rows for f in new)
         if not rows and self.registered_schema(schema, table) is None and not self.exists(schema, table):
-            _empty_frame(spark, df.drop("load_id").schema).coalesce(1).write.mode(
+            empty_frame(spark, df.drop("load_id").schema).coalesce(1).write.mode(
                 "overwrite"
             ).parquet(os.path.join(p, "load_id=0"))
         return rows

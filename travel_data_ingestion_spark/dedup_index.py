@@ -34,6 +34,9 @@ Layout under ``path``:
   indexable doc, the LSH bucket table.
 
 Both tables append one file-set per batch; nothing here compacts them.
+Batch ids and reads follow ``index_store``, the family's one statement
+of the batch protocol; what is this module's own is the post-append
+re-read (MinHashIndex.update) and ClusterIndex's merge-log swap.
 """
 
 from __future__ import annotations
@@ -43,6 +46,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from travel_data_ingestion_spark.catalog import empty_frame
+from travel_data_ingestion_spark.index_store import batch_id, read
 from travel_data_ingestion_spark.queries.llm_dedup import (
     _JACCARD_T,
     minhash_band_rows,
@@ -54,14 +59,6 @@ _DOCS_SCHEMA = "doc_id long, n_sh int, shingles array<string>, batch_id long"
 _BANDS_SCHEMA = "doc_id long, n_sh int, band_id int, sig string"
 
 
-def _fresh_batch_id(ledger: DataFrame) -> int:
-    """The batch id of one update: one below the ledger's minimum
-    (-1 on an empty or legacy NULL-batch_id ledger), so every call
-    gets an id no earlier call used."""
-    prev_min = ledger.agg(F.min("batch_id")).first()[0]
-    return min(int(prev_min or 0), 0) - 1
-
-
 class MinHashIndex:
     """Parquet-backed incremental near-dup index over a documents table."""
 
@@ -69,21 +66,6 @@ class MinHashIndex:
         self.path = path.rstrip("/")
         self.docs_path = f"{self.path}/docs"
         self.bands_path = f"{self.path}/bands"
-
-    def exists(self) -> bool:
-        return os.path.isdir(self.docs_path)
-
-    # Explicit read schemas: an all-unindexable batch legitimately writes
-    # zero part-files, and schema inference over an empty dir throws.
-    def _read_docs(self, spark: SparkSession) -> DataFrame:
-        if not self.exists():
-            return spark.createDataFrame([], _DOCS_SCHEMA)
-        return spark.read.schema(_DOCS_SCHEMA).parquet(self.docs_path)
-
-    def _read_bands(self, spark: SparkSession) -> DataFrame:
-        if not os.path.isdir(self.bands_path):
-            return spark.createDataFrame([], _BANDS_SCHEMA)
-        return spark.read.schema(_BANDS_SCHEMA).parquet(self.bands_path)
 
     def update(self, spark: SparkSession, batch: DataFrame) -> DataFrame:
         """Index a batch of (doc_id, text) docs; return the NEW near-dup
@@ -94,7 +76,7 @@ class MinHashIndex:
         introduced them. ``build`` is just ``update`` on an empty index.
 
         Each call indexes its fresh docs under a new batch id
-        (``_fresh_batch_id``), so a repeated update with already-ledgered
+        (``index_store.batch_id``), so a repeated update with already-ledgered
         docs is a full no-op — no appends, no pairs.
 
         The "new side" of the candidate join derives from the
@@ -113,8 +95,8 @@ class MinHashIndex:
         to near-dup detection forever.
         """
         batch = batch.select("doc_id", "text").dropDuplicates(["doc_id"])
-        ledger = self._read_docs(spark)
-        bid = _fresh_batch_id(ledger)
+        ledger = read(spark, self.docs_path, _DOCS_SCHEMA)
+        bid = batch_id(ledger)
         fresh = batch.join(ledger.select("doc_id"), "doc_id", "left_anti").persist()
 
         sh_new = shingle_docs(fresh).persist()
@@ -143,8 +125,8 @@ class MinHashIndex:
         # Re-reads below list the index files AFTER the append, so they
         # see old + new rows; the new side is "this batch minus docs
         # indexed under OTHER batch ids" — exactly the fresh set.
-        bands_all = self._read_bands(spark)
-        docs_all = self._read_docs(spark)
+        bands_all = read(spark, self.bands_path, _BANDS_SCHEMA)
+        docs_all = read(spark, self.docs_path, _DOCS_SCHEMA)
         # eqNullSafe: an index written by a pre-batch_id schema reads
         # back with NULL batch_id; NULL != bid is NULL (row dropped), so
         # a plain != would treat every legacy doc as "this batch" — and
@@ -245,14 +227,6 @@ class PhashIndex:
         self.path = path.rstrip("/")
         self.sigs_path = f"{self.path}/sigs"
 
-    def exists(self) -> bool:
-        return os.path.isdir(self.sigs_path)
-
-    def _read_sigs(self, spark: SparkSession) -> DataFrame:
-        if not self.exists():
-            return spark.createDataFrame([], _SIGS_SCHEMA)
-        return spark.read.schema(_SIGS_SCHEMA).parquet(self.sigs_path)
-
     def update(
         self, spark: SparkSession, batch: DataFrame, signature_fn=None
     ) -> DataFrame:
@@ -266,15 +240,15 @@ class PhashIndex:
 
             signature_fn = phash_signatures
         batch = batch.select("media_id", "payload").dropDuplicates(["media_id"])
-        ledger = self._read_sigs(spark)
-        bid = _fresh_batch_id(ledger)
+        ledger = read(spark, self.sigs_path, _SIGS_SCHEMA)
+        bid = batch_id(ledger)
         fresh = batch.join(ledger.select("media_id"), "media_id", "left_anti")
         sigs_new = signature_fn(fresh).select(
             "media_id", "phash", F.lit(bid).alias("batch_id")
         )
         sigs_new.write.mode("append").parquet(self.sigs_path)
 
-        sigs_all = self._read_sigs(spark)
+        sigs_all = read(spark, self.sigs_path, _SIGS_SCHEMA)
         # this update's own rows are the new side
         new_side = sigs_all.filter(F.col("batch_id").eqNullSafe(F.lit(bid)))
         return self._pairs_new_vs_all(new_side, sigs_all)
@@ -342,6 +316,14 @@ _ASSIGN_SCHEMA = "doc_id long, c0 long"
 _REMAP_SCHEMA = "src long, dst long"
 
 
+def _map_frame(spark: SparkSession, mapping: dict[int, int], schema: str) -> DataFrame:
+    """``mapping``'s items, in key order, as a two-column frame of
+    ``schema``; an empty mapping is planned in the JVM."""
+    if not mapping:
+        return empty_frame(spark, schema)
+    return spark.createDataFrame(sorted((int(a), int(b)) for a, b in mapping.items()), schema)
+
+
 class ClusterIndex:
     """Incremental connected components over a growing near-dup pair graph.
 
@@ -396,25 +378,16 @@ class ClusterIndex:
         self.assign_path = f"{self.path}/assign"
         self.remap_path = f"{self.path}/remap"
 
-    def _read_assign(self, spark: SparkSession) -> DataFrame:
-        if not os.path.isdir(self.assign_path):
-            return spark.createDataFrame([], _ASSIGN_SCHEMA)
-        return spark.read.schema(_ASSIGN_SCHEMA).parquet(self.assign_path)
-
     def _read_remap(self, spark: SparkSession) -> dict[int, int]:
         path = self.remap_path
         if not os.path.isdir(path):
             # crash landed between the two swap renames: the parked old
             # log is the consistent pre-rewrite state (the interrupted
             # batch's merges are re-derived when its pairs are fed again)
-            old = f"{self.remap_path}__old"
-            if not os.path.isdir(old):
+            path = f"{self.remap_path}__old"
+            if not os.path.isdir(path):
                 return {}
-            path = old
-        return {
-            r.src: r.dst
-            for r in spark.read.schema(_REMAP_SCHEMA).parquet(path).collect()
-        }
+        return {r.src: r.dst for r in read(spark, path, _REMAP_SCHEMA).collect()}
 
     def update(
         self,
@@ -441,7 +414,7 @@ class ClusterIndex:
         same quantity the remap log itself stores — so any batch the
         index can represent at all fits the driver after contraction.
         """
-        assign = self._read_assign(spark)
+        assign = read(spark, self.assign_path, _ASSIGN_SCHEMA)
         remap = self._read_remap(spark)
         fresh = (
             batch.select("doc_id")
@@ -554,10 +527,11 @@ class ClusterIndex:
         # Fresh assign rows: pair-touched docs get their contracted
         # label; untouched fresh docs are singleton clusters of themselves.
         touched = [(int(d), int(find(rep(d)))) for d in sorted(fresh_ids & endpoints)]
-        if touched:
-            touched_df = spark.createDataFrame(touched, _ASSIGN_SCHEMA)
-        else:
-            touched_df = spark.createDataFrame([], _ASSIGN_SCHEMA)
+        touched_df = (
+            spark.createDataFrame(touched, _ASSIGN_SCHEMA)
+            if touched
+            else empty_frame(spark, _ASSIGN_SCHEMA)
+        )
         rows = (
             fresh.join(touched_df.withColumnRenamed("c0", "c_t"), "doc_id", "left")
             .select("doc_id", F.coalesce("c_t", F.col("doc_id")).alias("c0"))
@@ -577,10 +551,7 @@ class ClusterIndex:
         )
 
         labels = propagate_min_labels(pr, "doc_a", "doc_b")  # (node, label)
-        remap_df = spark.createDataFrame(
-            [(int(s), int(d)) for s, d in sorted(remap.items())] or [],
-            _REMAP_SCHEMA,
-        )
+        remap_df = _map_frame(spark, remap, _REMAP_SCHEMA)
         noded = (
             labels.join(
                 assign.select(
@@ -645,10 +616,7 @@ class ClusterIndex:
             f = find(lbl)
             if f != lbl:
                 final_map[lbl] = f
-        fmap_df = spark.createDataFrame(
-            [(int(a), int(b)) for a, b in sorted(final_map.items())] or [],
-            "label long, final long",
-        )
+        fmap_df = _map_frame(spark, final_map, "label long, final long")
         rows = (
             fresh.join(
                 labels.select(F.col("node").alias("doc_id"), "label"),
@@ -682,10 +650,7 @@ class ClusterIndex:
                 final = nxt
             if final != src:
                 new_remap[src] = final
-        remap_df = spark.createDataFrame(
-            [(int(s), int(d)) for s, d in sorted(new_remap.items())] or [],
-            _REMAP_SCHEMA,
-        )
+        remap_df = _map_frame(spark, new_remap, _REMAP_SCHEMA)
         # Swap with the smallest possible no-log window: park the live
         # log aside, promote the new one, then delete the old — the
         # path is only absent between the two renames (vs the previous
@@ -718,11 +683,9 @@ class ClusterIndex:
     def resolve(self, spark: SparkSession) -> DataFrame:
         """(doc_id, cluster_id) for every indexed doc — one broadcast join."""
         remap = self._read_remap(spark)
-        remap_df = spark.createDataFrame(
-            [(int(s), int(d)) for s, d in sorted(remap.items())] or [], _REMAP_SCHEMA
-        )
+        remap_df = _map_frame(spark, remap, _REMAP_SCHEMA)
         return (
-            self._read_assign(spark)
+            read(spark, self.assign_path, _ASSIGN_SCHEMA)
             .join(F.broadcast(remap_df), F.col("c0") == F.col("src"), "left")
             .select("doc_id", F.coalesce("dst", F.col("c0")).alias("cluster_id"))
         )

@@ -183,7 +183,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
         .config("spark.sql.parquet.compression.codec", "snappy")
-        .config("spark.ui.enabled", os.environ.get("SPARK_UI", "false"))
+        .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # Runtime bloom-filter join pruning (semi-join reduction): when a
         # shuffle join's build side is selective, inject a bloom filter of
